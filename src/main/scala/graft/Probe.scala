@@ -306,8 +306,7 @@ object Probe {
           }
         }
         // incremental ingest against the freshly-written store: one more
-        // remapped copy, pre-materialized like the bench entry. Set
-        // GRAFT_APPEND_DEBUG=1 for per-phase timing.
+        // remapped copy, pre-materialized like the bench entry.
         locally {
           def remapA(v: QValue, k: Int): QValue = v match {
             case QValue.Iri(s)   => QValue.Iri(s + "/x" + k)

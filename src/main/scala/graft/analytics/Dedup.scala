@@ -354,11 +354,14 @@ object Dedup {
     * not a sentinel). Capacity is fixed at construction — the forest
     * size is known before the map is built.
     */
-  private final class LongLongMap(expected: Int) {
+  private[analytics] final class LongLongMap(expected: Int) {
+    // the table holds ≥ 2 × expected slots in an Int-indexed array: past
+    // 2^29 entries `expected * 2` rounds up beyond 2^30 and overflows
+    require(expected <= (1 << 29),
+      s"LongLongMap: $expected entries exceed the 2^29 table limit")
     private val cap = {
       var c = 16
-      while (c < expected * 2 && c > 0) c <<= 1
-      require(c > 0, s"LongLongMap: $expected entries overflow the table")
+      while (c < expected * 2) c <<= 1
       c
     }
     private val mask = cap - 1

@@ -1,8 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** The engine's storage layout: two DataFrames mirroring the reference's
   * two global collections (all-nodes / all-quads,
@@ -28,7 +29,8 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
                        predicateBuckets: Int = 0,
                        predStats: Option[Map[Long, Long]] = None,
                        interactiveMaxQuads: Long = 0L,
-                       quadsOps: Option[DataFrame] = None) {
+                       quadsOps: Option[DataFrame] = None,
+                       private[core] val delta: Option[Graph.Delta] = None) {
   def spark: SparkSession = nodes.sparkSession
 
   def cached(): Graph = copy(nodes = nodes.cache(), quads = quads.cache(),
@@ -59,9 +61,7 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     * these numbers come from Parquet footers / a stats table written at
     * load time; here one job on the (usually cached) quads table.
     */
-  def withStats(): Graph = copy(predStats = Some(
-    quads.groupBy("p").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap))
+  def withStats(): Graph = copy(predStats = Some(Graph.countByP(quads)))
 
   /** Persist as Parquet. `predicateBuckets > 0` writes quads partitioned by
     * `pb = pmod(p, buckets)` — the scale path: a query constraining `p`
@@ -131,9 +131,7 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     // quads DataFrame is an expensive uncached pipeline (bulk load), a
     // second full evaluation would double the load cost.
     val st = predStats.getOrElse(
-      nodes.sparkSession.read.parquet(s"$dir/quads")
-        .groupBy("p").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      Graph.countByP(nodes.sparkSession.read.parquet(s"$dir/quads")))
     val statsJson = st.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(
@@ -143,31 +141,177 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
   }
 
   /** Delta application (the reference's `ApplyDeltas`,
-    * /root/reference/graph/quadwriter.go:49-56): batch add = union+dedup,
-    * delete = anti-join. Snapshot semantics — returns the new Graph.
+    * graph/quadwriter.go:49-56, which updates the live SP and OPS
+    * indexes and their stats): returns a new snapshot, cost
+    * O(delta), in the same shape as a freshly opened store — `quadsOps`
+    * and `predStats` stay current and `pb` is derived for the new rows.
+    *
+    * A snapshot is `base ∪ delta`: `base` is the graph as it was last
+    * cached; the delta — every quad and dictionary row written since, and
+    * the base quads deleted since — is kept on the driver and rebuilt on
+    * each write as one small local relation per table, so plan depth does
+    * not grow with the number of writes. A write:
+    *  1. deduplicates `g2` on its own and drops what the delta already
+    *     holds (driver sets);
+    *  2. probes the base dictionary for the remaining ids: one filtered,
+    *     non-shuffling scan (`id isin`);
+    *  3. probes the base quads only for the quads whose every term the
+    *     base dictionary holds (a quad the base stores has all its terms
+    *     there, so writes of new entities skip this probe): `s`, `p`, `o`
+    *     each `isin` the ids, and the driver decides exact membership.
+    *
+    * Fold rule: once the delta outgrows the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the snapshot is cached and
+    * materialized as the new base (a base an earlier fold made is
+    * released). A `g2` larger than that threshold is not collected: its
+    * fresh rows come from distributed anti-joins, then the snapshot folds.
+    *
+    * Unlike a `union` + `dropDuplicates` over the whole store, a write
+    * never touches rows already in the base — duplicate quads the base
+    * held before the write stay as they were.
     */
   def addQuads(g2: Graph): Graph = {
-    // A graph read from a bucketed store carries the `pb` partition column;
-    // an in-memory delta does not. Normalize to the bare columns, then
-    // re-derive pb so static partition pruning survives the mutation.
-    val base = Seq("s", "p", "o", "l")
-    val merged = quads.select(base.map(col): _*)
-      .unionByName(g2.quads.select(base.map(col): _*))
-      .dropDuplicates(base)
-    val q = if (predicateBuckets > 0)
-      merged.withColumn("pb", pmod(col("p"), lit(predicateBuckets)))
-    else merged
-    val n = nodes.unionByName(g2.nodes.select(nodes.columns.toIndexedSeq.map(col): _*))
-      .dropDuplicates("id")
-    // stats and the object-sorted sibling are both pre-mutation views
-    copy(nodes = n, quads = q, predStats = None, quadsOps = None)
+    val d = openDelta
+    if (!driverSized(g2.quads)) return addLarge(g2, d)
+    val b = d.base
+    val (revived, unknown) = Graph.keysOf(g2).filterNot(d.quads).partition(d.gone)
+    val candNodes = g2.nodes.select(b.nodes.columns.toIndexedSeq.map(col): _*)
+      .collect().iterator.map(r => r.getLong(0) -> r)
+      .filterNot(kv => d.nodes.contains(kv._1)).toMap
+    val inBaseDict = if (candNodes.isEmpty) Set.empty[Long] else
+      b.nodes.where(col("id").isin(candNodes.keys.toSeq: _*)).select("id")
+        .collect().map(_.getLong(0)).toSet
+    val freshNodes = candNodes -- inBaseDict
+    def maybeInBase(id: Long) = !d.nodes.contains(id) && !freshNodes.contains(id)
+    val inBase = b.storedKeys(unknown.filter { case (s, p, o, l) =>
+      maybeInBase(s) && maybeInBase(p) && maybeInBase(o) && l.forall(maybeInBase)
+    })
+    val fresh = unknown.filterNot(inBase)
+    if (fresh.isEmpty && revived.isEmpty && freshNodes.isEmpty) this
+    else advance(d.copy(quads = d.quads ++ fresh, gone = d.gone -- revived,
+      nodes = d.nodes ++ freshNodes), fresh ++ revived, 1L)
   }
 
-  def deleteQuads(g2: Graph): Graph =
-    copy(predStats = None, quadsOps = None, quads = quads.join(g2.quads,
-      quads("s") === g2.quads("s") && quads("p") === g2.quads("p") &&
-        quads("o") === g2.quads("o") && quads("l") <=> g2.quads("l"),
-      "left_anti"))
+  /** Remove the quads of `g2` from this snapshot, from both orderings
+    * (`quads` and `quadsOps`). Quads the delta added leave it; base quads,
+    * found with the probe `addQuads` uses, join the delta as deletions
+    * (an anti-join of the base against one small local relation).
+    * `predStats` drop by the deleted quads that existed.
+    */
+  def deleteQuads(g2: Graph): Graph = {
+    val d = openDelta
+    if (!driverSized(g2.quads)) return deleteLarge(g2, d)
+    val (added, rest) = Graph.keysOf(g2).partition(d.quads)
+    val hit = d.base.storedKeys(rest.filterNot(d.gone))
+    if (added.isEmpty && hit.isEmpty) this
+    else advance(d.copy(quads = d.quads -- added, gone = d.gone ++ hit),
+      added ++ hit, -1L)
+  }
+
+  /** The snapshot of `d`, with `changed` quads moving the stats by `sign`;
+    * folded when the delta outgrew the broadcast threshold.
+    */
+  private def advance(d: Graph.Delta, changed: Iterable[Graph.QuadKey],
+                      sign: Long): Graph = {
+    val g = d.snapshot(interactiveMaxQuads,
+      predStats.map(Graph.plus(_, Graph.predCounts(changed), sign)))
+    if (g.delta.exists(_.bytes > threshold)) g.fold(g.delta) else g
+  }
+
+  private def threshold: Long =
+    spark.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Whether `df` is small enough to hold on the driver: Spark's own size
+    * estimate against the broadcast threshold.
+    */
+  private def driverSized(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+
+  /** The delta this snapshot sits on, or an empty one over this graph
+    * when it has none (or a `copy` replaced a table the delta built).
+    */
+  private def openDelta: Graph.Delta = delta
+    .filter(_.tables.corresponds(Seq(nodes, quads) ++ quadsOps)(_ eq _))
+    .getOrElse {
+      val base = copy(quads = shaped(quads), quadsOps = quadsOps.map(shaped),
+        delta = None)
+      Graph.Delta(base, ownsBase = false)
+    }
+
+  /** `q` restricted to the quad columns, with `pb` when the graph is
+    * bucketed (derived if `q` lacks it).
+    */
+  private def shaped(q: DataFrame): DataFrame = {
+    val cols = Graph.QuadCols ++
+      (if (predicateBuckets > 0 && q.columns.contains("pb")) Seq("pb") else Nil)
+    val kept = if (q.columns.toSeq == cols) q else q.select(cols.map(col): _*)
+    if (predicateBuckets > 0 && !q.columns.contains("pb"))
+      kept.withColumn("pb", pmod(col("p"), lit(predicateBuckets.toLong)))
+    else kept
+  }
+
+  /** The `keys` this graph's quads hold. One filtered scan — `s`, `p` and
+    * `o` each `isin` the keys' ids, plus `pb` on a bucketed store —
+    * collects a superset, and the driver keeps the exact matches. No
+    * shuffle and no join; the result is bounded by the key count times
+    * the fan-out of the id combinations.
+    */
+  private[core] def storedKeys(keys: Seq[Graph.QuadKey]): Set[Graph.QuadKey] =
+    if (keys.isEmpty) Set.empty else {
+      def in(c: String, ids: Seq[Long]) = col(c).isin(ids.distinct: _*)
+      val hit = in("s", keys.map(_._1)) && in("p", keys.map(_._2)) &&
+        in("o", keys.map(_._3))
+      val pruned = if (predicateBuckets > 0 && quads.columns.contains("pb"))
+        hit && in("pb", keys.map(k => Math.floorMod(k._2, predicateBuckets.toLong)))
+      else hit
+      val want = keys.toSet
+      quads.where(pruned).select(Graph.QuadCols.map(col): _*).collect()
+        .iterator.map(Graph.quadKey).filter(want).toSet
+    }
+
+  /** A `g2` too large for the driver: fresh rows by distributed
+    * anti-joins against this snapshot, then fold.
+    */
+  private def addLarge(g2: Graph, d: Graph.Delta): Graph = {
+    val fresh = Graph.semi(
+      g2.quads.select(Graph.QuadCols.map(col): _*).dropDuplicates(),
+      quads, "left_anti").persist()
+    val freshNodes = g2.nodes.select(nodes.columns.toIndexedSeq.map(col): _*)
+      .dropDuplicates("id").join(nodes.select("id"), Seq("id"), "left_anti")
+      .persist()
+    def plus(q: DataFrame) = q.unionByName(
+      if (q.columns.contains("pb")) fresh.withColumn("pb",
+        pmod(col("p"), lit(predicateBuckets.toLong)).cast(q.schema("pb").dataType))
+      else fresh)
+    try copy(nodes = nodes.unionByName(freshNodes), quads = plus(shaped(quads)),
+      quadsOps = quadsOps.map(o => plus(shaped(o))),
+      predStats = predStats.map(Graph.plus(_, Graph.countByP(fresh), 1L)))
+      .fold(Some(d))
+    finally { fresh.unpersist(); freshNodes.unpersist() }
+  }
+
+  /** A `g2` too large for the driver: distributed anti-joins, then fold. */
+  private def deleteLarge(g2: Graph, d: Graph.Delta): Graph = {
+    val gone = g2.quads.select(Graph.QuadCols.map(col): _*).dropDuplicates()
+    copy(quads = Graph.semi(quads, gone, "left_anti"),
+      quadsOps = quadsOps.map(Graph.semi(_, gone, "left_anti")),
+      predStats = predStats.map(Graph.plus(_,
+        Graph.countByP(Graph.semi(quads, gone, "left_semi")), -1L)))
+      .fold(Some(d))
+  }
+
+  /** This snapshot cached and materialized as a new base with an empty
+    * delta. The base `prior` sits on is released when an earlier fold
+    * made it: a snapshot still holding it recomputes from its lineage.
+    */
+  private def fold(prior: Option[Graph.Delta]): Graph = {
+    val g = copy(delta = None).cached()
+    val tables = Seq(g.nodes, g.quads) ++ g.quadsOps
+    tables.foreach(_.count())
+    prior.filter(_.ownsBase).foreach(p =>
+      (Seq(p.base.nodes, p.base.quads) ++ p.base.quadsOps).foreach(_.unpersist()))
+    g.copy(delta = Some(Graph.Delta(g, ownsBase = true, tables = tables)))
+  }
 }
 
 object Graph {
@@ -184,17 +328,104 @@ object Graph {
   private def idOf(c: String): org.apache.spark.sql.Column =
     Values.idCol(col(c))
 
+  /** A quad's ids `(s, p, o, l)`, as the driver holds them. */
+  type QuadKey = (Long, Long, Long, Option[Long])
+
+  private[core] val QuadCols: Seq[String] = Seq("s", "p", "o", "l")
+
+  private val QuadSchema = StructType(Seq("s", "p", "o").map(
+    StructField(_, LongType, nullable = false)) :+ StructField("l", LongType))
+
+  private[core] def quadKey(r: Row): QuadKey =
+    (r.getLong(0), r.getLong(1), r.getLong(2),
+      if (r.isNullAt(3)) None else Some(r.getLong(3)))
+
+  private[core] def quadKey(q: ParsedQuad): QuadKey =
+    (QValue.id(q.s), QValue.id(q.p), QValue.id(q.o), q.l.map(QValue.id))
+
+  /** The writes since `base` was cached (see [[Graph.addQuads]]), on the
+    * driver: `quads` added (absent from the base), `gone` base quads
+    * deleted, and dictionary rows added (by id). `tables` are the
+    * snapshot's nodes, quads and OPS DataFrames built from it, so a graph
+    * whose tables are not those no longer sits on this delta; `bytes` is
+    * Spark's size estimate of its local relations.
+    */
+  private[core] final case class Delta(base: Graph, ownsBase: Boolean,
+      quads: Set[QuadKey] = Set.empty, gone: Set[QuadKey] = Set.empty,
+      nodes: Map[Long, Row] = Map.empty, tables: Seq[DataFrame] = Nil,
+      bytes: Long = 0L) {
+    /** `(base ▷ gone) ∪ delta`, one local relation per table. */
+    def snapshot(interactiveMaxQuads: Long, stats: Option[Map[Long, Long]]): Graph = {
+      val spark = base.spark
+      val buckets = base.predicateBuckets
+      val added = localQuads(spark, quads, base.quads.schema, buckets)
+      val deleted = localQuads(spark, gone, QuadSchema)
+      val n = spark.createDataFrame(nodes.values.toSeq.asJava, base.nodes.schema)
+      def live(q: DataFrame) = (if (gone.isEmpty) q else semi(q, deleted, "left_anti"))
+        .unionByName(if (q.schema == base.quads.schema) added
+          else localQuads(spark, quads, q.schema, buckets))
+      val out = Graph(base.nodes.unionByName(n), live(base.quads), buckets,
+        stats, interactiveMaxQuads, base.quadsOps.map(live))
+      out.copy(delta = Some(copy(tables = Seq(out.nodes, out.quads) ++ out.quadsOps,
+        bytes = Seq(added, deleted, n)
+          .map(_.queryExecution.analyzed.stats.sizeInBytes).sum.toLong)))
+    }
+  }
+
+  private def keysOf(g: Graph): Seq[QuadKey] =
+    g.quads.select(QuadCols.map(col): _*).collect().iterator.map(quadKey)
+      .toSeq.distinct
+
+  /** `keys` as a local relation of `schema` (`pb` derived from `p`). */
+  private def localQuads(spark: SparkSession, keys: Iterable[QuadKey],
+                         schema: StructType, buckets: Int = 0): DataFrame = {
+    val rows = keys.iterator.map { case (s, p, o, l) =>
+      Row.fromSeq(schema.fields.toSeq.map(f => f.name match {
+        case "s" => s
+        case "p" => p
+        case "o" => o
+        case "l" => l.map(Long.box).orNull
+        case "pb" =>
+          val b = Math.floorMod(p, buckets.toLong)
+          if (f.dataType == IntegerType) b.toInt else b
+      }))
+    }.toSeq
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  private def predCounts(keys: Iterable[QuadKey]): Map[Long, Long] =
+    keys.groupMapReduce(_._2)(_ => 1L)(_ + _)
+
+  private[core] def countByP(quads: DataFrame): Map[Long, Long] =
+    quads.groupBy("p").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `st` moved by `sign` × `counts`; predicates left at zero drop out,
+    * as `withStats()` never lists them.
+    */
+  private[core] def plus(st: Map[Long, Long], counts: Map[Long, Long],
+                   sign: Long): Map[Long, Long] =
+    counts.foldLeft(st) { case (m, (p, n)) =>
+      val v = m.getOrElse(p, 0L) + sign * n
+      if (v > 0) m.updated(p, v) else m - p
+    }
+
+  /** `q` semi- or anti-joined with the quads of `other` on (s, p, o) and
+    * null-safe `l`.
+    */
+  private def semi(q: DataFrame, other: DataFrame, how: String): DataFrame = {
+    val r = other.select(QuadCols.map(c => col(c).as("__" + c)): _*)
+    q.join(r, QuadCols.map(c =>
+      if (c == "l") col(c) <=> col("__l") else col(c) === col("__" + c))
+      .reduce(_ && _), how)
+  }
+
   /** Build the two tables from a DataFrame with struct columns
     * (sub, pred, obj, lbl). One shuffle total (nodes dedup); quads need
     * none. The dictionary is built by exploding the four positions in a
     * single pass over the input — not four unioned re-reads.
     */
-  def fromQuadDF(raw0: DataFrame): Graph = {
-    val raw = raw0
-    val quads = raw.select(
-      idOf("sub").as("s"), idOf("pred").as("p"), idOf("obj").as("o"),
-      when(col("lbl").isNull, lit(null).cast(LongType))
-        .otherwise(idOf("lbl")).as("l"))
+  def fromQuadDF(raw: DataFrame): Graph = {
     // dedup BEFORE computing the sort key: `sk` is a wide string-format
     // CASE expression, so evaluate it once per distinct node (|dictionary|
     // rows), not once per value occurrence (4×|quads| rows) — and keep the
@@ -202,21 +433,49 @@ object Graph {
     // id is a pure function of the value, and a keys-only group-by plans
     // as a HashAggregate, where dropDuplicates("id") would need first()
     // carry-along buffers and degrade to a double SortAggregate.
-    val nodes = raw
+    val values = raw
       .select(explode(array(col("sub"), col("pred"), col("obj"), col("lbl")))
         .as("v"))
       .where(col("v").isNotNull)
       .select(col("v.*"))
       .dropDuplicates()
-      .select((Values.idColOfFields(col).as("id") +:
-        Values.fieldNames.map(col)) :+ Values.sortKeyCol(col).as("sk"): _*)
-    Graph(nodes, quads)
+    Graph(dictionary(values), quadIds(raw))
   }
 
+  /** The quads table of (sub, pred, obj, lbl) struct rows. */
+  private def quadIds(raw: DataFrame): DataFrame = raw.select(
+    idOf("sub").as("s"), idOf("pred").as("p"), idOf("obj").as("o"),
+    when(col("lbl").isNull, lit(null).cast(LongType))
+      .otherwise(idOf("lbl")).as("l"))
+
+  /** The nodes table of distinct flat value rows. */
+  private def dictionary(values: DataFrame): DataFrame =
+    values.select((Values.idColOfFields(col).as("id") +:
+      Values.fieldNames.map(col)) :+ Values.sortKeyCol(col).as("sk"): _*)
+
+  /** A graph of driver-side quads. Both tables are local relations, so
+    * collecting either (as a write does) runs no Spark job: quad ids come
+    * from `QValue.id` (pinned to Spark's `xxhash64` by XXH64ParitySpec),
+    * and the dictionary is deduplicated here rather than by
+    * `fromQuadDF`'s aggregate. Values dedup by node id, a pure function of
+    * the value that, like Spark's grouping, equates 0.0 with -0.0 and
+    * every NaN; the kept row carries the value Spark's grouping outputs.
+    */
   def fromQuads(spark: SparkSession, qs: Seq[ParsedQuad]): Graph = {
-    import spark.implicits._
-    fromQuadDF(spark.createDataset(qs.map(QuadRow(_))).toDF())
+    val values = qs.iterator
+      .flatMap(q => Iterator(q.s, q.p, q.o) ++ q.l).distinctBy(QValue.id)
+      .map(v => QV(v match {
+        case QValue.FloatV(d) if d == 0.0 || d.isNaN =>
+          QValue.FloatV(if (d.isNaN) Double.NaN else 0.0)
+        case other => other
+      })).toSeq
+    Graph(dictionary(spark.createDataset(values)(QVEncoder).toDF()),
+      localQuads(spark, qs.map(quadKey), QuadSchema))
   }
+
+  // derived once: reflecting a product encoder costs more than a write's
+  // whole local plan
+  private lazy val QVEncoder = Encoders.product[QV]
 
   /** N-Quads reader: distributed line parse (gz/bz2 auto-decompressed by
     * the text source, like the reference's decompressor,
@@ -276,13 +535,6 @@ object Graph {
     * and predStats as write(half1 ∪ half2).
     */
   def append(spark: SparkSession, dir: String, delta: Graph): Unit = {
-    val appendDebug = sys.env.contains("GRAFT_APPEND_DEBUG")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (appendDebug) {
-      val now = System.nanoTime()
-      System.err.println(f"append phase=$name secs=${(now - tPhase) / 1e9}%.2f")
-      tPhase = now
-    }
     val metaPath = java.nio.file.Paths.get(s"$dir/graft_meta.json")
     val stored = read(spark, dir)
     val buckets = stored.predicateBuckets
@@ -292,7 +544,6 @@ object Graph {
       dq0.withColumn("pb", pmod(col("p"), lit(buckets)))
     else dq0).persist()
     val deltaRows = dq.count() // materialize once; gates the join layout
-    phase("dq")
     // node dictionary FIRST: the delta ids already present in the store
     // (dupIds) feed BOTH the fresh-node anti-join and the quad-existence
     // dictionary gate below — one stored-nodes scan serves both
@@ -307,7 +558,6 @@ object Graph {
         .select(col("id").as("eid"))
     } else dn.select(col("id").as("eid"))).persist()
     if (smallDelta) dupIds.count()
-    phase("dupIds")
     val existing =
       if (buckets > 0) {
         val touched = dq.select("pb").distinct().collect().map(_.getLong(0))
@@ -341,7 +591,6 @@ object Graph {
         .persist()
       gatedHandle = Some(gated)
       val gc = gated.count()
-      phase("gate")
       if (gc == 0L) dq
       else {
         // aliased output: dups' subtree contains dq (the broadcast
@@ -369,9 +618,7 @@ object Graph {
       // invalidates every cached plan that reads that path (CacheManager
       // recache-by-path), and a post-write re-evaluation of the anti-join
       // would see the just-appended files and count zero
-      val appended = fresh.groupBy("p").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      phase("stats")
+      val appended = countByP(fresh)
       // dual-index store: the same fresh rows land in the object-sorted
       // sibling too (sorted within the appended files — the new files'
       // row-group stats prune like the originals'). MUST run before the
@@ -388,11 +635,9 @@ object Graph {
         else fresh.sort("p", "o").write.mode("append")
           .parquet(s"$dir/quads_ops")
       }
-      phase("ops_write")
       if (buckets > 0)
         fresh.write.mode("append").partitionBy("pb").parquet(s"$dir/quads")
       else fresh.write.mode("append").parquet(s"$dir/quads")
-      phase("primary_write")
       // fresh dictionary rows: the dupIds computed above (one stored-
       // nodes scan, broadcast-flipped) drive the anti-join; above the
       // broadcast gate, fall back to the shuffle anti-join
@@ -401,7 +646,6 @@ object Graph {
       else dn.join(stored.nodes.select("id"), Seq("id"), "left_anti"))
         .select(stored.nodes.columns.toIndexedSeq.map(col): _*)
       freshNodes.write.mode("append").parquet(s"$dir/nodes")
-      phase("nodes_write")
       // incremental stats: stored counts + appended-row counts. If the
       // store predates stats (no meta), recount once from the files.
       val merged = stored.predStats match {
@@ -409,8 +653,7 @@ object Graph {
           (st.keySet ++ appended.keySet).map(k =>
             k -> (st.getOrElse(k, 0L) + appended.getOrElse(k, 0L))).toMap
         case None =>
-          spark.read.parquet(s"$dir/quads").groupBy("p").count().collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          countByP(spark.read.parquet(s"$dir/quads"))
       }
       val statsJson = merged.toSeq.sortBy(_._1)
         .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")

@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.core.NQuads.ParsedQuad
-import org.apache.spark.sql.functions._
 
 /** Mutation semantics beyond raw snapshot union/anti-join
   * (/root/reference/graph/quadwriter.go:49-112,
@@ -15,8 +14,8 @@ import org.apache.spark.sql.functions._
   *  - [[Transaction]] deduplicates deltas and cancels an add against a
   *    pending remove of the same quad (transaction.go AddQuad/RemoveQuad).
   *
-  * Existence validation is one semi-join of the (small) delta set against
-  * the quads table — the store side is never collected.
+  * Existence validation is one filtered probe of the quads table for the
+  * (small) delta set — the store side is never collected.
   */
 object Mutation {
   sealed trait Action
@@ -54,25 +53,11 @@ object Mutation {
     def deltas: Seq[Delta] = seen.toSeq
   }
 
-  private def idTuple(q: ParsedQuad): (Long, Long, Long, Option[Long]) =
-    (QValue.id(q.s), QValue.id(q.p), QValue.id(q.o), q.l.map(QValue.id))
-
-  /** Which of `quads` exist in the store — one semi-join, result bounded
-    * by the delta count.
+  /** Which of `quads` exist in the store — the filtered probe
+    * `Graph.addQuads` uses; the store side is never collected.
     */
-  def existing(g: Graph, quads: Seq[ParsedQuad]): Set[(Long, Long, Long, Option[Long])] = {
-    if (quads.isEmpty) return Set.empty
-    val spark = g.spark
-    import spark.implicits._
-    val want = quads.map(idTuple).distinct
-      .toDF("ws", "wp", "wo", "wl")
-    g.quads.join(want,
-        col("s") === col("ws") && col("p") === col("wp") &&
-          col("o") === col("wo") && col("l") <=> col("wl"), "left_semi")
-      .select("s", "p", "o", "l").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
-  }
+  def existing(g: Graph, quads: Seq[ParsedQuad]): Set[Graph.QuadKey] =
+    g.storedKeys(quads.map(Graph.quadKey).distinct)
 
   /** Apply a delta batch with validation. Deltas are checked in order
     * against the snapshot plus earlier deltas of the same batch, then
@@ -81,12 +66,12 @@ object Mutation {
     */
   def applyDeltas(g: Graph, deltas: Seq[Delta],
                   opts: IgnoreOpts = IgnoreOpts()): Graph = {
-    val present = scala.collection.mutable.Set.empty[(Long, Long, Long, Option[Long])]
+    val present = scala.collection.mutable.Set.empty[Graph.QuadKey]
     present ++= existing(g, deltas.map(_.quad))
     val adds = Vector.newBuilder[ParsedQuad]
     val dels = Vector.newBuilder[ParsedQuad]
     deltas.foreach { d =>
-      val key = idTuple(d.quad)
+      val key = Graph.quadKey(d.quad)
       d.action match {
         case Add =>
           if (present(key)) {

@@ -14,6 +14,17 @@ import java.nio.charset.StandardCharsets.UTF_8
   * semantics), reads/queries run against whatever snapshot they start
   * with.
   *
+  * Every write path (N-Quads, JSON quad-lines, Turtle/TriG, JSON-LD) goes
+  * through `Graph.addQuads`: the snapshot is the store as opened (its
+  * cached base) plus one small driver-side delta per table holding every
+  * quad and node written since, so a query after a write plans and runs
+  * like one on the idle store — OPS sibling, predicate stats and `pb`
+  * pruning included. A write costs filtered probes of the base plus work
+  * proportional to its body; once the delta outgrows
+  * `spark.sql.autoBroadcastJoinThreshold` it folds into a newly cached
+  * base. A delete of base quads joins the delta too: one anti-join of
+  * each quad ordering against a small local relation.
+  *
   * Response shapes mirror the reference: `{"result": ...}` on success,
   * `{"error": msg}` with a 4xx/5xx status on failure; write/delete report
   * `"Successfully wrote/deleted N quads."` with a count.
@@ -153,7 +164,7 @@ final class HttpApi(initial: Graph) {
           val root = org.json4s.jackson.JsonMethods.parse(b).values
             .asInstanceOf[Map[String, Any]]
           val delta = Formats.readJsonLdRoot(g.spark, root)
-          val n = delta.stats._2
+          val n = delta.quads.count()
           g = g.addQuads(delta)
           (200, "application/json",
             s"""{"result": "Successfully wrote $n quads.", "count": $n}""")

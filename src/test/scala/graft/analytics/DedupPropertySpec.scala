@@ -282,4 +282,10 @@ class DedupPropertySpec extends AnyFunSuite {
       assert(got === expect, s"k=$k")
     }
   }
+
+  test("LongLongMap refuses more than 2^29 entries before sizing its table") {
+    // past 2^30, `expected * 2` overflowed and the map silently got 16 slots
+    for (n <- Seq((1 << 29) + 1, (1 << 30) + 1, Int.MaxValue))
+      intercept[IllegalArgumentException](new Dedup.LongLongMap(n))
+  }
 }
