@@ -148,23 +148,22 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     *
     * A snapshot is `base ∪ delta`: `base` is the graph as it was last
     * cached; the delta — every quad and dictionary row written since, and
-    * the base quads deleted since — is kept on the driver and rebuilt on
-    * each write as one small local relation per table, so plan depth does
-    * not grow with the number of writes. A write:
+    * the base quads and nodes deleted since — is kept on the driver and
+    * rebuilt on each write as one small local relation per table, so plan
+    * depth does not grow with the number of writes. A write:
     *  1. deduplicates `g2` on its own and drops what the delta already
     *     holds (driver sets);
     *  2. probes the base dictionary for the remaining ids: one filtered,
     *     non-shuffling scan (`id isin`);
     *  3. probes the base quads only for the quads whose every term the
     *     base dictionary holds (a quad the base stores has all its terms
-    *     there, so writes of new entities skip this probe): `s`, `p`, `o`
-    *     each `isin` the ids, and the driver decides exact membership.
+    *     there, so writes of new entities skip this probe): see
+    *     [[storedRows]].
     *
     * Fold rule: once the delta outgrows the session's
-    * `spark.sql.autoBroadcastJoinThreshold`, the snapshot is cached and
-    * materialized as the new base (a base an earlier fold made is
-    * released). A `g2` larger than that threshold is not collected: its
-    * fresh rows come from distributed anti-joins, then the snapshot folds.
+    * `spark.sql.autoBroadcastJoinThreshold` (Spark's default when the
+    * threshold is disabled), the snapshot is cached and materialized as
+    * the new base (a base an earlier fold made is released).
     *
     * Unlike a `union` + `dropDuplicates` over the whole store, a write
     * never touches rows already in the base — duplicate quads the base
@@ -172,41 +171,65 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     */
   def addQuads(g2: Graph): Graph = {
     val d = openDelta
-    if (!driverSized(g2.quads)) return addLarge(g2, d)
     val b = d.base
-    val (revived, unknown) = Graph.keysOf(g2).filterNot(d.quads).partition(d.gone)
+    // a quad or node deleted since the base was cached is fresh again:
+    // the delta adds it back rather than undoing the deletion
+    val (deleted, unknown) = Graph.keysOf(g2).filterNot(d.quads).partition(d.gone)
     val candNodes = g2.nodes.select(b.nodes.columns.toIndexedSeq.map(col): _*)
       .collect().iterator.map(r => r.getLong(0) -> r)
       .filterNot(kv => d.nodes.contains(kv._1)).toMap
-    val inBaseDict = if (candNodes.isEmpty) Set.empty[Long] else
-      b.nodes.where(col("id").isin(candNodes.keys.toSeq: _*)).select("id")
+    val probe = candNodes.keys.filterNot(d.goneNodes).toSeq
+    val inBaseDict = if (probe.isEmpty) Set.empty[Long] else
+      b.nodes.where(col("id").isin(probe: _*)).select("id")
         .collect().map(_.getLong(0)).toSet
     val freshNodes = candNodes -- inBaseDict
     def maybeInBase(id: Long) = !d.nodes.contains(id) && !freshNodes.contains(id)
-    val inBase = b.storedKeys(unknown.filter { case (s, p, o, l) =>
+    val inBase = b.storedRows(unknown.filter { case (s, p, o, l) =>
       maybeInBase(s) && maybeInBase(p) && maybeInBase(o) && l.forall(maybeInBase)
-    })
-    val fresh = unknown.filterNot(inBase)
-    if (fresh.isEmpty && revived.isEmpty && freshNodes.isEmpty) this
-    else advance(d.copy(quads = d.quads ++ fresh, gone = d.gone -- revived,
-      nodes = d.nodes ++ freshNodes), fresh ++ revived, 1L)
+    }).toSet
+    val fresh = deleted ++ unknown.filterNot(inBase)
+    if (fresh.isEmpty && freshNodes.isEmpty) this
+    else advance(d.copy(quads = d.quads ++ fresh, nodes = d.nodes ++ freshNodes),
+      fresh, 1L)
   }
 
   /** Remove the quads of `g2` from this snapshot, from both orderings
     * (`quads` and `quadsOps`). Quads the delta added leave it; base quads,
     * found with the probe `addQuads` uses, join the delta as deletions
     * (an anti-join of the base against one small local relation).
-    * `predStats` drop by the deleted quads that existed.
+    * `predStats` drop by the deleted rows, every stored copy counted.
     */
   def deleteQuads(g2: Graph): Graph = {
     val d = openDelta
-    if (!driverSized(g2.quads)) return deleteLarge(g2, d)
     val (added, rest) = Graph.keysOf(g2).partition(d.quads)
-    val hit = d.base.storedKeys(rest.filterNot(d.gone))
-    if (added.isEmpty && hit.isEmpty) this
-    else advance(d.copy(quads = d.quads -- added, gone = d.gone ++ hit),
-      added ++ hit, -1L)
+    drop(d, added, d.base.storedRows(rest.filterNot(d.gone)), None)
   }
+
+  /** RemoveNode (writer/single.go:84-114, which removes the node's quads
+    * one by one): drop the dictionary row of `id` and every quad
+    * referencing it. One filtered scan of this snapshot collects those
+    * quads on the driver; they and the node join the delta as deletions,
+    * so `quadsOps`, `predStats` and `pb` stay current as for
+    * [[deleteQuads]].
+    */
+  def removeNode(id: Long): Graph = {
+    val d = openDelta
+    val touches = col("s") === id || col("p") === id || col("o") === id ||
+      col("l") <=> lit(id)
+    val (added, based) = quads.where(touches).select(Graph.QuadCols.map(col): _*)
+      .collect().toSeq.map(Graph.quadKey).partition(d.quads)
+    drop(d, added, based, Some(id))
+  }
+
+  /** `d` less the `added` quads it holds, the base quad `rows` (every
+    * stored copy) and the node `id`.
+    */
+  private def drop(d: Graph.Delta, added: Seq[Graph.QuadKey],
+                   rows: Seq[Graph.QuadKey], id: Option[Long]): Graph =
+    if (added.isEmpty && rows.isEmpty &&
+        id.forall(i => d.goneNodes(i) && !d.nodes.contains(i))) this
+    else advance(d.copy(quads = d.quads -- added, gone = d.gone ++ rows,
+      nodes = d.nodes -- id, goneNodes = d.goneNodes ++ id), added ++ rows, -1L)
 
   /** The snapshot of `d`, with `changed` quads moving the stats by `sign`;
     * folded when the delta outgrew the broadcast threshold.
@@ -218,14 +241,16 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     if (g.delta.exists(_.bytes > threshold)) g.fold(g.delta) else g
   }
 
-  private def threshold: Long =
-    spark.sessionState.conf.autoBroadcastJoinThreshold
-
-  /** Whether `df` is small enough to hold on the driver: Spark's own size
-    * estimate against the broadcast threshold.
+  /** The session's broadcast threshold, or Spark's default when it is
+    * disabled (`-1`): a disabled threshold turns broadcast joins off, not
+    * incremental writes.
     */
-  private def driverSized(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+  private def threshold: Long = {
+    val t = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (t > 0) t
+    else org.apache.spark.sql.internal.SQLConf.AUTO_BROADCASTJOIN_THRESHOLD
+      .defaultValue.get
+  }
 
   /** The delta this snapshot sits on, or an empty one over this graph
     * when it has none (or a `copy` replaced a table the delta built).
@@ -250,55 +275,25 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     else kept
   }
 
-  /** The `keys` this graph's quads hold. One filtered scan — `s`, `p` and
-    * `o` each `isin` the keys' ids, plus `pb` on a bucketed store —
-    * collects a superset, and the driver keeps the exact matches. No
-    * shuffle and no join; the result is bounded by the key count times
-    * the fan-out of the id combinations.
+  /** Every row of this graph's quads that matches one of `keys`, with
+    * duplicates. One filtered scan — `s`, `p` and `o` each `isin` the
+    * keys' ids, plus `pb` on a bucketed store — semi-joined with the keys
+    * as a broadcast local relation, so only exact matches reach the
+    * driver. No shuffle; the result is bounded by the stored copies of
+    * the keys.
     */
-  private[core] def storedKeys(keys: Seq[Graph.QuadKey]): Set[Graph.QuadKey] =
-    if (keys.isEmpty) Set.empty else {
+  private[core] def storedRows(keys: Seq[Graph.QuadKey]): Seq[Graph.QuadKey] =
+    if (keys.isEmpty) Nil else {
       def in(c: String, ids: Seq[Long]) = col(c).isin(ids.distinct: _*)
       val hit = in("s", keys.map(_._1)) && in("p", keys.map(_._2)) &&
         in("o", keys.map(_._3))
       val pruned = if (predicateBuckets > 0 && quads.columns.contains("pb"))
         hit && in("pb", keys.map(k => Math.floorMod(k._2, predicateBuckets.toLong)))
       else hit
-      val want = keys.toSet
-      quads.where(pruned).select(Graph.QuadCols.map(col): _*).collect()
-        .iterator.map(Graph.quadKey).filter(want).toSet
+      val want = broadcast(Graph.localQuads(spark, keys.distinct, Graph.QuadSchema))
+      Graph.semi(quads.where(pruned), want, "left_semi")
+        .select(Graph.QuadCols.map(col): _*).collect().toSeq.map(Graph.quadKey)
     }
-
-  /** A `g2` too large for the driver: fresh rows by distributed
-    * anti-joins against this snapshot, then fold.
-    */
-  private def addLarge(g2: Graph, d: Graph.Delta): Graph = {
-    val fresh = Graph.semi(
-      g2.quads.select(Graph.QuadCols.map(col): _*).dropDuplicates(),
-      quads, "left_anti").persist()
-    val freshNodes = g2.nodes.select(nodes.columns.toIndexedSeq.map(col): _*)
-      .dropDuplicates("id").join(nodes.select("id"), Seq("id"), "left_anti")
-      .persist()
-    def plus(q: DataFrame) = q.unionByName(
-      if (q.columns.contains("pb")) fresh.withColumn("pb",
-        pmod(col("p"), lit(predicateBuckets.toLong)).cast(q.schema("pb").dataType))
-      else fresh)
-    try copy(nodes = nodes.unionByName(freshNodes), quads = plus(shaped(quads)),
-      quadsOps = quadsOps.map(o => plus(shaped(o))),
-      predStats = predStats.map(Graph.plus(_, Graph.countByP(fresh), 1L)))
-      .fold(Some(d))
-    finally { fresh.unpersist(); freshNodes.unpersist() }
-  }
-
-  /** A `g2` too large for the driver: distributed anti-joins, then fold. */
-  private def deleteLarge(g2: Graph, d: Graph.Delta): Graph = {
-    val gone = g2.quads.select(Graph.QuadCols.map(col): _*).dropDuplicates()
-    copy(quads = Graph.semi(quads, gone, "left_anti"),
-      quadsOps = quadsOps.map(Graph.semi(_, gone, "left_anti")),
-      predStats = predStats.map(Graph.plus(_,
-        Graph.countByP(Graph.semi(quads, gone, "left_semi")), -1L)))
-      .fold(Some(d))
-  }
 
   /** This snapshot cached and materialized as a new base with an empty
     * delta. The base `prior` sits on is released when an earlier fold
@@ -344,31 +339,38 @@ object Graph {
     (QValue.id(q.s), QValue.id(q.p), QValue.id(q.o), q.l.map(QValue.id))
 
   /** The writes since `base` was cached (see [[Graph.addQuads]]), on the
-    * driver: `quads` added (absent from the base), `gone` base quads
-    * deleted, and dictionary rows added (by id). `tables` are the
-    * snapshot's nodes, quads and OPS DataFrames built from it, so a graph
-    * whose tables are not those no longer sits on this delta; `bytes` is
-    * Spark's size estimate of its local relations.
+    * driver: `quads` added (absent from the visible base), `gone` base
+    * quads deleted, dictionary rows added (by id) and base `goneNodes`
+    * deleted. `tables` are the snapshot's nodes, quads and OPS DataFrames
+    * built from it, so a graph whose tables are not those no longer sits
+    * on this delta; `bytes` is Spark's size estimate of its local
+    * relations.
     */
   private[core] final case class Delta(base: Graph, ownsBase: Boolean,
       quads: Set[QuadKey] = Set.empty, gone: Set[QuadKey] = Set.empty,
-      nodes: Map[Long, Row] = Map.empty, tables: Seq[DataFrame] = Nil,
-      bytes: Long = 0L) {
-    /** `(base ▷ gone) ∪ delta`, one local relation per table. */
+      nodes: Map[Long, Row] = Map.empty, goneNodes: Set[Long] = Set.empty,
+      tables: Seq[DataFrame] = Nil, bytes: Long = 0L) {
+    /** `(base ▷ gone) ∪ delta`, one local relation per table; the base
+      * dictionary filtered by `goneNodes`.
+      */
     def snapshot(interactiveMaxQuads: Long, stats: Option[Map[Long, Long]]): Graph = {
       val spark = base.spark
       val buckets = base.predicateBuckets
       val added = localQuads(spark, quads, base.quads.schema, buckets)
-      val deleted = localQuads(spark, gone, QuadSchema)
+      // broadcast even when the session disables it: the base never shuffles
+      val deleted = broadcast(localQuads(spark, gone, QuadSchema))
       val n = spark.createDataFrame(nodes.values.toSeq.asJava, base.nodes.schema)
       def live(q: DataFrame) = (if (gone.isEmpty) q else semi(q, deleted, "left_anti"))
         .unionByName(if (q.schema == base.quads.schema) added
           else localQuads(spark, quads, q.schema, buckets))
-      val out = Graph(base.nodes.unionByName(n), live(base.quads), buckets,
+      val kept = if (goneNodes.isEmpty) base.nodes
+        else base.nodes.where(!col("id").isin(goneNodes.toSeq: _*))
+      val out = Graph(kept.unionByName(n), live(base.quads), buckets,
         stats, interactiveMaxQuads, base.quadsOps.map(live))
       out.copy(delta = Some(copy(tables = Seq(out.nodes, out.quads) ++ out.quadsOps,
         bytes = Seq(added, deleted, n)
-          .map(_.queryExecution.analyzed.stats.sizeInBytes).sum.toLong)))
+          .map(_.queryExecution.analyzed.stats.sizeInBytes).sum.toLong +
+          8L * goneNodes.size)))
     }
   }
 
@@ -396,14 +398,14 @@ object Graph {
   private def predCounts(keys: Iterable[QuadKey]): Map[Long, Long] =
     keys.groupMapReduce(_._2)(_ => 1L)(_ + _)
 
-  private[core] def countByP(quads: DataFrame): Map[Long, Long] =
+  private def countByP(quads: DataFrame): Map[Long, Long] =
     quads.groupBy("p").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** `st` moved by `sign` × `counts`; predicates left at zero drop out,
     * as `withStats()` never lists them.
     */
-  private[core] def plus(st: Map[Long, Long], counts: Map[Long, Long],
+  private def plus(st: Map[Long, Long], counts: Map[Long, Long],
                    sign: Long): Map[Long, Long] =
     counts.foldLeft(st) { case (m, (p, n)) =>
       val v = m.getOrElse(p, 0L) + sign * n

@@ -120,18 +120,7 @@ object Inference {
   }
 
   /** RemoveNode (writer/single.go:84-114): drop a value and every quad
-    * referencing it, from both quad orderings; `predStats` drop by the
-    * removed quads' counts.
+    * referencing it; see [[Graph.removeNode]].
     */
-  def removeNode(g: Graph, v: QValue): Graph = {
-    val nid = QValue.id(v)
-    val touches = col("s") === nid || col("p") === nid || col("o") === nid ||
-      col("l") <=> lit(nid)
-    g.copy(nodes = g.nodes.where(col("id") =!= nid),
-      quads = g.quads.where(!touches),
-      quadsOps = g.quadsOps.map(_.where(!touches)),
-      predStats = g.predStats.map(st =>
-        Graph.plus(st, Graph.countByP(g.quads.where(touches)), -1L)),
-      delta = None)
-  }
+  def removeNode(g: Graph, v: QValue): Graph = g.removeNode(QValue.id(v))
 }

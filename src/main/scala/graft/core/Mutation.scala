@@ -57,7 +57,7 @@ object Mutation {
     * `Graph.addQuads` uses; the store side is never collected.
     */
   def existing(g: Graph, quads: Seq[ParsedQuad]): Set[Graph.QuadKey] =
-    g.storedKeys(quads.map(Graph.quadKey).distinct)
+    g.storedRows(quads.map(Graph.quadKey).distinct).toSet
 
   /** Apply a delta batch with validation. Deltas are checked in order
     * against the snapshot plus earlier deltas of the same batch, then

@@ -23,7 +23,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * proportional to its body; once the delta outgrows
   * `spark.sql.autoBroadcastJoinThreshold` it folds into a newly cached
   * base. A delete of base quads joins the delta too: one anti-join of
-  * each quad ordering against a small local relation.
+  * each quad ordering against a small local relation. A node delete
+  * collects that node's quads with one filtered scan and deletes them
+  * the same way, with the node's dictionary row.
   *
   * Response shapes mirror the reference: `{"result": ...}` on success,
   * `{"error": msg}` with a 4xx/5xx status on failure; write/delete report

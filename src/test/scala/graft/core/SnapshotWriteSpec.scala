@@ -121,6 +121,21 @@ class SnapshotWriteSpec extends AnyFunSuite {
     val g2 = g.addQuads(Graph.fromQuads(spark, Seq(q("b", "knows", iri("c")))))
     assert(g2.quads.count() === 3)
     assert(g2.quads.where(col("s") === QValue.id(iri("a"))).count() === 2)
+    // a delete removes, and uncounts, every stored copy
+    val g3 = g.withStats().deleteQuads(Graph.fromQuads(spark, Seq(dup)))
+    assert(g3.quads.count() === 0)
+    assertCurrent(g3)
+  }
+
+  test("the existence probe returns only exact matches, every stored copy") {
+    // every s, p and o below is among the probed ids, but only two of
+    // the eight id combinations are stored keys
+    val dup = q("a", "knows", iri("b"))
+    val g = Graph.fromQuads(spark, Seq(dup, dup, q("c", "knows", iri("d")),
+      q("a", "knows", iri("d")), q("c", "knows", iri("b"))))
+    val want = Seq(dup, q("c", "knows", iri("d"))).map(Graph.quadKey)
+    assert(g.storedRows(want).sortBy(_.toString) ===
+      (want.head +: want).sortBy(_.toString))
   }
 
   test("writes keep predStats, the OPS sibling and pb on a bucketed store") {
@@ -196,16 +211,54 @@ class SnapshotWriteSpec extends AnyFunSuite {
     assert(folds.size >= 3)
   }
 
+  test("a disabled broadcast threshold does not fold every write") {
+    val off = spark.newSession()
+    off.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val rnd = new scala.util.Random(3)
+    val g0 = Graph.fromQuads(off, randomQuads(rnd, 40, 10)).withStats().cached()
+    var g = g0
+    for (_ <- 1 to 5) {
+      g = g.addQuads(Graph.fromQuads(off, randomQuads(rnd, 20, 30)))
+      g = g.deleteQuads(Graph.fromQuads(off, randomQuads(rnd, 5, 10)))
+      val delta = g.delta.get
+      assert(!delta.ownsBase && (delta.base.quads eq g0.quads))
+      assert(!g.quads.storageLevel.useMemory)
+    }
+    assertCurrent(g)
+  }
+
+  test("a fold releases its base across node deletes") {
+    val small = spark.newSession()
+    small.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
+    val rnd = new scala.util.Random(11)
+    val names = randomQuads(rnd, 40, 10)
+    var g = Graph.fromQuads(small, names).withStats()
+    def foldedBase = g.delta.filter(_.ownsBase).map(_.base.quads)
+    while (foldedBase.isEmpty)
+      g = g.addQuads(Graph.fromQuads(small, randomQuads(rnd, 20, 200)))
+    val first = foldedBase.get
+    assert(first.storageLevel.useMemory)
+    g = Inference.removeNode(g, names.head.s)
+    assert(g.delta.exists(d => d.ownsBase && (d.base.quads eq first)))
+    assertCurrent(g)
+    while (foldedBase.forall(_ eq first))
+      g = g.addQuads(Graph.fromQuads(small, randomQuads(rnd, 20, 200)))
+    assert(!first.storageLevel.useMemory)
+    assert(g.nodes.where(col("id") === QValue.id(names.head.s)).isEmpty)
+    assertCurrent(g)
+  }
+
   test("the plan of a quad scan has as many nodes after 20 writes as after 1") {
     var g = Graph.fromQuads(spark,
       (1 to 20).map(i => q(s"b$i", "knows", iri("b")))).withStats()
+    def size(df: DataFrame) = df.queryExecution.optimizedPlan.collect { case n => n }.size
     def planNodes(g: Graph) =
-      g.quads.where(col("p") === QValue.id(iri("knows"))).queryExecution
-        .optimizedPlan.collect { case n => n }.size
-    var afterOne = 0
+      (size(g.quads.where(col("p") === QValue.id(iri("knows")))), size(g.nodes))
+    var afterOne = (0, 0)
     for (i <- 1 to 20) {
       g = g.addQuads(Graph.fromQuads(spark, Seq(q(s"w$i", "knows", iri("b")))))
       g = g.deleteQuads(Graph.fromQuads(spark, Seq(q(s"b$i", "knows", iri("b")))))
+      g = Inference.removeNode(g, iri(s"b$i"))
       if (i == 1) afterOne = planNodes(g)
     }
     assert(planNodes(g) === afterOne)
