@@ -6,6 +6,12 @@ import graft.lang.QuerySession
 import graft.lang.QuerySession.{Collation, Options}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, ExecutorService,
+  Executors, ScheduledExecutorService}
+import java.util.concurrent.TimeUnit.MILLISECONDS
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 /** HTTP /api/v2 façade (/root/reference/server/http/api_v2.go:120-144):
   * query, write, delete, node/delete, read, formats — on the JDK's
@@ -13,6 +19,21 @@ import java.nio.charset.StandardCharsets.UTF_8
   * `Graph` reference; writes swap the snapshot (the engine's ApplyDeltas
   * semantics), reads/queries run against whatever snapshot they start
   * with.
+  *
+  * Requests run on a fixed pool of `defaultParallelism` daemon threads
+  * (`local[N]` → N), as the reference serves each request on its own
+  * goroutine. A read takes the `@volatile` snapshot once and runs beside
+  * other reads and writes; it never waits for a lock. Writes, deletes and
+  * node deletes do their read-modify-write of the snapshot under one
+  * private writer lock, so two concurrent writes cannot lose one. A read
+  * on an older snapshot whose cached base a later write's fold released
+  * recomputes that base from its lineage.
+  *
+  * Each request runs under its own Spark job tag. Past `deadline` (the
+  * reference's 300 s query ceiling by default) a scheduled canceller
+  * cancels the tag's jobs, again every `CancelRetry` while the request
+  * still runs, so a query between two jobs is caught at its next one; the
+  * client gets 503 with `{"error": ...}` and the pool thread is free.
   *
   * Every write path (N-Quads, JSON quad-lines, Turtle/TriG, JSON-LD) goes
   * through `Graph.addQuads`: the snapshot is the store as opened (its
@@ -31,9 +52,16 @@ import java.nio.charset.StandardCharsets.UTF_8
   * `{"error": msg}` with a 4xx/5xx status on failure; write/delete report
   * `"Successfully wrote/deleted N quads."` with a count.
   */
-final class HttpApi(initial: Graph) {
+final class HttpApi(initial: Graph, deadline: FiniteDuration = HttpApi.QueryDeadline) {
+  import HttpApi._
   @volatile private var g: Graph = initial
+  private val writer = new Object
+  private val spark = initial.spark
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
+  private var canceller: ScheduledExecutorService = _
+  private val threads = new ConcurrentLinkedQueue[Thread]()
+  private val running = ConcurrentHashMap.newKeySet[String]()
   private val reqCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
   def graph: Graph = g
@@ -41,6 +69,18 @@ final class HttpApi(initial: Graph) {
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress(port), 0)
+    val prefix = s"graft-http-${server.getAddress.getPort}"
+    def daemon(name: String, r: Runnable): Thread = {
+      val t = new Thread(r, name)
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    }
+    val n = new AtomicInteger(0)
+    pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism,
+      r => daemon(s"$prefix-${n.incrementAndGet()}", r))
+    canceller = Executors.newSingleThreadScheduledExecutor(
+      r => daemon(s"$prefix-deadline", r))
     server.createContext("/api/v2/query", handler(serveQuery))
     server.createContext("/api/v2/write", handler(serveWrite))
     server.createContext("/api/v2/delete", handler(serveDelete))
@@ -57,29 +97,75 @@ final class HttpApi(initial: Graph) {
       else (404, "application/json",
         QuerySession.toJson(Map("error" -> "not found")))
     })
-    server.setExecutor(null) // default single-thread executor
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Close the listener and its connections, then give running handlers
+    * `StopWait` to finish; past it their jobs are cancelled, every
+    * `CancelRetry`, for up to another `StopWait`. Returns once every pool
+    * thread has exited or that time has passed.
+    */
+  def stop(): Unit = if (server != null) {
+    server.stop(0)
+    pool.shutdown()
+    val until = System.nanoTime() + 2 * StopWait.toNanos
+    if (!pool.awaitTermination(StopWait.toMillis, MILLISECONDS))
+      while (!pool.awaitTermination(CancelRetry.toMillis, MILLISECONDS) &&
+          System.nanoTime() < until)
+        running.forEach(tag => spark.sparkContext.cancelJobsWithTag(tag, "server stopped"))
+    canceller.shutdownNow()
+    threads.forEach(_.join(math.max(1L, (until - System.nanoTime()) / 1000000L)))
+    threads.clear()
+    server = null
+  }
 
   // ------------------------------------------------------------ plumbing
-  private def handler(f: HttpExchange => (Int, String, String))
-      : com.sun.net.httpserver.HttpHandler = { ex =>
-    val (status, contentType, body) =
-      try f(ex)
-      catch {
-        case e: Throwable =>
-          (400, "application/json",
-            QuerySession.toJson(Map("error" ->
-              (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)))))
-      }
+  /** Swap the snapshot for `f` of it under the writer lock. */
+  private def update(f: Graph => Graph): Unit = writer.synchronized { g = f(g) }
+
+  /** Run `f` under this request's job tag, with the deadline armed;
+    * `f` gets the flag the canceller sets once the deadline has passed,
+    * and the exchange is closed after it whatever happens.
+    */
+  private def tagged(ex: HttpExchange)(f: AtomicBoolean => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"${Thread.currentThread().getName}-r${reqCounter.incrementAndGet()}"
+    val expired = new AtomicBoolean(false)
+    val cancel = canceller.scheduleAtFixedRate({ () =>
+      expired.set(true)
+      sc.cancelJobsWithTag(tag, s"query exceeded its deadline of $deadline")
+    }, deadline.toMillis, CancelRetry.toMillis, MILLISECONDS)
+    running.add(tag)
+    sc.addJobTag(tag)
+    try f(expired)
+    finally {
+      sc.removeJobTag(tag)
+      cancel.cancel(false)
+      running.remove(tag)
+      ex.close()
+    }
+  }
+
+  /** 503 once the deadline has passed, else 400 naming the exception. */
+  private def failure(e: Throwable, expired: Boolean): (Int, String, String) =
+    if (expired) (503, "application/json", QuerySession.toJson(Map("error" ->
+      s"query exceeded its deadline of $deadline")))
+    else (400, "application/json", QuerySession.toJson(Map("error" ->
+      (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)))))
+
+  private def respond(ex: HttpExchange, r: (Int, String, String)): Unit = {
+    val (status, contentType, body) = r
     val bytes = body.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(status, bytes.length.toLong)
     ex.getResponseBody.write(bytes)
-    ex.close()
+  }
+
+  private def handler(f: HttpExchange => (Int, String, String))
+      : com.sun.net.httpserver.HttpHandler = ex => tagged(ex) { expired =>
+    respond(ex, try f(ex) catch { case NonFatal(e) => failure(e, expired.get) })
   }
 
   /** Like `handler`, but the route may answer with a chunked body: it
@@ -92,30 +178,19 @@ final class HttpApi(initial: Graph) {
     */
   private def streamHandler(
       f: HttpExchange => Either[(Int, String, String), (String, java.io.Writer => Unit)])
-      : com.sun.net.httpserver.HttpHandler = { ex =>
-    (try f(ex)
-    catch {
-      case e: Throwable =>
-        Left((400, "application/json",
-          QuerySession.toJson(Map("error" ->
-            (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))))))
-    }) match {
-      case Left((status, contentType, body)) =>
-        val bytes = body.getBytes(UTF_8)
-        ex.getResponseHeaders.set("Content-Type", contentType)
-        ex.sendResponseHeaders(status, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-        ex.close()
+      : com.sun.net.httpserver.HttpHandler = ex => tagged(ex) { expired =>
+    (try f(ex) catch { case NonFatal(e) => Left(failure(e, expired.get)) }) match {
+      case Left(r) => respond(ex, r)
       case Right((contentType, writeFn)) =>
         ex.getResponseHeaders.set("Content-Type", contentType)
         ex.sendResponseHeaders(200, 0L) // 0 = chunked
         val w = new java.io.BufferedWriter(
           new java.io.OutputStreamWriter(ex.getResponseBody, UTF_8), 1 << 16)
         // past this point the status line is gone — a mid-stream failure
-        // can only truncate the body (inherent to chunked transfer)
+        // (the deadline included) can only truncate the body (inherent to
+        // chunked transfer)
         try writeFn(w) finally {
-          try w.flush() catch { case _: Throwable => () }
-          ex.close()
+          try w.flush() catch { case NonFatal(_) => () }
         }
     }
   }
@@ -165,9 +240,9 @@ final class HttpApi(initial: Graph) {
         return { // JSON-LD: parse document, merge as a graph
           val root = org.json4s.jackson.JsonMethods.parse(b).values
             .asInstanceOf[Map[String, Any]]
-          val delta = Formats.readJsonLdRoot(g.spark, root)
+          val delta = Formats.readJsonLdRoot(spark, root)
           val n = delta.quads.count()
-          g = g.addQuads(delta)
+          update(_.addQuads(delta))
           (200, "application/json",
             s"""{"result": "Successfully wrote $n quads.", "count": $n}""")
         }
@@ -187,7 +262,7 @@ final class HttpApi(initial: Graph) {
             yield NQuads.ParsedQuad(s, p, o, term("label"))
         }.toSeq
       else b.linesIterator.flatMap(NQuads.parseLine).toSeq
-    g = g.addQuads(Graph.fromQuads(g.spark, quads))
+    update(_.addQuads(Graph.fromQuads(spark, quads)))
     (200, "application/json",
       s"""{"result": "Successfully wrote ${quads.size} quads.", "count": ${quads.size}}""")
   }
@@ -195,7 +270,7 @@ final class HttpApi(initial: Graph) {
   /** POST /api/v2/delete — N-Quads body removed from the store. */
   private def serveDelete(ex: HttpExchange): (Int, String, String) = {
     val quads = body(ex).linesIterator.flatMap(NQuads.parseLine).toSeq
-    g = g.deleteQuads(Graph.fromQuads(g.spark, quads))
+    update(_.deleteQuads(Graph.fromQuads(spark, quads)))
     (200, "application/json",
       s"""{"result": "Successfully deleted ${quads.size} quads.", "count": ${quads.size}}""")
   }
@@ -205,7 +280,7 @@ final class HttpApi(initial: Graph) {
     */
   private def serveNodeDelete(ex: HttpExchange): (Int, String, String) = {
     val v = NQuads.parseTermOrString(body(ex).trim)
-    g = Inference.removeNode(g, v)
+    update(Inference.removeNode(_, v))
     (200, "application/json",
       """{"result": "Successfully deleted 1 nodes.", "count": 1}""")
   }
@@ -262,9 +337,10 @@ final class HttpApi(initial: Graph) {
   private def serveGephi(ex: HttpExchange): (Int, String, String) = {
     import org.apache.spark.sql.functions.col
     val limit = params(ex).get("limit").map(_.toInt).getOrElse(10000)
+    val snap = g
     val sb = new StringBuilder
     def esc(s: String) = QuerySession.toJson(s)
-    graft.core.Formats.nodeTerms(g).limit(limit).toLocalIterator()
+    graft.core.Formats.nodeTerms(snap).limit(limit).toLocalIterator()
       .forEachRemaining { r =>
         val id = r.getLong(0)
         val x = (id % 1000L) / 5.0 - 100.0
@@ -273,7 +349,7 @@ final class HttpApi(initial: Graph) {
           .append("\r\n")
       }
     var i = 0
-    g.quads.select(col("s"), col("p"), col("o")).limit(limit)
+    snap.quads.select(col("s"), col("p"), col("o")).limit(limit)
       .toLocalIterator().forEachRemaining { r =>
         sb.append(s"""{"ae":{"e$i":{"source":"n${r.getLong(0)}","target":"n${r.getLong(2)}","pred":"p${r.getLong(1)}","directed":true}}}""")
           .append("\r\n")
@@ -287,4 +363,15 @@ final class HttpApi(initial: Graph) {
     (200, "application/json", QuerySession.toJson(Formats.registry.map(f =>
       Map("id" -> f.id, "read" -> f.read, "write" -> f.write,
         "mime" -> f.mime))))
+}
+
+object HttpApi {
+  /** The reference's query ceiling (BASELINE.md): a request still running
+    * after it has its Spark jobs cancelled and answers 503.
+    */
+  val QueryDeadline: FiniteDuration = 300.seconds
+  /** How often the canceller repeats for a request past its deadline. */
+  private val CancelRetry = 100.millis
+  /** How long `stop()` waits for running handlers, and then for threads. */
+  private val StopWait = 10.seconds
 }
