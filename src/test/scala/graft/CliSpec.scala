@@ -19,7 +19,7 @@ class CliSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cli").toString
     val store = s"$dir/store"
     val loadMsg = Cli.runLoad(spark,
-      Array("-i", "/root/reference/data/testdata.nq", "-d", store))
+      Array("-i", TestFixtures.data("testdata.nq"), "-d", store))
     assert(loadMsg.contains("14 nodes, 15 quads"), loadMsg)
 
     // dump to pq (binary), reload, query
@@ -38,7 +38,7 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("repl executes queries, switches language, exits on :exit") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq").cached()
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq")).cached()
     val script =
       """g.V(iri("bob")).in(iri("follows")).all()
         |:lang mql

@@ -31,7 +31,8 @@ object LouvainDebug {
         case other           => other
       }
       val dir = s"/tmp/louvain_movie_x$mult"
-      spark.read.textFile("/root/reference/data/30kmoviedata.nq.gz")
+      spark.read
+        .textFile(graft.TestFixtures.reference("data/30kmoviedata.nq.gz"))
         .repartition(16)
         .flatMap { l =>
           NQuads.parseLine(l).toSeq.flatMap { q =>

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.exec.Exec
 import graft.path.Path
 import org.apache.spark.sql.functions.{col, lit, pmod}
@@ -11,7 +11,7 @@ class FormatsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("N-Quads write/read round-trip preserves the quad set") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val tmp = Files.createTempDirectory("graft-nq").toString + "/out"
     Formats.writeNQuads(g, tmp)
     val g2 = Graph.fromNQuads(spark, tmp)
@@ -44,7 +44,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("JSON-LD reader loads people.jsonld with expanded IRIs") {
-    val g = Formats.readJsonLd(spark, "/root/reference/data/people.jsonld")
+    val g = Formats.readJsonLd(spark, TestFixtures.data("people.jsonld"))
     val knows = Exec.run(g,
       Path.start(QValue.Iri("http://example.com/alice"))
         .out(QValue.Iri("http://xmlns.com/foaf/0.1/knows"))).values()
@@ -154,7 +154,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("removeNode deletes the value and every touching quad") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val g2 = Inference.removeNode(g, QValue.Iri("bob"))
     assert(Exec.run(g2, Path.start(QValue.Iri("bob"))).values().isEmpty)
     assert(Exec.run(g2, Path.start(QValue.Iri("alice")).out(QValue.Iri("follows")))
@@ -164,7 +164,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("delta add/delete (ApplyDeltas semantics)") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val add = Graph.fromQuads(spark, Seq(NQuads.ParsedQuad(
       QValue.Iri("zed"), QValue.Iri("follows"), QValue.Iri("bob"), None)))
     val g2 = g.addQuads(add)
@@ -192,7 +192,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("graphml and gml writers emit well-formed documents") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val gmlW = new java.io.StringWriter()
     Formats.writeGml(g, gmlW)
     val gml = gmlW.toString
@@ -211,7 +211,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("JSON-LD writer round-trips through the JSON-LD reader") {
-    val g = Formats.readJsonLd(spark, "/root/reference/data/people.jsonld")
+    val g = Formats.readJsonLd(spark, TestFixtures.data("people.jsonld"))
     val w = new java.io.StringWriter()
     Formats.writeJsonLd(g, w)
     val root = org.json4s.jackson.JsonMethods.parse(w.toString).values
@@ -322,7 +322,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("graphml write/read round-trip preserves the edge structure") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val dir = Files.createTempDirectory("graft-gml").toString
     val w = Files.newBufferedWriter(java.nio.file.Paths.get(s"$dir/g.graphml"))
     try Formats.writeGraphml(g, w) finally w.close()
@@ -347,7 +347,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("gml write/read round-trip preserves the edge structure") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val dir = Files.createTempDirectory("graft-gmldoc").toString
     val w = Files.newBufferedWriter(java.nio.file.Paths.get(s"$dir/g.gml"))
     try Formats.writeGml(g, w) finally w.close()
@@ -360,7 +360,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("addQuads on a bucketed store keeps pb partitioning and pruning") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val dir = Files.createTempDirectory("graft-bkt").toString
     g.write(dir, predicateBuckets = 4)
     val stored = Graph.read(spark, dir)
@@ -377,7 +377,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("Graph.append: incremental ingest equals rebuild, untouched files stay") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val all = g.quads.collect()
     // split the quad set by subject hash parity; both halves share the
     // full dictionary (append must dedup nodes)
@@ -421,7 +421,7 @@ class FormatsSpec extends AnyFunSuite {
     // possibly exist (all-new terms); a mixed delta (new-term quads +
     // exact duplicates + a new combination of EXISTING terms) must
     // still land exactly the non-duplicate rows
-    val base = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val base = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val dir = Files.createTempDirectory("graft-app-gate").toString
     base.withStats().write(dir, predicateBuckets = 4, objectIndex = true)
     def q(s: String, p: String, o: String) =
@@ -458,7 +458,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("Graph.append keeps the OPS sibling row-identical to the primary") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val h1 = g.copy(quads = g.quads.where(pmod(col("s"), lit(2)) === 0))
     val h2 = g.copy(quads = g.quads.where(pmod(col("s"), lit(2)) === 1)
       .union(g.quads.limit(3)))
@@ -480,7 +480,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("write(objectIndex=false) removes a stale OPS sibling") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val dir = Files.createTempDirectory("graft-stale-ops").toString
     g.withStats().write(dir, predicateBuckets = 4, objectIndex = true)
     assert(new java.io.File(s"$dir/quads_ops").exists())
@@ -495,7 +495,7 @@ class FormatsSpec extends AnyFunSuite {
     // a dual-index graph whose cached() skipped quadsOps would serve
     // reverse hops from an uncached scan round over round — a silent
     // perf asymmetry, not a correctness bug, so a spec pins it
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val dir = Files.createTempDirectory("graft-cache-ops").toString
     try {
       g.withStats().write(dir, predicateBuckets = 4, objectIndex = true)

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -181,7 +181,7 @@ class TurtleSpec extends AnyFunSuite {
   }
 
   test("Turtle write drops labels; reference fixture round-trips") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val dir = Files.createTempDirectory("graft-ttl2").toString + "/out"
     Turtle.writeTurtle(g, dir)
     val g2 = Turtle.read(spark, dir)

@@ -1,6 +1,6 @@
 package graft.lang
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.core.Graph
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GizmoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val session: Gizmo.Session = Gizmo.session(
-    Graph.fromNQuads(spark, "/root/reference/data/testdata.nq").cached())
+    Graph.fromNQuads(spark, TestFixtures.data("testdata.nq")).cached())
 
   def ids(q: String): Seq[String] =
     session.execute(q).flatMap(_.get("id")).sorted
@@ -693,7 +693,7 @@ class GizmoSpec extends AnyFunSuite {
 
   lazy val multiSession: Gizmo.Session = Gizmo.session(
     Graph.fromNQuads(spark,
-      "/root/reference/data/testdata_multigraph.nq").cached())
+      TestFixtures.data("testdata_multigraph.nq")).cached())
 
   test("issue #758: saveOpt respects label context") {
     val got = multiSession.execute(

@@ -1,6 +1,6 @@
 package graft.lang
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.core.Graph
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraphQLSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val session: GraphQL.Session = GraphQL.session(
-    Graph.fromNQuads(spark, "/root/reference/data/testdata.nq").cached())
+    Graph.fromNQuads(spark, TestFixtures.data("testdata.nq")).cached())
 
   private def canon(v: Any): String = v match {
     case m: Map[_, _] =>
@@ -31,7 +31,7 @@ class GraphQLSpec extends AnyFunSuite {
 
   test("hops are distributed joins, not collected-id literal filters") {
     import org.apache.spark.sql.functions._
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val s = GraphQL.session(g)
     val frontier = g.nodes.select(lit(0L).as("pid"), col("id"))
     val hopDf = s.hop(frontier, GraphQL.Field("f", "status"))
@@ -173,7 +173,7 @@ class GraphQLSpec extends AnyFunSuite {
   }
 
   test("default first cap bounds an unpaginated level") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
       .cached()
     // a session with a tiny default: an unpaginated level collects at
     // most defaultFirst objects per parent instead of the full set.
@@ -197,7 +197,7 @@ class GraphQLSpec extends AnyFunSuite {
   }
 
   test("maxFirst is a hard ceiling on explicit first (served path)") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
       .cached()
     // `first: 10000000` must not re-open unbounded driver
     // materialization: the server ceiling clamps it and flags truncation

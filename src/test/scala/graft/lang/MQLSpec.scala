@@ -1,6 +1,6 @@
 package graft.lang
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.core.Graph
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MQLSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val session: MQL.Session = MQL.session(
-    Graph.fromNQuads(spark, "/root/reference/data/testdata.nq").cached())
+    Graph.fromNQuads(spark, TestFixtures.data("testdata.nq")).cached())
 
   private def sortedJson(v: Any): String = v match {
     case m: Map[_, _] =>

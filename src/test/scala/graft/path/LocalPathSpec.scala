@@ -1,5 +1,6 @@
 package graft.path
 
+import graft.TestFixtures
 import graft.core.Graph
 import graft.shape.LocalEval
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LocalPathSpec extends PathSpec {
   override lazy val g: Graph =
-    Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
       .cached().interactive()
 
   test("the local path actually engaged (not a vacuous fallback sweep)") {

@@ -1,6 +1,6 @@
 package graft.path
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.core.{Graph, QValue}
 import graft.exec.Exec
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +17,7 @@ class MovieIntegrationSpec extends AnyFunSuite {
   lazy val g: Graph = {
     val t0 = System.nanoTime()
     val gg = Graph.fromNQuads(spark,
-      "/root/reference/data/30kmoviedata.nq.gz").cached()
+      TestFixtures.reference("data/30kmoviedata.nq.gz")).cached()
     val (n, q) = gg.stats
     info(f"load: $n nodes, $q quads in ${(System.nanoTime() - t0) / 1e9}%.1fs")
     gg

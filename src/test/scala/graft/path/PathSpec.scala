@@ -1,6 +1,6 @@
 package graft.path
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.core.{Graph, QValue}
 import graft.exec.Exec
 import graft.shape.ValueFilter
@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PathSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val g: Graph =
-    Graph.fromNQuads(spark, "/root/reference/data/testdata.nq").cached()
+    Graph.fromNQuads(spark, TestFixtures.data("testdata.nq")).cached()
 
   def iri(s: String): QValue = QValue.Iri(s)
   def str(s: String): QValue = QValue.Str(s)
@@ -328,7 +328,7 @@ class PathSpec extends AnyFunSuite {
   // label-context over the multigraph fixture
   test("multigraph: label context scoping") {
     val g2 = Graph.fromNQuads(spark,
-      "/root/reference/data/testdata_multigraph.nq").cached()
+      TestFixtures.data("testdata_multigraph.nq")).cached()
     val got = Exec.run(g2, Path.start(vFred).labelContext(iri("other_graph"))
       .out(vStatus)).values()
     assert(sortedVals(got) === sortedVals(Seq(vSmart)))
@@ -336,7 +336,7 @@ class PathSpec extends AnyFunSuite {
 
   test("hasLabels: explicit label constraint (shape HasLabels)") {
     val g2 = Graph.fromNQuads(spark,
-      "/root/reference/data/testdata_multigraph.nq").cached()
+      TestFixtures.data("testdata_multigraph.nq")).cached()
     // smart_person holders in smart_graph only: emily, greg (not fred)
     val got = Exec.run(g2,
       Path.start().hasLabels(vStatus, iri("smart_graph"), vSmart)).values()
@@ -349,7 +349,7 @@ class PathSpec extends AnyFunSuite {
 
   test("saveViaLabels: tag bound only from the labeled subgraph") {
     val g2 = Graph.fromNQuads(spark,
-      "/root/reference/data/testdata_multigraph.nq").cached()
+      TestFixtures.data("testdata_multigraph.nq")).cached()
     val rows = Exec.run(g2, Path.start(iri("greg"))
       .saveViaLabels(vStatus, iri("smart_graph"), "st")).tagValues("st")
     assert(rows === Seq(vSmart)) // not the unlabeled "cool_person"
@@ -357,7 +357,7 @@ class PathSpec extends AnyFunSuite {
 
   test("labels() includes quads where the node is the object") {
     val g2 = Graph.fromNQuads(spark,
-      "/root/reference/data/testdata_multigraph.nq").cached()
+      TestFixtures.data("testdata_multigraph.nq")).cached()
     // smart_person appears only as an OBJECT of labeled quads
     val got = Exec.run(g2, Path.start(vSmart).labels()).values()
     assert(sortedVals(got) ===

@@ -1,6 +1,6 @@
 package graft.server
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.core.Graph
 import graft.lang.QuerySession
 import graft.lang.QuerySession.{Collation, Options}
@@ -34,7 +34,7 @@ class HttpApiSpec extends AnyFunSuite {
     val port = api.start()
     try {
       val nq = java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/root/reference/data/testdata.nq"))
+        java.nio.file.Paths.get(TestFixtures.data("testdata.nq")))
       val wrote = post(port, "/api/v2/write", nq)
       assert(wrote.contains(""""count": 15"""), wrote)
 
@@ -142,7 +142,7 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("read format negotiation and gephi stream") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val api = new HttpApi(g)
     val port = api.start()
     try {
@@ -188,7 +188,7 @@ class HttpApiSpec extends AnyFunSuite {
     val port = api.start()
     try {
       val doc = String.join("\n", java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get("/root/reference/data/people.jsonld")))
+        java.nio.file.Paths.get(TestFixtures.data("people.jsonld"))))
       val resp = client.send(
         HttpRequest.newBuilder(URI.create(s"http://localhost:$port/api/v2/write"))
           .header("Content-Type", "application/ld+json")
@@ -204,7 +204,7 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("remote backend: read another engine's store over HTTP") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val api = new HttpApi(g)
     val port = api.start()
     try {
@@ -219,7 +219,7 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("session collations: JSON, REPL, JSONLD") {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val json = QuerySession.execute(g, "gizmo",
       """g.V("<bob>").in("<follows>").all()""")
     assert(json.asInstanceOf[List[Map[String, String]]]

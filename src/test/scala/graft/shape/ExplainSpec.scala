@@ -1,6 +1,6 @@
 package graft.shape
 
-import graft.TestSpark
+import graft.{TestFixtures, TestSpark}
 import graft.core.{Graph, QValue}
 import graft.exec.Exec
 import graft.path.Path
@@ -17,7 +17,7 @@ class ExplainSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   lazy val dir: String = {
-    val g = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val d = Files.createTempDirectory("graft-store").toString
     g.write(d, predicateBuckets = 8)
     d
@@ -41,7 +41,7 @@ class ExplainSpec extends AnyFunSuite {
   }
 
   test("dual-index store: reverse-literal hops scan the OPS sibling") {
-    val g0 = Graph.fromNQuads(spark, "/root/reference/data/testdata.nq")
+    val g0 = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val d = Files.createTempDirectory("graft-store-ops").toString
     g0.write(d, predicateBuckets = 8, objectIndex = true)
     val g = Graph.read(spark, d)
