@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val nq = args.headOption.getOrElse("/root/reference/data/testdata.nq")
+    val nq = args.headOption.getOrElse("src/test/resources/data/testdata.nq")
     val spark = SparkSession.builder()
       .master("local[4]").appName("graft-demo")
       .config("spark.sql.shuffle.partitions", "4")

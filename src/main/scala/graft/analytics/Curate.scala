@@ -85,7 +85,7 @@ object Curate {
     // times per action (four with `bench` derived from the same source).
     // When the input is anything more expensive than a materialized
     // parquet scan (a union, a decoded/transformed view), that multiple
-    // IS the pipeline's cost (measured x100 on the bench's 100-way
+    // IS the pipeline's cost (measured x100 on a 100-way
     // translated-union corpus: 118-190 s in-record vs ~23 s with the
     // input evaluated once). The cache stays referenced by the returned
     // plan, like `capped` below; it is evictable and per-invocation.

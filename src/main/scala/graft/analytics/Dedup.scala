@@ -487,19 +487,11 @@ object Dedup {
   def componentLabels(pairs: DataFrame,
                       maxDriverEdges: Long = DriverCcMaxEdges,
                       maxDriverForest: Long = DriverCcMaxForest): DataFrame = {
-    val ccDebug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
-    val t0 = System.nanoTime()
     val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint().cappedStats
     val nPairs = pr.count()
-    if (ccDebug) println(f"CC pr-checkpoint: ${(System.nanoTime() - t0) / 1e9}%.2f s, $nPairs pairs")
     val (labels, local, held) =
       ccLabelsImpl(pr, nPairs, maxDriverEdges, maxDriverForest)
-    val tR = System.nanoTime()
-    val out = if (local) { releaseBlocks(pr); labels }
-      else releasing(labels, held)
-    if (ccDebug && !local)
-      println(f"CC final-assembly: ${(System.nanoTime() - tR) / 1e9}%.2f s")
-    out
+    if (local) { releaseBlocks(pr); labels } else releasing(labels, held)
   }
 
   /** Incremental component maintenance: fold NEW pairs into an existing
@@ -593,14 +585,9 @@ object Dedup {
       // maps form a forest resolved by pointer doubling, and a final
       // min-aggregate relabels each component by its minimum member id
       // (the exact contract the dedup oracles verify).
-      val ccDebug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
-      // GRAFT_CC_SER=1 stores the per-level edge/mate/forest checkpoints
-      // serialized (compact blocks, lower pressure) instead of the
-      // deserialized default (no per-scan decode) — measurement toggle
-      val ckLevel =
-        if (sys.env.get("GRAFT_CC_SER").contains("1"))
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-        else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      // per-level edge/mate/forest checkpoints stay deserialized (no
+      // per-scan decode)
+      val ckLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val held = scala.collection.mutable.ArrayBuffer[DataFrame](pr)
       // no up-front distinct: level 0's contraction ends in one anyway
       // (mate selection is a min — duplicates can't change it), so the
@@ -621,10 +608,7 @@ object Dedup {
       // left is the contraction distinct. ~16 M rows ≈ 700 MB of hash
       // relation, fine for the 16 g local JVM and a reasonable executor;
       // above it (true cluster scale) the sort-merge path returns.
-      // GRAFT_CC_MATE_BC=0 re-measures the SMJ path.
-      val mateBcMax =
-        if (sys.env.get("GRAFT_CC_MATE_BC").contains("0")) -1L
-        else 16_000_000L
+      val mateBcMax = 16_000_000L
       // the pair checkpoint is only read by level 0 and the final
       // self-loop scan — materialize the (near-empty) self-loop id set
       // as soon as level 0 completes and release the pair blocks, so
@@ -638,7 +622,6 @@ object Dedup {
         // cap means the coin stream is broken, not the graph
         if (level >= 64) throw new IllegalStateException(
           s"connectedComponents: no contraction fixed point after $level levels")
-        val t0 = System.nanoTime()
         def isHead(c: Column): Column =
           xxhash64(c, lit(level)).bitwiseAND(lit(1L)) === lit(1L)
         val sym = e.select(col("a").as("id"), col("b").as("nb"))
@@ -650,7 +633,6 @@ object Dedup {
         mates += mate
         val mateCount = mate.count()
         mateRowsSum += mateCount
-        val tMate = System.nanoTime()
         // only TAIL endpoints can appear in the mate map, and the coin
         // is row-local — splitting the relabel by coin pattern keeps
         // head endpoints out of the joins entirely, halving the shuffled
@@ -674,21 +656,18 @@ object Dedup {
           .join(mA, Seq("a"), "left").join(mB, Seq("b"), "left")
           .select(coalesce(col("pa"), col("a")).as("x"),
             coalesce(col("pb"), col("b")).as("y"))
-        val e2Plan = hh.unionByName(th).unionByName(ht).unionByName(tt)
+        val e2 = hh.unionByName(th).unionByName(ht).unionByName(tt)
           .where(col("x") =!= col("y"))
           .select(least(col("x"), col("y")).as("a"),
             greatest(col("x"), col("y")).as("b"))
           .distinct()
-        if (level == 0) // plan evidence (env-gated no-op)
-          graft.core.PlanDump.dump("dedup_cc_level0", e2Plan)
-        val e2 = e2Plan.localCheckpoint(true, ckLevel).cappedStats
+          .localCheckpoint(true, ckLevel).cappedStats
         held += e2
         // superseded level checkpoint: release in-loop (e2 is already
         // materialized — holding every level's edges to end-of-call is
         // the keyed-frontier OOM trap)
         releaseBlocks(e)
         e = e2
-        val tE2 = System.nanoTime()
         val eNext = e.count()
         if (level == 0) {
           selfIds = Some(pr.where(col("id_a") === col("id_b"))
@@ -697,11 +676,6 @@ object Dedup {
           held += selfIds.get
           releaseBlocks(pr)
         }
-        if (ccDebug) println(f"CC level $level: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"(mate ${(tMate - t0) / 1e9}%.2f, relabel+distinct " +
-          f"${(tE2 - tMate) / 1e9}%.2f, count " +
-          f"${(System.nanoTime() - tE2) / 1e9}%.2f), edges $eCount -> $eNext")
         eCount = eNext
         level += 1
       }
@@ -710,7 +684,6 @@ object Dedup {
       // The raw (id, par) rows are kept driver-side too — the forest
       // resolve below may fold them into a driver map without a round
       // trip through a DataFrame.
-      val tResid = System.nanoTime()
       val residualRows: Seq[(Long, Long)] = if (eCount == 0) Nil else {
         val parent = new java.util.HashMap[Long, Long]()
         def find(x: Long): Long = {
@@ -734,8 +707,6 @@ object Dedup {
       }
       val residual: Option[DataFrame] =
         if (residualRows.isEmpty) None else Some(residualRows.toDF("id", "par"))
-      if (ccDebug) println(f"CC residual-uf: " +
-        f"${(System.nanoTime() - tResid) / 1e9}%.2f s, $eCount edges")
       val stages = mates.size + residual.size
       // forest size = Σ mate rows + residual rows: NODE-sized (each node
       // is tailed at most once, ever), so it sits far below the edge
@@ -744,8 +715,6 @@ object Dedup {
       val forestRows =
         if (maxDriverForest < 0 || stages == 0) Long.MaxValue
         else mateRowsSum + residualRows.size
-      if (ccDebug && forestRows != Long.MaxValue)
-        println(s"CC forest rows: $forestRows (gate $maxDriverForest)")
       val labels = if (stages == 0) {
         // every pair was a self-loop: each endpoint is its own cluster
         pr.select(col("id_a").as("id"))
@@ -757,15 +726,14 @@ object Dedup {
         // graph is edge-sized — at 47 M edges the forest is ~21 M rows,
         // and the distributed tail it replaces (3 pointer-doubling
         // self-join rounds + the roots distinct + the min-relabel
-        // aggregate+join, each a full-forest shuffle) measured ~41 s on
-        // the x100 probe. One collect + a path-compressed resolve over a
+        // aggregate+join, each a full-forest shuffle) measured ~41 s at
+        // x100. One collect + a path-compressed resolve over a
         // primitive open-addressing map does the same work in a few
         // seconds (a boxed java.util.HashMap at this size measured
         // 43.5 s — allocation+GC, not algorithm) and emits the SAME
         // (id, cluster) row set: ids = forest ids ∪ roots, cluster =
         // min member id (min over forest ids mapped to each root, and
         // the root itself — exactly the rows of f ⋈ minm below).
-        val tD = System.nanoTime()
         val n = forestRows.toInt
         val parent = new LongLongMap(n)
         val ids = new Array[Long](n)
@@ -816,9 +784,6 @@ object Dedup {
           outIds(idx + j) = roots(j); outCl(idx + j) = minOf.getOrSelf(roots(j))
           j += 1
         }
-        if (ccDebug) println(f"CC driver-resolve: " +
-          f"${(System.nanoTime() - tD) / 1e9}%.2f s, $forestRows forest rows, " +
-          s"${roots.length} roots")
         // lazy, broadcast-backed emission: one in-JVM copy of the two
         // primitive arrays; tuples materialize inside tasks, never as a
         // 20 M-element boxed driver array (closure capture would ship
@@ -853,7 +818,6 @@ object Dedup {
         var dRounds = 0
         var hopped = true
         while (hopped && (1L << dRounds) < stages) {
-          val t0 = System.nanoTime()
           val next = fp.as("x")
             .join(fp.select(col("id").as("pid"), col("par").as("ppar")),
               col("x.par") === col("pid"), "left")
@@ -867,14 +831,10 @@ object Dedup {
           // the emptiness probe only matters if it could stop an
           // upcoming round — on the final statically-bounded round it
           // would be a pure full-scan tax
-          val tProbe = System.nanoTime()
           hopped = if ((1L << dRounds) < stages)
             next.where(col("__hop")).head(1).nonEmpty
           else true
           fp = next.select("id", "par")
-          if (ccDebug) println(f"CC doubling $dRounds: " +
-            f"${(tProbe - t0) / 1e9}%.2f s join + " +
-            f"${(System.nanoTime() - tProbe) / 1e9}%.2f s probe, hopped=$hopped")
         }
         val resolved = fp
         // relabel roots to component minima: the root of a mate forest
@@ -885,15 +845,12 @@ object Dedup {
         // UF or by becoming someone's par) — so the min aggregate sees
         // the true component minimum; edge-less and self-loop-only ids
         // are appended below / fall through to the caller's coalesce.
-        val tRel = System.nanoTime()
         val roots = resolved
           .select(col("par").as("id"), col("par").as("root")).distinct()
         val f = resolved.select(col("id"), col("par").as("root"))
           .unionByName(roots)
           .localCheckpoint(true, ckLevel).cappedStats
         held += f
-        if (ccDebug) println(f"CC relabel-f: " +
-          f"${(System.nanoTime() - tRel) / 1e9}%.2f s")
         val minm = f.groupBy("root").agg(min("id").as("cluster"))
         f.join(minm, Seq("root")).select(col("id"), col("cluster"))
       }
@@ -1017,10 +974,9 @@ object Dedup {
     // shingle-set aggregation (a full shuffle) twice otherwise
     val sets = shingleSets(rows).persist()
     try {
-      val laid = sets.repartitionByRange(numParts, col("id"))
+      sets.repartitionByRange(numParts, col("id"))
         .sortWithinPartitions("id")
-      graft.core.PlanDump.dump("dedup_probe_sets_write", laid)
-      laid.write.mode("overwrite").parquet(s"$dir/sets")
+        .write.mode("overwrite").parquet(s"$dir/sets")
     } finally sets.unpersist()
     rows.unpersist()
     java.nio.file.Files.write(

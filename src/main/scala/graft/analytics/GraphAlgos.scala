@@ -119,36 +119,11 @@ object GraphAlgos {
       if (nNodes > 1_000_000)
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
       else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // RAIL (big graphs): localCheckpoint under AQE captures
-    // UnknownPartitioning (ExplainSpec pin), so the checkpointed eDeg
-    // was re-exchanged — all |E| rows — inside EVERY iteration's join.
-    // repartition + sortWithinPartitions + persist (the louvain symP
-    // layout) keeps hash(src) partitioning AND sort order across the
-    // loop: each iteration's sort-merge join reads eDeg with no
-    // exchange and no sort, and the seeded side likewise on hash(node)
-    // — the only per-iteration exchange left is the contribution
-    // aggregate itself. At sf0.1 scale the columnar cache round-trip
-    // costs more than the exchange it saves (measured r6: 6.1 s vs
-    // 3.4 — the reason this stays checkpoint below the gate); at 47 M
-    // edges the trade flips (measured r13 — see OPTIMIZATION_r13.md).
-    // GRAFT_PR_RAIL=0/1 re-measures either way.
-    val rail = sys.env.get("GRAFT_PR_RAIL").map(_ == "1")
-      .getOrElse(nNodes > 1_000_000)
-    val eDeg =
-      if (rail)
-        e.join(outDeg, "src")
-          .repartition(numParts, col("src")).sortWithinPartitions("src")
-          .persist(eDegLevel)
-      else e.join(outDeg, "src")
-        .repartition(numParts, col("src"))
-        .localCheckpoint(true, eDegLevel).cappedStats
-    val seededP =
-      if (rail)
-        seeded.repartition(numParts, col("node"))
-          .sortWithinPartitions("node").persist()
-      else seeded.repartition(numParts, col("node"))
-        .localCheckpoint(true).cappedStats
-    if (rail) { eDeg.count(); seededP.count() }
+    val eDeg = e.join(outDeg, "src")
+      .repartition(numParts, col("src"))
+      .localCheckpoint(true, eDegLevel).cappedStats
+    val seededP = seeded.repartition(numParts, col("node"))
+      .localCheckpoint(true).cappedStats
     held += eDeg; held += seededP
     var ranks = seededP.withColumn("rank", col("restart"))
     for (i <- 1 to iterations) {
@@ -164,10 +139,6 @@ object GraphAlgos {
         held += ranks
       }
     }
-    // plan evidence for one loop iteration (env-gated no-op): shows
-    // whether eDeg/seededP enter the round's joins with or without an
-    // Exchange (the rail claim)
-    graft.core.PlanDump.dump("graph_pagerank_iter", ranks)
     Dedup.releasing(ranks.select(col("node"), col("rank")), held.toSeq)
   }
 
@@ -1579,15 +1550,14 @@ object GraphAlgos {
     * of its own community first) scores w(i,C) − k_i·Σtot(C)/(2m); a
     * move requires a strictly positive improvement over staying.
     *
-    * `timeBoxSec` (0 = unbounded; env `GRAFT_LOUVAIN_TIMEBOX` overrides
-    * when set): a hard wall-clock budget for the distributed tier. When
-    * the budget expires mid-level the round loop stops, the level's
-    * applied moves are contracted and composed as usual, and the labels
-    * accumulated so far are returned — a degraded-but-valid partition
-    * (every prefix of Louvain levels is one) instead of an unbounded
-    * run. Levels already below the driver-fold gate finish sequentially
-    * regardless (the CSR core is seconds). Spec-scale graphs never hit
-    * it (default off).
+    * `timeBoxSec` (0 = unbounded): a hard wall-clock budget for the
+    * distributed tier. When the budget expires mid-level the round loop
+    * stops, the level's applied moves are contracted and composed as
+    * usual, and the labels accumulated so far are returned — a
+    * degraded-but-valid partition (every prefix of Louvain levels is
+    * one) instead of an unbounded run. Levels already below the
+    * driver-fold gate finish sequentially regardless (the CSR core is
+    * seconds). Spec-scale graphs never hit it (default off).
     */
   def louvain(edges: DataFrame, srcCol: String, dstCol: String,
               maxRounds: Int = 20, maxLevels: Int = 10,
@@ -1596,12 +1566,9 @@ object GraphAlgos {
               timeBoxSec: Double = 0.0): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val boxSec = sys.env.get("GRAFT_LOUVAIN_TIMEBOX")
-      .map(_.toDouble).getOrElse(timeBoxSec)
     val deadline =
-      if (boxSec > 0) System.nanoTime() + (boxSec * 1e9).toLong
+      if (timeBoxSec > 0) System.nanoTime() + (timeBoxSec * 1e9).toLong
       else Long.MaxValue
-    val tU = System.nanoTime()
     val und = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -1610,9 +1577,6 @@ object GraphAlgos {
       .distinct().localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER).cappedStats
     val undCount = und.count()
-    if (sys.env.contains("GRAFT_LOUVAIN_DEBUG"))
-      System.err.println(
-        f"louvain undSecs=${(System.nanoTime() - tU) / 1e9}%.1f")
     if (undCount <= maxDriverEdges) {
       val es = und.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       Dedup.releaseBlocks(und)
@@ -1821,16 +1785,6 @@ object GraphAlgos {
     out.result()
   }
 
-  /** Distributed Louvain tier over a canonical deduped undirected edge
-    * list (a < b). See [[louvain]] for the round/level design.
-    * `driverFoldEdges`: once a level's CONTRACTED community graph has
-    * at most this many edges, collect it and finish the remaining
-    * levels with the sequential core — contraction typically collapses
-    * the graph by orders of magnitude after level 0, and the measured
-    * cost of the distributed tail levels is pure scheduling (~45 s of
-    * 1-3 s rounds at x10 on the movie graph, movers in the hundreds).
-    * Negative disables the fold (pure-distributed contract runs).
-    */
   /** Process VmRSS in MB (-1 when /proc is unreadable) — watchdog input. */
   private[analytics] def procRssMb: Long =
     try {
@@ -1841,12 +1795,16 @@ object GraphAlgos {
       } finally src.close()
     } catch { case _: Throwable => -1L }
 
-  private def rddId(df: DataFrame): Long =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id.toLong
-      case _ => -1L
-    }
-
+  /** Distributed Louvain tier over a canonical deduped undirected edge
+    * list (a < b). See [[louvain]] for the round/level design.
+    * `driverFoldEdges`: once a level's CONTRACTED community graph has
+    * at most this many edges, collect it and finish the remaining
+    * levels with the sequential core — contraction typically collapses
+    * the graph by orders of magnitude after level 0, and the measured
+    * cost of the distributed tail levels is pure scheduling (~45 s of
+    * 1-3 s rounds at x10 on the movie graph, movers in the hundreds).
+    * Negative disables the fold (pure-distributed contract runs).
+    */
   private def louvainDistributed(und0: DataFrame, undCount: Long,
                                  maxRounds: Int, maxLevels: Int,
                                  driverFoldEdges: Long,
@@ -1935,7 +1893,6 @@ object GraphAlgos {
       // and a long sym lineage here made that rebuild re-read released
       // movers checkpoints (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND at round 1;
       // measured, not theory — do not inline kdf into cur)
-      val tK = System.nanoTime()
       val kdf = sym.groupBy("n").agg(sum("w").as("kd"))
         .unionByName(sw.select(col("n"), (col("sw") * 2.0d).as("kd")))
         .groupBy("n").agg(sum("kd").as("k"))
@@ -1950,36 +1907,24 @@ object GraphAlgos {
       // are integral doubles, so the sum is an exact integer either way
       val m = cur.agg(coalesce(sum("k"), lit(0.0d)))
         .head().getDouble(0) / 2.0d
-      if (sys.env.contains("GRAFT_LOUVAIN_DEBUG"))
-        System.err.println(f"louvain level=$level " +
-          f"kSecs=${(System.nanoTime() - tK) / 1e9}%.1f " +
-          s"undRdd=${rddId(ewBacking)} swRdd=${rddId(sw)} " +
-          s"assignRdd=${if (assign == null) -1L else rddId(assign)}")
       // adaptive mover floor (big levels only): a full-graph round at
       // 47 M edges costs 30-80 s, and the measured mover tail (movers
       // < |E|/12, single-digit % of round 0) buys oscillation residue,
       // not structure — the next level's contraction re-examines
       // exactly those boundary nodes. The 8 M-edge guard keeps the
       // floor out of every spec-scale graph (planted-ring recovery is
-      // exact convergence territory; only bench-scale levels pay
+      // exact convergence territory; only x10/x100-scale levels pay
       // tens-of-seconds rounds).
-      // GRAFT_LOUVAIN_FLOOR_DIV re-measures the floor trade (quality via
-      // Probe's modularity print); 12 is the shipped calibration
-      val moverFloor =
-        if (edgeCount >= 8000000L)
-          edgeCount / sys.env.get("GRAFT_LOUVAIN_FLOOR_DIV")
-            .map(_.toLong).getOrElse(12L)
-        else 0L
+      val moverFloor = if (edgeCount >= 8000000L) edgeCount / 12L else 0L
       // storage watchdog (unconditional on big levels — one stderr line
-      // per level): the r10 DRIVER bench child hit 95.7 GB RSS and died
-      // here while the builder env pinned the same run at 3.4 GB; this
+      // per level): an r10 x100 run hit 95.7 GB RSS and died here
+      // while another environment pinned the same run at 3.4 GB; this
       // line makes block-vs-native attribution possible from the driver
       // log alone. memSize/diskSize sum every persisted block (caches,
       // localCheckpoints); RSS far above heap+memSize means NATIVE pages
       // (mmap'd disk-store read-back — spark.storage.memoryMapThreshold
       // — is RAM-resident when spark.local.dir is tmpfs-backed).
-      if (edgeCount >= 8000000L ||
-          sys.env.contains("GRAFT_LOUVAIN_DEBUG")) {
+      if (edgeCount >= 8000000L) {
         val infos = spark.sparkContext.getRDDStorageInfo
         System.err.println(
           f"louvain level=$level watchdog rss_mb=${procRssMb} " +
@@ -2080,7 +2025,6 @@ object GraphAlgos {
         }
         val moversFn: DataFrame => DataFrame =
           if (rounds == 0) moversRound0 else moversOf
-        val debug = sys.env.contains("GRAFT_LOUVAIN_DEBUG")
         val tRound = System.nanoTime()
         // sampled floor pre-check (floor-eligible levels only, once the
         // mover count is within 4× of the floor): the last round of a
@@ -2091,26 +2035,16 @@ object GraphAlgos {
         // never a wrong answer) and skip the full-graph round the floor
         // would end anyway. Spec-scale graphs (< 8 M edges) have
         // moverFloor = 0 and never take this path.
-        val preSkip = moverFloor > 0L && prevMovers < 4L * moverFloor && {
-          val tPre = System.nanoTime()
-          val est = 16L * moversFn(symP.where(
-            pmod(xxhash64(col("n")), lit(16L)) === lit(0L))).count()
-          if (debug)
-            System.err.println(f"louvain level=$level round=$rounds " +
-              f"preEst=$est floor=$moverFloor " +
-              f"preSecs=${(System.nanoTime() - tPre) / 1e9}%.1f")
-          est < moverFloor
-        }
+        val preSkip = moverFloor > 0L && prevMovers < 4L * moverFloor &&
+          16L * moversFn(symP.where(
+            pmod(xxhash64(col("n")), lit(16L)) === lit(0L))).count() <
+            moverFloor
         if (preSkip) {
           roundMoved = false
           rounds += 1
         } else {
         val movers = moversFn(symP).localCheckpoint(true).cappedStats
         val nMovers = movers.count()
-        if (debug)
-          System.err.println(f"louvain level=$level round=$rounds " +
-            f"movers=$nMovers rdd=${rddId(movers)} " +
-            f"scoreSecs=${(System.nanoTime() - tRound) / 1e9}%.1f")
         // plateau exit: synchronous local moving converges geometrically
         // while real progress is being made; a tail that shrinks < 10%
         // per round is the oscillation residue (community pairs trading
@@ -2153,9 +2087,6 @@ object GraphAlgos {
           Dedup.releaseBlocks(movers)
           Dedup.releaseBlocks(cur)
           cur = next
-          if (debug)
-            System.err.println(f"louvain level=$level round=$rounds " +
-              f"roundSecs=${(System.nanoTime() - tRound) / 1e9}%.1f")
           // only FULL applied rounds feed the box predictor (pre-check
           // skips and plateau exits are cheap partial rounds)
           lastRoundNanos = System.nanoTime() - tRound
@@ -2168,7 +2099,6 @@ object GraphAlgos {
       // contraction reads ew, not symP
       Dedup.releaseBlocks(symP)
       if (levelMoved) {
-        val tC = System.nanoTime()
         // compose original-node assignment through this level. First
         // compose (assign == null): the pre-level assignment is the
         // identity over exactly cur's node set, so assign ⋈ cur is a
@@ -2219,17 +2149,12 @@ object GraphAlgos {
         // the contracted community graph fits the gate, the remaining
         // levels run sequentially — one collect of a community-sized
         // graph replaces whole scheduling-bound distributed levels
-        val debugL = sys.env.contains("GRAFT_LOUVAIN_DEBUG")
         val foldEligible = driverFoldEdges >= 0L && level < maxLevels
         // one count over the fresh contraction checkpoint — doubles as
         // the next level's |E| (the floor input), so levels never run a
         // dedicated count job
         val contractedEdges = ew.count()
         edgeCount = contractedEdges
-        if (debugL)
-          System.err.println(
-            s"louvain level=${level - 1} contracted |E|=$contractedEdges " +
-              f"contractSecs=${(System.nanoTime() - tC) / 1e9}%.1f")
         if (foldEligible && contractedEdges <= driverFoldEdges) {
           // typed collect: tuple rows are ~3x lighter than GenericRows,
           // which matters when the gate admits multi-million-edge
@@ -2259,7 +2184,6 @@ object GraphAlgos {
       System.err.println(s"louvain TIMEBOX expired at level=$level " +
         (if (boxStop && !expired) "(predictive round gate) " else "") +
         "(returning the prefix partition accumulated so far)")
-    val tF = System.nanoTime()
     // assign == null: no level ever composed — the partition is the
     // identity (every endpoint its own singleton community)
     val out = if (assign == null)
@@ -2274,10 +2198,6 @@ object GraphAlgos {
         assign.join(mins, "sup").select(col("node"), col("community")),
         (held += assign).toSeq)
     }
-    if (sys.env.contains("GRAFT_LOUVAIN_DEBUG"))
-      System.err.println(
-        f"louvain finalSecs=${(System.nanoTime() - tF) / 1e9}%.1f")
-    graft.core.PlanDump.dump("graph_louvain_final", out)
     out
   }
 
@@ -2354,7 +2274,7 @@ object GraphAlgos {
     // graphs (ratio ≥ 1.3) shrink every later round through one
     // distinct, but the x100 movie edge list measured ratio = 1.000 —
     // its unconditional 47 M-row distinct shuffle bought nothing
-    // (r13 probe: 7.8 s for the distinct alone, plus the checkpoint of
+    // (measured r13: 7.8 s for the distinct alone, plus the checkpoint of
     // shuffled rows). The sketch (±~2% HLL error vs a 30% decision
     // margin) only ever affects plan choice, never results: both SCC
     // tiers are exact under duplicate edge rows (Tarjan adjacency,
@@ -2363,10 +2283,8 @@ object GraphAlgos {
     val cnt = raw.agg(count(lit(1)).as("n"),
       approx_count_distinct(struct(col("u"), col("v"))).as("d")).head()
     val (nRaw, nDist) = (cnt.getLong(0), cnt.getLong(1))
-    val ePlan = if (nRaw > (1.3 * nDist).toLong) raw.distinct() else raw
-    // plan evidence for the gated distinct (env-gated no-op)
-    graft.core.PlanDump.dump("graph_scc_edges", ePlan)
-    val e = ePlan.localCheckpoint(true).cappedStats
+    val e = (if (nRaw > (1.3 * nDist).toLong) raw.distinct() else raw)
+      .localCheckpoint(true).cappedStats
     if (e.count() <= maxDriverEdges) {
       val r = sccDriver(e) // collected — independent of e
       Dedup.releaseBlocks(e)
@@ -2491,9 +2409,6 @@ object GraphAlgos {
     // directions are needed to keep the O(log) round bound).
     var changedSet = lab
     var changed = true
-    val debug = sys.env.contains("GRAFT_SCC_DEBUG")
-    var fpRounds = 0
-    val tFp = System.nanoTime()
     while (changed) {
       val viaEdges = e
         .join(changedSet.select(col("node").as("u"), col("lb").as("lu")),
@@ -2522,11 +2437,7 @@ object GraphAlgos {
       changedSet = next.where(col("__chg")).select("node", "lb")
       changed = changedSet.head(1).nonEmpty
       lab = next.select("node", "lb")
-      fpRounds += 1
     }
-    if (debug)
-      System.err.println(f"scc fixedPoint rounds=$fpRounds " +
-        f"secs=${(System.nanoTime() - tFp) / 1e9}%.1f")
     // make the result self-contained, then release every round
     // checkpoint and the cached edge layout
     Dedup.releasing(lab, held.toSeq)
@@ -2554,11 +2465,8 @@ object GraphAlgos {
         held += r
         r
       }
-    val debug = sys.env.contains("GRAFT_SCC_DEBUG")
-    var outerIters = 0
     var live = true
     while (live) {
-      val tTrim = System.nanoTime()
       // TRIM (the FW-BW-Trim accelerator, public standard for parallel
       // SCC — Hong/Slota-style): a node with no in-edge or no out-edge
       // in the remaining graph is a singleton SCC; peel such nodes and
@@ -2584,14 +2492,13 @@ object GraphAlgos {
         // == deg rows with no out- or no in-edge; `before` (every live
         // endpoint) is a projection of the same checkpoint, not a
         // recomputation of both distincts.
-        val degPlan = remaining
+        val deg = remaining
           .select(col("u").as("node"), lit(1L).as("od"), lit(0L).as("id"))
           .unionByName(remaining
             .select(col("v").as("node"), lit(0L).as("od"), lit(1L).as("id")))
           .groupBy("node")
           .agg(sum("od").as("od"), sum("id").as("id"))
-        graft.core.PlanDump.dump("graph_scc_trim_bad", degPlan)
-        val deg = degPlan.localCheckpoint(true).cappedStats
+          .localCheckpoint(true).cappedStats
         held += deg
         val bad = deg.where(col("od") === 0L || col("id") === 0L)
           .select("node")
@@ -2616,9 +2523,6 @@ object GraphAlgos {
           trimRounds += 1
         }
       }
-      if (debug)
-        System.err.println(f"scc outer=$outerIters trimRounds=$trimRounds " +
-          f"secs=${(System.nanoTime() - tTrim) / 1e9}%.1f")
       val nodes = remaining.select(col("u").as("node"))
         .union(remaining.select(col("v").as("node"))).distinct()
         .localCheckpoint(true).cappedStats
@@ -2626,13 +2530,9 @@ object GraphAlgos {
       if (nodes.isEmpty) live = false
       else {
         // (1) forward: color(v) = min id with a path to v
-        val tColor = System.nanoTime()
         val color = minLabelFixedPoint(nodes, remaining)
           .withColumnRenamed("lb", "color").localCheckpoint(true).cappedStats
         held += color
-        if (debug)
-          System.err.println(f"scc outer=$outerIters colorSecs=" +
-            f"${(System.nanoTime() - tColor) / 1e9}%.1f")
         // (2) backward within color regions: bcolor(v) = min region id
         // v reaches = fixed point over REVERSED region-internal edges
         val rev = remaining
@@ -2642,12 +2542,8 @@ object GraphAlgos {
           .select(col("v").as("u"), col("u").as("v"))
           .localCheckpoint(true).cappedStats
         held += rev
-        val tB = System.nanoTime()
         val bcolor = minLabelFixedPoint(nodes, rev)
           .withColumnRenamed("lb", "bcolor")
-        if (debug)
-          System.err.println(f"scc outer=$outerIters bcolorSecs=" +
-            f"${(System.nanoTime() - tB) / 1e9}%.1f")
         // members of every root SCC at once: v and its region minimum c
         // reach each other iff bcolor(v) == color(v) == c
         val scc = color.join(bcolor, "node")
@@ -2682,7 +2578,6 @@ object GraphAlgos {
         result = result.unionByName(isolated).localCheckpoint(true).cappedStats
         held += result
       }
-      outerIters += 1
     }
     if (result == null) {
       held.foreach(Dedup.releaseBlocks)

@@ -47,16 +47,11 @@ object LinearModel {
                   l2: Double = 0.0): Array[Double] = {
     // cache the feature rows hash-laid-out on id: the margin aggregate
     // (grouping subsumes id) and the residual join then run exchange-
-    // free, leaving ONE shuffle per round (the per-bucket gradient)
+    // free, leaving ONE shuffle per round (the per-bucket gradient).
     // MEMORY_AND_DISK (not _SER): measured isolated at x100 (500 k docs,
-    // 32 M feature rows) default wins 18.9/12.7 s vs 21.5/13.7 s — the
-    // SQL cache is columnar compressed either way, and the serialized
-    // level adds per-round decode CPU to the 10 gradient scans;
-    // GRAFT_LR_SER=1 flips it for re-measurement
-    val level =
-      if (sys.env.contains("GRAFT_LR_SER"))
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // 32 M feature rows) it wins 18.9/12.7 s vs 21.5/13.7 s — the SQL
+    // cache is columnar compressed either way, and the serialized level
+    // adds per-round decode CPU to the 10 gradient scans
     // materialize the labels ONCE before building the plan: `labels`
     // appears three times below (the bias union branch, the data join,
     // and the count) and callers typically derive it from the same
@@ -68,14 +63,13 @@ object LinearModel {
     val data = withBias(rows, lbl)
       .repartition(rows.sparkSession.sessionState.conf
         .numShufflePartitions, col("id"))
-      .persist(level)
-    graft.core.PlanDump.dump("lr_data", data)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = math.max(lbl.count(), 1L).toDouble
     // per-round watchdog on big corpora (mirrors louvain's): one stderr
     // line per GD round with round seconds, gradient norm, RSS and
     // block-store footprint — enough to attribute a slow official-record
     // entry to cache eviction / disk pressure from the log alone
-    val watch = n >= 100000.0 || sys.env.contains("GRAFT_LR_DEBUG")
+    val watch = n >= 100000.0
     val spark = rows.sparkSession
     val w = Array.fill(dim + 1)(0.0)
     (0 until iters).foreach { it =>
@@ -108,9 +102,9 @@ object LinearModel {
           f"block_disk_mb=${infos.map(_.diskSize).sum / (1L << 20)}")
       }
     }
-    // blocking: the caller may re-run training immediately (bench
-    // min-of-2 samples) — a lazily-dropped 32 M-row cache otherwise
-    // overlaps the second sample's fresh cache under memory pressure
+    // blocking: the caller may re-run training immediately — a
+    // lazily-dropped 32 M-row cache otherwise overlaps the next run's
+    // fresh cache under memory pressure
     data.unpersist(blocking = true)
     Dedup.releaseBlocks(lbl)
     w

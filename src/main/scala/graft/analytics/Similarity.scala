@@ -346,10 +346,9 @@ object Similarity {
         cellExpr(col(vecCol), cents).as("cell"))
       .persist()
     try {
-      val laid = proj.repartitionByRange(col("cell"), col("id"))
+      proj.repartitionByRange(col("cell"), col("id"))
         .sortWithinPartitions("cell", "id")
-      graft.core.PlanDump.dump("sim_ivf_q_write", laid)
-      laid.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
     } finally proj.unpersist()
     val json = cents.map(_.mkString("[", ",", "]"))
       .mkString("{\"centroids\":[", ",", "]}")
@@ -475,18 +474,12 @@ object Similarity {
       val full = spark.read.parquet(s"$dir/vectors")
         .where(col("cell").isin(cells: _*) && col("id").isin(candIds: _*))
         .select(col("cell"), col("id"), col("v"))
-      val out = rescore(full, candLocal)
-      // branch-distinct names: a run exercising both paths must not
-      // overwrite one branch's plan evidence with the other's
-      graft.core.PlanDump.dump("sim_ivf_q_rerank_gated", out)
-      out
+      rescore(full, candLocal)
     } else {
       val full = spark.read.parquet(s"$dir/vectors")
         .where(col("cell").isin(cells: _*))
         .select(col("cell"), col("id"), col("v"))
-      val out = rescore(full, cand)
-      graft.core.PlanDump.dump("sim_ivf_q_rerank_shuffle", out)
-      out
+      rescore(full, cand)
     }
   }
 

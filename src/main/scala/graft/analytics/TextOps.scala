@@ -1219,10 +1219,9 @@ object TextOps {
       .select(col("pb"), col("term"), col("id"), col("tf"), col("dl"))
       .persist()
     try {
-      val laid = posting.repartitionByRange(numParts, col("term"), col("id"))
+      posting.repartitionByRange(numParts, col("term"), col("id"))
         .sortWithinPartitions("term", "id")
-      graft.core.PlanDump.dump("text_search_write", laid)
-      laid.write.mode(if (append) "append" else "overwrite")
+        .write.mode(if (append) "append" else "overwrite")
         .partitionBy("pb").parquet(s"$dir/postings")
     } finally posting.unpersist()
     if (!append) writeSearchMeta(dir, n, sumdl, buckets)

@@ -614,7 +614,6 @@ object Graph {
         dq("o") === existing("o") && dq("l") <=> existing("l"),
       "left_anti")
     val fresh = if (freshPlan eq dq) dq else freshPlan.persist()
-    PlanDump.dump("append_fresh", fresh)
     try {
       // count the appended rows BEFORE writing: the write into dir/quads
       // invalidates every cached plan that reads that path (CacheManager

@@ -151,7 +151,7 @@ final class SparkResults(g: Graph, val df: DataFrame) extends Results {
 
   /** Distributed finals: resolve id-valued columns to their scalar payload
     * (strings for IRI/BNode/text kinds, decimal string for numerics, ISO
-    * for time) and return a DataFrame — used by Verify/Bench where results
+    * for time) and return a DataFrame — used by Verify where results
     * must not be collected to the driver. `mapping` = (column in the
     * working set → output name); the working-set column may be `id` or a
     * tag column (pass the raw tag name via `Lower.tagCol`).
