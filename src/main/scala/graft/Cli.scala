@@ -9,19 +9,24 @@ import org.apache.spark.sql.SparkSession
   *
   *   runMain graft.Cli load -i <file> [-f <format>] -d <storeDir>
   *   runMain graft.Cli dump -d <storeDir> -o <file> [-f <format>]
+  *   runMain graft.Cli convert -i <in> [-f <inFormat>] -o <out> [-t <outFormat>]
   *   runMain graft.Cli http -d <storeDir> [--port <n>]
   *   runMain graft.Cli repl -d <storeDir> [--lang <gizmo|mql|sexp|graphql|linkedql>]
   *   runMain graft.Cli version
   *
   * `-d` is the Parquet store directory (the one backend, SURVEY §7.3);
   * load materializes the input into it (predicate-bucketed, stats
-  * persisted), dump serializes it to any writable registry format.
-  * Formats infer from the file extension when `-f` is absent
+  * persisted), dump serializes it to any writable registry format, and
+  * convert transcodes a file without a store (convert.go).
+  * Formats infer from the file extension when `-f` (or `-t`) is absent
   * (`.nq[.gz]`=nquads, `.json`=json, `.jsonld`=jsonld, `.pq[.gz]`=pq,
   * `.graphml`=graphml, `.gml`=gml).
   */
 object Cli {
-  private def spark(cpus: String): SparkSession = {
+  /** The local session every entry point runs on: `cpus` cores and
+    * shuffle partitions, UTC, no UI, WARN logging.
+    */
+  private[graft] def spark(cpus: String): SparkSession = {
     val s = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -111,6 +116,18 @@ object Cli {
     s"dumped $store to $out ($fmt): $n nodes, $q quads"
   }
 
+  /** `convert` verb body (session-injected so specs can drive it). */
+  private[graft] def runConvert(s: SparkSession, rest: Array[String]): String = {
+    val in = flag(rest, "-i").getOrElse(sys.error("convert: -i <file> required"))
+    val out = flag(rest, "-o").getOrElse(sys.error("convert: -o <file> required"))
+    val inFmt = flag(rest, "-f").getOrElse(formatOf(in))
+    val outFmt = flag(rest, "-t").getOrElse(formatOf(out))
+    val g = readAs(s, in, inFmt)
+    writeAs(g, out, outFmt)
+    val (n, q) = g.stats
+    s"converted $in ($inFmt) to $out ($outFmt): $n nodes, $q quads"
+  }
+
   /** REPL loop (streams injected so specs can drive it): one query per
     * line through QuerySession's REPL collation; `:lang <name>` switches
     * language, `:exit`/EOF quits.
@@ -146,7 +163,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
-      "usage: Cli <load|dump|http|repl|version> [options]")
+      "usage: Cli <load|dump|convert|http|repl|version> [options]")
     val verb = args.head
     val rest = args.tail
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -162,6 +179,11 @@ object Cli {
       case "dump" =>
         val s = spark(cpus)
         println(runDump(s, rest))
+        s.stop()
+
+      case "convert" =>
+        val s = spark(cpus)
+        println(runConvert(s, rest))
         s.stop()
 
       case "http" =>
@@ -185,7 +207,8 @@ object Cli {
           Console.out)
         s.stop()
 
-      case other => sys.error(s"unknown verb: $other (load|dump|http|repl|version)")
+      case other =>
+        sys.error(s"unknown verb: $other (load|dump|convert|http|repl|version)")
     }
   }
 }

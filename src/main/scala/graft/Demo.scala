@@ -3,7 +3,6 @@ package graft
 import graft.core.{Graph, QValue}
 import graft.exec.Exec
 import graft.path.Path
-import org.apache.spark.sql.SparkSession
 
 /** Minimal end-to-end driver: load an N-Quads file, run traversals, print
   * results. Usage: runMain graft.Demo [path/to/file.nq]
@@ -11,13 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val nq = args.headOption.getOrElse("src/test/resources/data/testdata.nq")
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.spark("4")
 
     val g = Graph.fromNQuads(spark, nq).cached()
     val (nNodes, nQuads) = g.stats

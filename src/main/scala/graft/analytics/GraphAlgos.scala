@@ -1,7 +1,10 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField,
+  StructType}
+import scala.jdk.CollectionConverters._
 
 /** Whole-graph analytics over edge lists — degree structure and
   * centrality. The reference engine has no analytics layer (its Volcano
@@ -187,40 +190,18 @@ object GraphAlgos {
     // self-join — Catalyst recomputes identical subplans per consumer
     // (same finding as the dedup self-join sides), so materialize each
     // once; both are O(E) narrow tables
-    val und = edges
-      .select(col(srcCol).as("x"), col(dstCol).as("y"))
-      .where(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint(true).cappedStats
-    val deg = und.select(col("a").as("n"))
-      .union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg"))
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("dg").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("dg").as("db")), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("v")))
-        .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true).cappedStats
-    val e1 = oriented.as("e1"); val e2 = oriented.as("e2")
-    // e1.v < e2.v both dedups the unordered wedge pair and hands the
-    // closing edge already in canonical (a < b) order
-    val wedges = e1.join(e2,
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.v").as("a"), col("e2.v").as("b"))
-    val closed = wedges.join(und, Seq("a", "b"))
+    val oriented = orient(und, degrees(und))
     Dedup.releasing(
-      und.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(closed.agg(count(lit(1)).as("n_triangles"))),
+      und.agg(count(lit(1)).as("n_edges")).crossJoin(
+        triangles(oriented, und).agg(count(lit(1)).as("n_triangles"))),
       Seq(und, oriented))
   }
 
-  /** Canonical undirected edges `(a, b)`, a < b. */
+  /** Canonical undirected edges `(a, b)`, a < b; self-loops and rows
+    * with a null endpoint drop out.
+    */
   private def undirected(edges: DataFrame, srcCol: String,
                          dstCol: String): DataFrame =
     edges.select(col(srcCol).as("x"), col(dstCol).as("y"))
@@ -228,6 +209,41 @@ object GraphAlgos {
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
       .distinct()
+
+  /** Degree `(n, dg)` of every endpoint of a canonical edge set. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("n")).union(und.select(col("b").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("dg"))
+
+  /** Degree-ordered orientation `(u, v)` of a canonical edge set,
+    * checkpointed: every edge points from its (degree, id)-smaller
+    * endpoint to the larger, so each triangle has exactly one pivot
+    * (its source) and every out-degree is O(√E) on any graph.
+    */
+  private def orient(und: DataFrame, deg: DataFrame): DataFrame =
+    und.join(deg.select(col("n").as("a"), col("dg").as("da")), "a")
+      .join(deg.select(col("n").as("b"), col("dg").as("db")), "b")
+      .select(when(col("da") < col("db") ||
+          (col("da") === col("db") && col("a") < col("b")),
+        struct(col("a").as("u"), col("b").as("v")))
+        .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .localCheckpoint(true).cappedStats
+
+  /** One row `(a, b, pivot)` per triangle of the canonical edge set `und`
+    * (`oriented` is [[orient]] of it): the wedges at each pivot's
+    * out-edges, closed against `und`. Every join hash-partitions on
+    * node/edge keys and the wedge fan-out is the orientation's.
+    */
+  private def triangles(oriented: DataFrame, und: DataFrame): DataFrame = {
+    val e1 = oriented.as("e1"); val e2 = oriented.as("e2")
+    // e1.v < e2.v both dedups the unordered wedge pair and hands the
+    // closing edge already in canonical (a < b) order
+    e1.join(e2, col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
+      .select(col("e1.u").as("pivot"), col("e1.v").as("a"),
+        col("e2.v").as("b"))
+      .join(und, Seq("a", "b"))
+  }
 
   /** Per-edge triangle supports of a canonical undirected edge set:
     * `(a, b, sup)` for every edge (sup 0 when triangle-free). Same
@@ -238,33 +254,14 @@ object GraphAlgos {
   private def edgeSupports(und: DataFrame,
                            held: scala.collection.mutable.Buffer[DataFrame])
       : DataFrame = {
-    val deg = und.select(col("a").as("n"))
-      .union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg"))
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("dg").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("dg").as("db")), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("v")))
-        .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true).cappedStats
+    val oriented = orient(und, degrees(und))
     held += oriented
-    val e1 = oriented.as("e1"); val e2 = oriented.as("e2")
-    val tri = e1.join(e2,
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("p"), col("e1.v").as("x"),
-        col("e2.v").as("y"))
-      .join(und.select(col("a").as("x"), col("b").as("y")),
-        Seq("x", "y"))
-    val sup = tri.select(explode(array(
-        struct(least(col("p"), col("x")).as("ea"),
-          greatest(col("p"), col("x")).as("eb")),
-        struct(least(col("p"), col("y")).as("ea"),
-          greatest(col("p"), col("y")).as("eb")),
-        struct(col("x").as("ea"), col("y").as("eb")))).as("e"))
+    val sup = triangles(oriented, und).select(explode(array(
+        struct(least(col("pivot"), col("a")).as("ea"),
+          greatest(col("pivot"), col("a")).as("eb")),
+        struct(least(col("pivot"), col("b")).as("ea"),
+          greatest(col("pivot"), col("b")).as("eb")),
+        struct(col("a").as("ea"), col("b").as("eb")))).as("e"))
       .select(col("e.ea").as("a"), col("e.eb").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("sup"))
     und.join(sup, Seq("a", "b"), "left")
@@ -365,32 +362,11 @@ object GraphAlgos {
     */
   def clusteringHistogram(edges: DataFrame, srcCol: String,
                           dstCol: String): DataFrame = {
-    val und = edges
-      .select(col(srcCol).as("x"), col(dstCol).as("y"))
-      .where(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint(true).cappedStats
-    val deg = und.select(col("a").as("n"))
-      .union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg")).localCheckpoint(true).cappedStats
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("dg").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("dg").as("db")), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("v")))
-        .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true).cappedStats
-    val e1 = oriented.as("e1"); val e2 = oriented.as("e2")
-    val wedges = e1.join(e2,
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("pivot"), col("e1.v").as("a"),
-        col("e2.v").as("b"))
-    val triNodes = wedges.join(und, Seq("a", "b"))
+    val deg = degrees(und).localCheckpoint(true).cappedStats
+    val oriented = orient(und, deg)
+    val triNodes = triangles(oriented, und)
       .select(explode(array(col("pivot"), col("a"), col("b"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("tri"))
     Dedup.releasing(
@@ -523,25 +499,42 @@ object GraphAlgos {
 
   /** Driver tier of [[bfsDistances]]: one collect of the (deduplicated,
     * gate-bounded) edge list into an adjacency map, queue BFS, result
-    * parallelized back with the node column's ORIGINAL type (keys stay
-    * `Any` — the long-hashed quad graph and string-keyed edge lists both
-    * route here unchanged).
+    * parallelized back with the node column's original type.
     */
   private def bfsDriver(e: DataFrame, sources: DataFrame,
                         maxDepth: Int): DataFrame = {
-    val spark = e.sparkSession
-    val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
+    val dist = driverBfs(adjacency(e)(_.get(1)),
+      sources.toDF("node").distinct().collect().map(_.get(0)), maxDepth)
+    driverFrame(e, Seq("node"), "dist" -> LongType)(
+      dist.asScala.map { case (n, d) => Row(n, d) })
+  }
+
+  /** Driver-tier adjacency of a collected (gate-bounded) edge list, keyed
+    * by its first column; `to` makes each row's neighbor entry. Keys stay
+    * `Any`, so the long-hashed quad graph and string-keyed edge lists
+    * both route through the driver tiers unchanged.
+    */
+  private def adjacency[T](e: DataFrame)(to: Row => T)
+      : java.util.HashMap[Any, java.util.ArrayList[T]] = {
+    val adj = new java.util.HashMap[Any, java.util.ArrayList[T]]()
     e.collect().foreach { r =>
-      adj.computeIfAbsent(r.get(0), _ => new java.util.ArrayList[Any]())
-        .add(r.get(1))
+      adj.computeIfAbsent(r.get(0), _ => new java.util.ArrayList[T]())
+        .add(to(r))
     }
+    adj
+  }
+
+  /** Queue BFS over a driver adjacency from every start at once: the hop
+    * distance of each node reached within `maxDepth`.
+    */
+  private def driverBfs(adj: java.util.HashMap[Any, java.util.ArrayList[Any]],
+                        starts: Iterable[Any], maxDepth: Int)
+      : java.util.HashMap[Any, java.lang.Long] = {
     // java.lang.Long values: a scala.Long-valued map would auto-unbox
     // get/putIfAbsent results and NPE on absent keys
     val dist = new java.util.HashMap[Any, java.lang.Long]()
     var frontier = new java.util.ArrayList[Any]()
-    sources.toDF("node").distinct().collect().foreach { r =>
-      if (dist.putIfAbsent(r.get(0), 0L) == null) frontier.add(r.get(0))
-    }
+    starts.foreach(s => if (dist.putIfAbsent(s, 0L) == null) frontier.add(s))
     var d = 0L
     while (!frontier.isEmpty && d < maxDepth) {
       d += 1
@@ -554,14 +547,20 @@ object GraphAlgos {
       }
       frontier = next
     }
-    import scala.jdk.CollectionConverters._
-    val rows = dist.entrySet().asScala.toSeq.map(en =>
-      org.apache.spark.sql.Row(en.getKey, en.getValue))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", e.schema("u").dataType),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    dist
+  }
+
+  /** A driver tier's result as a one-partition frame: the `keys` columns
+    * take the edge list's original node type, the non-null `vals` follow.
+    */
+  private def driverFrame(e: DataFrame, keys: Seq[String],
+                          vals: (String, DataType)*)
+                         (rows: Iterable[Row]): DataFrame = {
+    val spark = e.sparkSession
+    val nt = e.schema("u").dataType
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
+      StructType(keys.map(StructField(_, nt)) ++
+        vals.map { case (n, t) => StructField(n, t, nullable = false) }))
   }
 
   /** Relabeling-invariant summary of [[bfsDistances]]: nodes per distance
@@ -732,13 +731,7 @@ object GraphAlgos {
     * column type preserved on the way back.
     */
   private def dijkstraDriver(e: DataFrame, sources: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    val adj = new java.util.HashMap[Any, java.util.ArrayList[(Any, Long)]]()
-    e.collect().foreach { r =>
-      adj.computeIfAbsent(r.get(0),
-          _ => new java.util.ArrayList[(Any, Long)]())
-        .add((r.get(1), r.getLong(2)))
-    }
+    val adj = adjacency(e)(r => (r.get(1), r.getLong(2)))
     // java.lang.Long values: a scala.Long-valued map would auto-unbox
     // get results and NPE on absent keys
     val dist = new java.util.HashMap[Any, java.lang.Long]()
@@ -760,14 +753,8 @@ object GraphAlgos {
         }
       }
     }
-    import scala.jdk.CollectionConverters._
-    val rows = dist.entrySet().asScala.toSeq.map(en =>
-      org.apache.spark.sql.Row(en.getKey, en.getValue))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", e.schema("u").dataType),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    driverFrame(e, Seq("node"), "dist" -> LongType)(
+      dist.asScala.map { case (n, d) => Row(n, d) })
   }
 
   /** k-core: the maximal subgraph in which every node has (undirected,
@@ -784,16 +771,12 @@ object GraphAlgos {
             k: Int): DataFrame = {
     require(k >= 1, "kCore: k must be >= 1")
     val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var und = edges.select(col(srcCol).as("x"), col(dstCol).as("y"))
-      .where(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct().localCheckpoint(true).cappedStats
+    var und = undirected(edges, srcCol, dstCol)
+      .localCheckpoint(true).cappedStats
     held += und
     var done = false
     while (!done) {
-      val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("dg")).localCheckpoint(true).cappedStats
+      val deg = degrees(und).localCheckpoint(true).cappedStats
       held += deg
       val bad = deg.where(col("dg") < k).select("n").localCheckpoint(true).cappedStats
       held += bad
@@ -868,11 +851,8 @@ object GraphAlgos {
       k += 1
       var stageDone = false
       while (!stageDone) {
-        val deg = und.select(col("a").as("n"))
-          .unionByName(und.select(col("b").as("n")))
-          .groupBy("n").agg(count(lit(1)).as("dg"))
         val peeled = Dedup.checkpointCapped(
-          deg.where(col("dg") <= k).select("n"))
+          degrees(und).where(col("dg") <= k).select("n"))
         held += peeled
         if (peeled.isEmpty) stageDone = true
         else {
@@ -1569,12 +1549,7 @@ object GraphAlgos {
     val deadline =
       if (timeBoxSec > 0) System.nanoTime() + (timeBoxSec * 1e9).toLong
       else Long.MaxValue
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct().localCheckpoint(true,
+    val und = undirected(edges, srcCol, dstCol).localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER).cappedStats
     val undCount = und.count()
     if (undCount <= maxDriverEdges) {
@@ -2311,14 +2286,9 @@ object GraphAlgos {
     * member under [[anyLt]].
     */
   private def sccDriver(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
-    val nodes = new java.util.LinkedHashSet[Any]()
-    e.collect().foreach { r =>
-      adj.computeIfAbsent(r.get(0), _ => new java.util.ArrayList[Any]())
-        .add(r.get(1))
-      nodes.add(r.get(0)); nodes.add(r.get(1))
-    }
+    val adj = adjacency(e)(_.get(1))
+    val nodes = new java.util.LinkedHashSet[Any](adj.keySet())
+    adj.values().forEach(nodes.addAll(_))
     val index = new java.util.HashMap[Any, Int]()
     val low = new java.util.HashMap[Any, Int]()
     val onStack = new java.util.HashSet[Any]()
@@ -2370,14 +2340,8 @@ object GraphAlgos {
         }
       }
     }
-    import scala.jdk.CollectionConverters._
-    val rows = comp.entrySet().asScala.toSeq.map(en =>
-      org.apache.spark.sql.Row(en.getKey, en.getValue))
-    val nt = e.schema("u").dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nt),
-      org.apache.spark.sql.types.StructField("component", nt)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    driverFrame(e, Seq("node", "component"))(
+      comp.asScala.map { case (n, c) => Row(n, c) })
   }
 
   /** One min-label fixed point with pointer doubling: labels start as
@@ -2915,12 +2879,7 @@ object GraphAlgos {
     */
   private def brandesDriver(e: DataFrame, nodes: DataFrame,
                             sources: DataFrame, maxDepth: Int): DataFrame = {
-    val spark = e.sparkSession
-    val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
-    e.collect().foreach { r =>
-      adj.computeIfAbsent(r.get(0), _ => new java.util.ArrayList[Any]())
-        .add(r.get(1))
-    }
+    val adj = adjacency(e)(_.get(1))
     val bc = new java.util.HashMap[Any, java.lang.Double]()
     nodes.collect().foreach(r => bc.put(r.get(0), 0.0))
     sources.toDF("s").distinct().collect().map(_.get(0)).foreach { s =>
@@ -2959,14 +2918,8 @@ object GraphAlgos {
         if (w != s) bc.merge(w, dw, (a, b) => a + b)
       }
     }
-    import scala.jdk.CollectionConverters._
-    val rows = bc.entrySet().asScala.toSeq.map(en =>
-      org.apache.spark.sql.Row(en.getKey, en.getValue.doubleValue()))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", e.schema("u").dataType),
-      org.apache.spark.sql.types.StructField("bc",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    driverFrame(e, Seq("node"), "bc" -> DoubleType)(
+      bc.asScala.map { case (n, v) => Row(n, v) })
   }
 
   /** Contract harness for the driver oracle: distributed level-
@@ -3048,40 +3001,12 @@ object GraphAlgos {
     */
   private def keyedBfsDriver(e: DataFrame, src: DataFrame,
                              maxDepth: Int): DataFrame = {
-    val spark = e.sparkSession
-    val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
-    e.collect().foreach { r =>
-      adj.computeIfAbsent(r.get(0), _ => new java.util.ArrayList[Any]())
-        .add(r.get(1))
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Any, Long)]
+    val adj = adjacency(e)(_.get(1))
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
     src.collect().map(_.get(0)).foreach { s =>
-      val dist = new java.util.HashMap[Any, java.lang.Long]()
-      var frontier = new java.util.ArrayList[Any]()
-      dist.put(s, 0L); frontier.add(s)
-      var d = 0L
-      while (!frontier.isEmpty && d < maxDepth) {
-        d += 1
-        val next = new java.util.ArrayList[Any]()
-        frontier.forEach { u =>
-          val ns = adj.get(u)
-          if (ns != null) ns.forEach { v =>
-            if (dist.putIfAbsent(v, d) == null) next.add(v)
-          }
-        }
-        frontier = next
-      }
-      dist.forEach((n, dd) => out += ((s, n, dd.longValue())))
+      driverBfs(adj, Seq(s), maxDepth).forEach((n, d) => rows += Row(s, n, d))
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("s", e.schema("u").dataType),
-      org.apache.spark.sql.types.StructField("node",
-        e.schema("u").dataType),
-      org.apache.spark.sql.types.StructField("d",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(
-      out.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3)).toSeq, 1),
-      schema)
+    driverFrame(e, Seq("s", "node"), "d" -> LongType)(rows)
   }
 
   /** Harmonic centrality from a source set: H(v) = Σ_{s≠v, d(s,v)<∞}
@@ -3137,16 +3062,11 @@ object GraphAlgos {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  membership: DataFrame, nodeCol: String,
                  commCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val mem = membership.select(col(nodeCol).as("n"), col(commCol).as("c"))
       .distinct()
     val totals = und.agg(count(lit(1)).as("m"))
-    val deg = und.select(col("a").as("n"))
-      .unionByName(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+    val deg = degrees(und).withColumnRenamed("dg", "d")
     val degC = deg.join(mem, "n").groupBy("c")
       .agg(sum("d").as("deg_sum"))
     val eIn = und
@@ -3237,12 +3157,7 @@ object GraphAlgos {
     */
   def assortativity(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val sym = und.select(col("a").as("x"), col("b").as("y"))
       .unionByName(und.select(col("b").as("x"), col("a").as("y")))
     val deg = sym.groupBy(col("x").as("n"))
@@ -3362,41 +3277,23 @@ object GraphAlgos {
     * same canonical undirected edge set). Degree-ordered orientation
     * (the [[triangleCount]] trick) turns every clique into a DAG with a
     * unique topological order, so each triangle materializes exactly
-    * once as an oriented (x→y, x→z, y→z) triple and each 4-clique is
-    * found exactly once by extending a triangle with a common
-    * out-neighbor w of all three nodes. Wedge and extension fan-out are
-    * bounded by the orientation out-degree (O(√E) on any graph), the
-    * standard distributed k-clique bound (Chiba–Nishizeki ordering);
-    * all joins are hash joins over the materialized oriented edge list.
+    * once (the [[triangleCount]] kernel, rooted at its source x) and
+    * each 4-clique is found exactly once by extending a triangle with a
+    * common out-neighbor w of all three nodes. Wedge and extension
+    * fan-out are bounded by the orientation out-degree (O(√E) on any
+    * graph), the standard distributed k-clique bound (Chiba–Nishizeki
+    * ordering); all joins are hash joins over materialized edge lists.
     */
   def fourCliqueCount(edges: DataFrame, srcCol: String,
                       dstCol: String): DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint(true).cappedStats
-    val deg = und.select(col("a").as("n"))
-      .union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg"))
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("dg").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("dg").as("db")), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("v")))
-        .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true).cappedStats
-    // oriented triangles: x→y, x→z (y ≠ z), closed by the oriented y→z
-    // edge — the topological-order argument makes this exactly one row
-    // per triangle with no dedup
-    val tris = oriented.as("w1")
-      .join(oriented.as("w2"),
-        col("w1.u") === col("w2.u") && col("w1.v") =!= col("w2.v"))
-      .select(col("w1.u").as("x"), col("w1.v").as("y"),
-        col("w2.v").as("z"))
-      .join(oriented.as("cl"),
-        col("y") === col("cl.u") && col("z") === col("cl.v"))
-      .select("x", "y", "z")
+    val oriented = orient(und, degrees(und))
+    // x is each triangle's pivot (its orientation source); a 4-clique is
+    // its first three nodes' triangle plus their common out-neighbor w
+    // (the clique's sink), so the extension finds it exactly once
+    val tris = triangles(oriented, und)
+      .select(col("pivot").as("x"), col("a").as("y"), col("b").as("z"))
       .localCheckpoint(true).cappedStats
     val quads = tris
       .join(oriented.as("ez"),
@@ -3588,10 +3485,8 @@ object GraphAlgos {
     val coveredOnce = c.groupBy("node").agg(count(lit(1)).as("k"))
       .where(col("k") =!= 1L).count() == 0L &&
       c.join(nodes, Seq("node")).count() == nNodes && c.count() == nNodes
-    val maxDeg = und.select(col("a").as("n"))
-      .unionByName(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .agg(coalesce(max("d"), lit(0L))).head.getLong(0)
+    val maxDeg = degrees(und)
+      .agg(coalesce(max("dg"), lit(0L))).head.getLong(0)
     val nColors = c.select(col("color")).distinct().count()
     c.unpersist(); und.unpersist()
     Seq((mono == 0L, coveredOnce, nColors <= maxDeg + 1, nNodes))

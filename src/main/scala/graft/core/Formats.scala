@@ -16,20 +16,26 @@ object Formats {
     * endpoint. Round-trips through [[NQuads.parseLine]].
     */
   def nquadLines(g: Graph): DataFrame = {
-    val n = g.nodes
     // N-Quads term serialization per kind, escaping mirroring
     // NQuads.parseLine's unescape (shared with the JSON quad format)
     def term(alias: String): org.apache.spark.sql.Column = termColumn(alias)
+    terms(g, "s", "p", "o", "l")
+      .select(concat_ws(" ", term("sv"), term("pv"), term("ov"),
+        when(col("l").isNotNull, term("lv")), lit(".")).as("value"))
+  }
+
+  /** The quads joined to the dictionary row of each direction in `dirs`
+    * (`s`/`p`/`o` inner, the nullable `l` left), as a `<dir>v` struct
+    * per direction for [[termColumn]].
+    */
+  private def terms(g: Graph, dirs: String*): DataFrame = {
     def dict(keyCol: String, alias: String) =
-      n.select(col("id").as(keyCol), struct(Values.fieldNames.map(col): _*)
-        .as(alias))
-    val q = g.quads
-      .join(dict("__s", "sv"), col("s") === col("__s"))
-      .join(dict("__p", "pv"), col("p") === col("__p"))
-      .join(dict("__o", "ov"), col("o") === col("__o"))
-      .join(dict("__l", "lv"), col("l") === col("__l"), "left")
-    q.select(concat_ws(" ", term("sv"), term("pv"), term("ov"),
-      when(col("l").isNotNull, term("lv")), lit(".")).as("value"))
+      g.nodes.select(col("id").as(keyCol),
+        struct(Values.fieldNames.map(col): _*).as(alias))
+    dirs.foldLeft(g.quads) { (q, d) =>
+      q.join(dict(s"__$d", s"${d}v"), col(d) === col(s"__$d"),
+        if (d == "l") "left" else "inner")
+    }
   }
 
   /** Serialize a graph to N-Quads text files (distributed write). */
@@ -42,17 +48,10 @@ object Formats {
     * N-Quads reader (a triple is a label-less quad).
     */
   def ntripleLines(g: Graph): DataFrame = {
-    val n = g.nodes
     def term(alias: String): org.apache.spark.sql.Column = termColumn(alias)
-    def dict(keyCol: String, alias: String) =
-      n.select(col("id").as(keyCol), struct(Values.fieldNames.map(col): _*)
-        .as(alias))
-    val q = g.quads
-      .join(dict("__s", "sv"), col("s") === col("__s"))
-      .join(dict("__p", "pv"), col("p") === col("__p"))
-      .join(dict("__o", "ov"), col("o") === col("__o"))
-    q.select(concat_ws(" ", term("sv"), term("pv"), term("ov"), lit("."))
-      .as("value"))
+    terms(g, "s", "p", "o")
+      .select(concat_ws(" ", term("sv"), term("pv"), term("ov"), lit("."))
+        .as("value"))
   }
 
   /** Serialize to N-Triples text files (distributed write, labels
@@ -67,17 +66,8 @@ object Formats {
     * and shuffle-free. Round-trips through [[Turtle.parse]].
     */
   def trigLines(g: Graph): DataFrame = {
-    val n = g.nodes
     def term(alias: String): org.apache.spark.sql.Column = termColumn(alias)
-    def dict(keyCol: String, alias: String) =
-      n.select(col("id").as(keyCol), struct(Values.fieldNames.map(col): _*)
-        .as(alias))
-    val q = g.quads
-      .join(dict("__s", "sv"), col("s") === col("__s"))
-      .join(dict("__p", "pv"), col("p") === col("__p"))
-      .join(dict("__o", "ov"), col("o") === col("__o"))
-      .join(dict("__l", "lv"), col("l") === col("__l"), "left")
-    q.select(
+    terms(g, "s", "p", "o", "l").select(
       when(col("l").isNotNull,
         concat_ws(" ", term("lv"), lit("{"), term("sv"), term("pv"),
           term("ov"), lit(". }")))
@@ -134,19 +124,10 @@ object Formats {
     * in N-Quads syntax, so every value kind round-trips. Distributed.
     */
   def jsonQuadLines(g: Graph): DataFrame = {
-    val n = g.nodes
-    def dict(keyCol: String, alias: String) =
-      n.select(col("id").as(keyCol), struct(Values.fieldNames.map(col): _*)
-        .as(alias))
     def term(alias: String) = termColumn(alias)
     def jesc(c: org.apache.spark.sql.Column) =
       regexp_replace(regexp_replace(c, "\\\\", "\\\\\\\\"), "\"", "\\\\\"")
-    val q = g.quads
-      .join(dict("__s", "sv"), col("s") === col("__s"))
-      .join(dict("__p", "pv"), col("p") === col("__p"))
-      .join(dict("__o", "ov"), col("o") === col("__o"))
-      .join(dict("__l", "lv"), col("l") === col("__l"), "left")
-    q.select(concat(
+    terms(g, "s", "p", "o", "l").select(concat(
       lit("{\"subject\":\""), jesc(term("sv")),
       lit("\",\"predicate\":\""), jesc(term("pv")),
       lit("\",\"object\":\""), jesc(term("ov")),
@@ -418,20 +399,11 @@ object Formats {
   /** (st, pt, ot, lt) N-Quads-syntax terms per quad, lt nullable — the
     * row stream behind the binary [[Pquads]] serializer.
     */
-  def quadTerms(g: Graph): DataFrame = {
-    val n = g.nodes
-    def dict(keyCol: String, alias: String) =
-      n.select(col("id").as(keyCol), struct(Values.fieldNames.map(col): _*)
-        .as(alias))
-    g.quads
-      .join(dict("__s", "sv"), col("s") === col("__s"))
-      .join(dict("__p", "pv"), col("p") === col("__p"))
-      .join(dict("__o", "ov"), col("o") === col("__o"))
-      .join(dict("__l", "lv"), col("l") === col("__l"), "left")
+  def quadTerms(g: Graph): DataFrame =
+    terms(g, "s", "p", "o", "l")
       .select(termColumn("sv").as("st"), termColumn("pv").as("pt"),
         termColumn("ov").as("ot"),
         when(col("l").isNotNull, termColumn("lv")).as("lt"))
-  }
 
   /** (subject term, predicate term, object term) rows. */
   private def spOTerms(g: Graph): DataFrame =

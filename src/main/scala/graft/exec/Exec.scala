@@ -3,7 +3,7 @@ package graft.exec
 import graft.core.{Graph, QValue}
 import graft.path.Path
 import graft.shape.{LocalEval, LocalResult, LocalTable, Lower, Shape}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,26 +57,24 @@ final class SparkResults(g: Graph, val df: DataFrame) extends Results {
         col("__rr.lang"), col("__rr.dt"))
       .orderBy("__ord")
     joined.collect().toSeq.map { r =>
-      if (r.isNullAt(1)) None
-      else Some(QValue.fromFields(r.getInt(1), r.getString(2),
-        if (r.isNullAt(3)) null else java.lang.Long.valueOf(r.getLong(3)),
-        if (r.isNullAt(4)) null else java.lang.Double.valueOf(r.getDouble(4)),
-        if (r.isNullAt(5)) null else java.lang.Boolean.valueOf(r.getBoolean(5)),
-        if (r.isNullAt(6)) null else java.lang.Long.valueOf(r.getLong(6)),
-        r.getString(7), r.getString(8)))
+      if (r.isNullAt(1)) None else Some(decode(r, 1))
     }
   }
 
+  /** The value whose dictionary fields (kind, s, i, d, b, t, lang, dt)
+    * start at column `at` of `r`; nullable fields arrive boxed or null.
+    */
+  private def decode(r: Row, at: Int): QValue =
+    QValue.fromFields(r.getInt(at), r.getString(at + 1),
+      r.get(at + 2).asInstanceOf[java.lang.Long],
+      r.get(at + 3).asInstanceOf[java.lang.Double],
+      r.get(at + 4).asInstanceOf[java.lang.Boolean],
+      r.get(at + 5).asInstanceOf[java.lang.Long],
+      r.getString(at + 6), r.getString(at + 7))
+
   private def preResolvedValues(): Seq[QValue] =
     df.select(col("kind"), col("s"), col("i"), col("d"), col("b"), col("t"),
-      col("lang"), col("dt")).collect().toSeq.map { r =>
-      QValue.fromFields(r.getInt(0), r.getString(1),
-        if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)),
-        if (r.isNullAt(3)) null else java.lang.Double.valueOf(r.getDouble(3)),
-        if (r.isNullAt(4)) null else java.lang.Boolean.valueOf(r.getBoolean(4)),
-        if (r.isNullAt(5)) null else java.lang.Long.valueOf(r.getLong(5)),
-        r.getString(6), r.getString(7))
-    }
+      col("lang"), col("dt")).collect().toSeq.map(decode(_, 0))
 
   /** Top-level result values (AllValues, iterate.go). */
   def values(): Seq[QValue] =
@@ -134,15 +132,7 @@ final class SparkResults(g: Graph, val df: DataFrame) extends Results {
       cols.zipWithIndex.flatMap { case ((_, name, isInt), idx) =>
         if (r.isNullAt(idx)) None
         else if (isInt) Some(name -> QValue.IntV(r.getLong(idx)))
-        else {
-          val v = r.getStruct(idx)
-          Some(name -> QValue.fromFields(v.getInt(0), v.getString(1),
-            if (v.isNullAt(2)) null else java.lang.Long.valueOf(v.getLong(2)),
-            if (v.isNullAt(3)) null else java.lang.Double.valueOf(v.getDouble(3)),
-            if (v.isNullAt(4)) null else java.lang.Boolean.valueOf(v.getBoolean(4)),
-            if (v.isNullAt(5)) null else java.lang.Long.valueOf(v.getLong(5)),
-            v.getString(6), v.getString(7)))
-        }
+        else Some(name -> decode(r.getStruct(idx), 0))
       }.toMap
     }
   }

@@ -83,12 +83,16 @@ object GraphQL {
       peek match {
         case '<' =>
           val e = s.indexOf('>', i)
+          if (e < 0) throw GraphQLError(s"unterminated IRI at offset $i")
           val v = QValue.Iri(s.substring(i + 1, e)); i = e + 1; v
         case '"' =>
           val sb = new StringBuilder
+          val st = i
           i += 1
           while (peek != '"') {
             if (peek == '\\') i += 1
+            if (i >= s.length)
+              throw GraphQLError(s"unterminated string at offset $st")
             sb.append(s.charAt(i)); i += 1
           }
           i += 1
@@ -98,7 +102,13 @@ object GraphQL {
           i += 1
           while (i < s.length && (s.charAt(i).isDigit || s.charAt(i) == '.')) i += 1
           val t = s.substring(st, i)
-          if (t.contains('.')) QValue.FloatV(t.toDouble) else QValue.IntV(t.toLong)
+          try {
+            if (t.contains('.')) QValue.FloatV(t.toDouble)
+            else QValue.IntV(t.toLong)
+          } catch {
+            case _: NumberFormatException =>
+              throw GraphQLError(s"malformed number at offset $st")
+          }
         case '_' if i + 1 < s.length && s.charAt(i + 1) == ':' =>
           i += 2; QValue.BNode(name())
         case _ => QValue.Iri(name())
@@ -135,16 +145,21 @@ object GraphQL {
     if (p.peek == '(') {
       p.eat('(')
       while (!p.tryEat(')')) {
-        val k = p.name(); p.eat(':')
+        val k = p.name(); p.eat(':'); p.ws()
+        val at = p.i
         val vs: Seq[QValue] =
           if (p.tryEat('[')) {
             val b = Vector.newBuilder[QValue]
             while (!p.tryEat(']')) { b += p.value(); p.ws() }
             b.result()
           } else Seq(p.value())
+        def int(): Int = vs.headOption match {
+          case Some(QValue.IntV(v)) => v.toInt
+          case _ => throw GraphQLError(s"$k needs an integer at offset $at")
+        }
         k match {
-          case LimitKey => f = f.copy(limit = vs.head.asInstanceOf[QValue.IntV].v.toInt)
-          case SkipKey  => f = f.copy(offset = vs.head.asInstanceOf[QValue.IntV].v.toInt)
+          case LimitKey => f = f.copy(limit = int())
+          case SkipKey  => f = f.copy(offset = int())
           case ValueKey =>
             // bare-name id args are node identifiers (IRIs)
             f = f.copy(isConstraint = f.isConstraint ++ vs)

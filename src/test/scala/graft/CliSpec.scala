@@ -65,4 +65,31 @@ class CliSpec extends AnyFunSuite {
     assert(Cli.formatOf("b.gml") === "gml")
     assert(Cli.formatOf("b.parquet") === "parquet")
   }
+
+  test("convert: nquads to turtle and back keeps the quad set") {
+    val dir = Files.createTempDirectory("graft-convert").toString
+    val in = s"$dir/in.nq"
+    Files.writeString(java.nio.file.Paths.get(in),
+      """<alice> <follows> <bob> .
+        |<bob> <status> "cool_person" .
+        |<bob> <name> "Bob"@en .
+        |<bob> <age> "42"^^<http://www.w3.org/2001/XMLSchema#integer> .
+        |<dani> <note> "line\nbreak \"quoted\"" .
+        |""".stripMargin)
+    def quadSet(path: String): Set[String] =
+      graft.core.Formats.nquadLines(Graph.fromNQuads(spark, path))
+        .collect().map(_.getString(0)).toSet
+    val ttl = s"$dir/mid.ttl"
+    val msg = Cli.runConvert(spark, Array("-i", in, "-o", ttl))
+    assert(msg.contains("(nquads)") && msg.contains("(turtle)") &&
+      msg.contains("5 quads"), msg)
+    val back = s"$dir/back.nq"
+    Cli.runConvert(spark, Array("-i", ttl, "-o", back))
+    assert(quadSet(back) === quadSet(in))
+    assert(quadSet(in).size === 5)
+    // an unknown output format fails naming it
+    val err = intercept[RuntimeException](Cli.runConvert(spark,
+      Array("-i", in, "-o", s"$dir/out.x", "-t", "bogus")))
+    assert(err.getMessage.contains("bogus"), err.getMessage)
+  }
 }

@@ -678,6 +678,18 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(dist === got)
   }
 
+  test("betweenness driver tier preserves string node keys") {
+    val long = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+    val byLong = GraphAlgos.betweenness(long.toDF("s", "d"), "s", "d",
+        Seq(1L, 2L).toDF("node")).as[(Long, Double)].collect()
+      .map { case (n, bc) => s"n$n" -> bc }.toMap
+    val df = GraphAlgos.betweenness(
+      long.map { case (a, b) => (s"n$a", s"n$b") }.toDF("s", "d"), "s", "d",
+      Seq("n1", "n2").toDF("node"))
+    assert(df.schema("node").dataType === org.apache.spark.sql.types.StringType)
+    assert(df.as[(String, Double)].collect().toMap === byLong)
+  }
+
   test("betweennessContract holds on random graphs") {
     val rnd = new scala.util.Random(41)
     val edges = (1 to 160).map(_ =>
@@ -773,6 +785,19 @@ class GraphAlgosSpec extends AnyFunSuite {
       maxDriverEdges = 0L).as[(Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(dist === got)
+  }
+
+  test("harmonicCentrality driver tier preserves string node keys") {
+    val long = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L), (4L, 1L))
+    val byLong = GraphAlgos.harmonicCentrality(long.toDF("s", "d"), "s", "d",
+        Seq(1L, 2L).toDF("node")).as[(Long, Long, Double)].collect()
+      .map { case (n, num, score) => s"n$n" -> ((num, score)) }.toMap
+    val df = GraphAlgos.harmonicCentrality(
+      long.map { case (a, b) => (s"n$a", s"n$b") }.toDF("s", "d"), "s", "d",
+      Seq("n1", "n2").toDF("node"))
+    assert(df.schema("node").dataType === org.apache.spark.sql.types.StringType)
+    assert(df.as[(String, Long, Double)].collect()
+      .map { case (n, num, score) => n -> ((num, score)) }.toMap === byLong)
   }
 
   test("modularity matches the pairwise definition on random graphs") {

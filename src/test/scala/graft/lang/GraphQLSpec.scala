@@ -217,4 +217,32 @@ class GraphQLSpec extends AnyFunSuite {
     // the served path ships default 100 under a 10k ceiling
     assert(GraphQL.DefaultFirst === 100 && GraphQL.MaxFirst === 10000)
   }
+
+  private def parseError(query: String): String =
+    intercept[GraphQL.GraphQLError](GraphQL.parse(query)).getMessage
+
+  test("malformed input: an unterminated IRI names its offset") {
+    val msg = parseError("{ nodes(id: <bob) { id } }")
+    assert(msg.contains("unterminated IRI at offset 12"), msg)
+  }
+
+  test("malformed input: an unterminated string names its offset") {
+    val msg = parseError("""{ nodes(name: "bob) { id } }""")
+    assert(msg.contains("unterminated string at offset 14"), msg)
+  }
+
+  test("malformed input: a non-integer first names its offset") {
+    val msg = parseError("""{ nodes(first: "ten") { id } }""")
+    assert(msg.contains("first needs an integer at offset 15"), msg)
+  }
+
+  test("malformed input: an empty offset list names its offset") {
+    val msg = parseError("{ nodes(offset: []) { id } }")
+    assert(msg.contains("offset needs an integer at offset 16"), msg)
+  }
+
+  test("malformed input: a malformed number names its offset") {
+    val msg = parseError("{ nodes(first: -) { id } }")
+    assert(msg.contains("malformed number at offset 15"), msg)
+  }
 }

@@ -270,6 +270,51 @@ class ExplainSpec extends AnyFunSuite {
       exactPlan.toLowerCase.contains("nestedloop"), exactPlan)
   }
 
+  test("triangle family: equi-joins only, one 1-row cross join in " +
+      "triangleCount") {
+    import graft.analytics.GraphAlgos
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new scala.util.Random(13)
+    val edges = (1 to 200).map(_ => (rnd.nextInt(30).toLong,
+      rnd.nextInt(30).toLong)).toDF("s", "d")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // every action the operator runs (checkpoints included), AQE off so
+    // each executed plan prints once and final
+    def executedPlans(run: => Unit): String = {
+      val saved = spark.conf.get("spark.sql.adaptive.enabled")
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      plans.clear()
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.listenerManager.register(l)
+      try {
+        run
+        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      } finally {
+        spark.listenerManager.unregister(l)
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+      }
+      String.join("\n", plans)
+    }
+    def count(plan: String, re: String) = re.r.findAllIn(plan).length
+    val nonEqui = "CartesianProduct|NestedLoopJoin"
+    val equi = "BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
+    val tc = executedPlans(GraphAlgos.triangleCount(edges, "s", "d"))
+    assert(count(tc, nonEqui) === 1,
+      s"only the 1-row x 1-row count join may be non-equi:\n$tc")
+    assert(count(tc, equi) >= 4, tc) // 2 orientation + wedge + close
+    val ch = executedPlans(GraphAlgos.clusteringHistogram(edges, "s", "d"))
+    assert(count(ch, nonEqui) === 0, s"non-equi join in:\n$ch")
+    assert(count(ch, equi) >= 5, ch) // ... + the degree join
+  }
+
   test("whole-stage codegen covers the traversal join pipeline") {
     val g = Graph.read(spark, dir)
     val df = Exec.lower(g, Path.start(QValue.Iri("bob")).in(QValue.Iri("follows"))
