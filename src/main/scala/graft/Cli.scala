@@ -24,13 +24,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Cli {
   /** The local session every entry point runs on: `cpus` cores and
-    * shuffle partitions, UTC, no UI, WARN logging.
+    * shuffle partitions, UTC, no UI, WARN logging, and collects capped at
+    * a quarter of the driver heap (`spark.driver.maxResultSize`, which
+    * also caps the store the driver-local index takes).
     */
   private[graft] def spark(cpus: String): SparkSession = {
     val s = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.driver.maxResultSize",
+        s"${(Runtime.getRuntime.maxMemory / 4) >> 20}m")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -200,7 +204,7 @@ object Cli {
         val store = flag(rest, "-d").getOrElse(sys.error("repl: -d <storeDir> required"))
         val lang = flag(rest, "--lang").getOrElse("gizmo")
         val s = spark(cpus)
-        val g = Graph.read(s, store).cached()
+        val g = Graph.read(s, store).cached().interactive()
         g.stats // materialize before the first prompt
         runRepl(g, lang,
           new java.io.BufferedReader(new java.io.InputStreamReader(System.in)),

@@ -3056,6 +3056,8 @@ object GraphAlgos {
     * Plan: two hash aggregates (degrees, internal edges) + two broadcast-
     * sized joins against the membership table and a one-row total —
     * no window, no iteration; survives any scale the edge shuffle does.
+    * The canonical edge set feeds four consumers, so it is checkpointed
+    * once (as in [[triangleCount]]) and the result with it.
     * Communities with no edges score 0 and are kept (every membership
     * community appears exactly once).
     */
@@ -3063,6 +3065,7 @@ object GraphAlgos {
                  membership: DataFrame, nodeCol: String,
                  commCol: String): DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
+      .localCheckpoint(true).cappedStats
     val mem = membership.select(col(nodeCol).as("n"), col(commCol).as("c"))
       .distinct()
     val totals = und.agg(count(lit(1)).as("m"))
@@ -3074,7 +3077,7 @@ object GraphAlgos {
       .join(mem.select(col("n").as("b"), col("c").as("cb")), "b")
       .where(col("ca") === col("cb"))
       .groupBy(col("ca").as("c")).agg(count(lit(1)).as("e_in"))
-    mem.select(col("c")).distinct()
+    Dedup.releasing(mem.select(col("c")).distinct()
       .join(eIn, Seq("c"), "left").join(degC, Seq("c"), "left")
       .crossJoin(broadcast(totals))
       .select(col("c").as("community"),
@@ -3084,7 +3087,8 @@ object GraphAlgos {
       .select(col("community"), col("e_in"), col("deg_sum"),
         ((lit(4L) * col("m") * col("e_in") -
           col("deg_sum") * col("deg_sum")).cast("double") /
-          (lit(4L) * col("m") * col("m")).cast("double")).as("dq"))
+          (lit(4L) * col("m") * col("m")).cast("double")).as("dq")),
+      Seq(und))
   }
 
   /** Katz centrality over a DIRECTED edge list with attenuation
@@ -3152,12 +3156,15 @@ object GraphAlgos {
     * factors coincide — both are still emitted for the contract.
     * Plan: one degree aggregate + two broadcast-friendly joins + one
     * global aggregate; no iteration, survives any scale the edge
-    * shuffle does. On degree-regular graphs (zero variance) `r` is
-    * IEEE 0/0 = NaN, matching the undefined correlation.
+    * shuffle does. The canonical edge set feeds every side, so it is
+    * checkpointed once (as in [[triangleCount]]) and the result with it.
+    * On degree-regular graphs (zero variance) `r` is IEEE 0/0 = NaN,
+    * matching the undefined correlation.
     */
   def assortativity(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
+      .localCheckpoint(true).cappedStats
     val sym = und.select(col("a").as("x"), col("b").as("y"))
       .unionByName(und.select(col("b").as("x"), col("a").as("y")))
     val deg = sym.groupBy(col("x").as("n"))
@@ -3176,12 +3183,13 @@ object GraphAlgos {
     val denom = sqrt((col("m") * col("sjj") - col("sj") * col("sj"))
         .cast("double") *
       (col("m") * col("skk") - col("sk") * col("sk")).cast("double"))
-    sums.select(col("m"), col("sjk"), col("sj"), col("sk"),
+    Dedup.releasing(sums.select(col("m"), col("sjk"), col("sj"), col("sk"),
       col("sjj"), col("skk"),
       when(denom === 0.0d, lit(Double.NaN))
         .otherwise(
           (col("m") * col("sjk") - col("sj") * col("sk")).cast("double") /
-            denom).as("r"))
+            denom).as("r")),
+      Seq(und))
   }
 
   /** Directed-graph reciprocity (Newman 2002, public): the fraction of

@@ -30,21 +30,22 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
                        predStats: Option[Map[Long, Long]] = None,
                        interactiveMaxQuads: Long = 0L,
                        quadsOps: Option[DataFrame] = None,
-                       private[core] val delta: Option[Graph.Delta] = None) {
+                       private[graft] val delta: Option[Graph.Delta] = None) {
   def spark: SparkSession = nodes.sparkSession
 
   def cached(): Graph = copy(nodes = nodes.cache(), quads = quads.cache(),
     quadsOps = quadsOps.map(_.cache()))
 
-  /** Opt into the driver-local point-lookup fast path
-    * (graft.shape.LocalEval): queries on this graph evaluate against an
-    * in-memory index — the reference memstore's role — when the quad count
-    * is under `maxQuads`, and fall back to the distributed path otherwise.
-    * The cap keeps this an interactive-store feature: at warehouse scale
-    * the gate never opens. Mutations produce new DataFrames, so a mutated
-    * graph re-derives (or re-rejects) its index automatically.
+  /** Serve queries on this graph from the driver-local index
+    * (graft.shape.LocalEval) — the reference memstore's role — when the
+    * quad count is under `maxQuads`; above it they take the distributed
+    * path. `HttpApi` (and so `Cli http` and `Cli repl`) sets this on the
+    * store it serves; the default cap comes from the session
+    * (`LocalGraphIndex.maxQuads`), so at warehouse scale the gate never
+    * opens. A snapshot a write made keeps the cap and indexes as its
+    * base's index plus an overlay of its delta; no Spark job.
     */
-  def interactive(maxQuads: Long = graft.shape.LocalEval.DefaultMaxQuads): Graph =
+  def interactive(maxQuads: Long = graft.shape.LocalGraphIndex.maxQuads(spark)): Graph =
     copy(interactiveMaxQuads = maxQuads)
 
   /** (node count, quad count). Every quad has a predicate, so when the
@@ -252,11 +253,14 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
       .defaultValue.get
   }
 
-  /** The delta this snapshot sits on, or an empty one over this graph
-    * when it has none (or a `copy` replaced a table the delta built).
+  /** The delta this snapshot sits on, unless a `copy` replaced a table
+    * the delta built.
     */
-  private def openDelta: Graph.Delta = delta
-    .filter(_.tables.corresponds(Seq(nodes, quads) ++ quadsOps)(_ eq _))
+  private[graft] def liveDelta: Option[Graph.Delta] =
+    delta.filter(_.tables.corresponds(Seq(nodes, quads) ++ quadsOps)(_ eq _))
+
+  /** [[liveDelta]], or an empty delta over this graph. */
+  private def openDelta: Graph.Delta = liveDelta
     .getOrElse {
       val base = copy(quads = shaped(quads), quadsOps = quadsOps.map(shaped),
         delta = None)
@@ -298,6 +302,8 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
   /** This snapshot cached and materialized as a new base with an empty
     * delta. The base `prior` sits on is released when an earlier fold
     * made it: a snapshot still holding it recomputes from its lineage.
+    * The new delta keeps `prior` (without its own), so a driver-local
+    * index of the old base compacts into the new base's index.
     */
   private def fold(prior: Option[Graph.Delta]): Graph = {
     val g = copy(delta = None).cached()
@@ -305,7 +311,8 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     tables.foreach(_.count())
     prior.filter(_.ownsBase).foreach(p =>
       (Seq(p.base.nodes, p.base.quads) ++ p.base.quadsOps).foreach(_.unpersist()))
-    g.copy(delta = Some(Graph.Delta(g, ownsBase = true, tables = tables)))
+    g.copy(delta = Some(Graph.Delta(g, ownsBase = true, tables = tables,
+      prior = prior.map(_.copy(prior = None)))))
   }
 }
 
@@ -344,12 +351,17 @@ object Graph {
     * deleted. `tables` are the snapshot's nodes, quads and OPS DataFrames
     * built from it, so a graph whose tables are not those no longer sits
     * on this delta; `bytes` is Spark's size estimate of its local
-    * relations.
+    * relations. After a fold, `prior` is the delta the folded snapshot
+    * sat on (its old base plus the writes the fold absorbed).
     */
-  private[core] final case class Delta(base: Graph, ownsBase: Boolean,
+  private[graft] final case class Delta(base: Graph, ownsBase: Boolean,
       quads: Set[QuadKey] = Set.empty, gone: Set[QuadKey] = Set.empty,
       nodes: Map[Long, Row] = Map.empty, goneNodes: Set[Long] = Set.empty,
-      tables: Seq[DataFrame] = Nil, bytes: Long = 0L) {
+      tables: Seq[DataFrame] = Nil, bytes: Long = 0L,
+      prior: Option[Delta] = None) {
+    def isEmpty: Boolean =
+      quads.isEmpty && gone.isEmpty && nodes.isEmpty && goneNodes.isEmpty
+
     /** `(base ▷ gone) ∪ delta`, one local relation per table; the base
       * dictionary filtered by `goneNodes`.
       */

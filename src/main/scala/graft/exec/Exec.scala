@@ -194,7 +194,7 @@ final class LocalResults(g: Graph, res: LocalResult) extends Results {
 
   private def resolve(id: java.lang.Long): Option[QValue] =
     if (id == null) None
-    else Option(idx.nodeById.get(id)).map(_.toQValue)
+    else Option(idx.node(id)).map(_.toQValue)
 
   def values(): Seq[QValue] = res.countValue match {
     case Some(n) => Seq(QValue.IntV(n)) // pre-resolved Count (Lower.scala:160)
@@ -268,7 +268,7 @@ final class LocalResults(g: Graph, res: LocalResult) extends Results {
             if (at < 0 || r(at) == null) null
             else if (Lower.isIntTagCol(c)) r(at).toString
             else {
-              val n = idx.nodeById.get(r(at))
+              val n = idx.node(r(at))
               if (n == null) null else payload(n)
             }
           })
@@ -309,9 +309,10 @@ final class LocalResults(g: Graph, res: LocalResult) extends Results {
 }
 
 /** Query execution entry: Path/Shape → optimized Shape → working set.
-  * Graphs that opted in via `Graph.interactive()` get the driver-local
-  * fast path when the shape supports it; everything else lowers to a
-  * DataFrame plan for Catalyst.
+  * Graphs that carry a local-index cap (`Graph.interactive`, set by
+  * `HttpApi` on every served store) and are under it get the
+  * driver-local fast path when the shape supports it; everything else
+  * lowers to a DataFrame plan for Catalyst.
   */
 object Exec {
   def lower(g: Graph, s: Shape): DataFrame = new Lower(g)(s)

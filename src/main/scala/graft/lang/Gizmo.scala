@@ -1,6 +1,6 @@
 package graft.lang
 
-import graft.core.{Graph, NQuads, QValue}
+import graft.core.{Deadline, Graph, NQuads, QValue}
 import graft.exec.Exec
 import graft.path.{Path, Via}
 import graft.shape.ValueFilter
@@ -769,6 +769,7 @@ object Gizmo {
           var iters = 0
           var broke = false
           while (!broke && truthy(evalToks(cond))) {
+            Deadline.check()
             try runToks(body)
             catch {
               case ContinueSignal(l) if l.forall(labels.contains) => ()
@@ -790,6 +791,7 @@ object Gizmo {
           var first = true
           while (!broke && (first || truthy(evalToks(cond)))) {
             first = false
+            Deadline.check()
             try runToks(body)
             catch {
               case ContinueSignal(l) if l.forall(labels.contains) => ()
@@ -1076,6 +1078,7 @@ object Gizmo {
             var broke = false
             val savedEnv = env
             try while (!broke && it.hasNext) {
+              Deadline.check()
               val v = it.next()
               if (hadLet) {
                 // fresh per-iteration binding: closures capture each value
@@ -1114,6 +1117,7 @@ object Gizmo {
               var iters = 0
               var broke = false
               while (!broke && (cond.isEmpty || truthy(evalToks(cond)))) {
+                Deadline.check()
                 try runToks(body)
                 catch { // continue still runs the update (JS semantics)
                   case ContinueSignal(l) if l.forall(labels.contains) => ()
@@ -1337,7 +1341,9 @@ object Gizmo {
           }
           g.sEnv = frame; g.sDepth = 0; g.sFnStack = g.f :: Nil
           g.sLabels = Nil
-          val th = new Thread(() => runGeneratorBody(g),
+          // the carrier polls the caller's request deadline in its loops
+          val deadline = Deadline.flag
+          val th = new Thread(() => Deadline.within(deadline)(runGeneratorBody(g)),
             s"gizmo-gen-$genThreads")
           th.setDaemon(true)
           th.start()
@@ -1372,6 +1378,7 @@ object Gizmo {
               case GenReturnSignal(v)     => GenDone(v)
               case t @ ThrowSignal(_)     => GenFailed(t)
               case e: GizmoError          => GenFailed(e)
+              case e: Deadline.Expired    => GenFailed(e)
               case _: StackOverflowError  =>
                 GenFailed(GizmoError("call stack exhausted"))
               case e: InterruptedException => GenFailed(GizmoError(e.toString))

@@ -1,7 +1,7 @@
 package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.core.{Formats, Graph, Inference, NQuads}
+import graft.core.{Deadline, Formats, Graph, Inference, NQuads}
 import graft.lang.QuerySession
 import graft.lang.QuerySession.{Collation, Options}
 import java.net.InetSocketAddress
@@ -29,11 +29,22 @@ import scala.util.control.NonFatal
   * on an older snapshot whose cached base a later write's fold released
   * recomputes that base from its lineage.
   *
+  * Reads are served from the driver-local index (graft.shape.LocalEval,
+  * the reference memstore's role) with no Spark job: a graph handed in
+  * without a cap (`interactiveMaxQuads == 0`) gets the session's,
+  * `LocalGraphIndex.maxQuads`. A snapshot a write made indexes as its
+  * base's index plus an overlay of its delta, so a read after a write
+  * does not collect the store again. Stores above the cap, and shapes
+  * the index does not evaluate, take the distributed path.
+  *
   * Each request runs under its own Spark job tag. Past `deadline` (the
   * reference's 300 s query ceiling by default) a scheduled canceller
   * cancels the tag's jobs, again every `CancelRetry` while the request
-  * still runs, so a query between two jobs is caught at its next one; the
-  * client gets 503 with `{"error": ...}` and the pool thread is free.
+  * still runs, so a query between two jobs is caught at its next one.
+  * It also sets the request's [[graft.core.Deadline]] flag, which the
+  * local index and the Gizmo interpreter's loops poll, since they run no
+  * job to cancel. Either way the client gets 503 with `{"error": ...}`
+  * and the pool thread is free; pool threads are never interrupted.
   *
   * Every write path (N-Quads, JSON quad-lines, Turtle/TriG, JSON-LD) goes
   * through `Graph.addQuads`: the snapshot is the store as opened (its
@@ -54,9 +65,10 @@ import scala.util.control.NonFatal
   */
 final class HttpApi(initial: Graph, deadline: FiniteDuration = HttpApi.QueryDeadline) {
   import HttpApi._
-  @volatile private var g: Graph = initial
-  private val writer = new Object
   private val spark = initial.spark
+  @volatile private var g: Graph =
+    if (initial.interactiveMaxQuads == 0) initial.interactive() else initial
+  private val writer = new Object
   private var server: HttpServer = _
   private var pool: ExecutorService = _
   private var canceller: ScheduledExecutorService = _
@@ -139,7 +151,7 @@ final class HttpApi(initial: Graph, deadline: FiniteDuration = HttpApi.QueryDead
     }, deadline.toMillis, CancelRetry.toMillis, MILLISECONDS)
     running.add(tag)
     sc.addJobTag(tag)
-    try f(expired)
+    try Deadline.within(expired)(f(expired))
     finally {
       sc.removeJobTag(tag)
       cancel.cancel(false)

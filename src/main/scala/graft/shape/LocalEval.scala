@@ -1,23 +1,30 @@
 package graft.shape
 
-import graft.core.{Graph, Kind, QValue}
-import org.apache.spark.sql.DataFrame
+import graft.core.{Deadline, Graph, Kind, QValue}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import java.lang.{Long => JLong}
 import scala.collection.mutable
 
 /** Driver-local execution of the Shape algebra over an in-memory quad
-  * index — the interactive fast path for point lookups on small, cached
-  * graphs.
+  * index — the fast path for queries on small, cached graphs.
   *
   * Why it exists: Spark's per-action scheduling floor is ~100 ms-1 s, so a
   * point lookup the reference answers in ~20 ms from its memstore
   * (/root/reference/graph/memstore/quadstore.go) costs 60× more as a
   * distributed job even when the data is tiny. This evaluator is the
   * memstore analog: hash indexes per quad direction, built once from the
-  * cached DataFrames, consulted by `Exec.run` only when the graph opted in
-  * via `Graph.interactive()` AND its quad count is under a hard cap — at
-  * 100 TB the gate never opens and every query takes the distributed path.
+  * cached DataFrames ([[LocalGraphIndex]]), consulted by `Exec.run` when
+  * the graph carries a cap (`Graph.interactive`) and its quad count is
+  * under it. Served stores carry one by default: `HttpApi` sets the
+  * session's cap (`LocalGraphIndex.maxQuads`, from driver heap and
+  * `spark.driver.maxResultSize`), and a snapshot a write made indexes as
+  * its base's index plus an overlay of its delta. At 100 TB the gate
+  * never opens and every query takes the distributed path.
+  *
+  * A local query runs no Spark job, so job cancellation cannot stop it:
+  * it polls the request's [[graft.core.Deadline]] once per recursion step
+  * and every few thousand rows of its joins and enumerations.
   *
   * Correctness contract: this is a *second implementation of the same
   * semantics* as [[Lower]], mirrored construct-for-construct (each case
@@ -42,32 +49,28 @@ object LocalEval {
   /** Debug/engagement counter: number of shapes evaluated locally. */
   val evalCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Default `Graph.interactive()` cap. ~5 M quads ≈ a few hundred MB of
-    * driver heap for the index — generous for an interactive store, and a
-    * hard stop long before "big data".
-    */
-  val DefaultMaxQuads: Long = 5_000_000L
-
-  /** Evaluate `s` locally if the graph is interactive, small enough, and
+  /** Evaluate `s` locally if the graph carries a cap, is under it, and
     * the shape is fully supported; None = take the distributed path.
     */
-  def tryRun(g: Graph, s: Shape): Option[LocalResult] = {
-    if (g.interactiveMaxQuads <= 0) return None
-    LocalGraphIndex.forGraph(g, g.interactiveMaxQuads).flatMap { idx =>
-      val opt = Shape.optimize(s)
-      if (!supports(opt, root = true)) None
-      else try {
-        evalCount.incrementAndGet()
-        val ev = new LocalEval(g, idx)
-        opt match {
-          case Shape.Count(values) =>
-            // mirror Lower's pre-resolved one-row Count (Lower.scala:160)
-            Some(LocalResult(idx, None, Some(ev.nodes(values).rows.size.toLong)))
-          case other =>
-            Some(LocalResult(idx, Some(ev.nodes(other)), None))
-        }
-      } catch { case _: Unsupported => None }
-    }
+  def tryRun(g: Graph, s: Shape): Option[LocalResult] =
+    if (g.interactiveMaxQuads <= 0) None
+    else LocalGraphIndex.forGraph(g, g.interactiveMaxQuads).flatMap(run(_, s))
+
+  /** Evaluate `s` over `idx` if the shape is fully supported. */
+  private[shape] def run(idx: LocalGraphIndex, s: Shape): Option[LocalResult] = {
+    val opt = Shape.optimize(s)
+    if (!supports(opt, root = true)) None
+    else try {
+      evalCount.incrementAndGet()
+      val ev = new LocalEval(idx)
+      opt match {
+        case Shape.Count(values) =>
+          // mirror Lower's pre-resolved one-row Count (Lower.scala:160)
+          Some(LocalResult(idx, None, Some(ev.nodes(values).rows.size.toLong)))
+        case other =>
+          Some(LocalResult(idx, Some(ev.nodes(other)), None))
+      }
+    } catch { case _: Unsupported => None }
   }
 
   /** Static supportability walk. `Count` is only supported at the root
@@ -143,21 +146,27 @@ final class LocalTable(val cols: Vector[String],
     else new LocalTable(cols.patch(at, Nil, 1),
       rows.map(r => (r.take(at) ++ r.drop(at + 1))))
   }
-
-  /** unionByName(allowMissingColumns = true). */
-  def unionByName(other: LocalTable): LocalTable = {
-    val allCols = cols ++ other.cols.filterNot(cols.contains)
-    def pad(t: LocalTable): IndexedSeq[Array[JLong]] = {
-      val idxs = allCols.map(t.colIdx)
-      t.rows.map(r => idxs.map(i => if (i < 0) null else r(i)).toArray)
-    }
-    new LocalTable(allCols, pad(this) ++ pad(other))
-  }
 }
 
 object LocalTable {
   def empty(cols: Vector[String]): LocalTable =
     new LocalTable(cols, Vector.empty)
+
+  /** `parts` unioned by name in order — Spark's
+    * `unionByName(allowMissingColumns = true)` folded over them — with
+    * each row padded once.
+    */
+  def union(parts: Seq[LocalTable]): LocalTable = {
+    val allCols = parts.foldLeft(Vector.empty[String])((cs, t) =>
+      cs ++ t.cols.filterNot(cs.contains))
+    new LocalTable(allCols, parts.flatMap { t =>
+      if (t.cols == allCols) t.rows
+      else {
+        val idxs = allCols.map(t.colIdx)
+        t.rows.map(r => idxs.map(i => if (i < 0) null else r(i)).toArray)
+      }
+    }.toIndexedSeq)
+  }
 }
 
 /** One dictionary entry (the nodes row minus the id). */
@@ -167,111 +176,302 @@ final case class LocalNode(kind: Int, s: String, i: JLong,
   def toQValue: QValue = QValue.fromFields(kind, s, i, d, b, t, lang, dt)
 }
 
-/** In-memory quad index: columnar quad arrays plus one hash index per
-  * direction — the memstore's QuadDirectionIndex analog
+object LocalNode {
+  /** The nodes table's columns, in the order [[apply]] reads them. */
+  val Cols: Seq[String] =
+    Seq("id", "kind", "s", "i", "d", "b", "t", "lang", "dt", "sk")
+
+  /** The entry of a nodes row whose [[Cols]] sit at positions `at`. */
+  def apply(r: Row, at: Array[Int]): LocalNode = {
+    def long(k: Int) = if (r.isNullAt(at(k))) null else JLong.valueOf(r.getLong(at(k)))
+    LocalNode(r.getInt(at(1)), r.getString(at(2)), long(3),
+      if (r.isNullAt(at(4))) null else java.lang.Double.valueOf(r.getDouble(at(4))),
+      if (r.isNullAt(at(5))) null else java.lang.Boolean.valueOf(r.getBoolean(at(5))),
+      long(6), r.getString(at(7)), r.getString(at(8)), r.getString(at(9)))
+  }
+}
+
+/** Columnar quads with one posting list per id per direction — the
+  * memstore's QuadDirectionIndex analog
   * (/root/reference/graph/memstore/quadstore.go:125-137).
   */
-final class LocalGraphIndex(val nodeById: java.util.HashMap[JLong, LocalNode],
-                            val nodeIds: Array[Long],
-                            val qs: Array[Long], val qp: Array[Long],
-                            val qo: Array[Long], val ql: Array[JLong],
-                            byS: java.util.HashMap[JLong, Array[Int]],
-                            byP: java.util.HashMap[JLong, Array[Int]],
-                            byO: java.util.HashMap[JLong, Array[Int]],
-                            byL: java.util.HashMap[JLong, Array[Int]]) {
-  def nQuads: Int = qs.length
+private final class QuadTable(val s: Array[Long], val p: Array[Long],
+                              val o: Array[Long], val l: Array[JLong]) {
+  def n: Int = s.length
 
-  def dirValue(dir: Dir, quad: Int): JLong = dir match {
-    case Dir.S => JLong.valueOf(qs(quad))
-    case Dir.P => JLong.valueOf(qp(quad))
-    case Dir.O => JLong.valueOf(qo(quad))
-    case Dir.L => ql(quad)
+  def value(dir: Dir, q: Int): JLong = dir match {
+    case Dir.S => JLong.valueOf(s(q))
+    case Dir.P => JLong.valueOf(p(q))
+    case Dir.O => JLong.valueOf(o(q))
+    case Dir.L => l(q)
   }
 
-  def index(dir: Dir): java.util.HashMap[JLong, Array[Int]] = dir match {
-    case Dir.S => byS
-    case Dir.P => byP
-    case Dir.O => byO
-    case Dir.L => byL
+  private def postingsOf(dir: Dir): java.util.HashMap[JLong, Array[Int]] = {
+    val m = new java.util.HashMap[JLong, mutable.ArrayBuilder.ofInt]()
+    var q = 0
+    while (q < n) {
+      val v = value(dir, q)
+      if (v != null) {
+        var b = m.get(v)
+        if (b == null) { b = new mutable.ArrayBuilder.ofInt; m.put(v, b) }
+        b += q
+      }
+      q += 1
+    }
+    val out = new java.util.HashMap[JLong, Array[Int]](m.size() * 2)
+    m.forEach((key, b) => out.put(key, b.result()))
+    out
   }
 
-  /** Posting list for one id on one direction (empty when absent). */
+  private val byS = postingsOf(Dir.S)
+  private val byP = postingsOf(Dir.P)
+  private val byO = postingsOf(Dir.O)
+  private val byL = postingsOf(Dir.L)
+
+  /** Positions of the quads holding `id` in `dir` (empty when none). */
   def postings(dir: Dir, id: Long): Array[Int] = {
-    val a = index(dir).get(JLong.valueOf(id))
+    val a = (dir match {
+      case Dir.S => byS
+      case Dir.P => byP
+      case Dir.O => byO
+      case Dir.L => byL
+    }).get(JLong.valueOf(id))
     if (a == null) Array.emptyIntArray else a
   }
 }
 
-object LocalGraphIndex {
-  // Keyed on the quads DataFrame by identity: Graph.cached()/withStats()
-  // keep the same Dataset reference, mutations create a new one (and so a
-  // fresh index); dropped graphs let their index be collected.
-  private val cache =
-    new java.util.WeakHashMap[DataFrame, Option[LocalGraphIndex]]()
+private object QuadTable {
+  /** The quads `quad(0)` … `quad(n - 1)`, each `(s, p, o, l)`. */
+  def tabulate(n: Int)(quad: Int => (Long, Long, Long, JLong)): QuadTable = {
+    val (s, p, o, l) = (new Array[Long](n), new Array[Long](n),
+      new Array[Long](n), new Array[JLong](n))
+    var q = 0
+    while (q < n) {
+      val (qs, qp, qo, ql) = quad(q)
+      s(q) = qs; p(q) = qp; o(q) = qo; l(q) = ql
+      q += 1
+    }
+    new QuadTable(s, p, o, l)
+  }
 
+  def apply(keys: Iterable[Graph.QuadKey]): QuadTable = {
+    val ks = keys.toArray
+    tabulate(ks.length) { q =>
+      val (s, p, o, l) = ks(q)
+      (s, p, o, l.map(JLong.valueOf).orNull)
+    }
+  }
+}
+
+/** In-memory quad index of one graph: a compact `base` (columnar quads,
+  * posting lists per direction, the dictionary) and, for a snapshot a
+  * write made, an overlay of that snapshot's delta — the base positions
+  * it deleted, the quads it added (positions from `base.n` on) and the
+  * dictionary rows it added and removed. Immutable once built.
+  */
+final class LocalGraphIndex private (
+    base: QuadTable, dead: java.util.BitSet, added: QuadTable,
+    baseNodes: java.util.HashMap[JLong, LocalNode], baseIds: Array[Long],
+    addedNodes: java.util.HashMap[JLong, LocalNode],
+    goneNodes: java.util.Set[JLong]) {
+  private val nb = base.n
+
+  /** The number of quads. */
+  val nQuads: Long = nb.toLong - dead.cardinality() + added.n
+
+  private def isCompact: Boolean = dead.isEmpty && added.n == 0 &&
+    addedNodes.isEmpty && goneNodes.isEmpty
+
+  /** The dictionary entry of `id`, or null. */
+  def node(id: JLong): LocalNode = {
+    val a = addedNodes.get(id)
+    if (a != null || goneNodes.contains(id)) a else baseNodes.get(id)
+  }
+
+  /** Every node id: the base's, then the ones the overlay added. */
+  lazy val nodeIds: Array[Long] =
+    if (addedNodes.isEmpty && goneNodes.isEmpty) baseIds
+    else {
+      val b = new mutable.ArrayBuilder.ofLong
+      baseIds.foreach(id => if (!goneNodes.contains(JLong.valueOf(id))) b += id)
+      addedNodes.keySet.forEach(id => b += id.longValue)
+      b.result()
+    }
+
+  /** Positions of every quad. */
+  def allQuads: Array[Int] = {
+    val b = new mutable.ArrayBuilder.ofInt
+    var q = dead.nextClearBit(0)
+    while (q < nb) { b += q; q = dead.nextClearBit(q + 1) }
+    q = 0
+    while (q < added.n) { b += nb + q; q += 1 }
+    b.result()
+  }
+
+  /** Positions of the quads holding `id` in `dir` (empty when none). */
+  def postings(dir: Dir, id: Long): Array[Int] = {
+    val b = base.postings(dir, id)
+    val live = if (dead.isEmpty) b else b.filterNot(dead.get)
+    val a = added.postings(dir, id)
+    if (a.isEmpty) live else live ++ a.map(_ + nb)
+  }
+
+  def value(dir: Dir, q: Int): JLong =
+    if (q < nb) base.value(dir, q) else added.value(dir, q - nb)
+
+  /** Quad `q` as a working-set row `(s, p, o, l)`. */
+  def row(q: Int): Array[JLong] = {
+    val (t, k) = if (q < nb) (base, q) else (added, q - nb)
+    Array[JLong](JLong.valueOf(t.s(k)), JLong.valueOf(t.p(k)),
+      JLong.valueOf(t.o(k)), t.l(k))
+  }
+
+  /** This compact index with the writes of `d` over it: work in the size
+    * of the delta (deleted keys look up their subject's postings), no
+    * Spark job.
+    */
+  private[shape] def overlay(d: Graph.Delta): LocalGraphIndex = {
+    require(isCompact, "an overlay goes over a compact index")
+    val deadAt = new java.util.BitSet(nb)
+    d.gone.foreach { case (s, p, o, l) =>
+      val lv = l.map(JLong.valueOf).orNull
+      base.postings(Dir.S, s).foreach { q =>
+        if (base.p(q) == p && base.o(q) == o && base.l(q) == lv) deadAt.set(q)
+      }
+    }
+    val nodes = new java.util.HashMap[JLong, LocalNode](d.nodes.size * 2)
+    d.nodes.values.headOption.foreach { r0 =>
+      val at = LocalNode.Cols.map(r0.fieldIndex).toArray
+      d.nodes.foreach { case (id, r) => nodes.put(JLong.valueOf(id), LocalNode(r, at)) }
+    }
+    val gone = new java.util.HashSet[JLong](d.goneNodes.size * 2)
+    d.goneNodes.foreach(id => gone.add(JLong.valueOf(id)))
+    new LocalGraphIndex(base, deadAt, QuadTable(d.quads), baseNodes, baseIds,
+      nodes, gone)
+  }
+
+  /** This index as one compact index (a fold's new base): no Spark job. */
+  private[shape] def compact: LocalGraphIndex =
+    if (isCompact) this
+    else {
+      val live = allQuads
+      val ids = nodeIds
+      val nodes = new java.util.HashMap[JLong, LocalNode](ids.length * 2)
+      ids.foreach { id => val k = JLong.valueOf(id); nodes.put(k, node(k)) }
+      LocalGraphIndex(QuadTable.tabulate(live.length) { i =>
+        val r = row(live(i))
+        (r(0), r(1), r(2), r(3))
+      }, nodes, ids)
+    }
+}
+
+object LocalGraphIndex {
+  /** Driver heap one indexed quad retains with its share of the
+    * dictionary, and the serialized task results one quad adds to the
+    * collects that build the index. Measured on the `serve` benchmark
+    * store (74 400 quads, 58 604 nodes, seeds 1 and 2): 27.4-27.9 MB of
+    * heap after GC, 3.3 MB of task results.
+    */
+  val HeapBytesPerQuad: Long = 375L
+  val CollectBytesPerQuad: Long = 45L
+
+  /** The largest store the session indexes on the driver: the index may
+    * take a quarter of the driver heap (it sits beside Spark's own cache
+    * and the queries' working sets), and its collects must stay under
+    * `spark.driver.maxResultSize` (Spark's default, 1 GiB, when the
+    * session leaves it unset; 0 = unlimited).
+    */
+  def maxQuads(spark: SparkSession): Long = {
+    val heap = Runtime.getRuntime.maxMemory / 4 / HeapBytesPerQuad
+    val collect = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (collect > 0) math.min(heap, collect / CollectBytesPerQuad) else heap
+  }
+
+  private def apply(base: QuadTable, nodes: java.util.HashMap[JLong, LocalNode],
+                    ids: Array[Long]): LocalGraphIndex =
+    new LocalGraphIndex(base, new java.util.BitSet(0), QuadTable(Nil), nodes,
+      ids, new java.util.HashMap(), java.util.Collections.emptySet())
+
+  /** A graph's quad count and its index (None above the cap it was
+    * asked under).
+    */
+  private final case class Entry(quads: Long, index: Option[LocalGraphIndex])
+
+  // Keyed on the quads DataFrame by identity: Graph.cached()/withStats()/
+  // interactive() keep the same Dataset reference, writes create a new
+  // one; dropped graphs let their index be collected.
+  private val cache = new java.util.WeakHashMap[DataFrame, Entry]()
+
+  /** The index of `g` when it holds at most `maxQuads` quads. A snapshot
+    * a write made (`Graph.addQuads`, `deleteQuads`, `removeNode`) indexes
+    * as its base's index plus an overlay of its delta, and a base a fold
+    * made as the compaction of the overlay it folded: neither runs a
+    * Spark job. Any other graph is collected once, table by table.
+    */
   def forGraph(g: Graph, maxQuads: Long): Option[LocalGraphIndex] =
     cache.synchronized {
-      val key = g.quads
-      val hit = cache.get(key)
-      if (hit != null) hit
-      else {
-        val n = g.predStats.map(_.values.sum).getOrElse(g.quads.count())
-        val built = if (n > maxQuads) None else Some(build(g))
-        cache.put(key, built)
-        built
+      val idx = g.liveDelta match {
+        case Some(d) if d.isEmpty => baseOf(d, maxQuads)
+        case Some(d) => Option(cache.get(g.quads)).flatMap(_.index).orElse {
+          val o = baseOf(d, maxQuads).map(_.overlay(d))
+          o.foreach(i => cache.put(g.quads, Entry(i.nQuads, o)))
+          o
+        }
+        case None => stored(g, maxQuads)
       }
+      idx.filter(_.nQuads <= maxQuads)
     }
 
-  /** One collect of each table; ~(32 B + strings) per node, 32 B per quad. */
+  /** The index of `d`'s base: cached, compacted from the index of the
+    * base a fold replaced, or collected.
+    */
+  private def baseOf(d: Graph.Delta, maxQuads: Long): Option[LocalGraphIndex] =
+    Option(cache.get(d.base.quads)).flatMap(_.index).orElse {
+      val folded = for {
+        p <- d.prior
+        e <- Option(cache.get(p.base.quads))
+        old <- e.index
+        o = old.overlay(p) if o.nQuads <= maxQuads
+      } yield {
+        val idx = o.compact
+        cache.remove(p.base.quads)
+        cache.put(d.base.quads, Entry(idx.nQuads, Some(idx)))
+        idx
+      }
+      folded.orElse(stored(d.base, maxQuads))
+    }
+
+  /** The collected index of `g`, or None when it holds more than
+    * `maxQuads` quads (counted once).
+    */
+  private def stored(g: Graph, maxQuads: Long): Option[LocalGraphIndex] = {
+    val hit = Option(cache.get(g.quads))
+    hit.flatMap(_.index).orElse {
+      val n = hit.map(_.quads).getOrElse(
+        g.predStats.map(_.values.sum).getOrElse(g.quads.count()))
+      val idx = if (n > maxQuads) None else Some(build(g))
+      cache.put(g.quads, Entry(n, idx))
+      idx
+    }
+  }
+
+  /** One collect of each table (see [[HeapBytesPerQuad]]). */
   def build(g: Graph): LocalGraphIndex = {
     import org.apache.spark.sql.functions.col
-    val nodeRows = g.nodes.select(col("id"), col("kind"), col("s"), col("i"),
-      col("d"), col("b"), col("t"), col("lang"), col("dt"), col("sk"))
-      .collect()
-    val nodeById = new java.util.HashMap[JLong, LocalNode](nodeRows.length * 2)
-    val nodeIds = new Array[Long](nodeRows.length)
-    var k = 0
-    nodeRows.foreach { r =>
-      val id = r.getLong(0)
-      nodeIds(k) = id; k += 1
-      nodeById.put(JLong.valueOf(id), LocalNode(r.getInt(1), r.getString(2),
-        if (r.isNullAt(3)) null else JLong.valueOf(r.getLong(3)),
-        if (r.isNullAt(4)) null else java.lang.Double.valueOf(r.getDouble(4)),
-        if (r.isNullAt(5)) null else java.lang.Boolean.valueOf(r.getBoolean(5)),
-        if (r.isNullAt(6)) null else JLong.valueOf(r.getLong(6)),
-        r.getString(7), r.getString(8), r.getString(9)))
+    val nodeRows = g.nodes.select(LocalNode.Cols.map(col): _*).collect()
+    val at = LocalNode.Cols.indices.toArray
+    val nodes = new java.util.HashMap[JLong, LocalNode](nodeRows.length * 2)
+    val ids = nodeRows.map { r =>
+      nodes.put(JLong.valueOf(r.getLong(0)), LocalNode(r, at))
+      r.getLong(0)
     }
-    val quadRows =
-      g.quads.select(col("s"), col("p"), col("o"), col("l")).collect()
-    val n = quadRows.length
-    val qs = new Array[Long](n); val qp = new Array[Long](n)
-    val qo = new Array[Long](n); val ql = new Array[JLong](n)
-    var i = 0
-    while (i < n) {
-      val r = quadRows(i)
-      qs(i) = r.getLong(0); qp(i) = r.getLong(1); qo(i) = r.getLong(2)
-      ql(i) = if (r.isNullAt(3)) null else JLong.valueOf(r.getLong(3))
-      i += 1
-    }
-    def buildIdx(get: Int => JLong): java.util.HashMap[JLong, Array[Int]] = {
-      val m = new java.util.HashMap[JLong, mutable.ArrayBuffer[Int]]()
-      var j = 0
-      while (j < n) {
-        val v = get(j)
-        if (v != null) {
-          var b = m.get(v)
-          if (b == null) { b = mutable.ArrayBuffer.empty[Int]; m.put(v, b) }
-          b += j
-        }
-        j += 1
-      }
-      val out = new java.util.HashMap[JLong, Array[Int]](m.size() * 2)
-      m.forEach((key, buf) => out.put(key, buf.toArray))
-      out
-    }
-    new LocalGraphIndex(nodeById, nodeIds, qs, qp, qo, ql,
-      buildIdx(j => JLong.valueOf(qs(j))), buildIdx(j => JLong.valueOf(qp(j))),
-      buildIdx(j => JLong.valueOf(qo(j))), buildIdx(j => ql(j)))
+    val quadRows = g.quads.select(col("s"), col("p"), col("o"), col("l")).collect()
+    LocalGraphIndex(QuadTable.tabulate(quadRows.length) { q =>
+      val r = quadRows(q)
+      (r.getLong(0), r.getLong(1), r.getLong(2),
+        if (r.isNullAt(3)) null else JLong.valueOf(r.getLong(3)))
+    }, nodes, ids)
   }
 }
 
@@ -283,11 +483,19 @@ final case class LocalResult(idx: LocalGraphIndex,
 /** The Shape interpreter; each case mirrors the correspondingly-numbered
   * construct in [[Lower]].
   */
-private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
+private final class LocalEval(idx: LocalGraphIndex) {
   import Lower.{ID, intTagCol, tagCol}
   import LocalEval.Unsupported
 
   private val idOnly = Vector(ID)
+
+  // rows produced by joins and enumerations; the deadline is polled every
+  // 4096 of them
+  private var produced = 0L
+  private def tick(): Unit = {
+    produced += 1
+    if ((produced & 4095L) == 0L) Deadline.check()
+  }
   private def idTable(ids: IndexedSeq[JLong]): LocalTable =
     new LocalTable(idOnly, ids.map(i => Array[JLong](i)))
 
@@ -332,7 +540,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
       opt.foldLeft(t)(optionalJoin)
 
     case Shape.Union(sub) => // Lower.scala:113-114
-      sub.map(nodes).reduce(_ unionByName _)
+      LocalTable.union(sub.map(nodes))
 
     case Shape.Except(ex, from) => // Lower.scala:116-117 (left_anti: null ids kept)
       val exclude = new java.util.HashSet[JLong]()
@@ -347,14 +555,13 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
       from match {
         case Shape.AllNodes => // dictionary scan, no join
           idTable(idx.nodeIds.toIndexedSeq.collect {
-            case id if pass(idx.nodeById.get(JLong.valueOf(id))) =>
-              JLong.valueOf(id)
+            case id if pass(idx.node(JLong.valueOf(id))) => JLong.valueOf(id)
           })
         case _ => // left_semi against the filtered dictionary
           val t = nodes(from); val at = t.colIdx(ID)
           t.where { r =>
             r(at) != null && {
-              val n = idx.nodeById.get(r(at))
+              val n = idx.node(r(at))
               n != null && pass(n)
             }
           }
@@ -416,7 +623,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
       def keyOf(r: Array[JLong]): String = {
         if (r(at) == null) null
         else {
-          val n = idx.nodeById.get(r(at))
+          val n = idx.node(r(at))
           if (n == null) null else n.sk
         }
       }
@@ -443,7 +650,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
   // ---------------------------------------------------------------- quads
   private def quads(s: Shape): LocalTable = s match {
     case Shape.Quads(filters) => evalQuads(filters)
-    case Shape.Union(sub) => sub.map(quads).reduce(_ unionByName _)
+    case Shape.Union(sub) => LocalTable.union(sub.map(quads))
     case other =>
       throw new IllegalArgumentException(s"node shape in quad position: $other")
   }
@@ -507,7 +714,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
     }
     // stats folding (Lower.scala:195-201) falls out of empty postings.
     var cand: Array[Int] =
-      if (seeds.isEmpty) Array.range(0, idx.nQuads)
+      if (seeds.isEmpty) idx.allQuads
       else {
         val s = seeds.minBy(_.cost)
         s.ids.flatMap(idx.postings(s.d, _))
@@ -517,13 +724,13 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
     literal.foreach { case (d, ids) =>
       val set = ids.toSet
       cand = cand.filter { q =>
-        val v = idx.dirValue(d, q)
+        val v = idx.value(d, q)
         v != null && set.contains(v.longValue())
       }
     }
-    var t = new LocalTable(quadCols, cand.toIndexedSeq.map(q =>
-      Array[JLong](JLong.valueOf(idx.qs(q)), JLong.valueOf(idx.qp(q)),
-        JLong.valueOf(idx.qo(q)), idx.ql(q))))
+    var t = new LocalTable(quadCols, cand.toIndexedSeq.map { q =>
+      tick(); idx.row(q)
+    })
     // now the non-literal work, in filter order
     filters.zipWithIndex.foreach { case (f, fi) =>
       val dirIdx = t.colIdx(f.dir.colName)
@@ -552,6 +759,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
             }
           }
           val outRows = t.rows.flatMap { r =>
+            tick()
             val v = r(dirIdx)
             val ms = if (v == null) null else byId.get(v)
             if (ms == null) Nil else ms.map(tagVals => r ++ tagVals)
@@ -588,6 +796,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
         }
       }
       val rows = left.rows.flatMap { r =>
+        tick()
         val ms = if (r(li) == null) null else byId.get(r(li))
         if (ms == null) Nil else ms.map(tv => r ++ tv)
       }
@@ -616,6 +825,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
     val li = left.colIdx(ID)
     val nulls = Array.fill[JLong](keep.size)(null)
     val rows = left.rows.flatMap { r =>
+      tick()
       val ms = if (r(li) == null) null else byId.get(r(li))
       if (ms == null) Seq(r ++ nulls) else ms.map(tv => r ++ tv)
     }
@@ -712,10 +922,11 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
     var frontier = distinctIdTable(startIds.asScala, startHasNull)
     val emitted = new java.util.HashSet[JLong]()
     var emittedNull = false
-    var acc: LocalTable = null
     var depth = 0
     var freshEmpty = frontier.rows.isEmpty
+    val parts = mutable.ArrayBuffer.empty[LocalTable]
     while (depth < maxD && !freshEmpty) {
+      Deadline.check()
       val stepT = nodes(step(Shape.EmbedLocal(frontier)))
       val depthVal = JLong.valueOf((depth + 1).toLong)
       val tagged = depthTags.foldLeft(stepT)((t, tag) =>
@@ -733,7 +944,7 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
       val fresh = new LocalTable(tagged.cols, freshRows)
       freshEmpty = fresh.rows.isEmpty
       if (!freshEmpty) {
-        acc = if (acc == null) fresh else acc.unionByName(fresh)
+        parts += fresh
         val ai = fresh.colIdx(ID)
         fresh.rows.foreach { r =>
           if (r(ai) == null) emittedNull = true else emitted.add(r(ai))
@@ -749,6 +960,6 @@ private final class LocalEval(g: Graph, idx: LocalGraphIndex) {
       }
       depth += 1
     }
-    if (acc == null) LocalTable.empty(idOnly) else acc
+    if (parts.isEmpty) LocalTable.empty(idOnly) else LocalTable.union(parts.toSeq)
   }
 }

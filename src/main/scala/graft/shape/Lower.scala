@@ -218,7 +218,26 @@ final class Lower(g: Graph) {
       val fixedS = filters.exists(f => f.dir == Dir.S && isFixed(f.values))
       val base =
         if (fixedO && !fixedS) g.quadsOps.getOrElse(g.quads) else g.quads
-      filters.foldLeft(base)(applyQuadFilter)
+      // Materialize-small rule (shape.go:872 threshold 100), Spark form:
+      // a quad set the stats prove tiny is the broadcast side of the
+      // first sub-shape join of this hop. The hint goes on that join's
+      // input only: one with no join below it rises to the next join
+      // above (a finals' left outer join), where Spark drops it.
+      def tiny(vs: Seq[QValue]) = g.predStats.exists(st =>
+        vs.map(v => st.getOrElse(QValue.id(v), 0L)).sum < 100)
+      val small = filters.exists {
+        case Shape.QuadFilter(Dir.P, Shape.Fixed(vs))             => tiny(vs)
+        case Shape.QuadFilter(Dir.P, Shape.Save(_, Shape.Fixed(vs))) => tiny(vs)
+        case _ => false
+      }
+      val firstJoin = filters.indexWhere(_.values match {
+        case Shape.AllNodes | Shape.Null | Shape.Fixed(_) |
+             Shape.Save(_, Shape.AllNodes | Shape.Fixed(_)) => false
+        case _ => true
+      })
+      filters.zipWithIndex.foldLeft(base) { case (df, (f, i)) =>
+        applyQuadFilter(if (small && i == firstJoin) broadcast(df) else df, f)
+      }
     case Shape.Union(sub) =>
       sub.map(quads).reduce(_.unionByName(_, allowMissingColumns = true))
     case other =>
@@ -239,16 +258,10 @@ final class Lower(g: Graph) {
         if (f.dir == Dir.P &&
           g.predStats.exists(st => ids.forall(st.getOrElse(_, 0L) == 0L)))
           return df.where(lit(false))
-        var base = ids match {
+        val base = ids match {
           case Seq(one) => df.where(dirCol === lit(one))
           case many     => df.where(dirCol.isin(many: _*))
         }
-        // Materialize-small rule (shape.go:872 threshold 100), Spark form:
-        // a quad set the stats prove tiny gets a broadcast hint so every
-        // join over it is a broadcast join regardless of AQE's runtime view
-        if (f.dir == Dir.P && g.predStats.exists(st =>
-          ids.map(st.getOrElse(_, 0L)).sum < 100))
-          base = broadcast(base)
         // literal predicate constraint + bucketed store → static partition
         // pruning on pb (the kv backend's predicate-index analog)
         if (f.dir == Dir.P && g.predicateBuckets > 0 &&

@@ -49,6 +49,30 @@ class HttpConcurrencySpec extends AnyFunSuite {
   private def open(s: SparkSession, qs: Seq[ParsedQuad]): Graph =
     Graph.fromQuads(s, qs).withStats().cached()
 
+  /** [[open]] with a local-index cap below its quad count, which `HttpApi`
+    * keeps: every query takes the distributed path, so these tests see
+    * its Spark jobs (cancel, 503, job tags).
+    */
+  private def distributed(s: SparkSession, qs: Seq[ParsedQuad]): Graph =
+    open(s, qs).interactive(1)
+
+  /** Counts the jobs started under `port`'s request tags. */
+  private final class ServerJobs(port: Int) extends SparkListener {
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .exists(_.split(",").exists(_.startsWith(s"graft-http-$port-"))))
+        started.incrementAndGet()
+    /** Jobs started while `f` ran (the listener bus drained around it). */
+    def during[T](f: => T): (T, Int) = {
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      started.set(0)
+      val out = f
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      (out, started.get)
+    }
+  }
+
   private def waitFor(what: String, within: FiniteDuration = 10.seconds)(p: => Boolean): Unit = {
     val until = System.nanoTime() + within.toNanos
     while (!p) {
@@ -189,7 +213,7 @@ class HttpConcurrencySpec extends AnyFunSuite {
   private val Walk = """g.V("<c0>").followRecursive(g.M().out("<next>"), 5000).all()"""
 
   test("a read and a write are answered while a slow read runs") {
-    val api = new HttpApi(open(spark, chain), 10.seconds)
+    val api = new HttpApi(distributed(spark, chain), 10.seconds)
     val port = api.start()
     try {
       val slow = new java.util.concurrent.FutureTask(() => gizmo(port, Walk))
@@ -205,7 +229,7 @@ class HttpConcurrencySpec extends AnyFunSuite {
   }
 
   test("stop() cancels the jobs of a request still running after its wait") {
-    val api = new HttpApi(open(spark, chain))
+    val api = new HttpApi(distributed(spark, chain))
     val port = api.start()
     val slow = new java.util.concurrent.FutureTask(() => scala.util.Try(gizmo(port, Walk)))
     new Thread(slow).start()
@@ -220,7 +244,7 @@ class HttpConcurrencySpec extends AnyFunSuite {
 
   test("a query past its deadline answers 503, its jobs are cancelled and the next query runs") {
     val deadline = 1.second
-    val api = new HttpApi(open(spark, chain), deadline)
+    val api = new HttpApi(distributed(spark, chain), deadline)
     val port = api.start()
     try {
       val t0 = System.nanoTime()
@@ -242,7 +266,7 @@ class HttpConcurrencySpec extends AnyFunSuite {
         tags.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
           .toSeq.flatMap(_.split(",")).filter(_.startsWith("graft-http-")))
     }
-    val api = new HttpApi(open(spark, (0 until 5).map(i => edge(s"b$i", "rel", "hub"))))
+    val api = new HttpApi(distributed(spark, (0 until 5).map(i => edge(s"b$i", "rel", "hub"))))
     val port = api.start()
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -257,6 +281,79 @@ class HttpConcurrencySpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
       api.stop()
     }
+  }
+
+  test("a served read on a small store starts no Spark job, after writes too") {
+    val api = new HttpApi(open(spark, (0 until 5).map(i => edge(s"b$i", "rel", "hub"))))
+    val port = api.start()
+    val jobs = new ServerJobs(port)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      assert(gizmo(port, Hub)._1 === 200) // builds the index
+      val (reads, n) = jobs.during((0 until 8).map(_ => gizmo(port, Hub)))
+      assert(reads.forall(r => r._1 == 200 && ids(r._2).size == 5), reads)
+      assert(n === 0, "an idle read ran a Spark job")
+      assert(post(port, "/api/v2/write", nq(edge("w0", "rel", "hub")))._1 === 200)
+      assert(post(port, "/api/v2/delete", nq(edge("b0", "rel", "hub")))._1 === 200)
+      val ((st, body), m) = jobs.during(gizmo(port, Hub))
+      assert(st === 200 && ids(body) === (1 until 5).map(i => s"<b$i>").toSet + "<w0>", body)
+      assert(m === 0, "a read after writes ran a Spark job")
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      api.stop()
+    }
+  }
+
+  test("a slow local query past its deadline answers 503 and the next query runs") {
+    // every step of the walk intersects with all 5000 hops: quadratic
+    // work on the driver, no Spark job to cancel
+    val long = (0 until 5000).map(i => edge(s"c$i", "next", s"c${i + 1}"))
+    val deadline = 1.second
+    val api = new HttpApi(open(spark, long), deadline)
+    val port = api.start()
+    val jobs = new ServerJobs(port)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      assert(gizmo(port, """g.V("<c0>").out("<next>").all()""")._1 === 200)
+      val t0 = System.nanoTime()
+      val ((st, body), n) = jobs.during(gizmo(port, """g.V("<c0>").followRecursive(""" +
+        """g.M().out("<next>").and(g.V().out("<next>")), 6000).all()"""))
+      val took = (System.nanoTime() - t0).nanos
+      assert(st === 503, body)
+      assert(body.contains("deadline"), body)
+      assert(n === 0, "the slow query ran on the distributed path")
+      assert(took < deadline + 5.seconds, took)
+      val (st2, next) = gizmo(port, """g.V("<c0>").out("<next>").all()""")
+      assert(st2 === 200 && ids(next) === Set("<c1>"), next)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      api.stop()
+    }
+  }
+
+  test("job-less Gizmo loops past their deadline answer 503 and free the pool") {
+    val deadline = 1.second
+    val api = new HttpApi(open(spark, Seq(edge("b0", "rel", "hub"))), deadline)
+    val port = api.start()
+    try {
+      assert(gizmo(port, Hub)._1 === 200) // builds the index
+      // one looping request per pool thread
+      val n = spark.sparkContext.defaultParallelism
+      val pool = Executors.newFixedThreadPool(n)
+      // every outer iteration does work, so the interpreter's cap of
+      // 1 000 000 iterations per loop is hours away
+      val inner = "for (var i = 0; i < 100; i++) {}"
+      val loops = Seq(s"while (true) { $inner }", s"do { $inner } while (true)",
+        "for (;;) { var k = 0; while (k < 100) { k++ } }",
+        s"for (var x of [1, 2]) { while (true) { $inner } }")
+      val answers = (0 until n).map(k => pool.submit(() => gizmo(port, loops(k % loops.size))))
+        .map(_.get())
+      pool.shutdown()
+      for ((st, body) <- answers) assert(st === 503 && body.contains("deadline"), body)
+      val t0 = System.nanoTime()
+      assert(gizmo(port, Hub)._1 === 200)
+      assert((System.nanoTime() - t0).nanos < 5.seconds)
+    } finally api.stop()
   }
 
   test("a malformed Gizmo query answers 400") {

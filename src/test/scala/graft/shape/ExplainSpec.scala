@@ -270,40 +270,42 @@ class ExplainSpec extends AnyFunSuite {
       exactPlan.toLowerCase.contains("nestedloop"), exactPlan)
   }
 
-  test("triangle family: equi-joins only, one 1-row cross join in " +
-      "triangleCount") {
-    import graft.analytics.GraphAlgos
+  /** The executed plan of every action `run` starts (checkpoints
+    * included), AQE off so each prints once and final.
+    */
+  private def executedPlans(run: => Unit): String = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val spark2 = spark
-    import spark2.implicits._
-    val rnd = new scala.util.Random(13)
-    val edges = (1 to 200).map(_ => (rnd.nextInt(30).toLong,
-      rnd.nextInt(30).toLong)).toDF("s", "d")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
         plans.add(qe.executedPlan.toString)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // every action the operator runs (checkpoints included), AQE off so
-    // each executed plan prints once and final
-    def executedPlans(run: => Unit): String = {
-      val saved = spark.conf.get("spark.sql.adaptive.enabled")
+    val saved = spark.conf.get("spark.sql.adaptive.enabled")
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(l)
+    try {
+      run
       org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-      plans.clear()
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.listenerManager.register(l)
-      try {
-        run
-        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-      } finally {
-        spark.listenerManager.unregister(l)
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-      }
-      String.join("\n", plans)
+    } finally {
+      spark.listenerManager.unregister(l)
+      spark.conf.set("spark.sql.adaptive.enabled", saved)
     }
-    def count(plan: String, re: String) = re.r.findAllIn(plan).length
+    String.join("\n", plans)
+  }
+
+  private def count(plan: String, re: String) = re.r.findAllIn(plan).length
+
+  test("triangle family: equi-joins only, one 1-row cross join in " +
+      "triangleCount") {
+    import graft.analytics.GraphAlgos
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new scala.util.Random(13)
+    val edges = (1 to 200).map(_ => (rnd.nextInt(30).toLong,
+      rnd.nextInt(30).toLong)).toDF("s", "d")
     val nonEqui = "CartesianProduct|NestedLoopJoin"
     val equi = "BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
     val tc = executedPlans(GraphAlgos.triangleCount(edges, "s", "d"))
@@ -313,6 +315,24 @@ class ExplainSpec extends AnyFunSuite {
     val ch = executedPlans(GraphAlgos.clusteringHistogram(edges, "s", "d"))
     assert(count(ch, nonEqui) === 0, s"non-equi join in:\n$ch")
     assert(count(ch, equi) >= 5, ch) // ... + the degree join
+  }
+
+  test("modularity and assortativity scan the edges once") {
+    import graft.analytics.GraphAlgos
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val spark2 = spark
+    import spark2.implicits._
+    val edges = spark.range(0, 200, 1, 2).select(
+      pmod(hash(col("id")), lit(30L)).as("s"),
+      pmod(hash(col("id") * 7), lit(30L)).as("d"))
+    val mem = (0L until 30L).map(n => (n, n % 4)).toDF("n", "c")
+    // one scan of the edges: the canonical edge set's checkpoint
+    def edgeScans(plan: String) = count(plan, "Range \\(0, 200, ")
+    val mod = executedPlans(
+      GraphAlgos.modularity(edges, "s", "d", mem, "n", "c").collect())
+    assert(edgeScans(mod) === 1, mod)
+    val ass = executedPlans(GraphAlgos.assortativity(edges, "s", "d").collect())
+    assert(edgeScans(ass) === 1, ass)
   }
 
   test("whole-stage codegen covers the traversal join pipeline") {
