@@ -7,7 +7,7 @@ import graft.lang.QuerySession.{Collation, Options}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, ExecutorService,
-  Executors, ScheduledExecutorService}
+  Executors, ScheduledThreadPoolExecutor}
 import java.util.concurrent.TimeUnit.MILLISECONDS
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import scala.concurrent.duration._
@@ -71,7 +71,7 @@ final class HttpApi(initial: Graph, deadline: FiniteDuration = HttpApi.QueryDead
   private val writer = new Object
   private var server: HttpServer = _
   private var pool: ExecutorService = _
-  private var canceller: ScheduledExecutorService = _
+  private var canceller: ScheduledThreadPoolExecutor = _
   private val threads = new ConcurrentLinkedQueue[Thread]()
   private val running = ConcurrentHashMap.newKeySet[String]()
   private val reqCounter = new java.util.concurrent.atomic.AtomicLong(0)
@@ -91,8 +91,10 @@ final class HttpApi(initial: Graph, deadline: FiniteDuration = HttpApi.QueryDead
     val n = new AtomicInteger(0)
     pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism,
       r => daemon(s"$prefix-${n.incrementAndGet()}", r))
-    canceller = Executors.newSingleThreadScheduledExecutor(
-      r => daemon(s"$prefix-deadline", r))
+    canceller = new ScheduledThreadPoolExecutor(1, r => daemon(s"$prefix-deadline", r))
+    // a finished request's deadline task leaves the queue at once, instead
+    // of staying queued (and reachable) for the whole deadline
+    canceller.setRemoveOnCancelPolicy(true)
     server.createContext("/api/v2/query", handler(serveQuery))
     server.createContext("/api/v2/write", handler(serveWrite))
     server.createContext("/api/v2/delete", handler(serveDelete))

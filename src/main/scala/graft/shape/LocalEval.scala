@@ -191,6 +191,104 @@ object LocalNode {
   }
 }
 
+/** An insert-only open-addressing map from long ids to non-negative
+  * ints: the index's dictionary and posting lookups without a boxed key
+  * or an entry object per id, so a young collection has a few arrays to
+  * copy instead of one object per node.
+  */
+private final class LongSlots(expected: Int) {
+  private var mask = {
+    var cap = 16
+    while (cap < expected * 2) cap <<= 1
+    cap - 1
+  }
+  private var keys = new Array[Long](mask + 1)
+  private var vals = Array.fill(mask + 1)(-1)
+  private var size = 0
+
+  private def slot(id: Long): Int = {
+    var i = ((id * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+    while (vals(i) >= 0 && keys(i) != id) i = (i + 1) & mask
+    i
+  }
+
+  /** The value of `id`, or -1 when absent. */
+  def get(id: Long): Int = vals(slot(id))
+
+  /** Sets the value of `id` (`v >= 0`). */
+  def put(id: Long, v: Int): Unit = {
+    var i = slot(id)
+    if (vals(i) < 0) {
+      if ((size + 1) * 2 > mask + 1) { grow(); i = slot(id) }
+      size += 1
+    }
+    keys(i) = id; vals(i) = v
+  }
+
+  private def grow(): Unit = {
+    val (ks, vs) = (keys, vals)
+    mask = mask * 2 + 1
+    keys = new Array[Long](mask + 1)
+    vals = Array.fill(mask + 1)(-1)
+    var j = 0
+    while (j < ks.length) {
+      if (vs(j) >= 0) { val i = slot(ks(j)); keys(i) = ks(j); vals(i) = vs(j) }
+      j += 1
+    }
+  }
+}
+
+/** The positions of one quad column grouped by value, in compressed
+  * rows: the k-th distinct value's positions are `at(start(k))` until
+  * `at(start(k + 1))`, found through `slots`. Positions whose value is
+  * absent (`value(q) == null`) are left out.
+  */
+private final class Postings(n: Int, value: Int => JLong) {
+  private val slots = new LongSlots(16)
+  private val (start, at) = {
+    val keyOf = new Array[Int](n)
+    var distinct = 0
+    var q = 0
+    while (q < n) {
+      val v = value(q)
+      keyOf(q) = -1
+      if (v != null) {
+        var k = slots.get(v)
+        if (k < 0) { k = distinct; slots.put(v, k); distinct += 1 }
+        keyOf(q) = k
+      }
+      q += 1
+    }
+    val start = new Array[Int](distinct + 1)
+    q = 0
+    while (q < n) { if (keyOf(q) >= 0) start(keyOf(q) + 1) += 1; q += 1 }
+    var k = 0
+    while (k < distinct) { start(k + 1) += start(k); k += 1 }
+    val fill = java.util.Arrays.copyOf(start, distinct)
+    val at = new Array[Int](start(distinct))
+    q = 0
+    while (q < n) {
+      val k = keyOf(q)
+      if (k >= 0) { at(fill(k)) = q; fill(k) += 1 }
+      q += 1
+    }
+    (start, at)
+  }
+
+  /** The number of positions holding `id`. */
+  def count(id: Long): Int = {
+    val k = slots.get(id)
+    if (k < 0) 0 else start(k + 1) - start(k)
+  }
+
+  /** The positions holding `id`, ascending (empty when none). */
+  def positions(id: Long): Array[Int] = {
+    val k = slots.get(id)
+    if (k < 0) Array.emptyIntArray
+    else java.util.Arrays.copyOfRange(at, start(k), start(k + 1))
+  }
+}
+
 /** Columnar quads with one posting list per id per direction — the
   * memstore's QuadDirectionIndex analog
   * (/root/reference/graph/memstore/quadstore.go:125-137).
@@ -206,37 +304,107 @@ private final class QuadTable(val s: Array[Long], val p: Array[Long],
     case Dir.L => l(q)
   }
 
-  private def postingsOf(dir: Dir): java.util.HashMap[JLong, Array[Int]] = {
-    val m = new java.util.HashMap[JLong, mutable.ArrayBuilder.ofInt]()
-    var q = 0
-    while (q < n) {
-      val v = value(dir, q)
-      if (v != null) {
-        var b = m.get(v)
-        if (b == null) { b = new mutable.ArrayBuilder.ofInt; m.put(v, b) }
-        b += q
-      }
-      q += 1
-    }
-    val out = new java.util.HashMap[JLong, Array[Int]](m.size() * 2)
-    m.forEach((key, b) => out.put(key, b.result()))
-    out
+  /** Whether quad `q` holds `id` in `dir`, without boxing. */
+  def holds(dir: Dir, q: Int, id: Long): Boolean = dir match {
+    case Dir.S => s(q) == id
+    case Dir.P => p(q) == id
+    case Dir.O => o(q) == id
+    case Dir.L => l(q) != null && l(q).longValue == id
   }
 
-  private val byS = postingsOf(Dir.S)
-  private val byP = postingsOf(Dir.P)
-  private val byO = postingsOf(Dir.O)
-  private val byL = postingsOf(Dir.L)
+  private val byS = new Postings(n, q => JLong.valueOf(s(q)))
+  private val byP = new Postings(n, q => JLong.valueOf(p(q)))
+  private val byO = new Postings(n, q => JLong.valueOf(o(q)))
+  private val byL = new Postings(n, l(_))
+
+  private def by(dir: Dir): Postings = dir match {
+    case Dir.S => byS
+    case Dir.P => byP
+    case Dir.O => byO
+    case Dir.L => byL
+  }
 
   /** Positions of the quads holding `id` in `dir` (empty when none). */
-  def postings(dir: Dir, id: Long): Array[Int] = {
-    val a = (dir match {
-      case Dir.S => byS
-      case Dir.P => byP
-      case Dir.O => byO
-      case Dir.L => byL
-    }).get(JLong.valueOf(id))
-    if (a == null) Array.emptyIntArray else a
+  def postings(dir: Dir, id: Long): Array[Int] = by(dir).positions(id)
+
+  /** The number of quads holding `id` in `dir`. */
+  def count(dir: Dir, id: Long): Int = by(dir).count(id)
+
+  /** Quad `q` as a working-set row `(s, p, o, l)`. */
+  def row(q: Int): Array[JLong] =
+    Array[JLong](JLong.valueOf(s(q)), JLong.valueOf(p(q)), JLong.valueOf(o(q)), l(q))
+}
+
+/** Nullable strings stored one after another in one string, added in
+  * position order.
+  */
+private final class PackedStrings(n: Int) {
+  private val chars = new java.lang.StringBuilder
+  private val end = new Array[Int](n)
+  private val absent = new java.util.BitSet(n)
+  private var all: String = _
+  private var added = 0
+
+  def add(v: String): Unit = {
+    if (v == null) absent.set(added) else chars.append(v)
+    end(added) = chars.length
+    added += 1
+    if (added == n) all = chars.toString
+  }
+
+  def apply(i: Int): String =
+    if (absent.get(i)) null else all.substring(if (i == 0) 0 else end(i - 1), end(i))
+}
+
+/** A compact index's dictionary, column by column: ids, kinds, strings
+  * packed per column, numbers in primitive arrays, and the position of
+  * each id. A handful of arrays instead of objects per node keeps a store
+  * of tens of thousands of nodes cheap for the collector; [[get]] builds
+  * an entry on demand.
+  */
+private final class NodeTable(val ids: Array[Long], entry: Int => LocalNode) {
+  private val n = ids.length
+  private val slots = new LongSlots(n)
+  private val kind = new Array[Int](n)
+  private val (str, lang, dt, sk) =
+    (new PackedStrings(n), new PackedStrings(n), new PackedStrings(n), new PackedStrings(n))
+  private val int, time = new Array[Long](n)
+  private val dbl = new Array[Double](n)
+  // per node: bit 0 = i set, 1 = d set, 2 = b set, 3 = b's value, 4 = t set
+  private val flags = new Array[Byte](n)
+
+  // a loop, not a closure, so that `entry` (and the rows it reads) is not
+  // kept as a field
+  {
+    var k = 0
+    while (k < n) {
+      slots.put(ids(k), k)
+      val e = entry(k)
+      kind(k) = e.kind
+      str.add(e.s); lang.add(e.lang); dt.add(e.dt); sk.add(e.sk)
+      var f = 0
+      if (e.i != null) { int(k) = e.i; f |= 1 }
+      if (e.d != null) { dbl(k) = e.d; f |= 2 }
+      if (e.b != null) { f |= 4; if (e.b) f |= 8 }
+      if (e.t != null) { time(k) = e.t; f |= 16 }
+      flags(k) = f.toByte
+      k += 1
+    }
+  }
+
+  /** The entry of `id`, or null. */
+  def get(id: Long): LocalNode = {
+    val k = slots.get(id)
+    if (k < 0) null
+    else {
+      val f = flags(k)
+      LocalNode(kind(k), str(k),
+        if ((f & 1) != 0) JLong.valueOf(int(k)) else null,
+        if ((f & 2) != 0) java.lang.Double.valueOf(dbl(k)) else null,
+        if ((f & 4) != 0) java.lang.Boolean.valueOf((f & 8) != 0) else null,
+        if ((f & 16) != 0) JLong.valueOf(time(k)) else null,
+        lang(k), dt(k), sk(k))
+    }
   }
 }
 
@@ -271,8 +439,7 @@ private object QuadTable {
   */
 final class LocalGraphIndex private (
     base: QuadTable, dead: java.util.BitSet, added: QuadTable,
-    baseNodes: java.util.HashMap[JLong, LocalNode], baseIds: Array[Long],
-    addedNodes: java.util.HashMap[JLong, LocalNode],
+    baseNodes: NodeTable, addedNodes: java.util.HashMap[JLong, LocalNode],
     goneNodes: java.util.Set[JLong]) {
   private val nb = base.n
 
@@ -285,15 +452,15 @@ final class LocalGraphIndex private (
   /** The dictionary entry of `id`, or null. */
   def node(id: JLong): LocalNode = {
     val a = addedNodes.get(id)
-    if (a != null || goneNodes.contains(id)) a else baseNodes.get(id)
+    if (a != null || goneNodes.contains(id)) a else baseNodes.get(id.longValue)
   }
 
   /** Every node id: the base's, then the ones the overlay added. */
   lazy val nodeIds: Array[Long] =
-    if (addedNodes.isEmpty && goneNodes.isEmpty) baseIds
+    if (addedNodes.isEmpty && goneNodes.isEmpty) baseNodes.ids
     else {
       val b = new mutable.ArrayBuilder.ofLong
-      baseIds.foreach(id => if (!goneNodes.contains(JLong.valueOf(id))) b += id)
+      baseNodes.ids.foreach(id => if (!goneNodes.contains(JLong.valueOf(id))) b += id)
       addedNodes.keySet.forEach(id => b += id.longValue)
       b.result()
     }
@@ -316,15 +483,21 @@ final class LocalGraphIndex private (
     if (a.isEmpty) live else live ++ a.map(_ + nb)
   }
 
+  /** The number of quads holding `id` in `dir`. */
+  def count(dir: Dir, id: Long): Int =
+    if (dead.isEmpty && added.n == 0) base.count(dir, id)
+    else postings(dir, id).length
+
   def value(dir: Dir, q: Int): JLong =
     if (q < nb) base.value(dir, q) else added.value(dir, q - nb)
 
+  /** Whether quad `q` holds `id` in `dir`, without boxing. */
+  def holds(dir: Dir, q: Int, id: Long): Boolean =
+    if (q < nb) base.holds(dir, q, id) else added.holds(dir, q - nb, id)
+
   /** Quad `q` as a working-set row `(s, p, o, l)`. */
-  def row(q: Int): Array[JLong] = {
-    val (t, k) = if (q < nb) (base, q) else (added, q - nb)
-    Array[JLong](JLong.valueOf(t.s(k)), JLong.valueOf(t.p(k)),
-      JLong.valueOf(t.o(k)), t.l(k))
-  }
+  def row(q: Int): Array[JLong] =
+    if (q < nb) base.row(q) else added.row(q - nb)
 
   /** This compact index with the writes of `d` over it: work in the size
     * of the delta (deleted keys look up their subject's postings), no
@@ -346,8 +519,7 @@ final class LocalGraphIndex private (
     }
     val gone = new java.util.HashSet[JLong](d.goneNodes.size * 2)
     d.goneNodes.foreach(id => gone.add(JLong.valueOf(id)))
-    new LocalGraphIndex(base, deadAt, QuadTable(d.quads), baseNodes, baseIds,
-      nodes, gone)
+    new LocalGraphIndex(base, deadAt, QuadTable(d.quads), baseNodes, nodes, gone)
   }
 
   /** This index as one compact index (a fold's new base): no Spark job. */
@@ -356,12 +528,10 @@ final class LocalGraphIndex private (
     else {
       val live = allQuads
       val ids = nodeIds
-      val nodes = new java.util.HashMap[JLong, LocalNode](ids.length * 2)
-      ids.foreach { id => val k = JLong.valueOf(id); nodes.put(k, node(k)) }
       LocalGraphIndex(QuadTable.tabulate(live.length) { i =>
         val r = row(live(i))
         (r(0), r(1), r(2), r(3))
-      }, nodes, ids)
+      }, new NodeTable(ids, k => node(JLong.valueOf(ids(k)))))
     }
 }
 
@@ -388,10 +558,9 @@ object LocalGraphIndex {
     if (collect > 0) math.min(heap, collect / CollectBytesPerQuad) else heap
   }
 
-  private def apply(base: QuadTable, nodes: java.util.HashMap[JLong, LocalNode],
-                    ids: Array[Long]): LocalGraphIndex =
+  private def apply(base: QuadTable, nodes: NodeTable): LocalGraphIndex =
     new LocalGraphIndex(base, new java.util.BitSet(0), QuadTable(Nil), nodes,
-      ids, new java.util.HashMap(), java.util.Collections.emptySet())
+      new java.util.HashMap(), java.util.Collections.emptySet())
 
   /** A graph's quad count and its index (None above the cap it was
     * asked under).
@@ -409,7 +578,17 @@ object LocalGraphIndex {
     * made as the compaction of the overlay it folded: neither runs a
     * Spark job. Any other graph is collected once, table by table.
     */
-  def forGraph(g: Graph, maxQuads: Long): Option[LocalGraphIndex] =
+  def forGraph(g: Graph, maxQuads: Long): Option[LocalGraphIndex] = {
+    val (q, hit) = last
+    if (q eq g.quads) hit.filter(_.nQuads <= maxQuads) else lookup(g, maxQuads)
+  }
+
+  // The graph most recently looked up and its index, read without the
+  // lock: a server's reads all ask for its current snapshot. It keeps at
+  // most that one graph's index alive beyond the cache's weak keys.
+  @volatile private var last: (DataFrame, Option[LocalGraphIndex]) = (null, None)
+
+  private def lookup(g: Graph, maxQuads: Long): Option[LocalGraphIndex] =
     cache.synchronized {
       val idx = g.liveDelta match {
         case Some(d) if d.isEmpty => baseOf(d, maxQuads)
@@ -420,6 +599,7 @@ object LocalGraphIndex {
         }
         case None => stored(g, maxQuads)
       }
+      last = (g.quads, idx)
       idx.filter(_.nQuads <= maxQuads)
     }
 
@@ -461,17 +641,13 @@ object LocalGraphIndex {
     import org.apache.spark.sql.functions.col
     val nodeRows = g.nodes.select(LocalNode.Cols.map(col): _*).collect()
     val at = LocalNode.Cols.indices.toArray
-    val nodes = new java.util.HashMap[JLong, LocalNode](nodeRows.length * 2)
-    val ids = nodeRows.map { r =>
-      nodes.put(JLong.valueOf(r.getLong(0)), LocalNode(r, at))
-      r.getLong(0)
-    }
+    val nodes = new NodeTable(nodeRows.map(_.getLong(0)), k => LocalNode(nodeRows(k), at))
     val quadRows = g.quads.select(col("s"), col("p"), col("o"), col("l")).collect()
     LocalGraphIndex(QuadTable.tabulate(quadRows.length) { q =>
       val r = quadRows(q)
       (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) null else JLong.valueOf(r.getLong(3)))
-    }, nodes, ids)
+    }, nodes)
   }
 }
 
@@ -519,9 +695,13 @@ private final class LocalEval(idx: LocalGraphIndex) {
         } else qt
       val dirIdx = base.colIdx(dir.colName)
       val keep = base.tagCols
-      val keepIdx = keep.map(base.colIdx)
+      val keepIdx = keep.map(base.colIdx).toArray
       new LocalTable(ID +: keep, base.rows.map { r =>
-        (r(dirIdx) +: keepIdx.map(r(_))).toArray
+        val out = new Array[JLong](keepIdx.length + 1)
+        out(0) = r(dirIdx)
+        var j = 0
+        while (j < keepIdx.length) { out(j + 1) = r(keepIdx(j)); j += 1 }
+        out
       })
 
     case Shape.Intersect(sub, opt) => // Lower.scala:95-111
@@ -627,13 +807,14 @@ private final class LocalEval(idx: LocalGraphIndex) {
           if (n == null) null else n.sk
         }
       }
-      new LocalTable(t.cols, t.rows.sortWith { (a, b) =>
-        val ka = keyOf(a); val kb = keyOf(b)
+      // each row's key looked up once, then a stable sort on the keys
+      new LocalTable(t.cols, t.rows.map(r => (keyOf(r), r)).sortWith { (a, b) =>
+        val (ka, kb) = (a._1, b._1)
         if (ka == null && kb == null) false
         else if (ka == null) true
         else if (kb == null) false
         else utf8Lt(ka, kb)
-      })
+      }.map(_._2))
 
     case Shape.Materialize(v) => nodes(v) // caching is physical-only here
 
@@ -694,21 +875,19 @@ private final class LocalEval(idx: LocalGraphIndex) {
     final case class SeedC(d: Dir, ids: Array[Long], cost: Long)
     val seeds = mutable.ArrayBuffer.empty[SeedC]
     literal.foreach { case (d, ids) =>
-      seeds += SeedC(d, ids.toArray,
-        ids.map(idx.postings(d, _).length.toLong).sum)
+      seeds += SeedC(d, ids.toArray, ids.map(idx.count(d, _).toLong).sum)
     }
     val MaxSeedFrontier = 4096
     filters.zipWithIndex.foreach { case (f, i) =>
       subTables.get(i).foreach { nt =>
         val ni = nt.colIdx(ID)
-        val set = new java.util.HashSet[JLong]()
+        val set = new java.util.HashSet[JLong](nt.rows.size * 2)
         nt.rows.foreach(r => if (r(ni) != null) set.add(r(ni)))
         if (set.size <= MaxSeedFrontier) {
           val ids = new Array[Long](set.size)
           val it = set.iterator(); var j = 0
           while (it.hasNext) { ids(j) = it.next().longValue(); j += 1 }
-          seeds += SeedC(f.dir, ids,
-            ids.map(idx.postings(f.dir, _).length.toLong).sum)
+          seeds += SeedC(f.dir, ids, ids.map(idx.count(f.dir, _).toLong).sum)
         }
       }
     }
@@ -721,12 +900,14 @@ private final class LocalEval(idx: LocalGraphIndex) {
       }
     // apply every literal constraint (postings per id are disjoint, so the
     // seed list has no duplicates; re-checking the seed dir is a no-op)
-    literal.foreach { case (d, ids) =>
-      val set = ids.toSet
-      cand = cand.filter { q =>
-        val v = idx.value(d, q)
-        v != null && set.contains(v.longValue())
-      }
+    literal.foreach {
+      case (d, Seq(id)) => cand = cand.filter(idx.holds(d, _, id))
+      case (d, ids) =>
+        val set = ids.toSet
+        cand = cand.filter { q =>
+          val v = idx.value(d, q)
+          v != null && set.contains(v.longValue())
+        }
     }
     var t = new LocalTable(quadCols, cand.toIndexedSeq.map { q =>
       tick(); idx.row(q)
@@ -746,24 +927,44 @@ private final class LocalEval(idx: LocalGraphIndex) {
           val nt = subTables(fi)
           val keep = nt.tagCols.filterNot(t.cols.contains)
           val ni = nt.colIdx(ID)
-          val keepIdx = keep.map(nt.colIdx)
-          val byId = new java.util.HashMap[JLong, mutable.ArrayBuffer[Array[JLong]]]()
-          nt.rows.foreach { r =>
-            if (r(ni) != null) {
-              var b = byId.get(r(ni))
-              if (b == null) {
-                b = mutable.ArrayBuffer.empty[Array[JLong]]
-                byId.put(r(ni), b)
+          val outRows =
+            if (keep.isEmpty) {
+              // nothing to carry over: each quad row once per matching
+              // node row (bag multiplicity), the row itself shared
+              val matches = new LongSlots(nt.rows.size)
+              nt.rows.foreach { r =>
+                val v = r(ni)
+                if (v != null) matches.put(v, math.max(matches.get(v), 0) + 1)
               }
-              b += keepIdx.map(r(_)).toArray
+              val out = new mutable.ArrayBuffer[Array[JLong]](t.rows.size)
+              t.rows.foreach { r =>
+                tick()
+                val v = r(dirIdx)
+                var m = if (v == null) 0 else matches.get(v)
+                while (m > 0) { out += r; m -= 1 }
+              }
+              scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray)
+            } else {
+              val keepIdx = keep.map(nt.colIdx)
+              val byId = new java.util.HashMap[JLong, mutable.ArrayBuffer[Array[JLong]]](
+                nt.rows.size * 2)
+              nt.rows.foreach { r =>
+                if (r(ni) != null) {
+                  var b = byId.get(r(ni))
+                  if (b == null) {
+                    b = mutable.ArrayBuffer.empty[Array[JLong]]
+                    byId.put(r(ni), b)
+                  }
+                  b += keepIdx.map(r(_)).toArray
+                }
+              }
+              t.rows.flatMap { r =>
+                tick()
+                val v = r(dirIdx)
+                val ms = if (v == null) null else byId.get(v)
+                if (ms == null) Nil else ms.map(tagVals => r ++ tagVals)
+              }
             }
-          }
-          val outRows = t.rows.flatMap { r =>
-            tick()
-            val v = r(dirIdx)
-            val ms = if (v == null) null else byId.get(v)
-            if (ms == null) Nil else ms.map(tagVals => r ++ tagVals)
-          }
           t = new LocalTable(t.cols ++ keep, outRows)
       }
     }
@@ -780,7 +981,7 @@ private final class LocalEval(idx: LocalGraphIndex) {
     val li = left.colIdx(ID); val ri = r0.colIdx(ID)
     val rtags = r0.tagCols
     if (rtags.isEmpty) {
-      val ids = new java.util.HashSet[JLong]()
+      val ids = new java.util.HashSet[JLong](r0.rows.size * 2)
       r0.rows.foreach(r => if (r(ri) != null) ids.add(r(ri)))
       left.where(r => r(li) != null && ids.contains(r(li)))
     } else {

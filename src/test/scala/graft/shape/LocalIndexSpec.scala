@@ -1,0 +1,52 @@
+package graft.shape
+
+import java.lang.{Long => JLong}
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.util.Random
+
+/** The primitive structures under the driver-local index: the id slot
+  * map, the per-direction posting lists and the column-wise dictionary
+  * agree with a plain map built from the same input.
+  */
+class LocalIndexSpec extends AnyFunSuite {
+
+  test("LongSlots returns every value it was given, last write wins, -1 when absent") {
+    val rnd = new Random(7)
+    val ids = Seq(0L, -1L, Long.MinValue, Long.MaxValue) ++ Seq.fill(20000)(rnd.nextLong())
+    val slots = new LongSlots(4) // grows many times
+    val expected = scala.collection.mutable.Map.empty[Long, Int]
+    ids.zipWithIndex.foreach { case (id, i) => slots.put(id, i); expected(id) = i }
+    ids.take(100).foreach { id => slots.put(id, 5); expected(id) = 5 }
+    expected.foreach { case (id, v) => assert(slots.get(id) === v) }
+    Seq.fill(1000)(rnd.nextLong()).filterNot(expected.contains)
+      .foreach(id => assert(slots.get(id) === -1))
+  }
+
+  test("Postings lists each value's positions in order and skips absent values") {
+    val rnd = new Random(11)
+    val values: IndexedSeq[JLong] = IndexedSeq.fill(5000)(
+      if (rnd.nextInt(5) == 0) null else JLong.valueOf(rnd.nextInt(300).toLong - 150))
+    val postings = new Postings(values.size, values(_))
+    val byValue = values.indices.filter(values(_) != null).groupBy(q => values(q).longValue)
+    byValue.foreach { case (v, qs) =>
+      assert(postings.positions(v).toSeq === qs)
+      assert(postings.count(v) === qs.size)
+    }
+    assert(postings.positions(1000L).isEmpty)
+    assert(postings.count(1000L) === 0)
+  }
+
+  test("NodeTable gives back each entry, nulls included") {
+    val entries = IndexedSeq(
+      LocalNode(1, "a", null, null, null, null, null, null, "a"),
+      LocalNode(2, "", JLong.valueOf(-3L), java.lang.Double.valueOf(-0.0),
+        java.lang.Boolean.FALSE, JLong.valueOf(9L), "en", "xsd:x", null),
+      LocalNode(3, null, null, java.lang.Double.valueOf(2.5),
+        java.lang.Boolean.TRUE, null, null, null, "é中"))
+    val ids = Array(10L, -20L, 30L)
+    val table = new NodeTable(ids, entries(_))
+    ids.indices.foreach(k => assert(table.get(ids(k)) === entries(k)))
+    assert(table.get(11L) === null)
+  }
+}
