@@ -1,8 +1,9 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Graph.cacheOnce
 
 /** Deduplication for large text corpora. Four tiers, cheapest first:
   * exact (hash group-by), SimHash (bitwise near-dup), MinHash+LSH
@@ -138,7 +139,7 @@ object Dedup {
                    shingleN: Int = 3): DataFrame = {
     // one shingle scan feeds both the signature aggregate and the
     // verification sets — materialize it once
-    val rows = wordShingleRows(df, idCol, textCol, shingleN).cache()
+    val rows = cacheOnce(wordShingleRows(df, idCol, textCol, shingleN))
     // NOT cached: the self-join consumes `mh` twice, but re-running the
     // signature aggregate from the cached shingle rows measures faster
     // than materializing + re-reading a cache of the posexploded table
@@ -288,14 +289,12 @@ object Dedup {
     res
   }
 
-  /** Duplicate clusters from near-dup pairs: connected components of the
-    * pair graph by iterative min-label propagation (each round, every node
-    * adopts the smallest label among itself and its neighbors; converges
-    * in O(component diameter) rounds — near-dup components are shallow).
-    * Returns (id, cluster) for EVERY document, singletons labeling
-    * themselves — the canonical-pick stage of a dedup pipeline keeps
-    * `min(id) == id` rows. Each round is one join + one aggregate;
-    * labels checkpoint per round to cut lineage.
+  /** Duplicate clusters from near-dup pairs: the connected components of
+    * the pair graph ([[connectedComponents]]: one driver union-find while
+    * the pairs fit the session's driver gate, random-mate contraction
+    * above it). Returns (id, cluster) for EVERY document, singletons
+    * labeling themselves — the canonical-pick stage of a dedup pipeline
+    * keeps `min(id) == id` rows.
     */
   def clusters(df: DataFrame, idCol: String, textCol: String,
                threshold: Double = 0.5): DataFrame = {
@@ -328,64 +327,44 @@ object Dedup {
         .otherwise(lit("train")).as("split"))
   }
 
-  /** Edge-count gate for the driver-local union-find fast path: 5 M pairs
-    * ≈ 80 MB of longs — trivially driver-sized, and far above any
-    * realistic near-dup edge count for corpora this engine benches. Above
-    * the gate, components run distributed (min-label propagation with
-    * label shortcutting).
+  /** Driver heap one pair costs in the driver tier of connected
+    * components at its high point (the collected rows beside the
+    * union-find), and the serialized task results it adds to the
+    * collect. Measured by collecting 2 M pairs over 4 M random ids (two
+    * new ids per pair, the worst case) into the union-find, `local[4]`
+    * on a 4-core machine: 103 B of rows and 72 B of union-find per pair
+    * in heap after GC, 19.7 B of task results per pair.
     */
-  val DriverCcMaxEdges: Long = 5_000_000L
+  val HeapBytesPerPair: Long = 175L
+  val CollectBytesPerPair: Long = 20L
 
-  /** Row gate for the driver-side mate-forest resolve in the distributed
-    * CC tier: the forest holds at most one row per ever-tailed node (stage
-    * domains are disjoint), so it is NODE-sized, not edge-sized — 24 M
-    * rows ≈ a ~1.1 GB primitive open-addressing map, driver-safe at the
-    * 16 g build heap. Under the gate, pointer doubling + the distributed
-    * min-relabel (3 full-forest shuffle rounds + 2 aggregates at 47 M
-    * edges) collapse to one collect + a path-compressed resolve.
-    * Negative disables (specs keep the doubling path covered with -1).
+  /** The same for one mate-forest row in the driver forest resolve,
+    * where each level's mate rows are collected and dropped in turn, so
+    * the high point is the union-find beside the label arrays and their
+    * broadcast: 161 B per row on the same measurement (at most two ids
+    * per row, like a pair). A mate map broadcast to the relabel joins
+    * costs less per row (67 B of hashed relation, its collected rows and
+    * one serialized copy), so its broadcast reads the same gate.
     */
-  val DriverCcMaxForest: Long = 24_000_000L
+  val HeapBytesPerForestRow: Long = 161L
+  val CollectBytesPerForestRow: Long = 20L
 
-  /** Open-addressing Long→Long map (linear probing, power-of-two table):
-    * the driver forest resolve handles ~20 M entries, where
-    * java.util.HashMap's boxed Long entries cost ~40 s of allocation+GC
-    * (measured) vs ~2 s here. Keys may be any Long (a presence bitmap,
-    * not a sentinel). Capacity is fixed at construction — the forest
-    * size is known before the map is built.
+  /** Edge gate for the driver tier of connected components
+    * ([[componentLabels]]): pair sets up to it are collected once into
+    * the driver union-find; above it random-mate contraction shrinks the
+    * edge list level by level until the residual fits. From the session
+    * ([[graft.DriverMemory]]).
     */
-  private[analytics] final class LongLongMap(expected: Int) {
-    // the table holds ≥ 2 × expected slots in an Int-indexed array: past
-    // 2^29 entries `expected * 2` rounds up beyond 2^30 and overflows
-    require(expected <= (1 << 29),
-      s"LongLongMap: $expected entries exceed the 2^29 table limit")
-    private val cap = {
-      var c = 16
-      while (c < expected * 2) c <<= 1
-      c
-    }
-    private val mask = cap - 1
-    private val ks = new Array[Long](cap)
-    private val vs = new Array[Long](cap)
-    private val present = new Array[Boolean](cap)
-    private def slot(k: Long): Int = {
-      // finalizer mix (xxhash-style) so consecutive ids spread
-      var h = k * -7046029254386353131L
-      h ^= (h >>> 32)
-      var i = (h & mask).toInt
-      while (present(i) && ks(i) != k) i = (i + 1) & mask
-      i
-    }
-    def put(k: Long, v: Long): Unit = {
-      val i = slot(k)
-      ks(i) = k; vs(i) = v; present(i) = true
-    }
-    /** v if k present, else k (the union-find "parent or self" read). */
-    def getOrSelf(k: Long): Long = {
-      val i = slot(k); if (present(i)) vs(i) else k
-    }
-    def contains(k: Long): Boolean = present(slot(k))
-  }
+  def driverCcMaxEdges(spark: SparkSession = SparkSession.active): Long =
+    graft.DriverMemory.rows(spark, HeapBytesPerPair, CollectBytesPerPair)
+
+  /** Row gate for the driver forest resolve and for broadcasting a
+    * level's mate map: the forest holds at most one row per ever-tailed
+    * node (a node is tailed at most once), so it is node-sized, not
+    * edge-sized. From the session ([[graft.DriverMemory]]).
+    */
+  def driverCcMaxForest(spark: SparkSession = SparkSession.active): Long =
+    graft.DriverMemory.rows(spark, HeapBytesPerForestRow, CollectBytesPerForestRow)
 
   /** Block-manager hygiene for iterative operators: eagerly checkpoint
     * `result` so it is self-contained, then unpersist every `held`
@@ -446,53 +425,41 @@ object Dedup {
     } catch { case _: Throwable => () }
   }
 
-  /** Connected components of an undirected pair graph `(id_a, id_b)`.
-    * Propagation runs only over nodes that HAVE an edge — in a near-dup
-    * graph that's a small minority; the singleton majority never changes
-    * label and joins back at the end as `cluster = own id`. Returns
+  /** Connected components of an undirected pair graph `(id_a, id_b)`:
     * `(id, cluster)` for every id in `ids`, cluster = min id in the
-    * component.
-    *
-    * Two tiers (same answer, guarded by DedupPropertySpec):
-    *  - pair set ≤ [[DriverCcMaxEdges]]: ONE collect + driver union-find
-    *    (min-root, path-compressed). A Spark round costs ~100 ms of
-    *    scheduling; a million-edge union-find costs less than one round.
-    *  - above the gate: distributed random-mate contraction (see
-    *    [[componentLabels]]).
+    * component; ids with no pair label themselves. Tiers as in
+    * [[componentLabels]].
     */
   def connectedComponents(pairs: DataFrame, ids: DataFrame,
-                          maxDriverEdges: Long = DriverCcMaxEdges,
-                          maxDriverForest: Long = DriverCcMaxForest)
-      : DataFrame = {
-    val spark = pairs.sparkSession
-    val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint().cappedStats
-    val nPairs = pr.count()
-    val (labels, local, held) =
-      ccLabelsImpl(pr, nPairs, maxDriverEdges, maxDriverForest)
-    // the driver tier's label table is a local relation — force the
-    // broadcast so the id-universe join never shuffles the ids side
-    val out = ids.join(if (local) broadcast(labels) else labels,
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    if (local) { releaseBlocks(pr); out } else releasing(out, held)
-  }
+                          maxDriverEdges: Long = driverCcMaxEdges(),
+                          maxDriverForest: Long = driverCcMaxForest())
+      : DataFrame =
+    withLabels(pairs, maxDriverEdges, maxDriverForest) { labels =>
+      ids.join(labels, Seq("id"), "left")
+        .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
+    }
 
   /** Component labels for every node that APPEARS in `pairs` (either
     * endpoint, self-loops included) — the natural contract for graph
     * callers, without materializing a separate id universe (the
     * union+distinct over 2|E| endpoint rows plus the re-join cost more
-    * than the whole labeling tail at 47 M edges). Same tiers and the
-    * same min-id labeling as [[connectedComponents]].
+    * than the whole labeling tail at 47 M edges). Cluster = min id in the
+    * component.
+    *
+    * Pair sets up to `maxDriverEdges` ([[driverCcMaxEdges]]) take ONE
+    * collect into a driver union-find: a Spark round costs ~100 ms of
+    * scheduling, a million-edge union-find less than one round. Above
+    * it, random-mate contraction shrinks the edge list until the
+    * residual fits that gate; the residual and the per-level mate maps
+    * then resolve in the same union-find when the forest fits
+    * `maxDriverForest` ([[driverCcMaxForest]]), and by distributed
+    * pointer doubling otherwise. A negative gate forces the tier above
+    * it.
     */
   def componentLabels(pairs: DataFrame,
-                      maxDriverEdges: Long = DriverCcMaxEdges,
-                      maxDriverForest: Long = DriverCcMaxForest): DataFrame = {
-    val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint().cappedStats
-    val nPairs = pr.count()
-    val (labels, local, held) =
-      ccLabelsImpl(pr, nPairs, maxDriverEdges, maxDriverForest)
-    if (local) { releaseBlocks(pr); labels } else releasing(labels, held)
-  }
+                      maxDriverEdges: Long = driverCcMaxEdges(),
+                      maxDriverForest: Long = driverCcMaxForest()): DataFrame =
+    withLabels(pairs, maxDriverEdges, maxDriverForest)(identity)
 
   /** Incremental component maintenance: fold NEW pairs into an existing
     * min-id labeling without touching the old edge set. Exact by the
@@ -506,7 +473,7 @@ object Dedup {
     * — value-identical to recomputing over the union of both edge sets.
     */
   def componentLabelsAppend(oldLabels: DataFrame, pairs: DataFrame,
-                            maxDriverEdges: Long = DriverCcMaxEdges)
+                            maxDriverEdges: Long = driverCcMaxEdges())
       : DataFrame = {
     val lbl = oldLabels.select(col("id"), col("cluster"))
     val contracted = pairs.select(col("id_a"), col("id_b"))
@@ -517,7 +484,6 @@ object Dedup {
       .select(coalesce(col("ca"), col("id_a")).as("id_a"),
         coalesce(col("cb"), col("id_b")).as("id_b"))
     val merged = componentLabels(contracted, maxDriverEdges)
-      .localCheckpoint(true).cappedStats
     val remap = merged.select(col("id").as("cluster"),
       col("cluster").as("nc"))
     val out = lbl.join(remap, Seq("cluster"), "left")
@@ -526,344 +492,271 @@ object Dedup {
     releasing(out, Seq(merged))
   }
 
-  /** Shared engine for [[connectedComponents]] / [[componentLabels]]:
-    * labels `(id, cluster)` covering every endpoint of `pr`, cluster =
-    * min id in the component. Returns (labels, isDriverTier, heldFrames);
-    * when isDriverTier the labels are a local relation and heldFrames is
-    * empty (the caller releases `pr` itself); otherwise the caller must
-    * wrap its final result in [[releasing]] over heldFrames.
+  /** Min-root union-find over long ids in a primitive map: union puts
+    * the larger root under the smaller, so every root is its component's
+    * minimum id, and find compresses the path it walks. Every id passed
+    * to [[union]] is kept, a self-loop's too.
     */
-  private def ccLabelsImpl(pr: DataFrame, nPairs: Long, maxDriverEdges: Long,
-                           maxDriverForest: Long = DriverCcMaxForest)
-      : (DataFrame, Boolean, Seq[DataFrame]) = {
-    val spark = pr.sparkSession
-    import spark.implicits._
-    if (nPairs <= maxDriverEdges) {
-      // driver union-find; roots are component minima by construction
-      // (union parents the larger root under the smaller)
-      val parent = new java.util.HashMap[Long, Long]()
-      val seen = new java.util.HashSet[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x
-        while (parent.getOrDefault(c, c) != r) {
-          val nx = parent.get(c); parent.put(c, r); c = nx
-        }
-        r
-      }
-      pr.collect().foreach { row =>
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-          val a = row.getLong(0); val b = row.getLong(1)
-          seen.add(a); seen.add(b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) {
-            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-          }
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      val labels = seen.asScala.toSeq.map(id => (id, find(id)))
-      (labels.toDF("id", "cluster"), true, Nil)
-    } else {
-      // RANDOM-MATE CONTRACTION (the classic PRAM random-mating CC,
-      // the same family as the MapReduce algorithms of Kiveris et al.
-      // 2014): each level flips a deterministic per-(node, level) coin;
-      // every TAIL node with at least one HEAD neighbor merges into its
-      // minimum head neighbor. Heads never merge in the same level, so
-      // each mate map is a depth-1 star and contracting the edge list
-      // through it is exact. A constant expected fraction of live nodes
-      // merges per level, so the edge list SHRINKS GEOMETRICALLY and
-      // total work is O(|E|) edge-rows across all levels — unlike label
-      // propagation, whose every round re-offers labels through the
-      // FULL edge list (measured at 47 M edges: the delta min-label
-      // loop ran 6 rounds with ~17 M changed labels each, 203 s; the
-      // "delta" never shrinks on a hub graph because nearly every label
-      // keeps improving until the global minimum arrives). Once the
-      // residual edge list fits the driver gate, one collect +
-      // union-find finishes the component structure; the per-level mate
-      // maps form a forest resolved by pointer doubling, and a final
-      // min-aggregate relabels each component by its minimum member id
-      // (the exact contract the dedup oracles verify).
-      // per-level edge/mate/forest checkpoints stay deserialized (no
-      // per-scan decode)
-      val ckLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val held = scala.collection.mutable.ArrayBuffer[DataFrame](pr)
-      // no up-front distinct: level 0's contraction ends in one anyway
-      // (mate selection is a min — duplicates can't change it), so the
-      // initial full-width dedup shuffle would be paid twice. Level 0
-      // reads this as three narrow scans of the already-checkpointed
-      // pair list; eCount starts as the (possibly duplicate-inflated)
-      // pair count, which only ever delays the driver gate by a level.
-      var e = pr.where(col("id_a") =!= col("id_b"))
-        .select(least(col("id_a"), col("id_b")).as("a"),
-          greatest(col("id_a"), col("id_b")).as("b"))
-      var eCount = nPairs
-      val mates = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      var mateRowsSum = 0L
-      // mate-side broadcast gate for the relabel joins: the mate map is
-      // node-sized (≤ half the live nodes) while e is edge-sized, so
-      // TH/HT/TT joining e against a broadcast mate leaves the whole
-      // edge list unshuffled and unsorted — the only per-level exchange
-      // left is the contraction distinct. ~16 M rows ≈ 700 MB of hash
-      // relation, fine for the 16 g local JVM and a reasonable executor;
-      // above it (true cluster scale) the sort-merge path returns.
-      val mateBcMax = 16_000_000L
-      // the pair checkpoint is only read by level 0 and the final
-      // self-loop scan — materialize the (near-empty) self-loop id set
-      // as soon as level 0 completes and release the pair blocks, so
-      // later levels don't run under |E| rows of dead block pressure
-      var selfIds: Option[DataFrame] = None
-      var level = 0
-      while (eCount > 0 && (maxDriverEdges < 0 || eCount > maxDriverEdges)) {
-        // an unlucky level (every live edge monochromatic) merges
-        // nothing and simply re-flips — 64 consecutive failures has
-        // probability ~2^-64 on any graph with an edge; reaching the
-        // cap means the coin stream is broken, not the graph
-        if (level >= 64) throw new IllegalStateException(
-          s"connectedComponents: no contraction fixed point after $level levels")
-        def isHead(c: Column): Column =
-          xxhash64(c, lit(level)).bitwiseAND(lit(1L)) === lit(1L)
-        val sym = e.select(col("a").as("id"), col("b").as("nb"))
-          .unionByName(e.select(col("b").as("id"), col("a").as("nb")))
-        val mate = sym.where(!isHead(col("id")) && isHead(col("nb")))
-          .groupBy("id").agg(min("nb").as("par"))
-          .localCheckpoint(true, ckLevel).cappedStats
-        held += mate
-        mates += mate
-        val mateCount = mate.count()
-        mateRowsSum += mateCount
-        // only TAIL endpoints can appear in the mate map, and the coin
-        // is row-local — splitting the relabel by coin pattern keeps
-        // head endpoints out of the joins entirely, halving the shuffled
-        // edge volume (expected: 1/4 of edges skip both joins, 1/2 join
-        // once, 1/4 join twice — one |e| of join traffic, not two)
-        val bcMate = mateCount <= mateBcMax
-        def hinted(m: DataFrame): DataFrame = if (bcMate) broadcast(m) else m
-        val mA = hinted(mate.select(col("id").as("a"), col("par").as("pa")))
-        val mB = hinted(mate.select(col("id").as("b"), col("par").as("pb")))
-        val hh = e.where(isHead(col("a")) && isHead(col("b")))
-          .select(col("a").as("x"), col("b").as("y"))
-        val th = e.where(!isHead(col("a")) && isHead(col("b")))
-          .join(mA, Seq("a"), "left")
-          .select(coalesce(col("pa"), col("a")).as("x"),
-            col("b").as("y"))
-        val ht = e.where(isHead(col("a")) && !isHead(col("b")))
-          .join(mB, Seq("b"), "left")
-          .select(col("a").as("x"),
-            coalesce(col("pb"), col("b")).as("y"))
-        val tt = e.where(!isHead(col("a")) && !isHead(col("b")))
-          .join(mA, Seq("a"), "left").join(mB, Seq("b"), "left")
-          .select(coalesce(col("pa"), col("a")).as("x"),
-            coalesce(col("pb"), col("b")).as("y"))
-        val e2 = hh.unionByName(th).unionByName(ht).unionByName(tt)
-          .where(col("x") =!= col("y"))
-          .select(least(col("x"), col("y")).as("a"),
-            greatest(col("x"), col("y")).as("b"))
-          .distinct()
-          .localCheckpoint(true, ckLevel).cappedStats
-        held += e2
-        // superseded level checkpoint: release in-loop (e2 is already
-        // materialized — holding every level's edges to end-of-call is
-        // the keyed-frontier OOM trap)
-        releaseBlocks(e)
-        e = e2
-        val eNext = e.count()
-        if (level == 0) {
-          selfIds = Some(pr.where(col("id_a") === col("id_b"))
-            .select(col("id_a").as("id")).distinct()
-            .localCheckpoint().cappedStats)
-          held += selfIds.get
-          releaseBlocks(pr)
-        }
-        eCount = eNext
-        level += 1
-      }
-      // residual graph under the gate: same single-collect union-find
-      // as the driver tier (min-root so the map is already resolved).
-      // The raw (id, par) rows are kept driver-side too — the forest
-      // resolve below may fold them into a driver map without a round
-      // trip through a DataFrame.
-      val residualRows: Seq[(Long, Long)] = if (eCount == 0) Nil else {
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          var c = x
-          while (parent.getOrDefault(c, c) != r) {
-            val nx = parent.get(c); parent.put(c, r); c = nx
-          }
-          r
-        }
-        e.collect().foreach { row =>
-          val ra = find(row.getLong(0)); val rb = find(row.getLong(1))
-          if (ra != rb) {
-            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        parent.keySet().asScala.toSeq
-          .map(id => (id, find(id))).filter { case (id, r) => id != r }
-      }
-      val residual: Option[DataFrame] =
-        if (residualRows.isEmpty) None else Some(residualRows.toDF("id", "par"))
-      val stages = mates.size + residual.size
-      // forest size = Σ mate rows + residual rows: NODE-sized (each node
-      // is tailed at most once, ever), so it sits far below the edge
-      // count — the per-level mate counts accumulate in-loop (cheap
-      // cached-checkpoint scans that also gate the mate broadcast)
-      val forestRows =
-        if (maxDriverForest < 0 || stages == 0) Long.MaxValue
-        else mateRowsSum + residualRows.size
-      val labels = if (stages == 0) {
-        // every pair was a self-loop: each endpoint is its own cluster
-        pr.select(col("id_a").as("id"))
-          .unionByName(pr.select(col("id_b").as("id")))
-          .where(col("id").isNotNull)
-          .distinct().select(col("id"), col("id").as("cluster"))
-      } else if (forestRows <= maxDriverForest) {
-        // DRIVER FOREST RESOLVE: the mate forest is node-sized while the
-        // graph is edge-sized — at 47 M edges the forest is ~21 M rows,
-        // and the distributed tail it replaces (3 pointer-doubling
-        // self-join rounds + the roots distinct + the min-relabel
-        // aggregate+join, each a full-forest shuffle) measured ~41 s at
-        // x100. One collect + a path-compressed resolve over a
-        // primitive open-addressing map does the same work in a few
-        // seconds (a boxed java.util.HashMap at this size measured
-        // 43.5 s — allocation+GC, not algorithm) and emits the SAME
-        // (id, cluster) row set: ids = forest ids ∪ roots, cluster =
-        // min member id (min over forest ids mapped to each root, and
-        // the root itself — exactly the rows of f ⋈ minm below).
-        val n = forestRows.toInt
-        val parent = new LongLongMap(n)
-        val ids = new Array[Long](n)
-        var idx = 0
-        def insert(k: Long, v: Long): Unit = {
-          if (!parent.contains(k)) { ids(idx) = k; idx += 1 }
-          parent.put(k, v)
-        }
-        mates.foreach { m =>
-          // collect(), not toLocalIterator(): the iterator fetches
-          // partitions ONE JOB AT A TIME (measured ~30 s of the resolve
-          // at 21 M rows); collect decodes all partitions in parallel
-          // and the transient Row array is bounded by the largest mate
-          val rows = m.collect()
-          var k = 0
-          while (k < rows.length) {
-            insert(rows(k).getLong(0), rows(k).getLong(1)); k += 1
-          }
-        }
-        residualRows.foreach { case (i, p) => insert(i, p) }
-        mates.foreach(releaseBlocks)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrSelf(r) != r) r = parent.getOrSelf(r)
-          var c = x
-          while (c != r) { val nx = parent.getOrSelf(c); parent.put(c, r); c = nx }
-          r
-        }
-        val minOf = new LongLongMap(idx)
-        val rootsB = new scala.collection.mutable.ArrayBuilder.ofLong
-        var i = 0
-        while (i < idx) {
-          val r = find(ids(i))
-          if (!minOf.contains(r)) { rootsB += r; minOf.put(r, r) }
-          if (ids(i) < minOf.getOrSelf(r)) minOf.put(r, ids(i))
-          i += 1
-        }
-        val roots = rootsB.result()
-        val outIds = new Array[Long](idx + roots.length)
-        val outCl = new Array[Long](idx + roots.length)
-        i = 0
-        while (i < idx) {
-          outIds(i) = ids(i); outCl(i) = minOf.getOrSelf(find(ids(i)))
-          i += 1
-        }
-        var j = 0
-        while (j < roots.length) {
-          outIds(idx + j) = roots(j); outCl(idx + j) = minOf.getOrSelf(roots(j))
-          j += 1
-        }
-        // lazy, broadcast-backed emission: one in-JVM copy of the two
-        // primitive arrays; tuples materialize inside tasks, never as a
-        // 20 M-element boxed driver array (closure capture would ship
-        // the arrays once per task — broadcast stores them once)
-        val bcIds = spark.sparkContext.broadcast(outIds)
-        val bcCl = spark.sparkContext.broadcast(outCl)
-        val total = idx + roots.length
-        val parts = spark.sessionState.conf.numShufflePartitions
-        spark.sparkContext.parallelize(0 until parts, parts)
-          .flatMap { p =>
-            val lo = (p.toLong * total / parts).toInt
-            val hi = ((p + 1).toLong * total / parts).toInt
-            (lo until hi).iterator.map(k => (bcIds.value(k), bcCl.value(k)))
-          }
-          .toDF("id", "cluster")
-      } else {
-        // resolve the cross-stage forest: depth ≤ stages (stage maps
-        // have disjoint domains — a node is tailed at most once, ever —
-        // and within a stage depth is 1), one doubling join at least
-        // halves the remaining depth, so ceil(log2 stages) rounds
-        // always suffice; a round that made no hops proves the previous
-        // one was already resolved and exits early. (A static-forest
-        // pointer WALK — join a shrinking pending set against the fixed
-        // forest — was measured SLOWER at 47 M edges, 36 vs 23 s: hub
-        // graphs chain stages routinely, a head absorbed at level t is
-        // tailed at t+1, so the walk's pending set stays large for
-        // ~stages rounds while doubling needs only log of that.)
-        var fp = (mates ++ residual).reduce(_ unionByName _)
-          .localCheckpoint(true, ckLevel).cappedStats
-        held += fp
-        mates.foreach(releaseBlocks)
-        var dRounds = 0
-        var hopped = true
-        while (hopped && (1L << dRounds) < stages) {
-          val next = fp.as("x")
-            .join(fp.select(col("id").as("pid"), col("par").as("ppar")),
-              col("x.par") === col("pid"), "left")
-            .select(col("x.id").as("id"),
-              coalesce(col("ppar"), col("x.par")).as("par"),
-              col("ppar").isNotNull.as("__hop"))
-            .localCheckpoint(true, ckLevel).cappedStats
-          held += next
-          releaseBlocks(fp)
-          dRounds += 1
-          // the emptiness probe only matters if it could stop an
-          // upcoming round — on the final statically-bounded round it
-          // would be a pure full-scan tax
-          hopped = if ((1L << dRounds) < stages)
-            next.where(col("__hop")).head(1).nonEmpty
-          else true
-          fp = next.select("id", "par")
-        }
-        val resolved = fp
-        // relabel roots to component minima: the root of a mate forest
-        // is an arbitrary survivor, not the min id. Every member of a
-        // ≥2-node component appears in the forest — as a tailed id, a
-        // residual-UF id, or a par value (a never-mated node's edges
-        // follow its neighbors' mates and can only die in the residual
-        // UF or by becoming someone's par) — so the min aggregate sees
-        // the true component minimum; edge-less and self-loop-only ids
-        // are appended below / fall through to the caller's coalesce.
-        val roots = resolved
-          .select(col("par").as("id"), col("par").as("root")).distinct()
-        val f = resolved.select(col("id"), col("par").as("root"))
-          .unionByName(roots)
-          .localCheckpoint(true, ckLevel).cappedStats
-        held += f
-        val minm = f.groupBy("root").agg(min("id").as("cluster"))
-        f.join(minm, Seq("root")).select(col("id"), col("cluster"))
-      }
-      // nodes whose every edge is a self-loop never enter the mate
-      // forest (the isolated-node trap) — append them as their own
-      // cluster so the endpoint contract holds without an id universe
-      val selfOnly = selfIds.getOrElse(
-          pr.where(col("id_a") === col("id_b"))
-            .select(col("id_a").as("id")).distinct())
-        .join(labels, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("cluster"))
-      (labels.unionByName(selfOnly), false, held.toSeq)
+  private final class MinUnionFind {
+    private val parent = new graft.LongLongMap()
+
+    def size: Int = parent.size
+
+    def find(x: Long): Long = {
+      var r = x
+      var p = parent.getOrElse(r, r)
+      while (p != r) { r = p; p = parent.getOrElse(r, r) }
+      var c = x
+      while (c != r) { val nx = parent.getOrElse(c, c); parent.put(c, r); c = nx }
+      r
     }
+
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      val r = math.min(ra, rb)
+      parent.put(ra, r)
+      parent.put(rb, r)
+    }
+
+    /** Every id, and beside it its component's minimum id. */
+    def labels: (Array[Long], Array[Long]) = {
+      val ids = parent.keys
+      val mins = new Array[Long](ids.length)
+      var i = 0
+      while (i < ids.length) { mins(i) = find(ids(i)); i += 1 }
+      (ids, mins)
+    }
+  }
+
+  /** The engine of [[connectedComponents]] and [[componentLabels]]:
+    * labels `(id, cluster)` for every endpoint of `pairs` go to `finish`,
+    * whose result is checkpointed before every intermediate (checkpoints
+    * and the label broadcasts) is released.
+    */
+  private def withLabels(pairs: DataFrame, maxDriverEdges: Long,
+                         maxDriverForest: Long)
+                        (finish: DataFrame => DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint().cappedStats
+    val nPairs = pr.count()
+    val held = scala.collection.mutable.ArrayBuffer[DataFrame](pr)
+    val broadcasts =
+      scala.collection.mutable.ArrayBuffer[org.apache.spark.broadcast.Broadcast[_]]()
+    // (id, v) rows from two driver arrays: one broadcast holds them once
+    // (closure capture would ship them once per task), and rows are
+    // built inside tasks, never as a boxed driver array. The driver
+    // knows the row count Catalyst cannot estimate for an RDD-backed
+    // frame, so it hints the broadcast of a small table (24 B per
+    // two-long UnsafeRow) to the caller's join.
+    def fromDriver(ids: Array[Long], vs: Array[Long]): DataFrame = {
+      val bc = spark.sparkContext.broadcast((ids, vs))
+      broadcasts += bc
+      val total = ids.length
+      val parts = spark.sessionState.conf.numShufflePartitions
+      val df = spark.sparkContext.parallelize(0 until parts, parts)
+        .flatMap { p =>
+          val (is, xs) = bc.value
+          val lo = (p.toLong * total / parts).toInt
+          val hi = ((p + 1).toLong * total / parts).toInt
+          (lo until hi).iterator.map(k => (is(k), xs(k)))
+        }
+        .toDF("id", "cluster")
+      if (24L * total <= spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(df)
+      else df
+    }
+    // RANDOM-MATE CONTRACTION (the classic PRAM random-mating CC, the
+    // same family as the MapReduce algorithms of Kiveris et al. 2014):
+    // each level flips a deterministic per-(node, level) coin; every TAIL
+    // node with at least one HEAD neighbor merges into its minimum head
+    // neighbor. Heads never merge in the same level, so each mate map is
+    // a depth-1 star and contracting the edge list through it is exact.
+    // A constant expected fraction of live nodes merges per level, so the
+    // edge list SHRINKS GEOMETRICALLY and total work is O(|E|) edge-rows
+    // across all levels — unlike label propagation, whose every round
+    // re-offers labels through the FULL edge list (measured at 47 M
+    // edges: the delta min-label loop ran 6 rounds with ~17 M changed
+    // labels each, 203 s). Per-level edge/mate checkpoints stay
+    // deserialized (no per-scan decode).
+    val ckLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // no up-front distinct: level 0's contraction ends in one anyway
+    // (mate selection is a min — duplicates can't change it), so the
+    // initial full-width dedup shuffle would be paid twice. Level 0
+    // reads this as three narrow scans of the already-checkpointed
+    // pair list; eCount starts as the (possibly duplicate-inflated)
+    // pair count, which only ever delays the driver gate by a level.
+    var e = pr.where(col("id_a") =!= col("id_b"))
+      .select(least(col("id_a"), col("id_b")).as("a"),
+        greatest(col("id_a"), col("id_b")).as("b"))
+    var eCount = nPairs
+    val mates = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    var mateRowsSum = 0L
+    // mate-side broadcast gate for the relabel joins: the mate map is
+    // node-sized (≤ half the live nodes) while e is edge-sized, so
+    // TH/HT/TT joining e against a broadcast mate leaves the whole edge
+    // list unshuffled and unsorted — the only per-level exchange left is
+    // the contraction distinct; above it the sort-merge path returns
+    val mateBcMax = driverCcMaxForest(spark)
+    // once a level runs, the pair checkpoint is read by level 0 only —
+    // materialize the (near-empty) self-loop id set as soon as level 0
+    // completes and release the pair blocks, so later levels don't run
+    // under |E| rows of dead block pressure
+    var selfIds: Option[DataFrame] = None
+    var level = 0
+    while (eCount > 0 && (maxDriverEdges < 0 || eCount > maxDriverEdges)) {
+      // an unlucky level (every live edge monochromatic) merges nothing
+      // and simply re-flips — 64 consecutive failures has probability
+      // ~2^-64 on any graph with an edge; reaching the cap means the coin
+      // stream is broken, not the graph
+      if (level >= 64) throw new IllegalStateException(
+        s"connectedComponents: no contraction fixed point after $level levels")
+      def isHead(c: Column): Column =
+        xxhash64(c, lit(level)).bitwiseAND(lit(1L)) === lit(1L)
+      val sym = e.select(col("a").as("id"), col("b").as("nb"))
+        .unionByName(e.select(col("b").as("id"), col("a").as("nb")))
+      val mate = sym.where(!isHead(col("id")) && isHead(col("nb")))
+        .groupBy("id").agg(min("nb").as("par"))
+        .localCheckpoint(true, ckLevel).cappedStats
+      held += mate
+      mates += mate
+      val mateCount = mate.count()
+      mateRowsSum += mateCount
+      // only TAIL endpoints can appear in the mate map, and the coin is
+      // row-local — splitting the relabel by coin pattern keeps head
+      // endpoints out of the joins entirely, halving the shuffled edge
+      // volume (expected: 1/4 of edges skip both joins, 1/2 join once,
+      // 1/4 join twice — one |e| of join traffic, not two)
+      val bcMate = mateCount <= mateBcMax
+      def hinted(m: DataFrame): DataFrame = if (bcMate) broadcast(m) else m
+      val mA = hinted(mate.select(col("id").as("a"), col("par").as("pa")))
+      val mB = hinted(mate.select(col("id").as("b"), col("par").as("pb")))
+      val hh = e.where(isHead(col("a")) && isHead(col("b")))
+        .select(col("a").as("x"), col("b").as("y"))
+      val th = e.where(!isHead(col("a")) && isHead(col("b")))
+        .join(mA, Seq("a"), "left")
+        .select(coalesce(col("pa"), col("a")).as("x"),
+          col("b").as("y"))
+      val ht = e.where(isHead(col("a")) && !isHead(col("b")))
+        .join(mB, Seq("b"), "left")
+        .select(col("a").as("x"),
+          coalesce(col("pb"), col("b")).as("y"))
+      val tt = e.where(!isHead(col("a")) && !isHead(col("b")))
+        .join(mA, Seq("a"), "left").join(mB, Seq("b"), "left")
+        .select(coalesce(col("pa"), col("a")).as("x"),
+          coalesce(col("pb"), col("b")).as("y"))
+      val e2 = hh.unionByName(th).unionByName(ht).unionByName(tt)
+        .where(col("x") =!= col("y"))
+        .select(least(col("x"), col("y")).as("a"),
+          greatest(col("x"), col("y")).as("b"))
+        .distinct()
+        .localCheckpoint(true, ckLevel).cappedStats
+      held += e2
+      // superseded level checkpoint: release in-loop (e2 is already
+      // materialized — holding every level's edges to end-of-call is the
+      // keyed-frontier OOM trap)
+      releaseBlocks(e)
+      e = e2
+      val eNext = e.count()
+      if (level == 0) {
+        selfIds = Some(pr.where(col("id_a") === col("id_b"))
+          .select(col("id_a").as("id")).distinct()
+          .localCheckpoint().cappedStats)
+        held += selfIds.get
+        releaseBlocks(pr)
+      }
+      eCount = eNext
+      level += 1
+    }
+    // the residual graph fits the driver gate: one collect into the
+    // union-find — the pair rows themselves when no level ran (their
+    // self-loops label their own ids there)
+    val uf = new MinUnionFind
+    (if (mates.isEmpty) pr else e).collect().foreach { row =>
+      if (!row.isNullAt(0) && !row.isNullAt(1)) uf.union(row.getLong(0), row.getLong(1))
+    }
+    val labels = if (mates.isEmpty ||
+        (maxDriverForest >= 0 && mateRowsSum + uf.size <= maxDriverForest)) {
+      // DRIVER FOREST RESOLVE: the mate forest is node-sized while the
+      // graph is edge-sized — at 47 M edges the forest is ~21 M rows, and
+      // the distributed tail it replaces (pointer-doubling self-join
+      // rounds + a min-relabel aggregate and join, each a full-forest
+      // shuffle) measured ~41 s at x100. Every member of a ≥2-node
+      // component is a tailed id, a par or a residual endpoint, so the
+      // union-find's ids are the endpoint set and its roots the minima.
+      mates.foreach { m =>
+        // collect(), not toLocalIterator(): the iterator fetches
+        // partitions ONE JOB AT A TIME (measured ~30 s of the resolve at
+        // 21 M rows); collect decodes all partitions in parallel and the
+        // transient Row array is bounded by the largest mate
+        m.collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+        releaseBlocks(m)
+      }
+      val (ids, mins) = uf.labels
+      fromDriver(ids, mins)
+    } else {
+      // resolve the cross-stage forest (mate maps + the residual's
+      // non-root ids under their roots): depth ≤ stages (stage maps have
+      // disjoint domains — a node is tailed at most once, ever — and
+      // within a stage depth is 1), one doubling join at least halves
+      // the remaining depth, so ceil(log2 stages) rounds always suffice;
+      // a round that made no hops proves the previous one was already
+      // resolved and exits early. (A static-forest pointer WALK was
+      // measured SLOWER at 47 M edges, 36 vs 23 s: hub graphs chain
+      // stages routinely, so the walk's pending set stays large for
+      // ~stages rounds while doubling needs only log of that.)
+      val (ids, mins) = uf.labels
+      val tailed = ids.indices.filter(k => ids(k) != mins(k)).toArray
+      val residual =
+        if (tailed.isEmpty) None
+        else Some(fromDriver(tailed.map(ids), tailed.map(mins))
+          .select(col("id"), col("cluster").as("par")))
+      val stages = mates.size + residual.size
+      var fp = (mates ++ residual).reduce(_ unionByName _)
+        .localCheckpoint(true, ckLevel).cappedStats
+      held += fp
+      mates.foreach(releaseBlocks)
+      var dRounds = 0
+      var hopped = true
+      while (hopped && (1L << dRounds) < stages) {
+        val next = fp.as("x")
+          .join(fp.select(col("id").as("pid"), col("par").as("ppar")),
+            col("x.par") === col("pid"), "left")
+          .select(col("x.id").as("id"),
+            coalesce(col("ppar"), col("x.par")).as("par"),
+            col("ppar").isNotNull.as("__hop"))
+          .localCheckpoint(true, ckLevel).cappedStats
+        held += next
+        releaseBlocks(fp)
+        dRounds += 1
+        // the emptiness probe only matters if it could stop an upcoming
+        // round — on the final statically-bounded round it would be a
+        // pure full-scan tax
+        hopped = if ((1L << dRounds) < stages)
+          next.where(col("__hop")).head(1).nonEmpty
+        else true
+        fp = next.select("id", "par")
+      }
+      // relabel roots to component minima: the root of a mate forest is
+      // an arbitrary survivor, not the min id. Every member of a ≥2-node
+      // component appears in the forest (as a tailed id, a residual id
+      // or a par value), so the min aggregate sees the true minimum.
+      val roots = fp.select(col("par").as("id"), col("par").as("root")).distinct()
+      val f = fp.select(col("id"), col("par").as("root"))
+        .unionByName(roots)
+        .localCheckpoint(true, ckLevel).cappedStats
+      held += f
+      val minm = f.groupBy("root").agg(min("id").as("cluster"))
+      f.join(minm, Seq("root")).select(col("id"), col("cluster"))
+    }
+    // once a level ran, nodes whose every edge is a self-loop never
+    // entered the mate forest (the isolated-node trap) — append them as
+    // their own cluster so the endpoint contract holds
+    val all = selfIds.fold(labels)(s => labels.unionByName(
+      s.join(labels, Seq("id"), "left_anti").select(col("id"), col("id").as("cluster"))))
+    val out = releasing(finish(all), held.toSeq)
+    broadcasts.foreach(_.destroy())
+    out
   }
 
   /** Cross-corpus near-dup (incremental-ingest dedup): for each document in
@@ -878,8 +771,8 @@ object Dedup {
   def crossPairs(corpus: DataFrame, batch: DataFrame, idCol: String,
                  textCol: String, threshold: Double = 0.5, k: Int = 64,
                  shingleN: Int = 3): DataFrame = {
-    val cRows = wordShingleRows(corpus, idCol, textCol, shingleN).cache()
-    val bRows = wordShingleRows(batch, idCol, textCol, shingleN).cache()
+    val cRows = cacheOnce(wordShingleRows(corpus, idCol, textCol, shingleN))
+    val bRows = cacheOnce(wordShingleRows(batch, idCol, textCol, shingleN))
     def posting(rows: DataFrame) = signaturesFromRows(rows, k)
       .select(col("id"), posexplode(col("sig")).as(Seq("pos", "mh")))
     // no l.id < r.id: the sides are distinct corpora, every (batch, corpus)
@@ -934,7 +827,6 @@ object Dedup {
     // touched old clusters; batch singletons fall through the left join
     // below, untouched clusters through the remap's left join
     val merged = componentLabels(cross.unionByName(within))
-      .localCheckpoint(true).cappedStats
     val remap = merged.select(col("id").as("cluster"),
       col("cluster").as("nc"))
     val out = lbl.join(remap, Seq("cluster"), "left")
@@ -963,7 +855,7 @@ object Dedup {
                         shingleN: Int = 3): Unit = {
     val spark = df.sparkSession
     val numParts = spark.sessionState.conf.numShufflePartitions
-    val rows = wordShingleRows(df, idCol, textCol, shingleN).cache()
+    val rows = cacheOnce(wordShingleRows(df, idCol, textCol, shingleN))
     signaturesFromRows(rows, k)
       .select(col("id"), posexplode(col("sig")).as(Seq("pos", "mh")))
       .repartition(numParts, col("pos"))
@@ -1005,7 +897,7 @@ object Dedup {
     val (k, shingleN) = minhashStoreMeta(dir)
     val spark = df.sparkSession
     val numParts = spark.sessionState.conf.numShufflePartitions
-    val rows = wordShingleRows(df, idCol, textCol, shingleN).cache()
+    val rows = cacheOnce(wordShingleRows(df, idCol, textCol, shingleN))
     signaturesFromRows(rows, k)
       .select(col("id"), posexplode(col("sig")).as(Seq("pos", "mh")))
       .repartition(numParts, col("pos"))
@@ -1042,7 +934,7 @@ object Dedup {
                         maxLiteralProbes: Int = 256): DataFrame = {
     import spark.implicits._
     val (k, shingleN) = minhashStoreMeta(dir)
-    val pRows = wordShingleRows(probes, idCol, textCol, shingleN).cache()
+    val pRows = cacheOnce(wordShingleRows(probes, idCol, textCol, shingleN))
     val pSets = shingleSets(pRows)
     val postings = spark.read.parquet(s"$dir/postings")
     val sets = spark.read.parquet(s"$dir/sets")
@@ -1391,9 +1283,8 @@ object Dedup {
     // cache: both sides of the band-bucket self-join — uncached, the
     // hash computation (token explode + bit sums, or an image decode)
     // would run twice
-    val banded = hashed.select(col("id"), col("h"),
-      posexplode(bandKeys).as(Seq("bandIdx", "bandKey")))
-      .cache()
+    val banded = cacheOnce(hashed.select(col("id"), col("h"),
+      posexplode(bandKeys).as(Seq("bandIdx", "bandKey"))))
     banded.alias("l").join(banded.alias("r"),
         col("l.bandIdx") === col("r.bandIdx") &&
           col("l.bandKey") === col("r.bandKey") && col("l.id") < col("r.id"))

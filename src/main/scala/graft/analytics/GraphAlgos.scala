@@ -377,13 +377,13 @@ object GraphAlgos {
   }
 
   /** Weakly connected components over an edge list: delegates to the
-    * two-tier CC engine built for duplicate clustering (Dedup.scala —
-    * one bounded collect + driver union-find under the 5 M-edge gate,
-    * where a single Spark round costs more than a million-edge
-    * union-find; distributed random-mate contraction above it, with
-    * geometrically shrinking per-level edge lists). Returns
-    * (node, component) with the component labeled by its minimum
-    * node id.
+    * CC engine built for duplicate clustering ([[Dedup.componentLabels]]
+    * — one collect into a driver union-find while the edges fit the
+    * session's driver gate, where a single Spark round costs more than
+    * a million-edge union-find; random-mate contraction above it, with
+    * geometrically shrinking per-level edge lists, until the residual
+    * fits the same union-find). Returns (node, component) with the
+    * component labeled by its minimum node id.
     */
   def connectedComponents(edges: DataFrame, srcCol: String,
                           dstCol: String): DataFrame = {
@@ -440,9 +440,9 @@ object GraphAlgos {
     * graph pays BFS cost in ROUNDS — each distributed round is ~4 tiny
     * jobs of fixed scheduler overhead, so a 27-level chain over 100 k
     * edges costs seconds of pure coordination. Under `maxDriverEdges`
-    * (5 M edges ≈ well under 100 MB of keys) ONE collect + an in-memory
-    * queue BFS beats any number of Spark rounds; above it, frontier
-    * expansion runs distributed.
+    * (the session's driver gate, [[Dedup.driverCcMaxEdges]]) ONE
+    * collect + an in-memory queue BFS beats any number of Spark rounds;
+    * above it, frontier expansion runs distributed.
     *
     * Distributed tier: each round joins only the CURRENT frontier
     * against the edge table (hash-partitioned on the source endpoint; at
@@ -459,7 +459,7 @@ object GraphAlgos {
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    sources: DataFrame, maxDepth: Int = 64,
                    checkpointEvery: Int = 4,
-                   maxDriverEdges: Long = Dedup.DriverCcMaxEdges)
+                   maxDriverEdges: Long = Dedup.driverCcMaxEdges())
       : DataFrame = {
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
@@ -569,7 +569,7 @@ object GraphAlgos {
   def bfsDistanceHistogram(edges: DataFrame, srcCol: String, dstCol: String,
                            sources: DataFrame,
                            maxDepth: Int = 64,
-                           maxDriverEdges: Long = Dedup.DriverCcMaxEdges)
+                           maxDriverEdges: Long = Dedup.driverCcMaxEdges())
       : DataFrame =
     bfsDistances(edges, srcCol, dstCol, sources, maxDepth,
         maxDriverEdges = maxDriverEdges)
@@ -598,7 +598,7 @@ object GraphAlgos {
                     weightCol: String, sources: DataFrame,
                     maxIterations: Int = 128,
                     checkpointEvery: Int = 4,
-                    maxDriverEdges: Long = Dedup.DriverCcMaxEdges)
+                    maxDriverEdges: Long = Dedup.driverCcMaxEdges())
       : DataFrame = {
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
         col(weightCol).cast("long").as("w"))
@@ -1541,8 +1541,8 @@ object GraphAlgos {
     */
   def louvain(edges: DataFrame, srcCol: String, dstCol: String,
               maxRounds: Int = 20, maxLevels: Int = 10,
-              maxDriverEdges: Long = Dedup.DriverCcMaxEdges,
-              driverFoldEdges: Long = Dedup.DriverCcMaxEdges,
+              maxDriverEdges: Long = Dedup.driverCcMaxEdges(),
+              driverFoldEdges: Long = Dedup.driverCcMaxEdges(),
               timeBoxSec: Double = 0.0): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -2204,7 +2204,7 @@ object GraphAlgos {
     louvain(edges, "src", "dst",
       maxDriverEdges = if (forceDistributed) -1L else Long.MaxValue,
       driverFoldEdges = if (forceDistributed) -1L else
-        Dedup.DriverCcMaxEdges)
+        Dedup.driverCcMaxEdges())
   }
 
   /** Strongly connected components of a DIRECTED edge list. Returns
@@ -2242,7 +2242,7 @@ object GraphAlgos {
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
                                   dstCol: String,
                                   maxDriverEdges: Long =
-                                    Dedup.DriverCcMaxEdges): DataFrame = {
+                                    Dedup.driverCcMaxEdges()): DataFrame = {
     val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
     // gate the up-front dedup on a cheap map-side sketch: multi-edge
@@ -2693,7 +2693,7 @@ object GraphAlgos {
     */
   def betweenness(edges: DataFrame, srcCol: String, dstCol: String,
                   sources: DataFrame, maxDepth: Int = 32,
-                  maxDriverEdges: Long = Dedup.DriverCcMaxEdges)
+                  maxDriverEdges: Long = Dedup.driverCcMaxEdges())
       : DataFrame = {
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
@@ -2795,7 +2795,7 @@ object GraphAlgos {
   def betweennessApprox(edges: DataFrame, srcCol: String, dstCol: String,
                         nSources: Int, seed: Long = 42L,
                         maxDepth: Int = 32,
-                        maxDriverEdges: Long = Dedup.DriverCcMaxEdges)
+                        maxDriverEdges: Long = Dedup.driverCcMaxEdges())
       : DataFrame = {
     require(nSources >= 1, s"betweennessApprox needs nSources >= 1")
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
@@ -3022,7 +3022,7 @@ object GraphAlgos {
     */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                          sources: DataFrame, maxDepth: Int = 40,
-                         maxDriverEdges: Long = Dedup.DriverCcMaxEdges)
+                         maxDriverEdges: Long = Dedup.driverCcMaxEdges())
       : DataFrame = {
     val lcm = lcmUpTo(maxDepth)
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
@@ -3519,9 +3519,10 @@ object GraphAlgos {
     // priority map per node — this harness is for gated graphs ONLY
     // (the operator itself has no such bound)
     val nEdges = und.count()
-    require(nEdges <= Dedup.DriverCcMaxEdges,
+    val gate = Dedup.driverCcMaxEdges(spark)
+    require(nEdges <= gate,
       s"misContract replays sequentially on the driver — $nEdges edges " +
-        s"exceeds the ${Dedup.DriverCcMaxEdges} gate; call " +
+        s"exceeds the $gate gate; call " +
         "maximalIndependentSet directly at this scale")
     val mis = maximalIndependentSet(edges, srcCol, dstCol)
       .cache()

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Graph.cacheOnce
 
 /** Similarity search over an embedding column (`array<float>`).
   * Baseline: brute-force cosine top-k (one scan, map-side only until the
@@ -492,7 +493,7 @@ object Similarity {
                                 minMeanRecall: Double, dir: String,
                                 nCells: Int = 16, nprobe: Int = 4,
                                 rerank: Int = 4): DataFrame = {
-    val emb = emb0.cache()
+    val emb = cacheOnce(emb0)
     ivfWriteQuantized(emb, dir, idCol, vecCol, nCells)
     val spark = emb.sparkSession
     val ann = ivfStoreTopKQuantized(spark, dir, probes, idCol, vecCol, k,
@@ -680,7 +681,7 @@ object Similarity {
                          minMeanRecall: Double, dir: String,
                          nCells: Int = 16, m: Int = 8, nprobe: Int = 4,
                          rerank: Int = 8): DataFrame = {
-    val emb = emb0.cache()
+    val emb = cacheOnce(emb0)
     ivfWritePq(emb, dir, idCol, vecCol, nCells, m)
     val spark = emb.sparkSession
     val ann = ivfStoreTopKPq(spark, dir, probes, idCol, vecCol, k,
@@ -708,7 +709,7 @@ object Similarity {
                        nCells: Int = 16, nprobe: Int = 4): DataFrame = {
     // the harness scans the corpus ~6× (centroid fit iterations, cell
     // assignment, exact batch top-k) — cache it once
-    val emb = emb0.cache()
+    val emb = cacheOnce(emb0)
     val ann = ivfBatchTopK(emb, probes, idCol, vecCol, k, nCells, nprobe)
       .select("query_id", "id")
     val exact = batchTopK(emb, probes, idCol, vecCol, k)
@@ -968,7 +969,7 @@ object Similarity {
   def pcaContract(emb0: DataFrame, idCol: String, vecCol: String,
                   dim: Int, minRatio: Double = 0.95): DataFrame = {
     val spark = emb0.sparkSession
-    val emb = emb0.cache()
+    val emb = cacheOnce(emb0)
     val comps = principalComponents(emb, idCol, vecCol, dim,
       nComponents = 2, iters = 30)
     val orthoOk = {
@@ -1024,7 +1025,7 @@ object Similarity {
                       vecCol: String, dim: Int, k: Int,
                       minMeanRecall: Double, outDim: Int = 16,
                       cand: Int = 40): DataFrame = {
-    val emb = emb0.cache()
+    val emb = cacheOnce(emb0)
     val ann = rpBatchTopK(emb, probes, idCol, vecCol, dim, k, outDim, cand)
       .select("query_id", "id")
     val exact = batchTopK(emb, probes, idCol, vecCol, k)

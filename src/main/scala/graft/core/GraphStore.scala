@@ -33,8 +33,8 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
                        private[graft] val delta: Option[Graph.Delta] = None) {
   def spark: SparkSession = nodes.sparkSession
 
-  def cached(): Graph = copy(nodes = nodes.cache(), quads = quads.cache(),
-    quadsOps = quadsOps.map(_.cache()))
+  def cached(): Graph = copy(nodes = Graph.cacheOnce(nodes),
+    quads = Graph.cacheOnce(quads), quadsOps = quadsOps.map(Graph.cacheOnce))
 
   /** Serve queries on this graph from the driver-local index
     * (graft.shape.LocalEval) — the reference memstore's role — when the
@@ -318,6 +318,12 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
 
 object Graph {
   import NQuads.ParsedQuad
+
+  /** `df` cached, unless an equal plan already is: Spark would keep the
+    * one entry and only log a warning.
+    */
+  private[graft] def cacheOnce(df: DataFrame): DataFrame =
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.cache() else df
 
   /** Spark-encodable quad of flat value rows; `lbl` null when unlabeled. */
   final case class QuadRow(sub: QV, pred: QV, obj: QV, lbl: QV)

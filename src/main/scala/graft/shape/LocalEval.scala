@@ -191,60 +191,13 @@ object LocalNode {
   }
 }
 
-/** An insert-only open-addressing map from long ids to non-negative
-  * ints: the index's dictionary and posting lookups without a boxed key
-  * or an entry object per id, so a young collection has a few arrays to
-  * copy instead of one object per node.
-  */
-private final class LongSlots(expected: Int) {
-  private var mask = {
-    var cap = 16
-    while (cap < expected * 2) cap <<= 1
-    cap - 1
-  }
-  private var keys = new Array[Long](mask + 1)
-  private var vals = Array.fill(mask + 1)(-1)
-  private var size = 0
-
-  private def slot(id: Long): Int = {
-    var i = ((id * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
-    while (vals(i) >= 0 && keys(i) != id) i = (i + 1) & mask
-    i
-  }
-
-  /** The value of `id`, or -1 when absent. */
-  def get(id: Long): Int = vals(slot(id))
-
-  /** Sets the value of `id` (`v >= 0`). */
-  def put(id: Long, v: Int): Unit = {
-    var i = slot(id)
-    if (vals(i) < 0) {
-      if ((size + 1) * 2 > mask + 1) { grow(); i = slot(id) }
-      size += 1
-    }
-    keys(i) = id; vals(i) = v
-  }
-
-  private def grow(): Unit = {
-    val (ks, vs) = (keys, vals)
-    mask = mask * 2 + 1
-    keys = new Array[Long](mask + 1)
-    vals = Array.fill(mask + 1)(-1)
-    var j = 0
-    while (j < ks.length) {
-      if (vs(j) >= 0) { val i = slot(ks(j)); keys(i) = ks(j); vals(i) = vs(j) }
-      j += 1
-    }
-  }
-}
-
 /** The positions of one quad column grouped by value, in compressed
   * rows: the k-th distinct value's positions are `at(start(k))` until
   * `at(start(k + 1))`, found through `slots`. Positions whose value is
   * absent (`value(q) == null`) are left out.
   */
 private final class Postings(n: Int, value: Int => JLong) {
-  private val slots = new LongSlots(16)
+  private val slots = new graft.LongLongMap()
   private val (start, at) = {
     val keyOf = new Array[Int](n)
     var distinct = 0
@@ -253,7 +206,7 @@ private final class Postings(n: Int, value: Int => JLong) {
       val v = value(q)
       keyOf(q) = -1
       if (v != null) {
-        var k = slots.get(v)
+        var k = slots.getOrElse(v, -1).toInt
         if (k < 0) { k = distinct; slots.put(v, k); distinct += 1 }
         keyOf(q) = k
       }
@@ -277,13 +230,13 @@ private final class Postings(n: Int, value: Int => JLong) {
 
   /** The number of positions holding `id`. */
   def count(id: Long): Int = {
-    val k = slots.get(id)
+    val k = slots.getOrElse(id, -1).toInt
     if (k < 0) 0 else start(k + 1) - start(k)
   }
 
   /** The positions holding `id`, ascending (empty when none). */
   def positions(id: Long): Array[Int] = {
-    val k = slots.get(id)
+    val k = slots.getOrElse(id, -1).toInt
     if (k < 0) Array.emptyIntArray
     else java.util.Arrays.copyOfRange(at, start(k), start(k + 1))
   }
@@ -364,7 +317,7 @@ private final class PackedStrings(n: Int) {
   */
 private final class NodeTable(val ids: Array[Long], entry: Int => LocalNode) {
   private val n = ids.length
-  private val slots = new LongSlots(n)
+  private val slots = new graft.LongLongMap(n)
   private val kind = new Array[Int](n)
   private val (str, lang, dt, sk) =
     (new PackedStrings(n), new PackedStrings(n), new PackedStrings(n), new PackedStrings(n))
@@ -394,7 +347,7 @@ private final class NodeTable(val ids: Array[Long], entry: Int => LocalNode) {
 
   /** The entry of `id`, or null. */
   def get(id: Long): LocalNode = {
-    val k = slots.get(id)
+    val k = slots.getOrElse(id, -1).toInt
     if (k < 0) null
     else {
       val f = flags(k)
@@ -545,18 +498,11 @@ object LocalGraphIndex {
   val HeapBytesPerQuad: Long = 375L
   val CollectBytesPerQuad: Long = 45L
 
-  /** The largest store the session indexes on the driver: the index may
-    * take a quarter of the driver heap (it sits beside Spark's own cache
-    * and the queries' working sets), and its collects must stay under
-    * `spark.driver.maxResultSize` (Spark's default, 1 GiB, when the
-    * session leaves it unset; 0 = unlimited).
+  /** The largest store the session indexes on the driver
+    * (`graft.DriverMemory`).
     */
-  def maxQuads(spark: SparkSession): Long = {
-    val heap = Runtime.getRuntime.maxMemory / 4 / HeapBytesPerQuad
-    val collect = spark.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (collect > 0) math.min(heap, collect / CollectBytesPerQuad) else heap
-  }
+  def maxQuads(spark: SparkSession): Long =
+    graft.DriverMemory.rows(spark, HeapBytesPerQuad, CollectBytesPerQuad)
 
   private def apply(base: QuadTable, nodes: NodeTable): LocalGraphIndex =
     new LocalGraphIndex(base, new java.util.BitSet(0), QuadTable(Nil), nodes,
@@ -931,16 +877,16 @@ private final class LocalEval(idx: LocalGraphIndex) {
             if (keep.isEmpty) {
               // nothing to carry over: each quad row once per matching
               // node row (bag multiplicity), the row itself shared
-              val matches = new LongSlots(nt.rows.size)
+              val matches = new graft.LongLongMap(nt.rows.size)
               nt.rows.foreach { r =>
                 val v = r(ni)
-                if (v != null) matches.put(v, math.max(matches.get(v), 0) + 1)
+                if (v != null) matches.put(v, matches.getOrElse(v, 0) + 1)
               }
               val out = new mutable.ArrayBuffer[Array[JLong]](t.rows.size)
               t.rows.foreach { r =>
                 tick()
                 val v = r(dirIdx)
-                var m = if (v == null) 0 else matches.get(v)
+                var m = if (v == null) 0L else matches.getOrElse(v, 0)
                 while (m > 0) { out += r; m -= 1 }
               }
               scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray)

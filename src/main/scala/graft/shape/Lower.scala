@@ -74,7 +74,6 @@ object Lower {
 
 final class Lower(g: Graph) {
   import Lower._
-  import scala.jdk.CollectionConverters._
   private val spark = g.spark
   import spark.implicits._
 
@@ -87,17 +86,7 @@ final class Lower(g: Graph) {
     case Shape.Fixed(vs) =>
       vs.map(QValue.id).toDS().toDF(ID)
     case Shape.Embed(df) => df
-    case Shape.EmbedLocal(t) =>
-      // a locally-evaluated working set handed to the distributed path
-      // (only reachable when a Recursive step bails out mid-evaluation)
-      val schema = StructType(t.cols.map(c => StructField(c, LongType,
-        nullable = true)))
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          t.rows.map(r =>
-            org.apache.spark.sql.Row.fromSeq(r.toIndexedSeq)).asJava),
-        schema)
-
+    case _: Shape.EmbedLocal => throw new IllegalStateException("EmbedLocal is LocalEval-only")
     case Shape.NodesFrom(dir, q) =>
       val qdf = quads(q)
       val base = if (dir == Dir.L) qdf.where(col("l").isNotNull) else qdf
@@ -190,7 +179,7 @@ final class Lower(g: Graph) {
         lit(null).cast(StringType).as("lang"),
         lit(null).cast(StringType).as("dt"))
 
-    case Shape.Materialize(v) => nodes(v).cache()
+    case Shape.Materialize(v) => Graph.cacheOnce(nodes(v))
 
     case Shape.Recursive(from, step, maxDepth, depthTags) =>
       recursive(from, step, maxDepth, depthTags)

@@ -185,6 +185,13 @@ class DedupPropertySpec extends AnyFunSuite {
       assert(distDoubling === dist, s"trial $trial: doubling vs driver-resolve")
       val drv = Dedup.componentLabels(pairs)
         .as[(Long, Long)].collect().toMap
+      // some contraction levels, then a residual of at most 8 edges in the
+      // driver union-find, resolved on the driver and by doubling
+      val residual = Dedup.componentLabels(pairs, maxDriverEdges = 8)
+        .as[(Long, Long)].collect().toMap
+      val residualDoubling = Dedup.componentLabels(pairs,
+          maxDriverEdges = 8, maxDriverForest = -1)
+        .as[(Long, Long)].collect().toMap
       // brute force over endpoints
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -200,7 +207,30 @@ class DedupPropertySpec extends AnyFunSuite {
       val expect = endpoints.map(id => id -> find(id)).toMap
       withClue(s"trial=$trial distributed: ")(assert(dist === expect))
       withClue(s"trial=$trial driver: ")(assert(drv === expect))
+      withClue(s"trial=$trial residual: ")(assert(residual === expect))
+      withClue(s"trial=$trial residual doubling: ")(assert(residualDoubling === expect))
     }
+  }
+
+  test("componentLabels destroys its label broadcasts") {
+    // the driver arrays behind the labels are broadcast; once the labels
+    // are checkpointed nothing reads them, so repeated calls (a batch
+    // job's every cycle) must not pile them up on the driver
+    val pairs = ((0L until 40L).map(i => (i, i + 1)) :+ ((100L, 101L)))
+      .toDF("id_a", "id_b")
+    def held(): Int = org.apache.spark.TestBroadcasts.held {
+      case (_: Array[Long], _: Array[Long]) | (_: Array[Long]) => true
+      case _ => false
+    }
+    val before = held()
+    (1 to 3).foreach { _ =>
+      assert(Dedup.componentLabels(pairs).count() === 43)
+      assert(Dedup.componentLabels(pairs, maxDriverEdges = -1).count() === 43)
+    }
+    // destroy() removes the blocks asynchronously
+    val deadline = System.nanoTime() + 10000000000L
+    while (held() > before && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(held() === before)
   }
 
   test("law: componentLabelsAppend equals a full recompute on random splits") {
@@ -281,11 +311,5 @@ class DedupPropertySpec extends AnyFunSuite {
       } yield (ia, ib, d.toLong)).toSet
       assert(got === expect, s"k=$k")
     }
-  }
-
-  test("LongLongMap refuses more than 2^29 entries before sizing its table") {
-    // past 2^30, `expected * 2` overflowed and the map silently got 16 slots
-    for (n <- Seq((1 << 29) + 1, (1 << 30) + 1, Int.MaxValue))
-      intercept[IllegalArgumentException](new Dedup.LongLongMap(n))
   }
 }

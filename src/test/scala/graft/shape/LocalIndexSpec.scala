@@ -5,23 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-/** The primitive structures under the driver-local index: the id slot
-  * map, the per-direction posting lists and the column-wise dictionary
-  * agree with a plain map built from the same input.
+/** The primitive structures under the driver-local index: the
+  * per-direction posting lists and the column-wise dictionary agree with
+  * a plain map built from the same input (the id map under both is
+  * `graft.LongLongMapSpec`'s).
   */
 class LocalIndexSpec extends AnyFunSuite {
-
-  test("LongSlots returns every value it was given, last write wins, -1 when absent") {
-    val rnd = new Random(7)
-    val ids = Seq(0L, -1L, Long.MinValue, Long.MaxValue) ++ Seq.fill(20000)(rnd.nextLong())
-    val slots = new LongSlots(4) // grows many times
-    val expected = scala.collection.mutable.Map.empty[Long, Int]
-    ids.zipWithIndex.foreach { case (id, i) => slots.put(id, i); expected(id) = i }
-    ids.take(100).foreach { id => slots.put(id, 5); expected(id) = 5 }
-    expected.foreach { case (id, v) => assert(slots.get(id) === v) }
-    Seq.fill(1000)(rnd.nextLong()).filterNot(expected.contains)
-      .foreach(id => assert(slots.get(id) === -1))
-  }
 
   test("Postings lists each value's positions in order and skips absent values") {
     val rnd = new Random(11)
