@@ -1826,7 +1826,7 @@ object SparkEntry {
           val jpgOk = Multimodal.decodeImagePixels(jpg).exists {
             case (ww, hh, q) =>
               ww == w && hh == h && {
-                var err = 0L; var cd = Array(0L, 0L, 0L); var i = 0
+                var err = 0L; val cd = Array(0L, 0L, 0L); var i = 0
                 while (i < q.length) {
                   val dlt = (q(i) & 0xFF) - (px(i) & 0xFF)
                   err += math.abs(dlt); cd(i % 3) += dlt; i += 1

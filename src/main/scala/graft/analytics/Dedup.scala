@@ -117,15 +117,6 @@ object Dedup {
       .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** Long form `(id, pos, mh)` — the LSH posting list (b = k bands of one
-    * row each). Derived by exploding the signature per doc: k rows per doc,
-    * cheap relative to the shingle aggregation above.
-    */
-  def minhashTable(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = 64, shingleN: Int = 3): DataFrame =
-    minhashSignatures(df, idCol, textCol, k, shingleN)
-      .select(col("id"), posexplode(col("sig")).as(Seq("pos", "mh")))
-
   /** Near-dup pairs via MinHash LSH + exact-Jaccard verification. The LSH
     * stage uses one row per band (b = k, r = 1): docs sharing ANY of the k
     * minhash values become candidates, so a pair with true Jaccard j is
@@ -434,8 +425,8 @@ object Dedup {
                           maxDriverEdges: Long = driverCcMaxEdges(),
                           maxDriverForest: Long = driverCcMaxForest())
       : DataFrame =
-    withLabels(pairs, maxDriverEdges, maxDriverForest) { labels =>
-      ids.join(labels, Seq("id"), "left")
+    withLabels(pairs, maxDriverEdges, maxDriverForest) { (labels, small) =>
+      ids.join(if (small) broadcast(labels) else labels, Seq("id"), "left")
         .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
     }
 
@@ -459,7 +450,7 @@ object Dedup {
   def componentLabels(pairs: DataFrame,
                       maxDriverEdges: Long = driverCcMaxEdges(),
                       maxDriverForest: Long = driverCcMaxForest()): DataFrame =
-    withLabels(pairs, maxDriverEdges, maxDriverForest)(identity)
+    withLabels(pairs, maxDriverEdges, maxDriverForest)((labels, _) => labels)
 
   /** Incremental component maintenance: fold NEW pairs into an existing
     * min-id labeling without touching the old edge set. Exact by the
@@ -532,11 +523,14 @@ object Dedup {
   /** The engine of [[connectedComponents]] and [[componentLabels]]:
     * labels `(id, cluster)` for every endpoint of `pairs` go to `finish`,
     * whose result is checkpointed before every intermediate (checkpoints
-    * and the label broadcasts) is released.
+    * and the label broadcasts) is released. `finish`'s flag says the
+    * labels are a driver-built table small enough for a join to
+    * broadcast: Catalyst cannot estimate an RDD-backed frame, and a hint
+    * on a frame that no join reads is dropped with a warning.
     */
   private def withLabels(pairs: DataFrame, maxDriverEdges: Long,
                          maxDriverForest: Long)
-                        (finish: DataFrame => DataFrame): DataFrame = {
+                        (finish: (DataFrame, Boolean) => DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint().cappedStats
@@ -546,16 +540,13 @@ object Dedup {
       scala.collection.mutable.ArrayBuffer[org.apache.spark.broadcast.Broadcast[_]]()
     // (id, v) rows from two driver arrays: one broadcast holds them once
     // (closure capture would ship them once per task), and rows are
-    // built inside tasks, never as a boxed driver array. The driver
-    // knows the row count Catalyst cannot estimate for an RDD-backed
-    // frame, so it hints the broadcast of a small table (24 B per
-    // two-long UnsafeRow) to the caller's join.
+    // built inside tasks, never as a boxed driver array
     def fromDriver(ids: Array[Long], vs: Array[Long]): DataFrame = {
       val bc = spark.sparkContext.broadcast((ids, vs))
       broadcasts += bc
       val total = ids.length
       val parts = spark.sessionState.conf.numShufflePartitions
-      val df = spark.sparkContext.parallelize(0 until parts, parts)
+      spark.sparkContext.parallelize(0 until parts, parts)
         .flatMap { p =>
           val (is, xs) = bc.value
           val lo = (p.toLong * total / parts).toInt
@@ -563,8 +554,6 @@ object Dedup {
           (lo until hi).iterator.map(k => (is(k), xs(k)))
         }
         .toDF("id", "cluster")
-      if (24L * total <= spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(df)
-      else df
     }
     // RANDOM-MATE CONTRACTION (the classic PRAM random-mating CC, the
     // same family as the MapReduce algorithms of Kiveris et al. 2014):
@@ -675,7 +664,7 @@ object Dedup {
     (if (mates.isEmpty) pr else e).collect().foreach { row =>
       if (!row.isNullAt(0) && !row.isNullAt(1)) uf.union(row.getLong(0), row.getLong(1))
     }
-    val labels = if (mates.isEmpty ||
+    val (labels, small) = if (mates.isEmpty ||
         (maxDriverForest >= 0 && mateRowsSum + uf.size <= maxDriverForest)) {
       // DRIVER FOREST RESOLVE: the mate forest is node-sized while the
       // graph is edge-sized — at 47 M edges the forest is ~21 M rows, and
@@ -693,7 +682,9 @@ object Dedup {
         releaseBlocks(m)
       }
       val (ids, mins) = uf.labels
-      fromDriver(ids, mins)
+      // 24 B per two-long UnsafeRow
+      (fromDriver(ids, mins),
+        24L * ids.length <= spark.sessionState.conf.autoBroadcastJoinThreshold)
     } else {
       // resolve the cross-stage forest (mate maps + the residual's
       // non-root ids under their roots): depth ≤ stages (stage maps have
@@ -747,14 +738,15 @@ object Dedup {
         .localCheckpoint(true, ckLevel).cappedStats
       held += f
       val minm = f.groupBy("root").agg(min("id").as("cluster"))
-      f.join(minm, Seq("root")).select(col("id"), col("cluster"))
+      (f.join(minm, Seq("root")).select(col("id"), col("cluster")), false)
     }
     // once a level ran, nodes whose every edge is a self-loop never
     // entered the mate forest (the isolated-node trap) — append them as
     // their own cluster so the endpoint contract holds
     val all = selfIds.fold(labels)(s => labels.unionByName(
-      s.join(labels, Seq("id"), "left_anti").select(col("id"), col("id").as("cluster"))))
-    val out = releasing(finish(all), held.toSeq)
+      s.join(if (small) broadcast(labels) else labels, Seq("id"), "left_anti")
+        .select(col("id"), col("id").as("cluster"))))
+    val out = releasing(finish(all, small && selfIds.isEmpty), held.toSeq)
     broadcasts.foreach(_.destroy())
     out
   }
@@ -889,8 +881,7 @@ object Dedup {
   /** Append a document batch to a [[minhashStoreWrite]] store: postings
     * land in the existing band directories, sets append alongside. Only
     * the new rows are written; a probe after the append sees exactly
-    * what a fresh write of the union would serve. (Stats computed before
-    * any write — see [[graft.core.Graph.append]]'s recache trap.)
+    * what a fresh write of the union would serve.
     */
   def minhashStoreAppend(df: DataFrame, dir: String, idCol: String,
                          textCol: String): Unit = {

@@ -1783,7 +1783,7 @@ object GraphAlgos {
   private def louvainDistributed(und0: DataFrame, undCount: Long,
                                  maxRounds: Int, maxLevels: Int,
                                  driverFoldEdges: Long,
-                                 deadline: Long = Long.MaxValue): DataFrame = {
+                                 deadline: Long): DataFrame = {
     val spark = und0.sparkSession
     import spark.implicits._
     def expired: Boolean = System.nanoTime() > deadline

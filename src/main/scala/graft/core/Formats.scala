@@ -405,10 +405,6 @@ object Formats {
         termColumn("ov").as("ot"),
         when(col("l").isNotNull, termColumn("lv")).as("lt"))
 
-  /** (subject term, predicate term, object term) rows. */
-  private def spOTerms(g: Graph): DataFrame =
-    spOTermsKinds(g).select("st", "pt", "ot")
-
   private def spOTermsKinds(g: Graph): DataFrame = {
     val n = g.nodes
     def dict(keyCol: String, prefix: String) =

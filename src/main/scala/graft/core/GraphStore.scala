@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -17,13 +17,12 @@ import scala.jdk.CollectionConverters._
   *    is the precomputed sort key (`quad.Value.String()` form).
   *  - `quads(s, p, o, l)`: four long ids; `l` null for unlabeled quads.
   *
-  * Scale notes (100 TB target): every traversal is an equi-join / literal
-  * filter on longs; the quads table should be written partitioned by a
-  * predicate bucket (`pb = pmod(p, N)`) so predicate-constrained scans prune
-  * files (the kv backend's SP/OPS composite indexes,
-  * /root/reference/graph/kv/indexing.go:62-71, become partition pruning +
-  * Parquet min/max on s/o). The nodes dictionary is ~|distinct values| and
-  * joins broadcast per-predicate slices.
+  * Every traversal is an equi-join / literal filter on longs. A stored
+  * quads table is partitioned by a predicate bucket (`pb = pmod(p, N)`)
+  * so predicate-constrained scans prune files: the kv backend's SP/OPS
+  * composite indexes (the reference's graph/kv/indexing.go:62-71) become
+  * partition pruning plus Parquet min/max on s/o. The nodes dictionary
+  * is ~|distinct values| and joins broadcast per-predicate slices.
   */
 final case class Graph(nodes: DataFrame, quads: DataFrame,
                        predicateBuckets: Int = 0,
@@ -65,60 +64,26 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
   def withStats(): Graph = copy(predStats = Some(Graph.countByP(quads)))
 
   /** Persist as Parquet. `predicateBuckets > 0` writes quads partitioned by
-    * `pb = pmod(p, buckets)` — the scale path: a query constraining `p`
-    * reads only the matching partition directories (the lowering adds the
-    * `pb` filter whenever it has a literal predicate set, so pruning is
-    * static, not even dynamic).
-    */
-  /** `objectIndex = true` writes the reference's dual-index layout
+    * `pb = pmod(p, buckets)`: a query constraining `p` reads only the
+    * matching partition directories (the lowering adds the `pb` filter
+    * whenever it has a literal predicate set, so pruning is static, not
+    * even dynamic).
+    *
+    * `objectIndex = true` writes the reference's dual-index layout
     * (`DefaultQuadIndexes = [SP, OPS]`, graph/kv/indexing.go:62-71) as
     * two Parquet orderings: the primary sorted by (p, s) within each
     * predicate bucket — forward hops with literal subjects skip row
     * groups on s min/max — and a `quads_ops` sibling with the SAME rows
     * sorted by (p, o), so reverse hops with literal objects prune the
-    * way forward ones do. The sibling is built by re-reading the files
-    * just written (the input plan evaluates once); readers pick it up
-    * through `graft_meta.json` and the lowering scans whichever
-    * ordering matches the hop's literal side.
+    * way forward ones do. Readers pick the sibling up through
+    * `graft_meta.json`, and the lowering scans whichever ordering matches
+    * the hop's literal side.
     */
   def write(dir: String, predicateBuckets: Int = 0,
             objectIndex: Boolean = false): Unit = {
     nodes.write.mode("overwrite").parquet(s"$dir/nodes")
-    // sorted layouts use RANGE partitioning over the full sort key, not
-    // repartition(pb): predicates are power-law skewed, so hashing by
-    // bucket alone collapses the sort into <= buckets tasks with one
-    // giant one (measured 127.8 s for the 47 M-quad dual-index write;
-    // range-partitioned: every task an equal slice, files still
-    // internally sorted so row-group min/max stats stay tight — a file
-    // containing one predicate's id range prunes identically whether
-    // its sibling file holds the same predicate or the next one).
-    // Range sampling re-evaluates a slice of the input plan: hand
-    // objectIndex writes a cached/checkpointed graph when the quads
-    // lineage is an expensive pipeline.
-    val sortParts = math.max(
-      nodes.sparkSession.sessionState.conf.numShufflePartitions,
-      predicateBuckets)
-    if (predicateBuckets > 0) {
-      val q = quads.withColumn("pb", pmod(col("p"), lit(predicateBuckets)))
-      val primary = if (objectIndex)
-        q.repartitionByRange(sortParts, col("pb"), col("p"), col("s"))
-          .sortWithinPartitions("pb", "p", "s")
-      else q
-      primary.write.mode("overwrite").partitionBy("pb").parquet(s"$dir/quads")
-    } else {
-      val primary = if (objectIndex) quads.sort("p", "s") else quads
-      primary.write.mode("overwrite").parquet(s"$dir/quads")
-    }
-    if (objectIndex) {
-      val q = nodes.sparkSession.read.parquet(s"$dir/quads")
-      if (predicateBuckets > 0)
-        q.repartitionByRange(sortParts, col("pb"), col("p"), col("o"))
-          .sortWithinPartitions("pb", "p", "o")
-          .write.mode("overwrite").partitionBy("pb")
-          .parquet(s"$dir/quads_ops")
-      else q.sort("p", "o").write.mode("overwrite")
-        .parquet(s"$dir/quads_ops")
-    } else {
+    Graph.writeQuads(quads, dir, predicateBuckets, objectIndex, SaveMode.Overwrite)
+    if (!objectIndex) {
       // a prior objectIndex=true write may have left a sibling: readers
       // are meta-gated so it's dead weight, but it silently doubles the
       // store footprint — remove it
@@ -131,14 +96,8 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     // Count from the files just written, not the input plan — when the
     // quads DataFrame is an expensive uncached pipeline (bulk load), a
     // second full evaluation would double the load cost.
-    val st = predStats.getOrElse(
-      Graph.countByP(nodes.sparkSession.read.parquet(s"$dir/quads")))
-    val statsJson = st.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/graft_meta.json"),
-      s"""{"predicateBuckets":$predicateBuckets,""" +
-        s""""opsIndex":$objectIndex,"predStats":$statsJson}""")
+    Graph.writeMeta(dir, predicateBuckets, objectIndex, predStats.getOrElse(
+      Graph.countByP(nodes.sparkSession.read.parquet(s"$dir/quads"))))
   }
 
   /** Delta application (the reference's `ApplyDeltas`,
@@ -172,6 +131,16 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
     */
   def addQuads(g2: Graph): Graph = {
     val d = openDelta
+    val (e, fresh) = adding(d, g2)
+    if (e eq d) this else advance(e, fresh, 1L)
+  }
+
+  /** The existence decision of [[addQuads]], steps 1-3: `d` extended by
+    * the quads and dictionary rows of `g2` that this snapshot lacks,
+    * beside those quads; `d` itself when it lacks none. Both tables of
+    * `g2` are collected on the driver.
+    */
+  private def adding(d: Graph.Delta, g2: Graph): (Graph.Delta, Seq[Graph.QuadKey]) = {
     val b = d.base
     // a quad or node deleted since the base was cached is fresh again:
     // the delta adds it back rather than undoing the deletion
@@ -189,9 +158,8 @@ final case class Graph(nodes: DataFrame, quads: DataFrame,
       maybeInBase(s) && maybeInBase(p) && maybeInBase(o) && l.forall(maybeInBase)
     }).toSet
     val fresh = deleted ++ unknown.filterNot(inBase)
-    if (fresh.isEmpty && freshNodes.isEmpty) this
-    else advance(d.copy(quads = d.quads ++ fresh, nodes = d.nodes ++ freshNodes),
-      fresh, 1L)
+    if (fresh.isEmpty && freshNodes.isEmpty) (d, Nil)
+    else (d.copy(quads = d.quads ++ fresh, nodes = d.nodes ++ freshNodes), fresh)
   }
 
   /** Remove the quads of `g2` from this snapshot, from both orderings
@@ -528,163 +496,92 @@ object Graph {
     fromQuadDF(rows.toDF())
   }
 
-  /** Incremental store ingest: merge a delta graph into an on-disk store
-    * WITHOUT rewriting existing data — the quad-store analog of
-    * `Similarity.ivfAppendQuantized`. At 100 TB a full
-    * rebuild per ingest batch is a non-starter; this appends new parquet
-    * files and leaves every existing file untouched.
+  /** Incremental store ingest: add the quads of `delta` that the store at
+    * `dir` lacks, leaving every existing data file untouched — the
+    * reference's `ApplyDeltas` (graph/quadwriter.go:49-56) persisted.
     *
-    * Cost shape: the delta is deduplicated internally, then existence-
-    * checked only where it can possibly collide — the dictionary gate
-    * keeps just the delta quads whose every term id already exists in
-    * the stored node dictionary (typical ingest is new-entity-dominated,
-    * so this is a sliver, often empty — then the store is never scanned
-    * at all). The gated sliver probes the store map-side: the quads
-    * table's touched `pb` partitions are scanned ONCE against a
-    * broadcast hash of the sliver (LEFT SEMI, build right), so no
-    * stored row is ever shuffled — a plain delta-anti-join-store plan
-    * would sort-merge the whole touched region and cost as much as a
-    * rewrite. Deltas above broadcast size fall back to the shuffle plan.
-    * Appended files land only in touched partitions; `graft_meta.json`
-    * predStats update incrementally from the appended rows — no
-    * store-wide recount. Readers pick up the new files on their next
-    * `Graph.read`.
+    * The store is opened and `delta` goes through the existence decision
+    * of [[Graph.addQuads]]: deduplicated, its dictionary probed against
+    * the stored one, and only quads whose every term is stored probed
+    * against the stored quads ([[Graph.storedRows]], a pruned scan with
+    * no shuffle). The quads it adds are written in the store's layout
+    * ([[writeQuads]]: one file per touched bucket and ordering), its new
+    * dictionary rows are appended to `nodes`, and `graft_meta.json`'s
+    * `predStats` move by the added quads (a store written without stats
+    * gets one recount from its files). Every decision is taken before the
+    * first file is written. Readers see the new files on their next
+    * [[read]].
     *
-    * Equivalence contract (StoreSpec + the g_store_append driver entry):
-    * write(half1) + append(half2) produces the same node set, quad set,
-    * and predStats as write(half1 ∪ half2).
+    * Both tables of `delta` are collected on the driver, as every server
+    * write is; a delta above `spark.driver.maxResultSize` fails before
+    * anything is written.
+    *
+    * Contract (FormatsSpec, the `g_store_append` oracle entry):
+    * write(half1) + append(half2) holds the same quads, nodes and
+    * predStats as write(half1 ∪ half2).
     */
   def append(spark: SparkSession, dir: String, delta: Graph): Unit = {
-    val metaPath = java.nio.file.Paths.get(s"$dir/graft_meta.json")
     val stored = read(spark, dir)
+    val (d, added) = stored.adding(stored.openDelta, delta)
     val buckets = stored.predicateBuckets
-    val base = Seq("s", "p", "o", "l")
-    val dq0 = delta.quads.select(base.map(col): _*).dropDuplicates(base)
-    val dq = (if (buckets > 0)
-      dq0.withColumn("pb", pmod(col("p"), lit(buckets)))
-    else dq0).persist()
-    val deltaRows = dq.count() // materialize once; gates the join layout
-    // node dictionary FIRST: the delta ids already present in the store
-    // (dupIds) feed BOTH the fresh-node anti-join and the quad-existence
-    // dictionary gate below — one stored-nodes scan serves both
-    val dn = delta.nodes.dropDuplicates("id").persist()
-    val dnRows = dn.count()
-    val smallDelta = deltaRows <= 4000000L && dnRows <= 4000000L
-    val dupIds = (if (smallDelta) {
-      val dnIds = dn.select("id")
-      stored.nodes.select("id")
-        .join(broadcast(dnIds), stored.nodes("id") === dnIds("id"),
-          "left_semi")
-        .select(col("id").as("eid"))
-    } else dn.select(col("id").as("eid"))).persist()
-    if (smallDelta) dupIds.count()
-    val existing =
-      if (buckets > 0) {
-        val touched = dq.select("pb").distinct().collect().map(_.getLong(0))
-        stored.quads.where(col("pb").isin(touched.toIndexedSeq: _*))
-      } else stored.quads
-    // Existence check. A plain `dq LEFT ANTI existing` can only broadcast
-    // its RIGHT side — the store — so Spark sort-merge-shuffles every
-    // touched-partition row, and appending one small batch costs as much
-    // as rewriting the store (the r11 driver record measured append ≥
-    // write at 47 M quads). For ingest-sized deltas, two cuts:
-    //  1. DICTIONARY GATE — a delta quad can only already exist if EVERY
-    //     term id is already in the stored dictionary (the library's
-    //     Graph invariant: nodes always cover every quad position, both
-    //     in stores and in fromQuadDF/fromNQuads-built deltas). Real
-    //     ingest batches are dominated by new entities, so the gated
-    //     subset is tiny — and when it is EMPTY the store is never
-    //     scanned at all.
-    //  2. BROADCAST FLIP — for the gated subset, scan the store ONCE
-    //     map-side against a broadcast hash (LEFT SEMI, build right) and
-    //     anti-join the delta against the (≤ gated-sized) match set.
-    //     Zero shuffles of stored data.
-    // Oversized deltas (above broadcast comfort) keep the shuffle plan.
-    var gatedHandle: Option[DataFrame] = None
-    val freshPlan = if (smallDelta) {
-      def dictSemi(df: DataFrame, c: String): DataFrame =
-        df.join(broadcast(dupIds.select(col("eid").as(c))), Seq(c),
-          "left_semi")
-      val gatedBase = dictSemi(dictSemi(dictSemi(dq, "s"), "p"), "o")
-      val gated = gatedBase.where(col("l").isNull)
-        .unionByName(dictSemi(gatedBase.where(col("l").isNotNull), "l"))
-        .persist()
-      gatedHandle = Some(gated)
-      val gc = gated.count()
-      if (gc == 0L) dq
-      else {
-        // aliased output: dups' subtree contains dq (the broadcast
-        // side), so unaliased s/p/o/l would be ambiguous below
-        val dups = existing
-          .join(broadcast(gated),
-            existing("s") === gated("s") && existing("p") === gated("p") &&
-              existing("o") === gated("o") && existing("l") <=> gated("l"),
-            "left_semi")
-          .select(col("s").as("es"), col("p").as("ep"),
-            col("o").as("eo"), col("l").as("el"))
-        dq.join(broadcast(dups),
-          dq("s") === dups("es") && dq("p") === dups("ep") &&
-            dq("o") === dups("eo") && dq("l") <=> dups("el"),
-          "left_anti")
-      }
-    } else dq.join(existing,
-      dq("s") === existing("s") && dq("p") === existing("p") &&
-        dq("o") === existing("o") && dq("l") <=> existing("l"),
-      "left_anti")
-    val fresh = if (freshPlan eq dq) dq else freshPlan.persist()
-    try {
-      // count the appended rows BEFORE writing: the write into dir/quads
-      // invalidates every cached plan that reads that path (CacheManager
-      // recache-by-path), and a post-write re-evaluation of the anti-join
-      // would see the just-appended files and count zero
-      val appended = countByP(fresh)
-      // dual-index store: the same fresh rows land in the object-sorted
-      // sibling too (sorted within the appended files — the new files'
-      // row-group stats prune like the originals'). MUST run before the
-      // primary write: fresh's anti-join reads dir/quads, and writing
-      // into that path recaches the plan against the new files — the
-      // re-evaluated anti-join would then see its own output and yield
-      // zero rows (the same trap the pre-write stats count dodges above)
-      if (stored.quadsOps.isDefined) {
-        if (buckets > 0)
-          fresh.repartitionByRange(col("pb"), col("p"), col("o"))
-            .sortWithinPartitions("pb", "p", "o")
-            .write.mode("append").partitionBy("pb")
-            .parquet(s"$dir/quads_ops")
-        else fresh.sort("p", "o").write.mode("append")
-          .parquet(s"$dir/quads_ops")
-      }
-      if (buckets > 0)
-        fresh.write.mode("append").partitionBy("pb").parquet(s"$dir/quads")
-      else fresh.write.mode("append").parquet(s"$dir/quads")
-      // fresh dictionary rows: the dupIds computed above (one stored-
-      // nodes scan, broadcast-flipped) drive the anti-join; above the
-      // broadcast gate, fall back to the shuffle anti-join
-      val freshNodes = (if (smallDelta)
-        dn.join(broadcast(dupIds), dn("id") === dupIds("eid"), "left_anti")
-      else dn.join(stored.nodes.select("id"), Seq("id"), "left_anti"))
-        .select(stored.nodes.columns.toIndexedSeq.map(col): _*)
-      freshNodes.write.mode("append").parquet(s"$dir/nodes")
-      // incremental stats: stored counts + appended-row counts. If the
-      // store predates stats (no meta), recount once from the files.
-      val merged = stored.predStats match {
-        case Some(st) =>
-          (st.keySet ++ appended.keySet).map(k =>
-            k -> (st.getOrElse(k, 0L) + appended.getOrElse(k, 0L))).toMap
-        case None =>
-          countByP(spark.read.parquet(s"$dir/quads"))
-      }
-      val statsJson = merged.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(metaPath,
-        s"""{"predicateBuckets":$buckets,""" +
-          s""""opsIndex":${stored.quadsOps.isDefined},""" +
-          s""""predStats":$statsJson}""")
-    } finally {
-      if (!(fresh eq dq)) fresh.unpersist()
-      gatedHandle.foreach(_.unpersist())
-      dupIds.unpersist(); dn.unpersist(); dq.unpersist()
+    val ops = stored.quadsOps.isDefined
+    // one task per table, so one new file per touched bucket and ordering
+    if (added.nonEmpty) writeQuads(localQuads(spark, added, QuadSchema).coalesce(1),
+      dir, buckets, ops, SaveMode.Append)
+    if (d.nodes.nonEmpty)
+      spark.createDataFrame(d.nodes.values.toSeq.asJava, stored.nodes.schema)
+        .coalesce(1).write.mode("append").parquet(s"$dir/nodes")
+    writeMeta(dir, buckets, ops, stored.predStats.fold(
+      countByP(spark.read.parquet(s"$dir/quads")))(plus(_, predCounts(added), 1L)))
+  }
+
+  /** The quads `q` written under `dir` in `mode`, in the store's layout:
+    * `quads`, and with `objectIndex` its `quads_ops` sibling, partitioned
+    * by `pb` when `buckets > 0`. With `objectIndex` the files of each
+    * ordering are sorted by `(pb, p, s)` or `(pb, p, o)`.
+    *
+    * Overwritten, `q` is a whole store. It is range-partitioned over the
+    * full sort key into at least one slice per bucket, not hashed by
+    * bucket: predicates are power-law skewed, and hashing by bucket alone
+    * collapsed the 47 M-quad dual-index write into one giant task
+    * (127.8 s), where range slices are equal. The sibling reads back the
+    * files just written, so an expensive input plan evaluates once (range
+    * sampling still re-evaluates a slice of it). Appended, `q` is a
+    * driver-sized delta, sorted in the partitions it comes in and read
+    * twice.
+    */
+  private def writeQuads(q: DataFrame, dir: String, buckets: Int,
+                         objectIndex: Boolean, mode: SaveMode): Unit = {
+    val whole = mode == SaveMode.Overwrite
+    val slices = math.max(q.sparkSession.sessionState.conf.numShufflePartitions, buckets)
+    val keyed = if (buckets > 0) q.withColumn("pb", pmod(col("p"), lit(buckets))) else q
+    def save(df: DataFrame, key: String, name: String): Unit = {
+      val order = ((if (buckets > 0) Seq("pb") else Nil) ++ Seq("p", key)).map(col)
+      val laid = if (!objectIndex) df
+        else (if (whole) df.repartitionByRange(slices, order: _*) else df)
+          .sortWithinPartitions(order: _*)
+      val w = laid.write.mode(mode)
+      (if (buckets > 0) w.partitionBy("pb") else w).parquet(s"$dir/$name")
     }
+    save(keyed, "s", "quads")
+    if (objectIndex)
+      save(if (whole) q.sparkSession.read.parquet(s"$dir/quads") else keyed, "o", "quads_ops")
+  }
+
+  /** `graft_meta.json`, written to a sibling file and moved over the old
+    * one in one atomic rename: a killed write leaves the old meta or the
+    * new one, never a truncated one (truncated `predStats` would fold a
+    * live predicate to the empty relation).
+    */
+  private def writeMeta(dir: String, buckets: Int, objectIndex: Boolean,
+                        stats: Map[Long, Long]): Unit = {
+    val statsJson = stats.toSeq.sortBy(_._1)
+      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val meta = java.nio.file.Paths.get(dir, "graft_meta.json")
+    val tmp = java.nio.file.Paths.get(dir, "graft_meta.json.tmp")
+    java.nio.file.Files.writeString(tmp, s"""{"predicateBuckets":$buckets,""" +
+      s""""opsIndex":$objectIndex,"predStats":$statsJson}""")
+    java.nio.file.Files.move(tmp, meta, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   def read(spark: SparkSession, dir: String): Graph = {

@@ -99,11 +99,7 @@ object Mutation {
     def graph: Graph = g
     def addQuad(q: ParsedQuad): Unit =
       g = applyDeltas(g, Seq(Delta(q, Add)), opts)
-    def addQuadSet(qs: Seq[ParsedQuad]): Unit =
-      g = applyDeltas(g, qs.map(Delta(_, Add)), opts)
     def removeQuad(q: ParsedQuad): Unit =
       g = applyDeltas(g, Seq(Delta(q, Delete)), opts)
-    def applyTransaction(tx: Transaction): Unit =
-      g = applyDeltas(g, tx.deltas, opts)
   }
 }

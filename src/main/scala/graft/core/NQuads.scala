@@ -50,7 +50,7 @@ object NQuads {
           else end += 1
         }
         val lex = NQuadEscape.unescape(line.substring(pos + 1, end))
-        var next = end + 1
+        val next = end + 1
         if (next < line.length && line.charAt(next) == '@') {
           var e2 = next + 1
           while (e2 < line.length && !Character.isWhitespace(line.charAt(e2))) e2 += 1

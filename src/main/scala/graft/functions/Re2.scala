@@ -974,7 +974,7 @@ object Re2 {
           k += 1
         }
         if (cur == -1) return matched
-        var t = clistPc; clistPc = nlistPc; nlistPc = t
+        val t = clistPc; clistPc = nlistPc; nlistPc = t
         val tc = clistCaps; clistCaps = nlistCaps; nlistCaps = tc
         clen = nlen
         i = ni; prev = cur; cur = nxt

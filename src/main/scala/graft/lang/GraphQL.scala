@@ -136,7 +136,7 @@ object GraphQL {
   private def parseField(p: P): Field = {
     val n1 = p.name()
     p.ws()
-    var alias = n1
+    val alias = n1
     var via = n1
     if (p.tryEat(':')) { via = p.name() } // alias: via
     var f = Field(alias, via)

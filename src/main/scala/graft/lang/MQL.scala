@@ -113,8 +113,6 @@ object MQL {
     private def render(v: QValue): String = v.sortKey
     private def render2(v: Option[Any]): String = v.map(_.toString).getOrElse("")
 
-    private def isRepeated(p: Pattern): Boolean = p.isInstanceOf[PRepeated]
-
     /** fill.go analog: group rows by the node bound at `path`, then build
       * one output object per distinct binding, nesting per field.
       */

@@ -88,8 +88,6 @@ final case class Path(base: Shape, steps: Vector[Step]) {
   def in(): Path = add(In(Via.All, Nil))                       // path.go:222
   def in(vs: QValue*): Path = add(In(Via.Values(vs), Nil))
   def in(p: Path): Path = add(In(Via.Sub(p), Nil))
-  def inWithTags(tags: Seq[String], vs: QValue*): Path =
-    add(In(if (vs.isEmpty) Via.All else Via.Values(vs), tags))
   def both(vs: QValue*): Path =                                // path.go:252
     add(Both(if (vs.isEmpty) Via.All else Via.Values(vs), Nil))
   def tag(tags: String*): Path = add(Tag(tags))                // path.go:192

@@ -353,7 +353,7 @@ final class Lower(g: Graph) {
     * cycle do get emitted — pathtest testFollowRecursiveHas).
     */
   private def recursive(from: Shape, step: Shape => Shape, maxDepth: Int,
-                        depthTags: Seq[String] = Nil): DataFrame = {
+                        depthTags: Seq[String]): DataFrame = {
     val maxD = if (maxDepth <= 0) DefaultMaxRecursive else maxDepth
     val start = nodes(from).select(ID).distinct().localCheckpoint()
     var frontier = start

@@ -376,7 +376,18 @@ class FormatsSpec extends AnyFunSuite {
     assert(got === Seq("<alice>", "<charlie>", "<dani>", "<zed>"))
   }
 
-  test("Graph.append: incremental ingest equals rebuild, untouched files stay") {
+  /** Every file under `dir`'s data tables, path → modification time; not
+    * the `_SUCCESS` commit marker, which every Spark write job rewrites.
+    */
+  private def dataFiles(dir: String): Map[String, Long] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    Seq("quads", "quads_ops", "nodes").map(t => new java.io.File(s"$dir/$t"))
+      .flatMap(walk).filterNot(_.getName.contains("_SUCCESS"))
+      .map(f => f.getPath -> f.lastModified()).toMap
+  }
+
+  private def appendEqualsRebuild(buckets: Int, objectIndex: Boolean): Unit = {
     val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
     val all = g.quads.collect()
     // split the quad set by subject hash parity; both halves share the
@@ -386,12 +397,9 @@ class FormatsSpec extends AnyFunSuite {
       .union(g.quads.limit(3))) // overlap: re-appending existing quads
     val dirFull = Files.createTempDirectory("graft-app-full").toString
     val dirInc = Files.createTempDirectory("graft-app-inc").toString
-    g.withStats().write(dirFull, predicateBuckets = 4)
-    h1.withStats().write(dirInc, predicateBuckets = 4)
-    val before = new java.io.File(s"$dirInc/quads").listFiles()
-      .filter(_.isDirectory)
-      .flatMap(d => d.listFiles().map(f => f.getPath -> f.lastModified()))
-      .toMap
+    g.withStats().write(dirFull, buckets, objectIndex)
+    h1.withStats().write(dirInc, buckets, objectIndex)
+    val before = dataFiles(dirInc)
     Graph.append(spark, dirInc, h2o)
     val full = Graph.read(spark, dirFull)
     val inc = Graph.read(spark, dirInc)
@@ -404,16 +412,44 @@ class FormatsSpec extends AnyFunSuite {
       full.nodes.select("id").collect().map(_.getLong(0)).toSet)
     assert(inc.predStats === full.predStats) // incremental stats merge
     // every pre-append file still present and unmodified (append-only)
-    val after = new java.io.File(s"$dirInc/quads").listFiles()
-      .filter(_.isDirectory)
-      .flatMap(d => d.listFiles().map(f => f.getPath -> f.lastModified()))
-      .toMap
+    val after = dataFiles(dirInc)
     before.foreach { case (p, m) =>
       assert(after.get(p).contains(m), s"rewritten: $p") }
     // and the appended store answers queries like the rebuilt one
     val got = Exec.run(inc, Path.start(QValue.Iri("bob"))
       .in(QValue.Iri("follows"))).values().map(_.sortKey).sorted
     assert(got === Seq("<alice>", "<charlie>", "<dani>"))
+  }
+
+  test("Graph.append: incremental ingest equals rebuild, untouched files stay") {
+    appendEqualsRebuild(buckets = 4, objectIndex = false)
+  }
+
+  for ((buckets, objectIndex) <- Seq((0, false), (0, true), (4, true)))
+    test("Graph.append: incremental ingest equals rebuild, untouched files stay " +
+        s"($buckets buckets, objectIndex $objectIndex)") {
+      appendEqualsRebuild(buckets, objectIndex)
+    }
+
+  test("Graph.append: a delta that fails to evaluate leaves the store as it was") {
+    val g = Graph.fromNQuads(spark, TestFixtures.data("testdata.nq"))
+    val dir = Files.createTempDirectory("graft-app-fail").toString
+    g.withStats().write(dir, predicateBuckets = 4, objectIndex = true)
+    def contents(): Map[String, Seq[Byte]] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir))
+        .map(f => f.getPath -> Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    val before = contents()
+    val boom = org.apache.spark.sql.functions.udf { (s: Long) =>
+      if (s != Long.MinValue) throw new IllegalStateException("delta fails")
+      s
+    }
+    val bad = g.copy(quads = g.quads.withColumn("s", boom(col("s"))))
+    intercept[Exception](Graph.append(spark, dir, bad))
+    assert(contents() === before)
+    assert(Graph.read(spark, dir).stats === g.stats)
   }
 
   test("Graph.append: new-term delta (dictionary gate empty) and mixed delta") {
