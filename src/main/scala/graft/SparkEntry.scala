@@ -2267,8 +2267,9 @@ object SparkEntry {
     }),
     // PageRank (10 iterations, d=0.85) over all five edge predicates of
     // the quadified star graph, verified as a differential contract vs a
-    // sequential evaluation of the same recurrence (the collect is the
-    // oracle side only — the operator itself is pure join+agg algebra)
+    // sequential evaluation of the same recurrence, once per tier: the
+    // driver tier (one collect, array passes) and the distributed tier
+    // (join+agg rounds, forced past the gate)
     "graph_pagerank" -> ((s, d) => {
       val g = graph(s, d)
       val preds = Seq("c_nation", "n_region", "n_prev", "s_nation",
@@ -3518,9 +3519,10 @@ object SparkEntry {
         |  SELECT c_nationkey, count(*) AS degree FROM customer
         |  GROUP BY c_nationkey) t
         |GROUP BY degree""".stripMargin,
-    // PageRank differential contract: distributed join+agg recurrence vs
-    // sequential reference on the same edges; node universe = every row
-    // of the five edge-source/target tables (all fks non-null in TPC-H)
+    // PageRank differential contract: both tiers (driver arrays and
+    // distributed join+agg) vs sequential reference on the same edges;
+    // node universe = every row of the five edge-source/target tables
+    // (all fks non-null in TPC-H)
     "graph_pagerank" ->
       """SELECT TRUE AS pagerank_ok,
         |  CAST((SELECT count(*) FROM customer) + (SELECT count(*) FROM nation)

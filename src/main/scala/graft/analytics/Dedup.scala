@@ -141,8 +141,8 @@ object Dedup {
           col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    jaccardVerify(cand, shingleSets(rows))
-      .where(col("jaccard") >= threshold)
+    releasing(jaccardVerify(cand, shingleSets(rows))
+      .where(col("jaccard") >= threshold), Seq(rows))
   }
 
   /** Exact Jaccard for a candidate pair set (the verification stage after
@@ -405,13 +405,16 @@ object Dedup {
     * derived frame's leaves may be checkpoints the CALLER still owns
     * (releasing them through a borrowed reference broke SCC's outer
     * loop). Only call on frames nothing will read again: a released
-    * checkpoint cannot be recomputed (its lineage was truncated).
+    * checkpoint cannot be recomputed (its lineage was truncated), which
+    * is why its blocks go through `CheckpointBridge.releaseCheckpoint`
+    * rather than `RDD.unpersist` and its WARN saying so.
     */
   private[analytics] def releaseBlocks(df: DataFrame): Unit = {
     try df.unpersist(false) catch { case _: Throwable => () }
     try df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
+        org.apache.spark.sql.graftbridge.CheckpointBridge
+          .releaseCheckpoint(lr.rdd)
       case _ => ()
     } catch { case _: Throwable => () }
   }
@@ -773,10 +776,10 @@ object Dedup {
         col("l.pos") === col("r.pos") && col("l.mh") === col("r.mh"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    jaccardVerify(cand, shingleSets(bRows.unionByName(cRows)))
+    releasing(jaccardVerify(cand, shingleSets(bRows.unionByName(cRows)))
       .where(col("jaccard") >= threshold)
       .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
-        col("jaccard"))
+        col("jaccard")), Seq(cRows, bRows))
   }
 
   /** Incremental duplicate-CLUSTER maintenance: fold a new `batch` into
@@ -1276,14 +1279,14 @@ object Dedup {
     // would run twice
     val banded = cacheOnce(hashed.select(col("id"), col("h"),
       posexplode(bandKeys).as(Seq("bandIdx", "bandKey"))))
-    banded.alias("l").join(banded.alias("r"),
+    releasing(banded.alias("l").join(banded.alias("r"),
         col("l.bandIdx") === col("r.bandIdx") &&
           col("l.bandKey") === col("r.bandKey") && col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
         bit_count(col("l.h").bitwiseXOR(col("r.h"))).cast("long")
           .as("hamming"))
       .where(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b"), Seq(banded))
   }
 
   /** All single-character deletions of `s` (row-local HOF — fine once per

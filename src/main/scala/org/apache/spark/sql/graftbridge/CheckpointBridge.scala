@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic
@@ -25,7 +26,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * (broadcast eligibility survives), cap the runaway ones at
   * `Long.MaxValue` — the same "unknown" a stats-free leaf would report.
   * Lives in the `org.apache.spark.sql` namespace because
-  * `classic.Dataset.ofRows` is `private[sql]`.
+  * `classic.Dataset.ofRows` is `private[sql]` (and
+  * `SparkContext.unpersistRDD` is `private[spark]`).
   */
 object CheckpointBridge {
   private val MaxSize = BigInt(Long.MaxValue)
@@ -51,4 +53,12 @@ object CheckpointBridge {
         }
       case _ => df
     }
+
+  /** Free a checkpointed RDD's blocks now, as `RDD.unpersist` does
+    * (`SparkContext.unpersistRDD`), without its WARN that a locally
+    * checkpointed RDD cannot be recomputed: the caller frees the
+    * checkpoint on purpose, once nothing reads it again.
+    */
+  def releaseCheckpoint(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -233,6 +233,35 @@ class DedupPropertySpec extends AnyFunSuite {
     assert(held() === before)
   }
 
+  test("releasing frees a held checkpoint's blocks") {
+    val sc = spark.sparkContext
+    val held = spark.range(50).toDF("id").localCheckpoint(true)
+    val rddId = held.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(sc.getPersistentRDDs.contains(rddId))
+    val out = Dedup.releasing(held.select((col("id") * 2).as("x")), Seq(held))
+    assert(!sc.getPersistentRDDs.contains(rddId))
+    assert(out.count() === 50)
+  }
+
+  test("pair operators leave no cached table behind across fresh corpora") {
+    // minhashPairs (under clusters), crossPairs and simhashPairs each
+    // cache a table their result reads; the result is checkpointed and
+    // the table released, so a batch job's every new corpus adds nothing
+    def cached() = org.apache.spark.sql.TestCacheEntries.count(spark)
+    val before = cached()
+    (1 to 3).foreach { k =>
+      def corpus(from: Long) = (0 until 12).map(i => (from + i,
+        s"alpha beta gamma ${i % 3} delta corpus $k eps")).toDF("doc_id", "text")
+      val docs = corpus(0L)
+      assert(Dedup.clusters(docs, "doc_id", "text").count() === 12)
+      assert(Dedup.crossPairs(docs, corpus(100L), "doc_id", "text").count() > 0)
+      assert(Dedup.simhashPairs(docs, "doc_id", "text").count() > 0)
+    }
+    assert(cached() === before)
+  }
+
   test("law: componentLabelsAppend equals a full recompute on random splits") {
     val rnd = new scala.util.Random(11)
     (1 to 5).foreach { trial =>

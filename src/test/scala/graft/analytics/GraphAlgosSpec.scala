@@ -16,6 +16,13 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(got === Map(3L -> 1L, 1L -> 2L))
   }
 
+  /** PageRank's two tiers: the session's driver gate (every graph here
+    * sits under it) and a negative gate that forces the distributed
+    * rounds.
+    */
+  private lazy val rankTiers =
+    Seq("driver tier" -> Dedup.driverCcMaxEdges(spark), "distributed tier" -> -1L)
+
   test("pageRank on a known graph matches the analytic fixed point") {
     // A -> B, A -> C, B -> C, C -> A: stationary solution of
     //   rA = .15/3 + .85 rC; rB = .15/3 + .425 rA;
@@ -30,21 +37,27 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(math.abs(local(1L) - rA) < 1e-12)
     assert(math.abs(local(2L) - rB) < 1e-12)
     assert(math.abs(local(3L) - rC) < 1e-12)
-    // distributed path at 50 iterations: contraction ~0.85^50 ~ 3e-4
-    val r = GraphAlgos.pageRank(edges.toDF("s", "d"), "s", "d",
-      iterations = 50).as[(Long, Double)].collect().toMap
-    assert(math.abs(r(1L) - rA) < 1e-3)
-    assert(math.abs(r(2L) - rB) < 1e-3)
-    assert(math.abs(r(3L) - rC) < 1e-3)
+    // either tier at 50 iterations: contraction ~0.85^50 ~ 3e-4
+    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+      val r = GraphAlgos.pageRank(edges.toDF("s", "d"), "s", "d",
+        iterations = 50, maxDriverEdges = gate)
+        .as[(Long, Double)].collect().toMap
+      assert(math.abs(r(1L) - rA) < 1e-3)
+      assert(math.abs(r(2L) - rB) < 1e-3)
+      assert(math.abs(r(3L) - rC) < 1e-3)
+    }
   }
 
   test("pageRank handles dangling nodes (sink keeps teleport + inflow)") {
     val edges = Seq((1L, 2L)).toDF("s", "d")
-    val r = GraphAlgos.pageRank(edges, "s", "d", iterations = 10)
-      .as[(Long, Double)].collect().toMap
-    // node 1: only teleport. node 2: teleport + d * r1 (r1 = 0.075)
-    assert(math.abs(r(1L) - 0.075) < 1e-12)
-    assert(math.abs(r(2L) - (0.075 + 0.85 * 0.075)) < 1e-12)
+    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+      val r = GraphAlgos.pageRank(edges, "s", "d", iterations = 10,
+          maxDriverEdges = gate)
+        .as[(Long, Double)].collect().toMap
+      // node 1: only teleport. node 2: teleport + d * r1 (r1 = 0.075)
+      assert(math.abs(r(1L) - 0.075) < 1e-12)
+      assert(math.abs(r(2L) - (0.075 + 0.85 * 0.075)) < 1e-12)
+    }
   }
 
   test("distributed pageRank agrees with sequential reference on random graphs") {
@@ -55,11 +68,14 @@ class GraphAlgosSpec extends AnyFunSuite {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
       val local = GraphAlgos.pageRankLocal(edges, iterations = 10)
-      val dist = GraphAlgos.pageRank(edges.toDF("s", "d"), "s", "d",
-        iterations = 10).as[(Long, Double)].collect().toMap
-      assert(dist.keySet === local.keySet)
-      for ((v, lr) <- local)
-        assert(math.abs(dist(v) - lr) < 1e-9, s"trial $trial node $v")
+      for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+        val dist = GraphAlgos.pageRank(edges.toDF("s", "d"), "s", "d",
+          iterations = 10, maxDriverEdges = gate)
+          .as[(Long, Double)].collect().toMap
+        assert(dist.keySet === local.keySet)
+        for ((v, lr) <- local)
+          assert(math.abs(dist(v) - lr) < 1e-9, s"trial $trial node $v")
+      }
     }
   }
 
@@ -68,26 +84,92 @@ class GraphAlgosSpec extends AnyFunSuite {
     // monotonically along the chain; global PR of the same chain ranks
     // node 4 highest (it accumulates), so the orders genuinely differ
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "d")
-    val ppr = GraphAlgos.personalizedPageRank(edges, "s", "d",
-        Seq(1L).toDF("node"), iterations = 30)
-      .as[(Long, Double)].collect().toMap
-    assert(ppr(1L) > ppr(2L) && ppr(2L) > ppr(3L) && ppr(3L) > ppr(4L))
-    // analytic fixed point: r1 = 0.15, r_{k+1} = 0.85 * r_k (chain, one
-    // out-edge each; restart mass only at node 1)
-    assert(math.abs(ppr(1L) - 0.15) < 1e-9)
-    assert(math.abs(ppr(2L) - 0.15 * 0.85) < 1e-9)
-    assert(math.abs(ppr(4L) - 0.15 * math.pow(0.85, 3)) < 1e-9)
-    val global = GraphAlgos.pageRank(edges, "s", "d", iterations = 30)
-      .as[(Long, Double)].collect().toMap
-    assert(global(4L) > global(1L))
+    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+      val ppr = GraphAlgos.personalizedPageRank(edges, "s", "d",
+          Seq(1L).toDF("node"), iterations = 30, maxDriverEdges = gate)
+        .as[(Long, Double)].collect().toMap
+      assert(ppr(1L) > ppr(2L) && ppr(2L) > ppr(3L) && ppr(3L) > ppr(4L))
+      // analytic fixed point: r1 = 0.15, r_{k+1} = 0.85 * r_k (chain, one
+      // out-edge each; restart mass only at node 1)
+      assert(math.abs(ppr(1L) - 0.15) < 1e-9)
+      assert(math.abs(ppr(2L) - 0.15 * 0.85) < 1e-9)
+      assert(math.abs(ppr(4L) - 0.15 * math.pow(0.85, 3)) < 1e-9)
+      val global = GraphAlgos.pageRank(edges, "s", "d", iterations = 30,
+          maxDriverEdges = gate)
+        .as[(Long, Double)].collect().toMap
+      assert(global(4L) > global(1L))
+    }
   }
 
   test("personalizedPageRank rejects a source absent from the graph") {
     val edges = Seq((1L, 2L)).toDF("s", "d")
-    intercept[IllegalArgumentException] {
-      GraphAlgos.personalizedPageRank(edges, "s", "d",
-        Seq(99L).toDF("node"))
+    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+      intercept[IllegalArgumentException] {
+        GraphAlgos.personalizedPageRank(edges, "s", "d",
+          Seq(99L).toDF("node"), maxDriverEdges = gate)
+      }
     }
+  }
+
+  test("pageRank tiers agree on string keys, duplicate edges, a self-loop " +
+      "and a null endpoint") {
+    // a→b twice (counts twice), c→c, d→null (counts in d's out-degree,
+    // its share is lost) and null→a (sends nothing): null is one node of
+    // five, so its rank is the bare restart term (1-d)/5
+    val edges = Seq[(String, String)](("a", "b"), ("a", "b"), ("b", "c"),
+      ("c", "a"), ("c", "c"), ("b", "d"), ("d", null), (null, "a"))
+      .toDF("s", "d")
+    def both(f: Long => org.apache.spark.sql.DataFrame)
+        : Seq[Map[Option[String], Double]] = {
+      val Seq(drv, dist) = Seq(Long.MaxValue, -1L).map(f)
+      assert(drv.schema("node").dataType === dist.schema("node").dataType)
+      Seq(drv, dist).map(_.collect()
+        .map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap)
+    }
+    def agree(got: Seq[Map[Option[String], Double]]): Unit = {
+      val Seq(drv, dist) = got
+      assert(drv.keySet === Set("a", "b", "c", "d").map(Option(_)) + None)
+      assert(dist.keySet === drv.keySet)
+      for ((v, r) <- drv) assert(math.abs(dist(v) - r) < 1e-9, s"node $v")
+    }
+    val global = both(g => GraphAlgos.pageRank(edges, "s", "d",
+      maxDriverEdges = g))
+    agree(global)
+    assert(math.abs(global.head(None) - 0.15 / 5) < 1e-12)
+    agree(both(g => GraphAlgos.personalizedPageRank(edges, "s", "d",
+      Seq[String]("a", null).toDF("node"), maxDriverEdges = g)))
+    // the node column is the widened union of src and dst
+    val mixed = Seq((1, 2L), (2, 3L), (3, 1L)).toDF("s", "d")
+    for (g <- Seq(Long.MaxValue, -1L))
+      assert(GraphAlgos.pageRank(mixed, "s", "d", maxDriverEdges = g)
+        .schema("node").dataType === org.apache.spark.sql.types.LongType)
+  }
+
+  test("pageRank under the driver gate runs at most three Spark jobs") {
+    // the gate count, the edge collect and the result's collect; the
+    // distributed rounds would add jobs per checkpoint and per round
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val rnd = new scala.util.Random(5)
+    val edges = spark.sparkContext.parallelize(
+      (1 to 300).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)),
+      4).toDF("s", "d")
+    val sc = spark.sparkContext
+    val tag = "pagerank-driver-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.addJobTag(tag)
+      try GraphAlgos.pageRank(edges, "s", "d").collect()
+      finally sc.removeJobTag(tag)
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= 3)
   }
 
   test("triangleCount: known graphs") {
