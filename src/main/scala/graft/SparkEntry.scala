@@ -61,6 +61,19 @@ object SparkEntry {
     }
   }
 
+  /** A gated operator checked on both of its tiers: `run(gate)` at the
+    * session's `gate` and again with the distributed tier forced (-1).
+    * Throws unless both return the same rows; returns the first result.
+    */
+  private def bothTiers(name: String, gate: Long)(run: Long => DataFrame)
+      : DataFrame = {
+    val Seq(atGate, distributed) = Seq(gate, -1L).map(run)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    if (rows(atGate) != rows(distributed)) throw new IllegalStateException(
+      s"$name: the driver and distributed tiers disagree")
+    atGate
+  }
+
   def iri(s: String): QValue = QValue.Iri(s)
   def str(s: String): QValue = QValue.Str(s)
 
@@ -946,10 +959,12 @@ object SparkEntry {
       Dedup.minhashPairs(t(s, d, "documents"), "doc_id", "text",
         threshold = 0.5)),
     // duplicate clusters: connected components over the exact J>=0.5 pair
-    // graph (min-label propagation; singletons label themselves)
+    // graph (singletons label themselves), on both tiers: the corpus
+    // sits under the driver gate, so the distributed tier is forced once
     "dedup_clusters" -> ((s, d) =>
-      Dedup.clusters(t(s, d, "documents"), "doc_id", "text",
-        threshold = 0.5)),
+      bothTiers("dedup_clusters", Dedup.driverDedupMaxRows(s))(gate =>
+        Dedup.clusters(t(s, d, "documents"), "doc_id", "text",
+          threshold = 0.5, maxDriverRows = gate))),
     // incremental cluster maintenance: cluster 90% of the corpus, fold
     // the remaining 10% in via clustersAppend — the oracle recomputes
     // the FULL clustering, so the fold's exact-equality claim is the
@@ -2381,7 +2396,10 @@ object SparkEntry {
       val cn = ep("c_nation"); val nr = ep("n_region"); val sn = ep("s_nation")
       val edges = Seq(cn, nr, sn, comp(cn, nr), comp(sn, nr),
         ep("o_cust"), ep("n_prev")).reduce(_ unionByName _)
-      GraphAlgos.triangleCount(edges, "x", "y")
+      // both tiers: the edges sit under the driver gate, so the
+      // distributed tier is forced once
+      bothTiers("graph_triangles", Dedup.driverCcMaxEdges(s))(gate =>
+        GraphAlgos.triangleCount(edges, "x", "y", gate))
     }),
     // BFS shortest-path distances from the max-key nation, walking the
     // n_prev chain (24→23→…→0) plus reversed c_nation (nation→customer)

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import graft.core.Graph.cacheOnce
 
 /** Deduplication for large text corpora. Four tiers, cheapest first:
@@ -281,18 +282,155 @@ object Dedup {
   }
 
   /** Duplicate clusters from near-dup pairs: the connected components of
-    * the pair graph ([[connectedComponents]]: one driver union-find while
-    * the pairs fit the session's driver gate, random-mate contraction
-    * above it). Returns (id, cluster) for EVERY document, singletons
-    * labeling themselves — the canonical-pick stage of a dedup pipeline
-    * keeps `min(id) == id` rows.
+    * the [[minhashPairs]] graph. Returns (id, cluster) for EVERY
+    * document, singletons labeling themselves — the canonical-pick stage
+    * of a dedup pipeline keeps `min(id) == id` rows.
+    *
+    * Two tiers, same answer (differential-tested across the gate). A
+    * corpus of at most `maxDriverRows` word-shingle rows (the session's
+    * gate, [[driverDedupMaxRows]]) collects its rows ONCE and clusters
+    * on the driver ([[clustersDriver]]): the same LSH candidates, the
+    * same exact Jaccard verify, one union-find. Above it, `minhashPairs`
+    * runs distributed and [[connectedComponents]] labels its pairs (one
+    * driver union-find while the pairs fit the CC gate, random-mate
+    * contraction above it). A negative gate forces the distributed tier.
     */
   def clusters(df: DataFrame, idCol: String, textCol: String,
-               threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, threshold)
-      .select(col("id_a"), col("id_b"))
-    connectedComponents(pairs, df.select(col(idCol).as("id")))
-      .select(col("id").as(idCol), col("cluster"))
+               threshold: Double = 0.5,
+               maxDriverRows: Long = driverDedupMaxRows()): DataFrame = {
+    val ids = df.select(col(idCol).as("id"))
+    val rows = wordShingleRows(df, idCol, textCol)
+    // one job: a Dataset count adds a shuffle-stage job under AQE
+    val labels =
+      if (rows.rdd.count() <= maxDriverRows) clustersDriver(rows, ids, threshold)
+      else connectedComponents(minhashPairs(df, idCol, textCol, threshold)
+        .select(col("id_a"), col("id_b")), ids)
+    labels.select(col("id").as(idCol), col("cluster"))
+  }
+
+  /** Each document's distinct word-shingle hashes, sorted: document `d`
+    * has id `ids(d)` and the set `sh(off(d) until off(d + 1))`.
+    */
+  private[analytics] final class DocSets(val ids: Array[Long],
+                                         off: Array[Int], sh: Array[Long]) {
+    /** Minhash slot `i` of document `d`, as [[minhashSignatures]]
+      * computes it: the minimum over its shingles of Spark's
+      * `xxhash64(h, i)` (seed 42, the long `h` hashed, then the int `i`).
+      */
+    def minHash(d: Int, i: Int): Long = {
+      var m = Long.MaxValue
+      for (j <- off(d) until off(d + 1)) {
+        val v = XXH64.hashInt(i, XXH64.hashLong(sh(j), 42L))
+        if (v < m) m = v
+      }
+      m
+    }
+
+    /** Exact Jaccard of documents `a` and `b`, computed as
+      * [[jaccardVerify]] does: a two-pointer intersect count over the
+      * sorted sets, then `inter / (|A| + |B| − inter)`.
+      */
+    def jaccard(a: Int, b: Int): Double = {
+      var i = off(a); var j = off(b); var inter = 0
+      while (i < off(a + 1) && j < off(b + 1)) {
+        if (sh(i) < sh(j)) i += 1
+        else if (sh(i) > sh(j)) j += 1
+        else { inter += 1; i += 1; j += 1 }
+      }
+      inter.toDouble / (off(a + 1) - off(a) + off(b + 1) - off(b) - inter)
+    }
+  }
+
+  /** [[DocSets]] from collected `(id, h)` shingle rows. A row with a
+    * null id joins no document, as a null id never pairs in
+    * [[minhashPairs]]' join.
+    */
+  private[analytics] def docSets(rows: Array[org.apache.spark.sql.Row]): DocSets = {
+    val index = new graft.LongLongMap()
+    val docOf = rows.map(r =>
+      if (r.isNullAt(0)) -1
+      else {
+        val id = r.getLong(0)
+        val d = index.getOrElse(id, index.size.toLong).toInt
+        if (d == index.size) index.put(id, d)
+        d
+      })
+    val ids = new Array[Long](index.size)
+    val off = new Array[Int](ids.length + 1)
+    docOf.foreach(d => if (d >= 0) off(d + 1) += 1)
+    for (d <- ids.indices) off(d + 1) += off(d)
+    val sh = new Array[Long](off(ids.length))
+    val fill = off.clone()
+    for (j <- rows.indices; d = docOf(j) if d >= 0) {
+      ids(d) = rows(j).getLong(0); sh(fill(d)) = rows(j).getLong(1); fill(d) += 1
+    }
+    // sort each document's hashes and drop repeats, compacting in place
+    var m = 0
+    for (d <- ids.indices) {
+      java.util.Arrays.sort(sh, off(d), off(d + 1))
+      val from = m
+      for (j <- off(d) until off(d + 1))
+        if (j == off(d) || sh(j) != sh(j - 1)) { sh(m) = sh(j); m += 1 }
+      off(d) = from
+    }
+    off(ids.length) = m
+    new DocSets(ids, off, java.util.Arrays.copyOf(sh, m))
+  }
+
+  /** Driver tier of [[clusters]]: the word-shingle rows collect once
+    * into [[DocSets]], then each of the k = 64 minhash slots of
+    * [[minhashPairs]] groups the documents by their value there. Every
+    * pair inside a group is a candidate, exactly as in the distributed
+    * band join; a candidate whose ends already share a union-find root
+    * is skipped, and any other is verified by exact Jaccard and, at
+    * `threshold` or above, united. No candidate set is held, so the
+    * driver holds the rows, the sets and the union-find whatever the
+    * group sizes. The labels leave through [[connectedComponents]]'
+    * tail: a driver-built table, left-joined to every row of `ids`.
+    */
+  private def clustersDriver(rows: DataFrame, ids: DataFrame,
+                             threshold: Double): DataFrame = {
+    val docs = docSets(rows.select(col("id"), col("h")).collect())
+    val n = docs.ids.length
+    val uf = new MinUnionFind
+    val sig = new Array[Long](n)
+    // each group is a chain: next(d) is the previous document with d's value
+    val next = new Array[Int](n)
+    val members = new Array[Int](n)
+    val roots = new Array[Long](n)
+    for (i <- 0 until 64) {
+      val last = new graft.LongLongMap(n)
+      for (d <- 0 until n) {
+        sig(d) = docs.minHash(d, i)
+        next(d) = last.getOrElse(sig(d), -1L).toInt
+        last.put(sig(d), d)
+      }
+      for (d <- 0 until n if next(d) >= 0 && last.getOrElse(sig(d), -1L) == d) {
+        var m = 0
+        var x = d
+        while (x >= 0) {
+          members(m) = x; roots(m) = uf.find(docs.ids(x)); m += 1; x = next(x)
+        }
+        var a = 0
+        while (a < m) {
+          var b = a + 1
+          while (b < m) {
+            if (roots(a) != roots(b) &&
+                docs.jaccard(members(a), members(b)) >= threshold) {
+              val (ra, rb) = (roots(a), roots(b))
+              uf.union(docs.ids(members(a)), docs.ids(members(b)))
+              for (c <- 0 until m)
+                if (roots(c) == ra || roots(c) == rb) roots(c) = math.min(ra, rb)
+            }
+            b += 1
+          }
+          a += 1
+        }
+      }
+    }
+    val tail = new LabelTail(ids.sparkSession)
+    val (labels, small) = tail.labels(uf)
+    tail.done(labelEvery(ids)(labels, small))
   }
 
   /** Leakage-controlled train/holdout split: the side is a pure function
@@ -306,12 +444,14 @@ object Dedup {
     * from the same md5 sample key the plain split uses, applied to the
     * cluster label (min member id), so the assignment is deterministic,
     * engine-independent, and stable under corpus growth as long as a
-    * cluster's minimum id is stable. Returns (idCol, cluster, split).
+    * cluster's minimum id is stable. `maxDriverRows` is [[clusters]]'
+    * gate. Returns (idCol, cluster, split).
     */
   def clusterHoldout(df: DataFrame, idCol: String, textCol: String,
-                     holdoutFraction: Double, threshold: Double = 0.5)
+                     holdoutFraction: Double, threshold: Double = 0.5,
+                     maxDriverRows: Long = driverDedupMaxRows())
       : DataFrame = {
-    val lbl = clusters(df, idCol, textCol, threshold)
+    val lbl = clusters(df, idCol, textCol, threshold, maxDriverRows)
     val key = TextOps.sampleKey(col("cluster"))
     lbl.select(col(idCol), col("cluster"),
       when(key < holdoutFraction, lit("holdout"))
@@ -356,6 +496,27 @@ object Dedup {
     */
   def driverCcMaxForest(spark: SparkSession = SparkSession.active): Long =
     graft.DriverMemory.rows(spark, HeapBytesPerForestRow, CollectBytesPerForestRow)
+
+  /** Driver heap one word-shingle row costs in the driver tier of
+    * [[clusters]] at its high point (the collected rows beside the
+    * document sets being built), and the serialized task results it adds
+    * to the collect. Measured on the worst case, one shingle per doc:
+    * 2 M one-word docs in identical pairs (so every id enters the
+    * union-find), k = 64, `local[4]` on a 4-core machine. In heap after
+    * GC: 180 B per row with the rows and the sets both held, 21 B once
+    * only the sets are, 130 B at the first slot with every id in the
+    * union-find; 9.9 B of task results per row.
+    */
+  val HeapBytesPerShingleRow: Long = 180L
+  val CollectBytesPerShingleRow: Long = 10L
+
+  /** Row gate for the driver tier of [[clusters]]: corpora of up to this
+    * many word-shingle rows collect them once and cluster on the driver.
+    * From the session ([[graft.DriverMemory]]).
+    */
+  def driverDedupMaxRows(spark: SparkSession = SparkSession.active): Long =
+    graft.DriverMemory.rows(spark, HeapBytesPerShingleRow,
+      CollectBytesPerShingleRow)
 
   /** Block-manager hygiene for iterative operators: eagerly checkpoint
     * `result` so it is self-contained, then unpersist every `held`
@@ -428,10 +589,15 @@ object Dedup {
                           maxDriverEdges: Long = driverCcMaxEdges(),
                           maxDriverForest: Long = driverCcMaxForest())
       : DataFrame =
-    withLabels(pairs, maxDriverEdges, maxDriverForest) { (labels, small) =>
-      ids.join(if (small) broadcast(labels) else labels, Seq("id"), "left")
-        .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    }
+    withLabels(pairs, maxDriverEdges, maxDriverForest)(labelEvery(ids))
+
+  /** The `finish` of [[connectedComponents]]: a row for every id in
+    * `ids`, an id with no label labeling itself.
+    */
+  private def labelEvery(ids: DataFrame)(labels: DataFrame,
+                                         small: Boolean): DataFrame =
+    ids.join(if (small) broadcast(labels) else labels, Seq("id"), "left")
+      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
 
   /** Component labels for every node that APPEARS in `pairs` (either
     * endpoint, self-loops included) — the natural contract for graph
@@ -523,28 +689,22 @@ object Dedup {
     }
   }
 
-  /** The engine of [[connectedComponents]] and [[componentLabels]]:
-    * labels `(id, cluster)` for every endpoint of `pairs` go to `finish`,
-    * whose result is checkpointed before every intermediate (checkpoints
-    * and the label broadcasts) is released. `finish`'s flag says the
-    * labels are a driver-built table small enough for a join to
-    * broadcast: Catalyst cannot estimate an RDD-backed frame, and a hint
-    * on a frame that no join reads is dropped with a warning.
+  /** The end every label engine here shares: labels built on the
+    * driver leave as a table ([[fromDriver]]), the caller's `finish`
+    * reads them, and [[done]] checkpoints that result before it releases
+    * every `held` intermediate and label broadcast.
     */
-  private def withLabels(pairs: DataFrame, maxDriverEdges: Long,
-                         maxDriverForest: Long)
-                        (finish: (DataFrame, Boolean) => DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint().cappedStats
-    val nPairs = pr.count()
-    val held = scala.collection.mutable.ArrayBuffer[DataFrame](pr)
-    val broadcasts =
+  private final class LabelTail(spark: SparkSession) {
+    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    private val broadcasts =
       scala.collection.mutable.ArrayBuffer[org.apache.spark.broadcast.Broadcast[_]]()
-    // (id, v) rows from two driver arrays: one broadcast holds them once
-    // (closure capture would ship them once per task), and rows are
-    // built inside tasks, never as a boxed driver array
+
+    /** `(id, cluster)` rows from two driver arrays: one broadcast holds
+      * them once (closure capture would ship them once per task), and
+      * rows are built inside tasks, never as a boxed driver array.
+      */
     def fromDriver(ids: Array[Long], vs: Array[Long]): DataFrame = {
+      import spark.implicits._
       val bc = spark.sparkContext.broadcast((ids, vs))
       broadcasts += bc
       val total = ids.length
@@ -558,6 +718,41 @@ object Dedup {
         }
         .toDF("id", "cluster")
     }
+
+    /** A union-find's labels as a table, and whether a join may
+      * broadcast it (24 B per two-long UnsafeRow).
+      */
+    def labels(uf: MinUnionFind): (DataFrame, Boolean) = {
+      val (ids, mins) = uf.labels
+      (fromDriver(ids, mins),
+        24L * ids.length <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+    }
+
+    def done(result: DataFrame): DataFrame = {
+      val out = releasing(result, held.toSeq)
+      broadcasts.foreach(_.destroy())
+      out
+    }
+  }
+
+  /** The engine of [[connectedComponents]] and [[componentLabels]]:
+    * labels `(id, cluster)` for every endpoint of `pairs` go to `finish`,
+    * whose result is checkpointed before every intermediate (checkpoints
+    * and the label broadcasts) is released. `finish`'s flag says the
+    * labels are a driver-built table small enough for a join to
+    * broadcast: Catalyst cannot estimate an RDD-backed frame, and a hint
+    * on a frame that no join reads is dropped with a warning.
+    */
+  private def withLabels(pairs: DataFrame, maxDriverEdges: Long,
+                         maxDriverForest: Long)
+                        (finish: (DataFrame, Boolean) => DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    val tail = new LabelTail(spark)
+    val held = tail.held
+    val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint().cappedStats
+    // one job: a Dataset count adds a shuffle-stage job under AQE
+    val nPairs = pr.rdd.count()
+    held += pr
     // RANDOM-MATE CONTRACTION (the classic PRAM random-mating CC, the
     // same family as the MapReduce algorithms of Kiveris et al. 2014):
     // each level flips a deterministic per-(node, level) coin; every TAIL
@@ -684,10 +879,7 @@ object Dedup {
         m.collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
         releaseBlocks(m)
       }
-      val (ids, mins) = uf.labels
-      // 24 B per two-long UnsafeRow
-      (fromDriver(ids, mins),
-        24L * ids.length <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+      tail.labels(uf)
     } else {
       // resolve the cross-stage forest (mate maps + the residual's
       // non-root ids under their roots): depth ≤ stages (stage maps have
@@ -703,7 +895,7 @@ object Dedup {
       val tailed = ids.indices.filter(k => ids(k) != mins(k)).toArray
       val residual =
         if (tailed.isEmpty) None
-        else Some(fromDriver(tailed.map(ids), tailed.map(mins))
+        else Some(tail.fromDriver(tailed.map(ids), tailed.map(mins))
           .select(col("id"), col("cluster").as("par")))
       val stages = mates.size + residual.size
       var fp = (mates ++ residual).reduce(_ unionByName _)
@@ -749,9 +941,7 @@ object Dedup {
     val all = selfIds.fold(labels)(s => labels.unionByName(
       s.join(if (small) broadcast(labels) else labels, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("cluster"))))
-    val out = releasing(finish(all, small && selfIds.isEmpty), held.toSeq)
-    broadcasts.foreach(_.destroy())
-    out
+    tail.done(finish(all, small && selfIds.isEmpty))
   }
 
   /** Cross-corpus near-dup (incremental-ingest dedup): for each document in

@@ -2,8 +2,8 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType,
+  FloatType, LongType, MapType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Whole-graph analytics over edge lists — degree structure and
@@ -92,8 +92,7 @@ object GraphAlgos {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    // one job: a Dataset count adds a shuffle-stage job under AQE
-    if (e.rdd.count() <= maxDriverEdges)
+    if (driverTier(e, maxDriverEdges, "src", "dst"))
       return pageRankDriver(e, nodes.schema("node").dataType, iterations,
         damping, sources)
     // restart-mass column: uniform 1/N, or 1/|S| on source nodes only
@@ -182,21 +181,13 @@ object GraphAlgos {
                              damping: Double,
                              sources: Option[DataFrame]): DataFrame = {
     val rows = e.select(col("src").cast(nt), col("dst").cast(nt)).collect()
-    val ids = new java.util.HashMap[Any, Integer]()
-    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
     // a null endpoint is id -1 in the edge arrays: no edge at it carries
     // rank; it joins the node set last
-    var hasNull = false
-    def id(k: Any): Int =
-      if (k == null) { hasNull = true; -1 }
-      else {
-        val i = ids.get(k)
-        if (i != null) i.intValue
-        else { ids.put(k, keys.length); keys += k; keys.length - 1 }
-      }
-    val src = rows.map(r => id(r.get(0)))
-    val dst = rows.map(r => id(r.get(1)))
-    if (hasNull) keys += null
+    val ids = new NodeIds
+    val src = rows.map(r => ids(r.get(0)))
+    val dst = rows.map(r => ids(r.get(1)))
+    val keys = ids.keys
+    if (src.contains(-1) || dst.contains(-1)) keys += null
     val n = keys.length
     val odeg = new Array[Int](n)
     src.foreach(u => if (u >= 0) odeg(u) += 1)
@@ -208,7 +199,7 @@ object GraphAlgos {
         java.util.Arrays.fill(restart, 1.0 / n)
       case Some(s) =>
         val present = s.toDF("node").select(col("node").cast(nt)).distinct()
-          .collect().flatMap(r => Option(ids.get(r.get(0))).map(_.intValue))
+          .collect().flatMap(r => ids.get(r.get(0)))
         require(present.nonEmpty,
           "personalizedPageRank: no source present in graph")
         present.foreach(v => restart(v) = 1.0 / present.length)
@@ -270,26 +261,100 @@ object GraphAlgos {
     * against the canonical edge set. Orientation bounds every node's
     * out-degree by O(√E) on ANY graph (each triangle has exactly one
     * pivot, so it is counted once) — the wedge self-join's fan-out is
-    * capped where the naive neighbor join explodes on hubs. All joins
-    * hash-partition on node/edge keys; the result is computed as one
-    * lazy plan (two tiny aggregates cross-joined), no driver action.
+    * capped where the naive neighbor join explodes on hubs.
+    *
+    * Two tiers, same answer (differential-tested across the gate, the
+    * same design as [[pageRank]]). Edge lists up to `maxDriverEdges`
+    * (the session's driver gate, [[Dedup.driverCcMaxEdges]]) collect
+    * ONCE and count on the driver ([[trianglesDriver]]). Above the gate
+    * all joins hash-partition on node/edge keys and the result is one
+    * lazy plan (two tiny aggregates cross-joined) with no driver action.
+    * A negative gate forces the distributed tier.
     *
     * Returns one row `(n_edges, n_triangles)`.
     */
-  def triangleCount(edges: DataFrame, srcCol: String,
-                    dstCol: String): DataFrame = {
+  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
+                    maxDriverEdges: Long = Dedup.driverCcMaxEdges())
+      : DataFrame = {
+    val e = edges.select(col(srcCol).as("x"), col(dstCol).as("y"))
+    if (driverTier(e, maxDriverEdges, "x", "y")) return trianglesDriver(e)
     // und feeds FOUR consumers (degree agg, orientation join, wedge
     // close, edge count) and oriented feeds both sides of the wedge
     // self-join — Catalyst recomputes identical subplans per consumer
     // (same finding as the dedup self-join sides), so materialize each
     // once; both are O(E) narrow tables
-    val und = undirected(edges, srcCol, dstCol)
-      .localCheckpoint(true).cappedStats
+    val und = undirected(e, "x", "y").localCheckpoint(true).cappedStats
     val oriented = orient(und, degrees(und))
     Dedup.releasing(
       und.agg(count(lit(1)).as("n_edges")).crossJoin(
         triangles(oriented, und).agg(count(lit(1)).as("n_triangles"))),
       Seq(und, oriented))
+  }
+
+  /** Driver tier of [[triangleCount]] on its projected `(x, y)` edge
+    * list: one collect, a dense id per node key, and [[undirected]]'s
+    * canonical edges as one sorted, deduplicated array of packed id
+    * pairs. Each edge is oriented by (degree, id), as in [[orient]],
+    * into a CSR out-adjacency with sorted rows; every oriented edge
+    * `u → v` then closes `|out(u) ∩ out(v)|` triangles, counted by a
+    * two-pointer merge — the sorted-list intersection worst-case-optimal
+    * joins put in place of the wedge self-join.
+    *
+    * Memory: the collected rows plus about 20 B per edge (the packed
+    * pair, the oriented edge's tail and its CSR target) and a few `Int`
+    * arrays per node, inside the 175 B per pair that
+    * [[Dedup.driverCcMaxEdges]] budgets.
+    */
+  private def trianglesDriver(e: DataFrame): DataFrame = {
+    val ids = new NodeIds
+    // least/greatest widen the two endpoint types, as undirected does
+    val nt = e.select(least(col("x"), col("y"))).schema.head.dataType
+    // null endpoints and self-loops drop out, as in undirected
+    val packed = e.select(col("x").cast(nt), col("y").cast(nt)).collect()
+      .flatMap { r =>
+        val (a, b) = (ids(r.get(0)), ids(r.get(1)))
+        if (a < 0 || b < 0 || a == b) None
+        else Some(math.min(a, b).toLong << 32 | math.max(a, b))
+      }
+    java.util.Arrays.sort(packed)
+    var m = 0
+    for (j <- packed.indices)
+      if (j == 0 || packed(j) != packed(j - 1)) { packed(m) = packed(j); m += 1 }
+    val pairs = java.util.Arrays.copyOf(packed, m)
+    val n = ids.keys.length
+    val deg = new Array[Int](n)
+    pairs.foreach { p => deg((p >>> 32).toInt) += 1; deg(p.toInt) += 1 }
+    // orient low → high by (degree, id): each triangle closes once, at
+    // its lowest node
+    def below(a: Int, b: Int) = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+    val off = new Array[Int](n + 1)
+    val tails = pairs.map { p =>
+      val (a, b) = ((p >>> 32).toInt, p.toInt)
+      if (below(a, b)) a else b
+    }
+    tails.foreach(u => off(u + 1) += 1)
+    for (u <- 0 until n) off(u + 1) += off(u)
+    val out = new Array[Int](pairs.length)
+    val fill = off.clone()
+    pairs.indices.foreach { j =>
+      val (a, b) = ((pairs(j) >>> 32).toInt, pairs(j).toInt)
+      val u = tails(j)
+      out(fill(u)) = if (u == a) b else a
+      fill(u) += 1
+    }
+    for (u <- 0 until n) java.util.Arrays.sort(out, off(u), off(u + 1))
+    var tri = 0L
+    for (u <- 0 until n; k <- off(u) until off(u + 1)) {
+      val v = out(k)
+      var i = off(u); var j = off(v)
+      while (i < off(u + 1) && j < off(v + 1)) {
+        if (out(i) < out(j)) i += 1
+        else if (out(i) > out(j)) j += 1
+        else { tri += 1; i += 1; j += 1 }
+      }
+    }
+    driverFrame(e.sparkSession, nt, Nil, "n_edges" -> LongType,
+      "n_triangles" -> LongType)(Seq(Row(pairs.length.toLong, tri)))
   }
 
   /** Canonical undirected edges `(a, b)`, a < b; self-loops and rows
@@ -557,7 +622,7 @@ object GraphAlgos {
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull)
       .distinct().localCheckpoint(true).cappedStats
-    if (e.count() <= maxDriverEdges) {
+    if (driverTier(e, maxDriverEdges, "u", "v")) {
       val r = bfsDriver(e, sources, maxDepth) // collected — independent of e
       Dedup.releaseBlocks(e)
       return r
@@ -644,6 +709,47 @@ object GraphAlgos {
     dist
   }
 
+  /** The driver-tier decision of every gated operator here: the edge
+    * list `e` goes to the driver when it has at most `maxDriverEdges`
+    * rows and Java equality on its `keys` columns is the equality Spark
+    * groups and joins them by, since the driver tiers key nodes in Java
+    * hash maps. A binary key compares by reference there, and a float
+    * key tells -0.0 from 0.0 where Spark normalizes both, so such keys
+    * take the distributed tier at any size. The count is `rdd.count()`:
+    * one job, where a Dataset count adds a shuffle-stage job under AQE.
+    */
+  private def driverTier(e: DataFrame, maxDriverEdges: Long,
+                         keys: String*): Boolean = {
+    def javaEquality(t: DataType): Boolean = t match {
+      case BinaryType | FloatType | DoubleType => false
+      case ArrayType(et, _) => javaEquality(et)
+      case MapType(kt, vt, _) => javaEquality(kt) && javaEquality(vt)
+      case StructType(fs) => fs.forall(f => javaEquality(f.dataType))
+      case _ => true
+    }
+    keys.forall(k => javaEquality(e.schema(k).dataType)) &&
+      e.rdd.count() <= maxDriverEdges
+  }
+
+  /** Dense `Int` ids over a driver tier's node keys, numbered in the
+    * order they first arrive; a null key is -1 and gets no id.
+    */
+  private final class NodeIds {
+    private val index = new java.util.HashMap[Any, Integer]()
+    /** Every key with an id, at its id. */
+    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+
+    def apply(k: Any): Int =
+      if (k == null) -1
+      else {
+        val i = index.get(k)
+        if (i != null) i.intValue
+        else { index.put(k, keys.length); keys += k; keys.length - 1 }
+      }
+
+    def get(k: Any): Option[Int] = Option(index.get(k)).map(_.intValue)
+  }
+
   /** A driver tier's result as a one-partition frame: the `keys` columns
     * take the node type `nt` (the edge list's original one), the non-null
     * `vals` follow.
@@ -697,7 +803,7 @@ object GraphAlgos {
         col(weightCol).cast("long").as("w"))
       .where(col("u").isNotNull && col("v").isNotNull && col("w") >= 0)
       .localCheckpoint(true).cappedStats
-    if (e.count() <= maxDriverEdges) {
+    if (driverTier(e, maxDriverEdges, "u", "v")) {
       val r = dijkstraDriver(e, sources) // collected — independent of e
       Dedup.releaseBlocks(e)
       return r
@@ -2360,7 +2466,7 @@ object GraphAlgos {
     val (nRaw, nDist) = (cnt.getLong(0), cnt.getLong(1))
     val e = (if (nRaw > (1.3 * nDist).toLong) raw.distinct() else raw)
       .localCheckpoint(true).cappedStats
-    if (e.count() <= maxDriverEdges) {
+    if (driverTier(e, maxDriverEdges, "u", "v")) {
       val r = sccDriver(e) // collected — independent of e
       Dedup.releaseBlocks(e)
       r
@@ -2802,7 +2908,7 @@ object GraphAlgos {
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER).cappedStats
     val nodes = e.select(col("u").as("node"))
       .unionByName(e.select(col("v").as("node"))).distinct()
-    if (e.count() <= maxDriverEdges) {
+    if (driverTier(e, maxDriverEdges, "u", "v")) {
       val r = brandesDriver(e, nodes, sources, maxDepth)
       Dedup.releaseBlocks(e)
       return r
@@ -3135,7 +3241,7 @@ object GraphAlgos {
     require(src.count() <= Long.MaxValue / lcm,
       "harmonicCentrality: source count would overflow the exact sum")
     val dists =
-      if (e.count() <= maxDriverEdges) keyedBfsDriver(e, src, maxDepth)
+      if (driverTier(e, maxDriverEdges, "u", "v")) keyedBfsDriver(e, src, maxDepth)
       else keyedBfs(e, src, maxDepth)
     Dedup.releasing(
       dists.where(col("d") > 0)

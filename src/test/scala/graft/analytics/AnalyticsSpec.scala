@@ -117,36 +117,47 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(got === Map("a b" -> 3L, "b a" -> 1L)) // "x" has no bigram
   }
 
+  /** The two tiers of [[Dedup.clusters]]: the session's driver gate and
+    * a negative gate that forces the distributed tier.
+    */
+  private lazy val clusterTiers =
+    Seq("driver tier" -> Dedup.driverDedupMaxRows(spark), "distributed tier" -> -1L)
+
   test("clusters: connected components over near-dup pairs") {
-    val cl = Dedup.clusters(docs, "doc_id", "text", threshold = 0.5)
-      .as[(Long, Long)].collect().toMap
-    // 0, 1, 3 are one near-dup component labeled by its min id
-    assert(cl(0L) === 0L && cl(1L) === 0L && cl(3L) === 0L)
-    assert(cl(2L) === 2L && cl(4L) === 4L) // singletons label themselves
-    assert(cl.size === 5)
+    for ((tier, gate) <- clusterTiers) withClue(s"$tier: ") {
+      val cl = Dedup.clusters(docs, "doc_id", "text", threshold = 0.5,
+          maxDriverRows = gate)
+        .as[(Long, Long)].collect().toMap
+      // 0, 1, 3 are one near-dup component labeled by its min id
+      assert(cl(0L) === 0L && cl(1L) === 0L && cl(3L) === 0L)
+      assert(cl(2L) === 2L && cl(4L) === 4L) // singletons label themselves
+      assert(cl.size === 5)
+    }
   }
 
   test("clusterHoldout: near-dup cluster members share a side, split is total") {
-    val split = Dedup.clusterHoldout(docs, "doc_id", "text",
-      holdoutFraction = 0.5, threshold = 0.5)
-      .as[(Long, Long, String)].collect()
-    assert(split.length === 5) // every document, exactly once
-    val side = split.map(r => r._1 -> r._3).toMap
-    // 0, 1, 3 are one near-dup cluster: they MUST land on the same side
-    assert(side(0L) === side(1L) && side(0L) === side(3L))
-    // side is a pure function of the cluster label (determinism)
-    val again = Dedup.clusterHoldout(docs, "doc_id", "text",
-      holdoutFraction = 0.5, threshold = 0.5)
-      .as[(Long, Long, String)].collect().map(r => r._1 -> r._3).toMap
-    assert(side === again)
-    // and it matches the md5 sample-key rule on the cluster label
-    val keyed = split.map { case (id, cl, s) =>
-      val key = spark.range(1)
-        .select(TextOps.sampleKey(org.apache.spark.sql.functions.lit(cl)))
-        .head().getDouble(0)
-      (s == "holdout") === (key < 0.5)
+    for ((tier, gate) <- clusterTiers) withClue(s"$tier: ") {
+      val split = Dedup.clusterHoldout(docs, "doc_id", "text",
+        holdoutFraction = 0.5, threshold = 0.5, maxDriverRows = gate)
+        .as[(Long, Long, String)].collect()
+      assert(split.length === 5) // every document, exactly once
+      val side = split.map(r => r._1 -> r._3).toMap
+      // 0, 1, 3 are one near-dup cluster: they MUST land on the same side
+      assert(side(0L) === side(1L) && side(0L) === side(3L))
+      // side is a pure function of the cluster label (determinism)
+      val again = Dedup.clusterHoldout(docs, "doc_id", "text",
+        holdoutFraction = 0.5, threshold = 0.5, maxDriverRows = gate)
+        .as[(Long, Long, String)].collect().map(r => r._1 -> r._3).toMap
+      assert(side === again)
+      // and it matches the md5 sample-key rule on the cluster label
+      val keyed = split.map { case (id, cl, s) =>
+        val key = spark.range(1)
+          .select(TextOps.sampleKey(org.apache.spark.sql.functions.lit(cl)))
+          .head().getDouble(0)
+        (s == "holdout") === (key < 0.5)
+      }
+      assert(keyed.forall(identity))
     }
-    assert(keyed.forall(identity))
   }
 
   test("contaminationReport: exact per-benchmark overlap fractions") {

@@ -104,11 +104,16 @@ class DedupPropertySpec extends AnyFunSuite {
     }
   }
 
+  /** The two tiers of [[Dedup.clusters]]: the session's driver gate
+    * (every corpus here sits under it) and a negative gate that forces
+    * the distributed tier.
+    */
+  private lazy val tiers =
+    Seq("driver tier" -> Dedup.driverDedupMaxRows(spark), "distributed tier" -> -1L)
+
   test("law: clusters equal union-find over brute-force pairs") {
     forAllSampled { docs =>
       val df = docs.toDF("doc_id", "text")
-      val got = Dedup.clusters(df, "doc_id", "text", threshold = 0.5)
-        .as[(Long, Long)].collect().toMap
       // union-find
       val parent = scala.collection.mutable.Map(docs.map(d => d._1 -> d._1): _*)
       def find(x: Long): Long =
@@ -118,8 +123,53 @@ class DedupPropertySpec extends AnyFunSuite {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expect = docs.map(d => d._1 -> find(d._1)).toMap
-      assert(got === expect)
+      for ((tier, gate) <- tiers) withClue(s"$tier: ") {
+        val got = Dedup.clusters(df, "doc_id", "text", threshold = 0.5,
+            maxDriverRows = gate)
+          .as[(Long, Long)].collect().toMap
+        assert(got === expect)
+      }
     }
+  }
+
+  test("driver minhash signatures equal minhashSignatures") {
+    forAllSampled { docs =>
+      val df = docs.toDF("doc_id", "text")
+      val sig = Dedup.minhashSignatures(df, "doc_id", "text")
+        .as[(Long, Seq[Long])].collect().toMap
+      val sets = Dedup.docSets(Dedup.wordShingleRows(df, "doc_id", "text")
+        .select("id", "h").collect())
+      val got = sets.ids.indices.map(d =>
+        sets.ids(d) -> (0 until 64).map(sets.minHash(d, _))).toMap
+      assert(got === sig)
+    }
+  }
+
+  test("clusters tiers agree on 2 000 identical docs beside singletons") {
+    // one candidate group of 2 000 at every slot: the driver tier unites
+    // it at the first slot and skips its pairs from then on
+    val dup = (0 until 2000).map(i => (i.toLong, "the same five words here"))
+    val single = (0 until 20).map(i =>
+      (10000L + i, s"singleton $i with words ${i * 7} of its own"))
+    val df = (dup ++ single).toDF("doc_id", "text")
+    val Seq(drv, dist) = tiers.map { case (_, gate) =>
+      Dedup.clusters(df, "doc_id", "text", maxDriverRows = gate)
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(drv === dist)
+    assert(drv.size === 2020)
+    assert((0L until 2000L).forall(drv(_) == 0L))
+    assert(single.forall { case (id, _) => drv(id) == id })
+  }
+
+  test("clusters under the driver gate runs at most five Spark jobs") {
+    // the gate count, the shingle collect, the label broadcast, the
+    // result's checkpoint and the caller's collect; the distributed tier
+    // runs 19
+    val docs = (0 until 60).map(i =>
+      (i.toLong, s"doc ${i % 20} shares these words with its twins")).toDF("doc_id", "text")
+    assert(graft.TestJobs.count(spark)(
+      Dedup.clusters(docs, "doc_id", "text").collect()) <= 5)
   }
 
   test("law: distributed CC tier (shortcutting) equals the driver tier") {
@@ -152,13 +202,17 @@ class DedupPropertySpec extends AnyFunSuite {
       val df = docs.toDF("doc_id", "text")
       val corpus = df.where(pmod(col("doc_id"), lit(3)) =!= 0)
       val batch = df.where(pmod(col("doc_id"), lit(3)) === 0)
-      val lbl = Dedup.clusters(corpus, "doc_id", "text", threshold = 0.5)
-      val incr = Dedup.clustersAppend(corpus, lbl, batch, "doc_id", "text",
-          threshold = 0.5)
-        .as[(Long, Long)].collect().toMap
-      val full = Dedup.clusters(df, "doc_id", "text", threshold = 0.5)
-        .as[(Long, Long)].collect().toMap
-      assert(incr === full)
+      for ((tier, gate) <- tiers) withClue(s"$tier: ") {
+        val lbl = Dedup.clusters(corpus, "doc_id", "text", threshold = 0.5,
+          maxDriverRows = gate)
+        val incr = Dedup.clustersAppend(corpus, lbl, batch, "doc_id", "text",
+            threshold = 0.5)
+          .as[(Long, Long)].collect().toMap
+        val full = Dedup.clusters(df, "doc_id", "text", threshold = 0.5,
+            maxDriverRows = gate)
+          .as[(Long, Long)].collect().toMap
+        assert(incr === full)
+      }
     }
   }
 
@@ -246,16 +300,20 @@ class DedupPropertySpec extends AnyFunSuite {
   }
 
   test("pair operators leave no cached table behind across fresh corpora") {
-    // minhashPairs (under clusters), crossPairs and simhashPairs each
-    // cache a table their result reads; the result is checkpointed and
-    // the table released, so a batch job's every new corpus adds nothing
+    // minhashPairs (under clusters' distributed tier), crossPairs and
+    // simhashPairs each cache a table their result reads; the result is
+    // checkpointed and the table released, and clusters' driver tier
+    // caches nothing, so a batch job's every new corpus adds nothing
     def cached() = org.apache.spark.sql.TestCacheEntries.count(spark)
     val before = cached()
     (1 to 3).foreach { k =>
       def corpus(from: Long) = (0 until 12).map(i => (from + i,
         s"alpha beta gamma ${i % 3} delta corpus $k eps")).toDF("doc_id", "text")
       val docs = corpus(0L)
-      assert(Dedup.clusters(docs, "doc_id", "text").count() === 12)
+      for ((tier, gate) <- tiers) withClue(s"$tier: ") {
+        assert(Dedup.clusters(docs, "doc_id", "text", maxDriverRows = gate)
+          .count() === 12)
+      }
       assert(Dedup.crossPairs(docs, corpus(100L), "doc_id", "text").count() > 0)
       assert(Dedup.simhashPairs(docs, "doc_id", "text").count() > 0)
     }

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.TestSpark
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphAlgosSpec extends AnyFunSuite {
@@ -16,11 +17,11 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(got === Map(3L -> 1L, 1L -> 2L))
   }
 
-  /** PageRank's two tiers: the session's driver gate (every graph here
-    * sits under it) and a negative gate that forces the distributed
-    * rounds.
+  /** The two tiers of a gated operator: the session's driver gate (every
+    * graph here sits under it) and a negative gate that forces the
+    * distributed tier.
     */
-  private lazy val rankTiers =
+  private lazy val tiers =
     Seq("driver tier" -> Dedup.driverCcMaxEdges(spark), "distributed tier" -> -1L)
 
   test("pageRank on a known graph matches the analytic fixed point") {
@@ -38,7 +39,7 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(math.abs(local(2L) - rB) < 1e-12)
     assert(math.abs(local(3L) - rC) < 1e-12)
     // either tier at 50 iterations: contraction ~0.85^50 ~ 3e-4
-    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+    for ((tier, gate) <- tiers) withClue(s"$tier: ") {
       val r = GraphAlgos.pageRank(edges.toDF("s", "d"), "s", "d",
         iterations = 50, maxDriverEdges = gate)
         .as[(Long, Double)].collect().toMap
@@ -50,7 +51,7 @@ class GraphAlgosSpec extends AnyFunSuite {
 
   test("pageRank handles dangling nodes (sink keeps teleport + inflow)") {
     val edges = Seq((1L, 2L)).toDF("s", "d")
-    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+    for ((tier, gate) <- tiers) withClue(s"$tier: ") {
       val r = GraphAlgos.pageRank(edges, "s", "d", iterations = 10,
           maxDriverEdges = gate)
         .as[(Long, Double)].collect().toMap
@@ -68,7 +69,7 @@ class GraphAlgosSpec extends AnyFunSuite {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
       val local = GraphAlgos.pageRankLocal(edges, iterations = 10)
-      for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+      for ((tier, gate) <- tiers) withClue(s"$tier: ") {
         val dist = GraphAlgos.pageRank(edges.toDF("s", "d"), "s", "d",
           iterations = 10, maxDriverEdges = gate)
           .as[(Long, Double)].collect().toMap
@@ -84,7 +85,7 @@ class GraphAlgosSpec extends AnyFunSuite {
     // monotonically along the chain; global PR of the same chain ranks
     // node 4 highest (it accumulates), so the orders genuinely differ
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "d")
-    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+    for ((tier, gate) <- tiers) withClue(s"$tier: ") {
       val ppr = GraphAlgos.personalizedPageRank(edges, "s", "d",
           Seq(1L).toDF("node"), iterations = 30, maxDriverEdges = gate)
         .as[(Long, Double)].collect().toMap
@@ -103,7 +104,7 @@ class GraphAlgosSpec extends AnyFunSuite {
 
   test("personalizedPageRank rejects a source absent from the graph") {
     val edges = Seq((1L, 2L)).toDF("s", "d")
-    for ((tier, gate) <- rankTiers) withClue(s"$tier: ") {
+    for ((tier, gate) <- tiers) withClue(s"$tier: ") {
       intercept[IllegalArgumentException] {
         GraphAlgos.personalizedPageRank(edges, "s", "d",
           Seq(99L).toDF("node"), maxDriverEdges = gate)
@@ -148,28 +149,26 @@ class GraphAlgosSpec extends AnyFunSuite {
   test("pageRank under the driver gate runs at most three Spark jobs") {
     // the gate count, the edge collect and the result's collect; the
     // distributed rounds would add jobs per checkpoint and per round
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val rnd = new scala.util.Random(5)
     val edges = spark.sparkContext.parallelize(
       (1 to 300).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)),
       4).toDF("s", "d")
-    val sc = spark.sparkContext
-    val tag = "pagerank-driver-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      org.apache.spark.TestListenerBus.drain(sc)
-      sc.addJobTag(tag)
-      try GraphAlgos.pageRank(edges, "s", "d").collect()
-      finally sc.removeJobTag(tag)
-      org.apache.spark.TestListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= 3)
+    assert(graft.TestJobs.count(spark)(
+      GraphAlgos.pageRank(edges, "s", "d").collect()) <= 3)
+  }
+
+  test("bfsDistances and connectedComponents under the driver gate count " +
+      "their edges in one job") {
+    // five jobs each, the caller's collect included; a Dataset count as
+    // the gate would add a shuffle-stage job to each
+    val rnd = new scala.util.Random(7)
+    val edges = spark.sparkContext.parallelize(
+      (1 to 300).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)),
+      4).toDF("s", "d")
+    assert(graft.TestJobs.count(spark)(GraphAlgos.bfsDistances(edges, "s", "d",
+      Seq(0L).toDF("node")).collect()) <= 5)
+    assert(graft.TestJobs.count(spark)(Dedup.componentLabels(
+      edges.toDF("id_a", "id_b")).collect()) <= 5)
   }
 
   test("triangleCount: known graphs") {
@@ -177,12 +176,14 @@ class GraphAlgosSpec extends AnyFunSuite {
     val k4 = (for { a <- 1L to 4L; b <- 1L to 4L if a != b } yield (a, b))
       .toDF("s", "d")
     val noisy = k4.union(Seq((1L, 1L), (2L, 1L)).toDF("s", "d"))
-    val Array(r) = GraphAlgos.triangleCount(noisy, "s", "d").collect()
-    assert((r.getLong(0), r.getLong(1)) === ((6L, 4L)))
-    // a path graph has none
-    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "d")
-    val Array(p) = GraphAlgos.triangleCount(path, "s", "d").collect()
-    assert((p.getLong(0), p.getLong(1)) === ((3L, 0L)))
+    for ((tier, gate) <- tiers) withClue(s"$tier: ") {
+      val Array(r) = GraphAlgos.triangleCount(noisy, "s", "d", gate).collect()
+      assert((r.getLong(0), r.getLong(1)) === ((6L, 4L)))
+      // a path graph has none
+      val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "d")
+      val Array(p) = GraphAlgos.triangleCount(path, "s", "d", gate).collect()
+      assert((p.getLong(0), p.getLong(1)) === ((3L, 0L)))
+    }
   }
 
   test("triangleCount matches brute force on random graphs") {
@@ -201,11 +202,103 @@ class GraphAlgosSpec extends AnyFunSuite {
         a = nodes(i); b = nodes(j); c = nodes(k)
         if undSet((a, b)) && undSet((b, c)) && undSet((a, c))
       } yield 1).size.toLong
-      val Array(r) = GraphAlgos
-        .triangleCount(edges.toDF("s", "d"), "s", "d").collect()
-      assert(r.getLong(0) === und.size.toLong, s"trial $trial edges")
-      assert(r.getLong(1) === brute, s"trial $trial triangles")
+      for ((tier, gate) <- tiers) withClue(s"$tier: ") {
+        val Array(r) = GraphAlgos
+          .triangleCount(edges.toDF("s", "d"), "s", "d", gate).collect()
+        assert(r.getLong(0) === und.size.toLong, s"trial $trial edges")
+        assert(r.getLong(1) === brute, s"trial $trial triangles")
+      }
     }
+  }
+
+  test("triangleCount tiers agree on string keys with duplicates, reversed " +
+      "pairs, self-loops and null endpoints") {
+    // a-b-c and b-c-d close two triangles over five edges; the noise
+    // rows add nothing
+    val edges = Seq[(String, String)](("a", "b"), ("b", "a"), ("a", "b"),
+      ("b", "c"), ("c", "a"), ("c", "d"), ("d", "b"), ("d", "d"),
+      ("e", null), (null, "a"), (null, null)).toDF("s", "d")
+    val got = tiers.map { case (tier, gate) =>
+      val df = GraphAlgos.triangleCount(edges, "s", "d", gate)
+      tier -> (df.schema, df.collect().toSeq)
+    }.toMap
+    assert(got("driver tier") === got("distributed tier"))
+    assert(got("driver tier")._2 === Seq(Row(5L, 2L)))
+  }
+
+  test("triangleCount under the driver gate runs at most three Spark jobs") {
+    // the gate count, the edge collect and the result's collect; the
+    // distributed tier runs 16 here
+    val rnd = new scala.util.Random(9)
+    val edges = spark.sparkContext.parallelize(
+      (1 to 300).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)),
+      4).toDF("s", "d")
+    assert(graft.TestJobs.count(spark)(
+      GraphAlgos.triangleCount(edges, "s", "d").collect()) <= 3)
+  }
+
+  /** Both tiers of `op` on a binary-keyed and a double-keyed graph: the
+    * same cycle `a → b → c → a` with a tail `c → d`, where the double
+    * graph writes `a` once as 0.0 and once as -0.0. Spark groups and
+    * joins both key types by value, -0.0 as 0.0, so the tiers must
+    * return the same rows. `op` gets the edges `(s, d, w)`, the source
+    * `a` as a `node` column, and the gate.
+    */
+  private def tiersAgreeOnKeys(
+      op: (DataFrame, DataFrame, Long) => DataFrame): Unit = {
+    def show(v: Any): String = v match {
+      case b: Array[Byte] => b.mkString("[", ",", "]")
+      case d: Double => f"$d%.9f"
+      case v => String.valueOf(v)
+    }
+    val bin = Seq((Array[Byte](1), Array[Byte](2), 1L),
+      (Array[Byte](2), Array[Byte](3), 1L), (Array[Byte](3), Array[Byte](1), 1L),
+      (Array[Byte](3), Array[Byte](4), 1L)).toDF("s", "d", "w")
+    val dbl = Seq((0.0, 1.0, 1L), (1.0, 2.0, 1L), (2.0, -0.0, 1L),
+      (2.0, 3.0, 1L)).toDF("s", "d", "w")
+    for ((kind, edges, source) <- Seq(
+        ("binary", bin, Seq(Array[Byte](1)).toDF("node")),
+        ("double", dbl, Seq(-0.0).toDF("node")))) withClue(s"$kind keys: ") {
+      val Seq(drv, dist) = tiers.map { case (_, gate) =>
+        op(edges, source, gate).collect().map(_.toSeq.map(show).mkString("|"))
+          .sorted.toSeq
+      }
+      assert(drv === dist)
+    }
+  }
+
+  test("pageRank tiers agree on binary and double keys") {
+    tiersAgreeOnKeys((e, _, g) => GraphAlgos.pageRank(e, "s", "d",
+      maxDriverEdges = g))
+  }
+
+  test("bfsDistances tiers agree on binary and double keys") {
+    tiersAgreeOnKeys((e, src, g) => GraphAlgos.bfsDistances(e, "s", "d", src,
+      maxDriverEdges = g))
+  }
+
+  test("shortestPaths tiers agree on binary and double keys") {
+    tiersAgreeOnKeys((e, src, g) => GraphAlgos.shortestPaths(e, "s", "d", "w",
+      src, maxDriverEdges = g))
+  }
+
+  test("stronglyConnectedComponents tiers agree on binary and double keys") {
+    tiersAgreeOnKeys((e, _, g) => GraphAlgos.stronglyConnectedComponents(e,
+      "s", "d", maxDriverEdges = g))
+  }
+
+  test("betweenness tiers agree on binary and double keys") {
+    tiersAgreeOnKeys((e, src, g) => GraphAlgos.betweenness(e, "s", "d", src,
+      maxDriverEdges = g))
+  }
+
+  test("harmonicCentrality tiers agree on binary and double keys") {
+    tiersAgreeOnKeys((e, src, g) => GraphAlgos.harmonicCentrality(e, "s", "d",
+      src, maxDriverEdges = g))
+  }
+
+  test("triangleCount tiers agree on binary and double keys") {
+    tiersAgreeOnKeys((e, _, g) => GraphAlgos.triangleCount(e, "s", "d", g))
   }
 
   test("componentSizeHistogram over mixed components") {

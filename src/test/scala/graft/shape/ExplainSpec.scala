@@ -308,7 +308,8 @@ class ExplainSpec extends AnyFunSuite {
       rnd.nextInt(30).toLong)).toDF("s", "d")
     val nonEqui = "CartesianProduct|NestedLoopJoin"
     val equi = "BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
-    val tc = executedPlans(GraphAlgos.triangleCount(edges, "s", "d"))
+    val tc = executedPlans(GraphAlgos.triangleCount(edges, "s", "d",
+      maxDriverEdges = -1L))
     assert(count(tc, nonEqui) === 1,
       s"only the 1-row x 1-row count join may be non-equi:\n$tc")
     assert(count(tc, equi) >= 4, tc) // 2 orientation + wedge + close
